@@ -34,7 +34,8 @@ object BagJobMain {
         val status =
           if (o.skipped) "SKIPPED (no extract)"
           else if (o.errors.nonEmpty) s"ABORTED ${o.errors.mkString("; ")}"
-          else f"loaded=${o.loaded}%d rejected=${o.rejected}%d"
+          else f"loaded=${o.loaded}%d rejected=${o.rejected}%d" +
+            o.rejectedBy.toSeq.sorted.map { case (r, n) => s" $r=$n" }.mkString
         println(f"${o.name}%-28s $status")
       }
       if (outcomes.exists(_.errors.nonEmpty)) exitCode = 1

@@ -22,7 +22,8 @@ object CsvSource {
   def stringSchema(cols: Seq[String]): StructType =
     StructType(cols.map(c => StructField(c, StringType, nullable = true)))
 
-  private val CORRUPT = "__corrupt_record"
+  /** The column [[scan]] fills with the raw text of a malformed row. */
+  val CorruptCol = "__corrupt_record"
 
   /** S5 staging freshness cache (batch/objectstore.py:43-69): run
     * `fetch` into `path` only when the file is missing or older than
@@ -47,31 +48,41 @@ object CsvSource {
       .schema(stringSchema(Seq("id", "wkt")))
       .csv(path)
 
-  /** Read with the GOB dialect; `maxRows` mirrors the reference's
-    * max_rows cap (csv.py:70,80-81). Returns clean + rejected splits;
-    * `strict=true` = FAILFAST (abort on first malformed row). */
-  def read(spark: SparkSession, path: String, schema: StructType,
-      maxRows: Option[Int] = None, strict: Boolean = false): CsvRead = {
+  /** The GOB-dialect scan, uncached: `schema`'s columns plus
+    * [[CorruptCol]], which holds the raw text of a malformed row (a
+    * field too many or too few, a broken quote) and is null otherwise.
+    * `maxRows` mirrors the reference's max_rows cap (csv.py:70,80-81);
+    * `strict=true` = FAILFAST (abort on first malformed row). A query
+    * may not read [[CorruptCol]] alone from the scan
+    * (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). */
+  def scan(spark: SparkSession, path: String, schema: StructType,
+      maxRows: Option[Int] = None, strict: Boolean = false): DataFrame = {
     val withCorrupt = StructType(
-      schema.fields :+ StructField(CORRUPT, StringType, nullable = true))
+      schema.fields :+ StructField(CorruptCol, StringType, nullable = true))
     val base = spark.read
       .option("header", "true")
       .option("delimiter", ";")
       .option("encoding", "UTF-8")   // BOM is consumed by the UTF-8 reader
       .option("quote", "\"")
       .option("mode", if (strict) "FAILFAST" else "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CORRUPT)
+      .option("columnNameOfCorruptRecord", CorruptCol)
       .schema(withCorrupt)
       .csv(path)
-    val limited = maxRows.map(base.limit).getOrElse(base)
+    maxRows.map(base.limit).getOrElse(base)
+  }
+
+  /** Read with the GOB dialect. Returns clean + rejected splits of one
+    * cached [[scan]]. */
+  def read(spark: SparkSession, path: String, schema: StructType,
+      maxRows: Option[Int] = None, strict: Boolean = false): CsvRead = {
     // cache the scan: both splits come from one pass, not two reads —
     // also required by Spark before filtering on the corrupt column
-    // (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-    val marked = limited.cache()
+    // alone (see scan)
+    val marked = scan(spark, path, schema, maxRows, strict).cache()
     CsvRead(
-      clean = marked.filter(col(CORRUPT).isNull).drop(CORRUPT),
-      rejected = marked.filter(col(CORRUPT).isNotNull)
-        .select(col(CORRUPT).as("raw_record"),
+      clean = marked.filter(col(CorruptCol).isNull).drop(CorruptCol),
+      rejected = marked.filter(col(CorruptCol).isNotNull)
+        .select(col(CorruptCol).as("raw_record"),
           lit(path).as("source_path"),
           lit("malformed_csv").as("reject_reason")))
   }

@@ -3,6 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftshim.GraftShim
+
 import graft.model.BagTables
 import graft.pipeline.BagJob
 
@@ -21,6 +24,28 @@ class BagJobSpec extends SparkSuite {
     val header = spec.sourceCols.map(_._1)
     header.mkString(";") +: rows.map(r => header.map(h => r.getOrElse(h, "")).mkString(";"))
   }
+
+  /** `f`'s result and the number of Spark jobs it started. */
+  private def countingJobs[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftShim.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      assert(GraftShim.drainListenerBus(spark.sparkContext))
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The reported `loaded` of every committed table is its snapshot's
+    * row count. */
+  private def assertLoadedIsCommitted(outcomes: Seq[BagJob.TableOutcome], out: String): Unit =
+    outcomes.filter(o => !o.skipped && o.errors.isEmpty).foreach { o =>
+      assert(o.loaded == spark.read.parquet(s"$out/${o.name}").count(), o.name)
+    }
 
   test("BagJob: seed + stadsdeel -> ggw_gebied -> wijk chain, FK cascade, idempotent") {
     val base = Files.createTempDirectory("graft-bagjob").toString
@@ -54,7 +79,11 @@ class BagJobSpec extends SparkSuite {
         "naam" -> "Spook", "code" -> "W9", "cbsCode" -> "CBS9",
         "ligtIn:GBD.SDL.identificatie" -> "SDL9", "ligtIn:GBD.SDL.volgnummer" -> "1"))))
 
-    val outcomes = BagJob.run(spark, data, out)
+    // job budgets of the single tagged pass per table: a schema-
+    // inference read or a recount of a commit shows up here
+    val (outcomes, jobs) = countingJobs(BagJob.run(spark, data, out))
+    assert(jobs <= 24, s"load ran $jobs jobs")
+    assertLoadedIsCommitted(outcomes, out)
     val byName = outcomes.map(o => o.name -> o).toMap
     assert(byName("gemeente").loaded == 1)
     assert(byName("stadsdeel").loaded == 2 && byName("stadsdeel").rejected == 0)
@@ -70,7 +99,9 @@ class BagJobSpec extends SparkSuite {
 
     // second run over the same extracts: incremental merge inserts and
     // changes nothing (reference README.md:28 semantics)
-    val again = BagJob.run(spark, data, out)
+    val (again, jobs2) = countingJobs(BagJob.run(spark, data, out))
+    assert(jobs2 <= 39, s"re-import ran $jobs2 jobs")
+    assertLoadedIsCommitted(again, out)
     val byName2 = again.map(o => o.name -> o).toMap
     assert(byName2("stadsdeel").loaded == 2 && byName2("wijk").loaded == 1)
 
@@ -79,6 +110,7 @@ class BagJobSpec extends SparkSuite {
     // stadsdeel/ggw_gebied snapshots committed by the earlier run, not
     // throw on a missing `parents` entry.
     val restart = BagJob.run(spark, data, out, startAt = Some("wijk"))
+    assertLoadedIsCommitted(restart, out)
     val byName3 = restart.map(o => o.name -> o).toMap
     assert(!byName3.contains("stadsdeel") && !byName3.contains("ggw_gebied"))
     assert(byName3("wijk").loaded == 1 && byName3("wijk").rejected == 1)
@@ -97,6 +129,7 @@ class BagJobSpec extends SparkSuite {
         "ligtIn:GBD.SDL.identificatie" -> "SDL1", "ligtIn:GBD.SDL.volgnummer" -> "1"))))
 
     val outcomes = BagJob.run(spark, data, out, startAt = Some("ggw_gebied"))
+    assertLoadedIsCommitted(outcomes, out)
     val byName = outcomes.map(o => o.name -> o).toMap
     // the row references SDL1 but stadsdeel's snapshot is an empty
     // spec-schema frame -> honest fk_miss rejection, zero rows loaded
