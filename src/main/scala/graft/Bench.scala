@@ -1,27 +1,7 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftshim.GraftShim
 object Bench {
-  /** Per-query resource counters. Shuffle-write bytes are the noise
-    * discriminator VERDICT r9 asked for: wall-clock swings with host
-    * load, shuffle bytes do not — identical bytes + inflated seconds
-    * = co-tenant load, different bytes = a real plan change. Peak
-    * execution memory (max over stages of the per-stage task-metric
-    * sum) rides along as the spill-pressure signal. */
-  private class QueryMetrics extends SparkListener {
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      shuffleBytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      peakMem.getAndAccumulate(s.stageInfo.taskMetrics.peakExecutionMemory, Math.max(_, _))
-    }
-    def reset(): Unit = { shuffleBytes.set(0L); peakMem.set(0L) }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 1-minute load average, recorded at start and end of the run:
     // three rounds of bench adjudication hinged on whether an outlier
     // was co-tenant load or a regression — make it machine-checkable
@@ -36,49 +16,14 @@ object Bench {
     // (e.g. 512 — a 1000-executor cluster's floor) to surface any
     // operator whose constants hide behind 32-partition coziness.
     // Default stays = cores (the measured local[32] optimum).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      // 16× the default listener-bus queue: a DROPPED stage event
-      // silently zeroes a query's byte reading (VERDICT r16 wrong #3
-      // — 0.0-byte rows where the idle run shows real shuffles), and
-      // the byte column is the co-tenant discriminator the round's
-      // perf adjudication rests on
-      .config("spark.scheduler.listenerbus.eventqueue.capacity", "160000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Ordered-dump sort rewrite (r19 optimization round, guide §2.4):
-    // every gate's trailing ORDER BY otherwise plans as a range
-    // exchange whose bounds-sampling job re-executes the child plan —
-    // scan-shaped queries pay their per-row work twice per rep. The
-    // rule turns the dump sort into gather-to-1 + local sort
-    // (identical rows, identical order — see OrderedDumpSortRule).
-    // Opt-out for A/B measurement: SPARK_GRAFT_SINGLE_PART_SORT=0.
-    graft.plans.OrderedDumpSortRule.install(spark)
+    val spark = Sessions.local(conf = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .map("spark.sql.shuffle.partitions" -> _).toSeq)
     // force every query object's init (fixture-prewarm registration
     // happens there), then build every /tmp fixture root OUTSIDE the
     // timed loop: a cold /tmp otherwise pays index/model builds
     // inside some gate's counted window (VERDICT r16 wrong #2)
     val specs = SparkEntry.specs
     graft.queries.FixtureCache.prewarmAll(spark, sfDir)
-    // drain-until-ACTUALLY-empty: a silently-timed-out drain leaks
-    // the previous query's stage events into the next counted window.
-    // Returns false when 8 retries (~2 min) did NOT empty the bus
-    // (ADVICE r17): callers flag the query so a leaked byte ledger is
-    // distinguishable from a clean one instead of failing silently.
-    def drainFully(): Boolean = {
-      var tries = 0
-      var ok = GraftShim.drainListenerBus(spark.sparkContext, 15000L)
-      while (!ok && tries < 8) {
-        tries += 1
-        ok = GraftShim.drainListenerBus(spark.sparkContext, 15000L)
-      }
-      if (!ok) System.err.println("[Bench] listener-bus drain timed out")
-      ok
-    }
     // warm the JVM/codegen/IO paths so the first measured query does
     // not absorb session startup (measured ~3s of attribution noise)
     SparkEntry.queries.headOption.foreach { case (_, fn) =>
@@ -112,8 +57,7 @@ object Bench {
     // a single query's cost can be iterated on without the full sweep
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    val metrics = new QueryMetrics
-    spark.sparkContext.addSparkListener(metrics)
+    val meter = RunMeter.attach(spark)
     var qIndex = 0
     // results: name -> (median sec, shuffle MB per rep, peak exec-mem MB).
     // Bytes are summed across reps then divided: the plan is
@@ -172,13 +116,9 @@ object Bench {
       // run would then report different bytes for an identical plan,
       // the exact false signal this column exists to rule out. The
       // MEDIAN timing already lands on the steady state the same way.
-      var drained = drainFully()
-      metrics.reset()
+      meter.reset()
       val times = (0 until reps).map { r =>
-        if (r == 1) { // drop rep 1's (possibly build-inflated) bytes
-          drained &= drainFully()
-          metrics.reset()
-        }
+        if (r == 1) meter.reset() // drop rep 1's (possibly build-inflated) bytes
         val t0 = System.nanoTime()
         // toRdd.count(), NOT count(): a Dataset.count() re-plans with
         // every unreferenced column pruned, and Catalyst's unique-key
@@ -190,11 +130,10 @@ object Bench {
         catch { case _: Throwable => -1L }
         (System.nanoTime() - t0) / 1e9
       }.sorted
-      drained &= drainFully()
+      val m = meter.read()
       val steadyReps = math.max(1, reps - 1)
       name -> (times(times.length / 2),
-        metrics.shuffleBytes.get / 1e6 / steadyReps,
-        metrics.peakMem.get / 1e6, drained)
+        m.shuffleBytes / 1e6 / steadyReps, m.stagePeakMem / 1e6)
     }
     // The driver records only the LAST ~2000 chars of output, and sbt's
     // "[success] ..." line lands after ours — r3/r4 metric lines (~2.6 KB,
@@ -210,7 +149,7 @@ object Bench {
     // other in the parsed metrics; fall back to the full name on clash
     val shortCount = results.map(_._1).groupBy(_.takeWhile(_ != '_'))
       .map { case (p, ks) => p -> ks.size }
-    val qs = results.map { case (k, (sec, _, _, _)) =>
+    val qs = results.map { case (k, (sec, _, _)) =>
       val p = k.takeWhile(_ != '_')
       val short = if (shortCount(p) == 1) p else k
       "\"" + short + "\":" + num(sec)
@@ -225,13 +164,9 @@ object Bench {
     // directly; the metric line carries just the pointer.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/root/repo/BENCH_DETAIL.json")
-    // drain_timeout rides per-row only when set — a leaked ledger is
-    // flagged, a clean one stays byte-compatible with prior rounds
-    val detail = results.sortBy(_._1).map { case (k, (sec, mb, peakMb, dr)) =>
-      val flag = if (dr) "" else """, "drain_timeout": 1"""
-      s"""    "$k": {"sec": ${num(sec)}, "shuffle_mb": ${num(mb)}, "peak_mem_mb": ${num(peakMb)}$flag}"""
+    val detail = results.sortBy(_._1).map { case (k, (sec, mb, peakMb)) =>
+      s"""    "$k": {"sec": ${num(sec)}, "shuffle_mb": ${num(mb)}, "peak_mem_mb": ${num(peakMb)}}"""
     }.mkString(",\n")
-    val drainTimeouts = results.count(!_._2._4)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath),
       s"""{
   "total_sec": ${num(total)},
@@ -239,7 +174,6 @@ object Bench {
   "reps": $reps,
   "load_start": ${num(loadStart)},
   "load_end": ${num(loadEnd)},
-  "drain_timeouts": $drainTimeouts,
   "queries": {
 $detail
   }
@@ -254,7 +188,7 @@ $detail
     // fits in the tail window: total first, the 10 heaviest queries
     // as the queries map, and the detail-file pointer for the rest.
     val top10 = results.sortBy(-_._2._1).take(10)
-      .map { case (k, (sec, _, _, _)) =>
+      .map { case (k, (sec, _, _)) =>
         val p = k.takeWhile(_ != '_')
         val short = if (shortCount(p) == 1) p else k
         "\"" + short + "\":" + num(sec) }

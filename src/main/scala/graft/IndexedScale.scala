@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -39,46 +37,11 @@ object IndexedScale {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 8
     val work = if (args.length > 2) args(2) else "/tmp/graft_idxscale"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-indexed-scale")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(conf = Seq("spark.sql.shuffle.partitions" -> "32"))
     // peak execution memory per measured form (VERDICT r10 #6: the
     // increment family's 100 TB claim needs its MEMORY exponent too —
     // bounded by batch, not corpus)
-    // two memory signals: the stage-level SUM of per-task peaks
-    // (scales with task count — 10× data → 10× scan tasks inflate it
-    // even when no task needs more memory) and the max single-TASK
-    // peak, which is the executor-sizing number (a task must fit its
-    // slot however many tasks the stage has).
-    val metrics = new SparkListener {
-      val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-      val maxTaskPeak = new java.util.concurrent.atomic.AtomicLong(0L)
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        peakMem.getAndAccumulate(
-          s.stageInfo.taskMetrics.peakExecutionMemory, Math.max(_, _))
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          maxTaskPeak.getAndAccumulate(
-            t.taskMetrics.peakExecutionMemory, Math.max(_, _))
-    }
-    spark.sparkContext.addSparkListener(metrics)
-    def resetPeak(): Unit = {
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-      metrics.peakMem.set(0L)
-      metrics.maxTaskPeak.set(0L)
-    }
-    def readPeakMb(): Double = {
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-      metrics.peakMem.get / 1e6
-    }
-    def readMaxTaskPeakMb(): Double = {
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-      metrics.maxTaskPeak.get / 1e6
-    }
+    val meter = RunMeter.attach(spark)
     val docs = spark.read.parquet(s"$base/documents.parquet")
       .select(col("doc_id"), col("text"))
 
@@ -91,16 +54,6 @@ object IndexedScale {
     batch.count()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    def medianTime(run: () => Long): (Double, Long) = {
-      var n = 0L
-      val ts = (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        n = run()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.length / 2), n)
-    }
-
     for ((label, f) <- Seq("1x" -> 1, s"${factor}x" -> factor).distinct) {
       val dir = s"$work/$label"
       (0 until f).map { i =>
@@ -119,22 +72,17 @@ object IndexedScale {
       val idx = spark.read.parquet(s"$dir/index.parquet")
       val keys = spark.read.parquet(s"$dir/keys.parquet")
 
-      resetPeak()
-      val (tIn, nIn) = medianTime(() =>
-        Dedup.dedupIncrement(corpus, batch, "doc_id", "text", 3, 0.5)
-          .queryExecution.toRdd.count())
-      val peakIn = readPeakMb(); val taskIn = readMaxTaskPeakMb()
-      resetPeak()
-      val (tIdx, nIdx) = medianTime(() =>
-        Dedup.dedupIncrementIndexed(idx, keys, batch, "doc_id", "text", 3, 0.5)
-          .queryExecution.toRdd.count())
-      val peakIdx = readPeakMb(); val taskIdx = readMaxTaskPeakMb()
+      val (tIn, nIn, mIn) = meter.medianOf(reps)(() =>
+        Dedup.dedupIncrement(corpus, batch, "doc_id", "text", 3, 0.5))
+      val (tIdx, nIdx, mIdx) = meter.medianOf(reps)(() =>
+        Dedup.dedupIncrementIndexed(idx, keys, batch, "doc_id", "text", 3, 0.5))
       require(nIn == nIdx, s"forms disagree: $nIn vs $nIdx")
       println(String.format(java.util.Locale.ROOT,
         """{"scale":"%s","corpus_docs":%d,"batch_docs":500,"in_query_sec":%.3f,"indexed_sec":%.3f,"index_build_sec":%.3f,"in_query_peak_mb":%.1f,"indexed_peak_mb":%.1f,"in_query_task_peak_mb":%.1f,"indexed_task_peak_mb":%.1f,"rows":%d,"reps":%d}""",
         label, Long.box(corpus.count()), Double.box(tIn), Double.box(tIdx),
-        Double.box(buildSec), Double.box(peakIn), Double.box(peakIdx),
-        Double.box(taskIn), Double.box(taskIdx),
+        Double.box(buildSec), Double.box(mIn.stagePeakMem / 1e6),
+        Double.box(mIdx.stagePeakMem / 1e6), Double.box(mIn.maxTaskPeak / 1e6),
+        Double.box(mIdx.maxTaskPeak / 1e6),
         Long.box(nIn), Int.box(reps)))
 
       // Bloom pre-filter row: the batch is 100% fresh (disjoint
@@ -145,14 +93,12 @@ object IndexedScale {
       val tbb0 = System.nanoTime()
       val words = Dedup.bloomBuild(keys, "text", 1 << 20, 5)
       val bloomBuildSec = (System.nanoTime() - tbb0) / 1e9
-      val (tFull, nFull) = medianTime(() =>
+      val (tFull, nFull, _) = meter.medianOf(reps)(() =>
         Dedup.dedupIncrementFullIndexed(idx, keys, batch,
-            "doc_id", "text", 3, 0.5)
-          .queryExecution.toRdd.count())
-      val (tBloom, nBloom) = medianTime(() =>
+          "doc_id", "text", 3, 0.5))
+      val (tBloom, nBloom, _) = meter.medianOf(reps)(() =>
         Dedup.dedupIncrementFullIndexedBloom(idx, keys, words, batch,
-            "doc_id", "text", 3, 0.5, 1 << 20, 5)
-          .queryExecution.toRdd.count())
+          "doc_id", "text", 3, 0.5, 1 << 20, 5))
       require(nFull == nBloom, s"bloom form disagrees: $nFull vs $nBloom")
       // the scale-relevant number: how much of the batch still reaches
       // the keyset anti-join (the exact arm's shuffle input once the
@@ -183,14 +129,12 @@ object IndexedScale {
             regexp_replace(col("text"), "(\\S+)", "zz_$1").as("text"))
           .localCheckpoint()
         b.count()
-        resetPeak()
-        val (t, n) = medianTime(() =>
-          Dedup.dedupIncrementIndexed(idx, keys, b, "doc_id", "text", 3, 0.5)
-            .queryExecution.toRdd.count())
+        val (t, n, m) = meter.medianOf(reps)(() =>
+          Dedup.dedupIncrementIndexed(idx, keys, b, "doc_id", "text", 3, 0.5))
         println(String.format(java.util.Locale.ROOT,
           """{"peak_sweep_batch":%d,"corpus_docs":%d,"sec":%.3f,"peak_mb":%.1f,"task_peak_mb":%.1f,"rows":%d,"reps":%d}""",
           Int.box(bsz), Long.box(nCorpus), Double.box(t),
-          Double.box(readPeakMb()), Double.box(readMaxTaskPeakMb()),
+          Double.box(m.stagePeakMem / 1e6), Double.box(m.maxTaskPeak / 1e6),
           Long.box(n), Int.box(reps)))
       }
     }
@@ -199,27 +143,13 @@ object IndexedScale {
     // broadcasts the 500-doc batch above, so bucketing is invisible
     // there; a batch big enough to force a shuffled join is where the
     // bucketed layout pays (VERDICT r9 #5 — corpus-side shuffle bytes
-    // drop to ~0, total shuffle ∝ batch). Bytes via stage listener,
-    // drained through the shim before reading.
+    // drop to ~0, total shuffle ∝ batch).
     locally {
-      val listener = new SparkListener {
-        val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-        override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-          bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
       // broadcast OFF for this block: at local scales AQE broadcasts
       // the shingle join either way and the two layouts measure
       // identically — the regime the bucketed layout exists for is a
       // corpus index too large to broadcast, which this simulates
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      def measured(run: () => Long): (Double, Long, Double) = {
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-        listener.bytes.set(0L)
-        val (sec, n) = medianTime(run)
-        org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-        (sec, n, listener.bytes.get / 1e6 / reps)
-      }
       for ((label, f) <- Seq("1x" -> 1, s"${factor}x" -> factor).distinct) {
         val dir = s"$work/$label"
         val corpus = spark.read.parquet(s"$dir/corpus.parquet")
@@ -236,17 +166,18 @@ object IndexedScale {
             regexp_replace(col("text"), "(\\S+)", "yy_$1").as("text"))
           .localCheckpoint()
         val nBig = big.count()
-        val (tP, nP, mbP) = measured(() =>
+        val (tP, nP, mP) = meter.medianOf(reps)(() =>
           Dedup.dedupIncrementIndexed(plainIdx, keys, big,
-            "doc_id", "text", 3, 0.5).queryExecution.toRdd.count())
-        val (tB, nB, mbB) = measured(() =>
+            "doc_id", "text", 3, 0.5))
+        val (tB, nB, mB) = meter.medianOf(reps)(() =>
           Dedup.dedupIncrementIndexed(bktIdx, keys, big,
-            "doc_id", "text", 3, 0.5).queryExecution.toRdd.count())
+            "doc_id", "text", 3, 0.5))
         require(nP == nB, s"bucketed probe disagrees: $nP vs $nB")
         println(String.format(java.util.Locale.ROOT,
           """{"bucketed_probe_scale":"%s","corpus_docs":%d,"batch_docs":%d,"plain_sec":%.3f,"bucketed_sec":%.3f,"plain_shuffle_mb":%.1f,"bucketed_shuffle_mb":%.1f,"rows":%d,"reps":%d}""",
           label, Long.box(corpus.count()), Long.box(nBig), Double.box(tP),
-          Double.box(tB), Double.box(mbP), Double.box(mbB), Long.box(nP),
+          Double.box(tB), Double.box(mP.shuffleBytes / 1e6 / reps),
+          Double.box(mB.shuffleBytes / 1e6 / reps), Long.box(nP),
           Int.box(reps)))
       }
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -275,15 +206,13 @@ object IndexedScale {
         .write.mode("overwrite").parquet(s"$dir/index.parquet")
       val buildSec = (System.nanoTime() - tb0) / 1e9
       val idx = spark.read.parquet(s"$dir/index.parquet")
-      val (tDir, nDir) = medianTime(() =>
+      val (tDir, nDir, _) = meter.medianOf(reps)(() =>
         Similarity.ivfadcTopKIndexed(
-            Similarity.ivfadcIndex(corpus, "vec_id", "embedding", cb, cbs),
-            queries, "vec_id", "embedding", 10, cb, cbs, 2)
-          .queryExecution.toRdd.count())
-      val (tIdx, nIdx) = medianTime(() =>
+          Similarity.ivfadcIndex(corpus, "vec_id", "embedding", cb, cbs),
+          queries, "vec_id", "embedding", 10, cb, cbs, 2))
+      val (tIdx, nIdx, _) = meter.medianOf(reps)(() =>
         Similarity.ivfadcTopKIndexed(idx, queries, "vec_id", "embedding",
-            10, cb, cbs, 2)
-          .queryExecution.toRdd.count())
+          10, cb, cbs, 2))
       require(nDir == nIdx, s"ANN forms disagree: $nDir vs $nIdx")
       println(String.format(java.util.Locale.ROOT,
         """{"ann_scale":"%s","corpus_vecs":%d,"direct_sec":%.3f,"indexed_sec":%.3f,"index_build_sec":%.3f,"rows":%d,"reps":%d}""",

@@ -1,53 +1,33 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
-/** Per-job wall-clock profile for one query (r19 optimization round):
-  * runs the named query once warm, once profiled, and prints each
-  * Spark job's duration + description — the breakdown JobAudit's
-  * count-only view cannot give when deciding WHICH fixed cost to
-  * attack in an iteration-heavy gate. */
+/** Per-job wall-clock profile for the named queries (r19 optimization
+  * round): runs each query twice warm (FixtureCache builds would
+  * otherwise bill their jobs to the profiled run), then once profiled,
+  * and prints a header line with the total Spark job count and the
+  * build/analyze/optimize/plan phase split, then each job's duration +
+  * description — the breakdown needed when deciding WHICH fixed cost
+  * to attack in an iteration-heavy gate. The job count is the A/B
+  * number for shared-GK-bounds work: the `approxQuantile` boundary pass
+  * is one job per call, so a chain that shares
+  * `EventAnalytics.sliceBoundsFor` bounds across its stages drops
+  * exactly the saved passes from it.
+  *
+  * Usage: JobProfile [sfDir] [namePrefix...] */
 object JobProfile {
-  private class P extends SparkListener {
-    val t0 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(j: SparkListenerJobStart): Unit =
-      t0.put(j.jobId, (j.time,
-        Option(j.properties.getProperty("spark.job.description"))
-          .getOrElse("")))
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-      Option(t0.get(j.jobId)).foreach { case (t, d) =>
-        rows.add(f"job ${j.jobId}%3d ${(j.time - t) / 1000.0}%7.3fs  $d")
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val p = new P
+    val spark = Sessions.local()
+    val meter = RunMeter.attach(spark)
     SparkEntry.specs.filter(sp => names.exists(sp.name.startsWith))
       .foreach { sp =>
         sp.fn(spark, sfDir).queryExecution.toRdd.count() // warm
         sp.fn(spark, sfDir).queryExecution.toRdd.count() // warm 2
-        org.apache.spark.sql.graftshim.GraftShim
-          .drainListenerBus(spark.sparkContext)
-        spark.sparkContext.addSparkListener(p)
+        meter.reset()
         val t0 = System.nanoTime()
         sp.fn(spark, sfDir).queryExecution.toRdd.count()
         val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graftshim.GraftShim
-          .drainListenerBus(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(p)
+        val m = meter.read()
         // phase split: DF build, analysis, optimization, physical
         // planning (each forces only its own phase — lazy vals)
         val tb = System.nanoTime()
@@ -59,11 +39,11 @@ object JobProfile {
         val t3 = System.nanoTime()
         df2.queryExecution.executedPlan
         val t4 = System.nanoTime()
-        println(f"==== ${sp.name} wall $wall%.3fs  " +
+        println(f"==== ${sp.name} wall $wall%.3fs  jobs ${m.jobs}  " +
           f"build ${(t1 - tb) / 1e9}%.3f analyze ${(t2 - t1) / 1e9}%.3f " +
           f"optimize ${(t3 - t2) / 1e9}%.3f plan ${(t4 - t3) / 1e9}%.3f ====")
-        p.rows.forEach(r => println(r))
-        p.rows.clear(); p.t0.clear()
+        m.jobTimes.foreach(j =>
+          println(f"job ${j.id}%3d ${j.seconds}%7.3fs  ${j.description}"))
       }
     spark.stop()
   }

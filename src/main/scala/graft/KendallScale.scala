@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Targeted sweep for the exact-Kendall scale CONTRACT (VERDICT r14
@@ -27,31 +25,12 @@ import org.apache.spark.sql.functions._
   * demonstrating nothing the 16×-vs-4× contrast doesn't. */
 object KendallScale {
 
-  private class ShuffleBytes extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val maxTaskPeak = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        maxTaskPeak.getAndAccumulate(
-          t.taskMetrics.peakExecutionMemory, Math.max(_, _))
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 4
     val synth = if (args.length > 2) args(2) else "/tmp/graft_kendall_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-kendall-scale")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new ShuffleBytes
-    spark.sparkContext.addSparkListener(listener)
+    val spark = Sessions.local(conf = Seq("spark.sql.shuffle.partitions" -> "32"))
+    val meter = RunMeter.attach(spark)
 
     val orders = spark.read.parquet(s"$base/orders.parquet")
     (0 until factor).map(i => orders.withColumn("o_orderkey",
@@ -97,24 +76,12 @@ object KendallScale {
     kendall(base, 32, tall = false).queryExecution.toRdd.count()
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     for ((label, dir, b, tall) <- arms) {
-      org.apache.spark.sql.graftshim.GraftShim
-        .drainListenerBus(spark.sparkContext)
-      listener.bytes.set(0L)
-      listener.maxTaskPeak.set(0L)
-      var n = 0L
-      val times = (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        n = kendall(dir, b, tall).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      org.apache.spark.sql.graftshim.GraftShim
-        .drainListenerBus(spark.sparkContext)
+      val (sec, n, m) = meter.medianOf(reps)(() => kendall(dir, b, tall))
       println(String.format(java.util.Locale.ROOT,
         """{"arm":"%s","buckets":%d,"rows":%d,"sec":%.3f,"shuffle_mb":%.1f,"max_task_peak_mb":%.1f,"reps":%d}""",
         label, Int.box(b), Long.box(n),
-        Double.box(times(times.length / 2)),
-        Double.box(listener.bytes.get / 1e6 / reps),
-        Double.box(listener.maxTaskPeak.get / 1e6), Int.box(reps)))
+        Double.box(sec), Double.box(m.shuffleBytes / 1e6 / reps),
+        Double.box(m.maxTaskPeak / 1e6), Int.box(reps)))
     }
     spark.stop()
   }

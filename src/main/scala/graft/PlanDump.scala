@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints explain(formatted) for the queries
   * named in args (or a default representative set) so shuffle count,
   * pushdown, and broadcast decisions can be reviewed per round. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // mirror Bench/Verify's ordered-dump sort rewrite so dumped plans
-    // are the plans the bench actually runs (opt-out with the same
-    // env: SPARK_GRAFT_SINGLE_PART_SORT=0)
-    graft.plans.OrderedDumpSortRule.install(spark)
+    val spark = Sessions.local()
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q01_pricing_summary", "q04_semijoin_fk", "q07_merge_scd2",
         "q26_ngram_jaccard", "q30_ann_bruteforce")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-stress runner behind SCALE.md: synthesizes a `factor`x corpus
@@ -28,43 +26,6 @@ import org.apache.spark.sql.functions._
   * Prints one JSON line per (query, scale) run.
   */
 object ScaleStress {
-
-  /** Sums shuffle-write bytes across completed stages, plus TWO
-    * memory signals (VERDICT r10 #6): `peakMem` = max over stages of
-    * the stage's per-task SUM of peakExecutionMemory (an upper bound
-    * on one-executor pressure — but it scales with the stage's TASK
-    * COUNT, so 10× data → 10× scan tasks inflates it even when no
-    * task needs more memory), and `maxTaskPeak` = the largest single
-    * TASK's peak — the executor-sizing number (a task must fit its
-    * slot regardless of how many tasks the stage has). The async
-    * listener bus is drained via the shim before each read. */
-  private class ShuffleBytes extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val maxTaskPeak = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      peakMem.getAndAccumulate(
-        s.stageInfo.taskMetrics.peakExecutionMemory, Math.max(_, _))
-    }
-    @volatile var maxTaskStage: String = ""
-    private val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    override def onStageSubmitted(
-        s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      stageNames.put(s.stageInfo.stageId,
-        s.stageInfo.name.takeWhile(_ != '\n').take(80))
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null) {
-        val p = t.taskMetrics.peakExecutionMemory
-        val prev = maxTaskPeak.getAndAccumulate(p, Math.max(_, _))
-        // race-tolerant diagnostic (WHICH stage owns the peak task —
-        // scan-stage peaks answer to files.maxPartitionBytes, shuffle-
-        // stage peaks to shuffle.partitions); last-writer-wins is fine
-        if (p > prev) maxTaskStage =
-          s"stage${t.stageId}:${stageNames.getOrDefault(t.stageId, "?")}"
-      }
-  }
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -101,25 +62,14 @@ object ScaleStress {
     val bcastCap = sys.env.get("SPARK_GRAFT_BCAST_CAP")
     require(!(noBroadcast && bcastCap.isDefined),
       "set SPARK_GRAFT_NO_BROADCAST or SPARK_GRAFT_BCAST_CAP, not both")
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        aqeCoalesce.toString)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-scale-stress")
-    val spark = (if (noBroadcast)
-        b.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-          .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      else bcastCap match {
-        case Some(cap) =>
-          b.config("spark.sql.autoBroadcastJoinThreshold", cap)
-            .config("spark.sql.adaptive.autoBroadcastJoinThreshold", cap)
-        case None => b
-      }).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val listener = new ShuffleBytes
-    spark.sparkContext.addSparkListener(listener)
+    val broadcastCap = if (noBroadcast) Some("-1") else bcastCap
+    val spark = Sessions.local(conf = Seq(
+        "spark.sql.shuffle.partitions" -> shufflePartitions,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> aqeCoalesce.toString) ++
+      broadcastCap.toSeq.flatMap(cap => Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> cap,
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> cap)))
+    val meter = RunMeter.attach(spark)
 
     def copiesMulti(tbl: String, offsetCols: Seq[String],
         prefixCols: Seq[String], tagOf: Int => String = i => s"c$i",
@@ -378,26 +328,13 @@ object ScaleStress {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     for (q <- qnames; (label, dir) <- Seq("1x" -> base,
         s"${factor}x" -> (if (graphShaped(q)) synthG else synth))) {
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-      listener.bytes.set(0L)
-      listener.peakMem.set(0L)
-      listener.maxTaskPeak.set(0L)
-      listener.maxTaskStage = ""
-      var n = 0L
-      val times = (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        // toRdd.count(): force every output row (see Bench — a plain
-        // count() lets join elimination drop heavy branches)
-        n = SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-      val mb = listener.bytes.get / 1e6 / reps
+      val (sec, n, m) = meter.medianOf(reps)(() => SparkEntry.queries(q)(spark, dir))
+      val mb = m.shuffleBytes / 1e6 / reps
       println(String.format(java.util.Locale.ROOT,
         """{"query":"%s","scale":"%s","rows":%d,"sec":%.3f,"shuffle_mb":%.1f,"peak_mem_mb":%.1f,"max_task_peak_mb":%.1f,"max_task_stage":"%s","partitions":%s,"reps":%d}""",
-        q, label, Long.box(n), Double.box(times(times.length / 2)),
-        Double.box(mb), Double.box(listener.peakMem.get / 1e6),
-        Double.box(listener.maxTaskPeak.get / 1e6), listener.maxTaskStage,
+        q, label, Long.box(n), Double.box(sec),
+        Double.box(mb), Double.box(m.stagePeakMem / 1e6),
+        Double.box(m.maxTaskPeak / 1e6), m.maxTaskStage,
         shufflePartitions, Int.box(reps)))
     }
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial-skew stress (VERDICT r10 #7): a PLANTED mega-key — 99%
@@ -31,35 +29,18 @@ import org.apache.spark.sql.functions._
   */
 object SkewStress {
 
-  private class Metrics extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null)
-        maxTaskMs.getAndAccumulate(t.taskInfo.duration, Math.max(_, _))
-    def reset(): Unit = { bytes.set(0L); maxTaskMs.set(0L) }
-  }
-
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(8000000L)
     val salts = if (args.length > 1) args(1).toInt else 32
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
+    val spark = Sessions.local(conf = Seq(
+      "spark.sql.shuffle.partitions" -> "32",
       // lowered skew-join thresholds: the planted hot partition is
       // ~100 MB at 8M rows; the defaults (256 MB) are tuned for
       // cluster-sized partitions and would mask the comparison
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      .appName("graft-skew-stress")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val m = new Metrics
-    spark.sparkContext.addSparkListener(m)
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8m",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) // force SMJ
+    val meter = RunMeter.attach(spark)
     import graft.ops.Relational
 
     // planted skew: 99% of rows on key 0, remainder uniform over 9973
@@ -76,20 +57,12 @@ object SkewStress {
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     def run(tag: String, expect: Long)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
-      m.reset()
-      var n = 0L
-      val ts = (0 until reps).map { _ =>
-        val t0 = System.nanoTime()
-        n = mk().queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark.sparkContext)
+      val (sec, n, m) = meter.medianOf(reps)(mk)
       require(n == expect, s"$tag: $n rows, expected $expect")
       println(String.format(java.util.Locale.ROOT,
         """{"arm":"%s","rows_in":%d,"rows_out":%d,"sec":%.3f,"max_task_ms":%d,"shuffle_mb":%.1f,"reps":%d}""",
-        tag, Long.box(rows), Long.box(n), Double.box(ts(ts.length / 2)),
-        Long.box(m.maxTaskMs.get), Double.box(m.bytes.get / 1e6 / reps),
+        tag, Long.box(rows), Long.box(n), Double.box(sec),
+        Long.box(m.maxTaskMs), Double.box(m.shuffleBytes / 1e6 / reps),
         Int.box(reps)))
     }
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,20 +12,7 @@ object Verify {
         val ps = pfx.split(','); name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same ordered-dump sort rewrite as Bench (r19 optimization
-    // round): identical rows in identical order, minus the range
-    // exchange's bounds-sampling re-execution of every child plan —
-    // Verify's 365-query dump pays the same double-compute the bench
-    // does. Opt-out: SPARK_GRAFT_SINGLE_PART_SORT=0.
-    graft.plans.OrderedDumpSortRule.install(spark)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

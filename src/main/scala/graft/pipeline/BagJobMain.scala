@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Command-line entry for the whole import job — the analogue of the
   * reference's `python manage.py run_import bagh [--bagh_start task]`
   * (batch/batch.py:9-30). Usage:
@@ -16,14 +14,7 @@ object BagJobMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: BagJobMain <dataDir> <outDir> [startAt]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .appName("graft-bag-import")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     // compute the exit code inside try/finally, exit only after
     // spark.stop() — sys.exit inside the try would bypass the finally
     // (System.exit does not unwind the stack)

@@ -62,21 +62,26 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * not for sorting data-scale intermediates, which never pass through
   * a global Sort in this engine's operators. A deployment that truly
   * global-sorts large outputs can leave the rule unregistered (it is
-  * opt-in per session via `experimental.extraOptimizations`, exactly
-  * like [[SummaryRewriteRule]]). */
+  * registered per session via `experimental.extraOptimizations`,
+  * exactly like [[SummaryRewriteRule]]). */
 object OrderedDumpSortRule extends Rule[LogicalPlan] {
 
-  /** The ONE registration site (r20, VERDICT r19 wrong #2): every
-    * entry point that wants the dump-sort rewrite calls this instead
-    * of hand-appending to `experimental.extraOptimizations` (four
-    * copies had grown by r19; a fifth main would have silently lost
-    * the rule). Idempotent; honors the measurement opt-out
-    * `SPARK_GRAFT_SINGLE_PART_SORT=0` in one place. */
+  /** The ONE registration site (r20, VERDICT r19 wrong #2): the
+    * session factory [[graft.Sessions]] calls this instead of
+    * hand-appending to `experimental.extraOptimizations`. Idempotent. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (sys.env.getOrElse("SPARK_GRAFT_SINGLE_PART_SORT", "1") != "0" &&
-        !spark.experimental.extraOptimizations.contains(this))
+    if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
+
+  /** 4 GiB: what a driver-side collect-and-hash consumer of a dump
+    * must absorb anyway. */
+  private val MaxDumpBytes: BigInt = BigInt(4L << 30)
+
+  /** The row multiple allowed a generator that synthesizes rows from
+    * scalar bounds: a deliberate, conservative allowance, not a derived
+    * constant. */
+  private val SynthFanoutMargin = 1024
 
   override def apply(plan: LogicalPlan): LogicalPlan = rewrite(plan)
 
@@ -106,17 +111,15 @@ object OrderedDumpSortRule extends Rule[LogicalPlan] {
     * - With Generate/Expand in the chain, the output is bounded by
     *   the BYTES the leaves hold (an explode re-slices stored arrays;
     *   Expand is a fixed small multiple), so require the sum of leaf
-    *   size estimates <= spark.graft.dumpsort.maxBytes (default
-    *   4 GiB — what a driver-side collect-and-hash consumer must
-    *   absorb anyway). Leaves with no real statistics estimate
-    *   defaultSizeInBytes ≈ Long.Max and fail the bound — the safe
-    *   direction: the original range-partitioned sort stays.
+    *   size estimates <= [[MaxDumpBytes]]. Leaves with no real
+    *   statistics estimate defaultSizeInBytes ≈ Long.Max and fail the
+    *   bound — the safe direction: the original range-partitioned sort
+    *   stays.
     * - A generator that SYNTHESIZES rows from scalar bounds
     *   (sequence(), array_repeat()) can multiply rows beyond the
     *   bytes it reads (the text chunkers emit one row per chunk), so
     *   those shapes additionally tighten the bound by
-    *   spark.graft.dumpsort.synthFanoutMargin (default 1024 — a
-    *   deliberate, conservative allowance, not a derived constant). */
+    *   [[SynthFanoutMargin]]. */
   private def dumpSized(p: LogicalPlan): Boolean = {
     // a generator with STRUCTURALLY constant fan-out — explode of a
     // literal array (the percentile-list explode) or of a fixed-arity
@@ -135,21 +138,16 @@ object OrderedDumpSortRule extends Rule[LogicalPlan] {
     val expands = p.collect { case e: Expand => e }
     if (gens.isEmpty && expands.isEmpty) true
     else {
-      val maxBytes = BigInt(conf.getConfString(
-        "spark.graft.dumpsort.maxBytes", (4L << 30).toString))
       val synth = gens.exists(_.generator.exists {
         case _: org.apache.spark.sql.catalyst.expressions.Sequence => true
         case _: org.apache.spark.sql.catalyst.expressions.ArrayRepeat => true
         case _ => false
       })
-      val margin =
-        if (synth) BigInt(conf.getConfString(
-          "spark.graft.dumpsort.synthFanoutMargin", "1024"))
-        else BigInt(1)
+      val margin = if (synth) BigInt(SynthFanoutMargin) else BigInt(1)
       val leafSum = p.collectLeaves()
         .map(l => l.stats.sizeInBytes.min(BigInt(Long.MaxValue)))
         .foldLeft(BigInt(0))(_ + _)
-      leafSum * margin <= maxBytes
+      leafSum * margin <= MaxDumpBytes
     }
   }
 

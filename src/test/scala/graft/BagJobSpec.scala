@@ -3,9 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.graftshim.GraftShim
-
 import graft.model.BagTables
 import graft.pipeline.BagJob
 
@@ -25,19 +22,13 @@ class BagJobSpec extends SparkSuite {
     header.mkString(";") +: rows.map(r => header.map(h => r.getOrElse(h, "")).mkString(";"))
   }
 
+  private lazy val meter = RunMeter.attach(spark)
+
   /** `f`'s result and the number of Spark jobs it started. */
   private def countingJobs[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftShim.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = f
-      assert(GraftShim.drainListenerBus(spark.sparkContext))
-      (r, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
+    meter.reset()
+    val r = f
+    (r, meter.read().jobs)
   }
 
   /** The reported `loaded` of every committed table is its snapshot's

@@ -14,6 +14,11 @@ class PlanSpec extends SparkSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
+  /** The contract ORDER BY as the dump-sort rule plans it: a local sort
+    * directly over a gather into one partition. */
+  private val dumpSort =
+    "(?m)^[\\s+-]*Sort \\[.*\\], false, 0\\n\\s*\\+- Exchange SinglePartition, REPARTITION_BY_NUM, ".r
+
   test("q01: filter + projection are pushed to the parquet scan") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -316,12 +321,12 @@ class PlanSpec extends SparkSuite {
 
   test("q107 C4 filter: pure scan — zero exchanges before the output sort") {
     // the whole clean is per-row expression work; the only shuffle
-    // allowed is the contract ORDER BY's range exchange
+    // allowed is the contract ORDER BY's gather
     val p = plan("q107_c4_line_filter")
     val exchanges = "Exchange ".r.findAllIn(p).length
     assert(exchanges == 1, s"expected only the ORDER BY exchange:\n$p")
-    assert(p.contains("rangepartitioning"),
-      s"the single exchange must be the output sort:\n$p")
+    assert(dumpSort.findFirstIn(p).isDefined,
+      s"the single exchange must be the output sort's gather:\n$p")
   }
 
   test("q112 bloom increment: membership expression live, proven-new arm joins nothing") {
@@ -354,8 +359,8 @@ class PlanSpec extends SparkSuite {
     val p = plan("q113_quality_classifier")
     val exchanges = "Exchange ".r.findAllIn(p).length
     assert(exchanges == 1, s"expected only the ORDER BY exchange:\n$p")
-    assert(p.contains("rangepartitioning"),
-      s"the single exchange must be the output sort:\n$p")
+    assert(dumpSort.findFirstIn(p).isDefined,
+      s"the single exchange must be the output sort's gather:\n$p")
     assert(!p.contains("Join"), s"weights must not arrive via a join:\n$p")
   }
 
