@@ -11,8 +11,7 @@ import org.apache.spark.sql.Column
 
 /** One foreign-key check: child column → parent table's key column.
   * Null FK values pass (reference: bagh/batch.py:231). */
-case class FkSpec(childCol: String, parentTable: String, parentKeyCol: String = "id",
-    broadcastParent: Boolean = true)
+case class FkSpec(childCol: String, parentTable: String, parentKeyCol: String = "id")
 
 /** Geometry column declaration: target type drives the promote/reject
   * matrix of batch/geo.py:52-78. `srid` mirrors the PostGIS column type

@@ -57,14 +57,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct (id, shingle) inverted-index projection. Requires `idCol`
-    * unique per row (true of any document corpus), which lets the
-    * distinct run per-row (inside the compiled ShingleSet expression) —
-    * a narrow op — instead of a corpus-wide `.distinct()` shuffle. */
-  def shingleIndex(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    df.select(col(idCol),
-      explode(graft.functions.sketches.shingle_set(col(textCol), k)).as("shingle"))
-
   /** Tier 2: exact n-gram Jaccard over candidate pairs that share at
     * least one shingle — single-scan inverted-index form: group the
     * index by shingle, emit in-bucket pairs via a double explode (same

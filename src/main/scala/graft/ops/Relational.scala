@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * The reference implements FK checks by materializing parent-id sets in
   * driver RAM (bagh/batch.py:77-82) — the moral equivalent of a broadcast
-  * hash join, except it dies when the parent outgrows RAM. Here every
-  * check is a real join: broadcast when the parent is declared small,
-  * shuffled otherwise, so the same operator survives a 100 TB parent.
+  * hash join. Here every check is a join against the parent's distinct
+  * keys, broadcast: every BAG parent's key set is small.
   */
 object Relational {
 
@@ -18,12 +17,11 @@ object Relational {
     * None` skips it, :231); a non-null fk must exist in the parent.
     *
     * Implemented as (fk IS NULL) ∪ (semi-join on fk): the null slice is
-    * a cheap filter union, the non-null slice a single join —
-    * broadcast when `broadcastParent`. */
+    * a cheap filter union, the non-null slice a single join against
+    * the broadcast parent keys. */
   def semiJoinFk(child: DataFrame, fkCol: String, parent: DataFrame,
-      parentKey: String, broadcastParent: Boolean = true): DataFrame = {
-    val keys0 = parent.select(col(parentKey).as("__pk")).distinct()
-    val keys = if (broadcastParent) broadcast(keys0) else keys0
+      parentKey: String): DataFrame = {
+    val keys = broadcast(parent.select(col(parentKey).as("__pk")).distinct())
     val nullSide = child.filter(col(fkCol).isNull)
     val matchSide = child.filter(col(fkCol).isNotNull)
       .join(keys, col(fkCol) === col("__pk"), "left_semi")
@@ -34,9 +32,8 @@ object Relational {
     * fk with no parent) — the reference's per-row skip counter
     * (bagh/batch.py:232-236) as a first-class dead-letter DataFrame. */
   def fkViolations(child: DataFrame, fkCol: String, parent: DataFrame,
-      parentKey: String, broadcastParent: Boolean = true): DataFrame = {
-    val keys0 = parent.select(col(parentKey).as("__pk")).distinct()
-    val keys = if (broadcastParent) broadcast(keys0) else keys0
+      parentKey: String): DataFrame = {
+    val keys = broadcast(parent.select(col(parentKey).as("__pk")).distinct())
     child.filter(col(fkCol).isNotNull)
       .join(keys, col(fkCol) === col("__pk"), "left_anti")
   }
@@ -46,10 +43,9 @@ object Relational {
     * parent does not exist (semi-join), emit the composite bridge id.
     * `refsCol` must be an array column (e.g. from parsers.createIds). */
   def explodeRelation(df: DataFrame, idCol: String, refsCol: String,
-      parent: DataFrame, parentKey: String,
-      broadcastParent: Boolean = true): DataFrame = {
+      parent: DataFrame, parentKey: String): DataFrame = {
     val pairs = df.select(col(idCol), explode(col(refsCol)).as("ref_id"))
-    val valid = semiJoinFk(pairs, "ref_id", parent, parentKey, broadcastParent)
+    val valid = semiJoinFk(pairs, "ref_id", parent, parentKey)
       .filter(col("ref_id").isNotNull)
     valid.select(
       concat(col(idCol), lit("_"), col("ref_id")).as("id"),

@@ -45,14 +45,14 @@ object BagJob {
   def run(spark: SparkSession, dataDir: String, outDir: String,
       startAt: Option[String] = None): Seq[TableOutcome] = {
     val parents = scala.collection.mutable.Map[String, DataFrame]()
-    def dir(name: String) = new java.io.File(s"$outDir/$name")
-    // the committed snapshot of `name`, read with its table's cleaned
-    // schema, so no job infers one
+    def dir(name: String) = s"$outDir/$name"
+    // the committed snapshot of `name`, once an interrupted commit of it
+    // is healed, read with its table's cleaned schema, so no job infers one
     def snapshot(name: String, schema: StructType): Option[DataFrame] =
-      Some(dir(name)).filter(_.exists()).map(d => spark.read.schema(schema).parquet(d.getPath))
+      Some(dir(name)).filter(DirCommit.current).map(spark.read.schema(schema).parquet(_))
 
     val gemeente = BagTables.gemeenteSeed(spark)
-    ImportPipeline.commitSnapshot(gemeente, dir("gemeente").getPath)
+    ImportPipeline.commitSnapshot(gemeente, dir("gemeente"))
     parents("gemeente") = snapshot("gemeente", gemeente.schema).get
 
     // Preload every table's last committed snapshot — or, when none
@@ -84,7 +84,7 @@ object BagJob {
             TableOutcome(spec.name, 0, result.rejectedRows,
               result.report.errors, skipped = false, result.rejectedBy)
           } else {
-            ImportPipeline.commitSnapshot(result.merged, dir(spec.name).getPath)
+            ImportPipeline.commitSnapshot(result.merged, dir(spec.name))
             parents(spec.name) = snapshot(spec.name, parents(spec.name).schema).get
             TableOutcome(spec.name, result.loaded, result.rejectedRows,
               Nil, skipped = false, result.rejectedBy)

@@ -27,8 +27,8 @@ import graft.sources.CsvSource
   * Differences by design:
   *  - per-row log lines become a reason column and dead-letter
   *    DataFrames (P7)
-  *  - the merge is a snapshot rewrite committed via temp-dir + atomic
-  *    rename (§7.4.3) instead of an in-place SQL transaction
+  *  - the merge is a snapshot rewrite committed through [[DirCommit]]
+  *    (§7.4.3) instead of an in-place SQL transaction
   *  - FK domains are joins, not driver RAM sets — they scale past memory
   */
 object ImportPipeline {
@@ -149,9 +149,8 @@ object ImportPipeline {
     // J1 FK checks, in turn: one left join per FK against the
     // parent's distinct keys; a null FK passes (bagh/batch.py:231)
     spec.fks.foldLeft(extra) {
-      case (df, FkSpec(child, parentName, parentKey, bcast)) =>
-        val keys0 = parents(parentName).select(col(parentKey).as("__pk")).distinct()
-        val keys = if (bcast) broadcast(keys0) else keys0
+      case (df, FkSpec(child, parentName, parentKey)) =>
+        val keys = broadcast(parents(parentName).select(col(parentKey).as("__pk")).distinct())
         df.join(keys, col(child) === col("__pk"), "left")
           .withColumn(Reason, when(open && col(child).isNotNull && col("__pk").isNull,
             lit(s"fk_miss:$child")).otherwise(reason))
@@ -273,33 +272,9 @@ object ImportPipeline {
       counts.rejectedBy, cached)
   }
 
-  /** Atomic-ish snapshot commit (§7.4.3): write to a temp dir next to
-    * the target, then rename over it. Parquet overwrite alone is not
-    * transactional; rename of a directory on one filesystem is the
-    * closest safe primitive without a table format. */
-  def commitSnapshot(df: DataFrame, targetDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = targetDir + ".staging"
-    df.write.mode("overwrite").parquet(tmp)
-    val target = Paths.get(targetDir)
-    if (Files.exists(target)) {
-      val old = Paths.get(targetDir + ".old")
-      if (Files.exists(old)) {
-        Files.walk(old).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      }
-      Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    }
-    Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Sequential job runner with named-task restart — the reference's
-    * `--bagh_start` skip semantics (batch/batch.py:19-30). */
-  def runJob(tasks: Seq[(String, () => Unit)], startAt: Option[String] = None): Seq[String] = {
-    val toRun = startAt match {
-      case Some(s) => tasks.dropWhile(_._1 != s)
-      case None => tasks
-    }
-    toRun.map { case (name, fn) => fn(); name }
-  }
+  /** Commits `df` as the snapshot at `dir` ([[DirCommit]]): a crash
+    * leaves either the previous snapshot or this one, never neither.
+    * Parquet overwrite alone is not transactional. */
+  def commitSnapshot(df: DataFrame, dir: String): Unit =
+    DirCommit.commit(dir)(df.write.mode("overwrite").parquet(_))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.Temporal
-import graft.pipeline.ImportPipeline
+import graft.pipeline.{DirCommit, ImportPipeline}
 
 /** Streaming SCD2 ingest — the reference's incremental temporal merge
   * (README.md:28 "second and later runs are incremental";
@@ -35,74 +35,6 @@ case class AsofMatch(key: Long, pid: Long, asof: Option[Long])
 
 object StreamingIngest {
 
-  /** The committed snapshot, if any commit has happened yet. */
-  def currentSnapshot(spark: SparkSession, snapshotDir: String): Option[DataFrame] =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(snapshotDir)))
-      Some(spark.read.parquet(snapshotDir))
-    else None
-
-  /** Marker written into staging as the LAST step before the pointer
-    * swap — its presence is the one bit that distinguishes "staging is
-    * a complete, commit-ready state" from "the writer died mid-write".
-    * Without it, a first-epoch crash mid-staging-write (no current
-    * exists yet) would leave a PARTIAL staging that [[recoverState]]
-    * could not tell apart from the committed-but-unswapped case, and
-    * rolling it forward would promote inconsistent frames (e.g. corpus
-    * rows whose keys are absent) to committed state (ADVICE r8). */
-  private val commitMarker = "_GRAFT_COMMIT_READY"
-
-  /** Heal an interrupted [[commitState]] before reading state. The
-    * commit is: marker write, then two ATOMIC_MOVEs (current→old,
-    * staging→current). A crash after the marker leaves a COMPLETE
-    * staging — roll the commit forward; a crash before it (mid-write,
-    * including the very first epoch when no current exists) leaves a
-    * partial staging with no marker — delete it so the replayed epoch
-    * rebuilds from the last committed state. A staging dir alongside a
-    * live current (died after writing staging, before the demote) is
-    * also discarded: that epoch replays and re-derives staging from
-    * current. Without the roll-forward, a crash in the two-move window
-    * would make the next epoch see "no state" and silently rebuild
-    * from one batch, discarding everything accepted before it. */
-  private def recoverState(stateDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val cur = Paths.get(s"$stateDir/current")
-    val stg = Paths.get(s"$stateDir/staging")
-    if (!Files.exists(cur) && Files.exists(stg)) {
-      if (Files.exists(stg.resolve(commitMarker))) {
-        Files.move(stg, cur, StandardCopyOption.ATOMIC_MOVE)
-        Files.deleteIfExists(cur.resolve(commitMarker))
-      } else deleteTree(stg) // partial first-epoch write — not committed
-    } else if (Files.exists(cur) && Files.exists(stg))
-      deleteTree(stg)
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.delete(q))
-    }
-
-  /** Publish `<stateDir>/staging` as `<stateDir>/current`: seal
-    * staging with the [[commitMarker]] (the point of no return — from
-    * here the commit completes even across crashes), drop the previous
-    * `old`, demote current, promote staging — each move an
-    * ATOMIC_MOVE, with the one non-atomic window (between the two
-    * moves) healed by [[recoverState]] at the next epoch's entry. */
-  private def commitState(stateDir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val curPath = Paths.get(s"$stateDir/current")
-    Files.createFile(Paths.get(s"$stateDir/staging/$commitMarker"))
-    if (Files.exists(curPath)) {
-      val old = Paths.get(s"$stateDir/old")
-      deleteTree(old)
-      Files.move(curPath, old, StandardCopyOption.ATOMIC_MOVE)
-    }
-    Files.move(Paths.get(s"$stateDir/staging"), curPath,
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.deleteIfExists(curPath.resolve(commitMarker))
-  }
-
   /** Streaming incremental dedup ingest — the
     * [[graft.ops.Dedup.dedupIncrementFullIndexedBloom]] loop wired
     * into `foreachBatch`: per micro-batch, full incremental dedup
@@ -116,15 +48,13 @@ object StreamingIngest {
     * never re-shingled — each epoch reads the index and writes its
     * own delta, exactly the materialized-index contract.
     *
-    * Commit protocol ([[commitState]] + [[recoverState]]): all five
-    * frames write to one staging root, then the staging dir is
-    * promoted to `<stateDir>/current` — corpus/index/keys/bloom plus
-    * the portable HLL cardinality sketch ([[graft.ops.Sketches]],
-    * max-merged per epoch) can
-    * never disagree, the manifest-swap discipline a table format
-    * provides at scale. The swap is two ATOMIC_MOVEs; a crash in the
-    * window between them is healed by roll-forward at the next
-    * epoch's entry, so no committed state is ever lost. Replay safety
+    * Commit protocol ([[DirCommit]]): all five frames write to one
+    * staging root, which is then promoted to `<stateDir>/current` —
+    * corpus/index/keys/bloom plus the portable HLL cardinality sketch
+    * ([[graft.ops.Sketches]], max-merged per epoch) can never
+    * disagree, the manifest-swap discipline a table format provides
+    * at scale. A crash mid-commit is healed at the next epoch's
+    * entry, so no committed state is ever lost. Replay safety
     * falls out of the semantics: re-delivering a committed epoch
     * re-accepts nothing (every previously-accepted text is in the
     * keyset — and in the bitmap, so it flows through the anti-join
@@ -153,9 +83,8 @@ object StreamingIngest {
     import org.apache.spark.sql.functions.col
     import graft.ops.Dedup
     val spark = batch.sparkSession
-    recoverState(stateDir)
     val cur = s"$stateDir/current"
-    val exists = Files.exists(Paths.get(cur))
+    val exists = DirCommit.current(cur)
     val committedBloom =
       if (exists && Files.exists(Paths.get(s"$cur/bloom")))
         Dedup.bloomRead(spark, s"$cur/bloom", bloomBits)
@@ -203,14 +132,13 @@ object StreamingIngest {
         Sketches.hllMerge(Sketches.hllRead(spark, s"$cur/hll"),
           Sketches.hllRegisters(accepted.select(col(textCol)), textCol))
       else Sketches.hllRegisters(keys, textCol)
-    // stage all five, then the recoverable pointer swap
-    val staging = s"$stateDir/staging"
-    corpus.write.mode("overwrite").parquet(s"$staging/corpus")
-    idx.write.mode("overwrite").parquet(s"$staging/index")
-    keys.write.mode("overwrite").parquet(s"$staging/keys")
-    Dedup.bloomWrite(bloom, spark, s"$staging/bloom")
-    Sketches.hllWrite(hll, s"$staging/hll")
-    commitState(stateDir)
+    DirCommit.commit(cur) { staging =>
+      corpus.write.mode("overwrite").parquet(s"$staging/corpus")
+      idx.write.mode("overwrite").parquet(s"$staging/index")
+      keys.write.mode("overwrite").parquet(s"$staging/keys")
+      Dedup.bloomWrite(bloom, spark, s"$staging/bloom")
+      Sketches.hllWrite(hll, s"$staging/hll")
+    }
   }
 
   /** Streaming ANN-index ingest — [[graft.ops.Similarity.annIndexAppend]]
@@ -226,8 +154,7 @@ object StreamingIngest {
     * against the committed index on the id — a re-delivered epoch
     * appends nothing and recommits identical state (the dedupIngest
     * discipline; ids must be unique across the stream, the usual ANN
-    * contract). Commit = staging write + the [[commitState]] swap,
-    * crash-window healed by [[recoverState]]. Codebook drift is the
+    * contract). Commit = [[DirCommit]]. Codebook drift is the
     * caller's retraining decision — a retrain means a new stateDir,
     * never an in-place mutation.
     *
@@ -256,23 +183,19 @@ object StreamingIngest {
   def annIngestBatch(batch: DataFrame, idCol: String, vecCol: String,
       cb: Array[Array[Double]], cbs: Array[Array[Array[Long]]],
       stateDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions.col
     import graft.ops.Similarity
     val spark = batch.sparkSession
-    recoverState(stateDir)
     val cur = s"$stateDir/current"
-    val exists = Files.exists(Paths.get(cur))
     val idx =
-      if (exists) {
+      if (DirCommit.current(cur)) {
         val committed = spark.read.parquet(s"$cur/index")
         val fresh = batch.join(
           committed.select(col("neighbor_id").as(idCol)), Seq(idCol),
           "left_anti")
         Similarity.annIndexAppend(committed, fresh, idCol, vecCol, cb, cbs)
       } else Similarity.ivfadcIndex(batch, idCol, vecCol, cb, cbs)
-    idx.write.mode("overwrite").parquet(s"$stateDir/staging/index")
-    commitState(stateDir)
+    DirCommit.commit(cur)(stg => idx.write.mode("overwrite").parquet(s"$stg/index"))
   }
 
   /** Streaming incremental-aggregate maintenance —
@@ -288,8 +211,7 @@ object StreamingIngest {
     * would double-count — so the state carries an `_epoch` ledger
     * (the highest batchId merged, committed atomically WITH the
     * state). A replayed epoch compares its batchId against the
-    * ledger and recommits nothing. Commit = staging write + the
-    * [[commitState]] swap, crash-window healed by [[recoverState]].
+    * ledger and recommits nothing ([[epochCommit]]).
     *
     * Scale note: like the other frames, local-mode staging rewrites
     * the (keys-sized) state per epoch — the state is ≤ |distinct
@@ -337,7 +259,8 @@ object StreamingIngest {
           "its batchIds would restart and the _epoch ledger would " +
           "silently DROP new epochs as replays. Use a fresh stateDir " +
           "with a fresh checkpoint.")
-    } else if (Files.exists(Paths.get(s"$stateDir/current/_epoch"))) {
+    } else if (DirCommit.current(s"$stateDir/current") &&
+        Files.exists(Paths.get(s"$stateDir/current/_epoch"))) {
       // an _epoch ledger WITHOUT a tag means the state was built
       // outside this guard (the *Batch entry point directly, or a
       // crash in the pre-tag window of an old build): its batchId
@@ -698,58 +621,43 @@ object StreamingIngest {
       tsCol: String, idCol: String, valCol: String, targetCenti: Long,
       slackCenti: Long, hCenti: Long, stateDir: String,
       monitorDir: String, epochId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit,
       max_by, struct}
     val spark = batch.sparkSession
-    recoverState(stateDir)
-    val cur = s"$stateDir/current"
-    val exists = Files.exists(Paths.get(cur))
-    val committedEpoch =
-      if (exists && Files.exists(Paths.get(s"$cur/_epoch")))
-        Files.readString(Paths.get(s"$cur/_epoch")).trim.toLong
-      else Long.MinValue
-    if (epochId <= committedEpoch) return // replayed epoch: no-op
-    val prior =
-      if (exists) spark.read.parquet(s"$cur/state")
-      else batch.sparkSession.range(0)
-        .select(col("id").as("__u"), col("id").as("cp"),
-          col("id").as("cn"))
-    val withCarry = batch
-      .join(prior.select(col("__u"), col("cp").as("__jp"),
-          col("cn").as("__jn")),
-        col(userCol) === col("__u"), "left")
-      .withColumn("__cp0", coalesce(col("__jp"), lit(0L)))
-      .withColumn("__cn0", coalesce(col("__jn"), lit(0L)))
-    val folded = graft.ops.EventAnalytics.cusumCentiWithCarry(
-      withCarry, userCol, tsCol, idCol, valCol, targetCenti,
-      slackCenti, hCenti)
-    folded
-      .withColumn("epoch", lit(epochId))
-      .select(col("epoch"), col(userCol), col("rn"), col("event_id"),
-        col("s_pos_centi"), col("s_neg_centi"), col("alarm_up"),
-        col("alarm_down"))
-      .coalesce(1) // batch-sized ledger
-      .write.mode("overwrite").parquet(s"$monitorDir/epoch_$epochId")
-    // new carries: the last event's post-reset statistics per entity
-    val lastRows = spark.read
-      .parquet(s"$monitorDir/epoch_$epochId")
-      .groupBy(col(userCol).as("__u"))
-      .agg(max_by(struct(col("s_pos_centi").as("sp"),
-        col("s_neg_centi").as("sn")), col("rn")).as("__last"))
-      .select(col("__u"),
-        expr(s"CASE WHEN __last.sp > ${hCenti}L THEN 0L " +
-          "ELSE __last.sp END").as("cp"),
-        expr(s"CASE WHEN __last.sn > ${hCenti}L THEN 0L " +
-          "ELSE __last.sn END").as("cn"))
-    val untouched = prior.join(lastRows.select(col("__u").as("__u2")),
-      col("__u") === col("__u2"), "left_anti")
-    val state = untouched.unionByName(lastRows)
-    val staging = s"$stateDir/staging"
-    state.coalesce(1).write.mode("overwrite")
-      .parquet(s"$staging/state")
-    Files.writeString(Paths.get(s"$staging/_epoch"), epochId.toString)
-    commitState(stateDir)
+    epochCommit(spark, stateDir, epochId) { committed =>
+      val prior = committed.getOrElse(spark.range(0)
+        .select(col("id").as("__u"), col("id").as("cp"), col("id").as("cn")))
+      val withCarry = batch
+        .join(prior.select(col("__u"), col("cp").as("__jp"),
+            col("cn").as("__jn")),
+          col(userCol) === col("__u"), "left")
+        .withColumn("__cp0", coalesce(col("__jp"), lit(0L)))
+        .withColumn("__cn0", coalesce(col("__jn"), lit(0L)))
+      val folded = graft.ops.EventAnalytics.cusumCentiWithCarry(
+        withCarry, userCol, tsCol, idCol, valCol, targetCenti,
+        slackCenti, hCenti)
+      folded
+        .withColumn("epoch", lit(epochId))
+        .select(col("epoch"), col(userCol), col("rn"), col("event_id"),
+          col("s_pos_centi"), col("s_neg_centi"), col("alarm_up"),
+          col("alarm_down"))
+        .coalesce(1) // batch-sized ledger
+        .write.mode("overwrite").parquet(s"$monitorDir/epoch_$epochId")
+      // new carries: the last event's post-reset statistics per entity
+      val lastRows = spark.read
+        .parquet(s"$monitorDir/epoch_$epochId")
+        .groupBy(col(userCol).as("__u"))
+        .agg(max_by(struct(col("s_pos_centi").as("sp"),
+          col("s_neg_centi").as("sn")), col("rn")).as("__last"))
+        .select(col("__u"),
+          expr(s"CASE WHEN __last.sp > ${hCenti}L THEN 0L " +
+            "ELSE __last.sp END").as("cp"),
+          expr(s"CASE WHEN __last.sn > ${hCenti}L THEN 0L " +
+            "ELSE __last.sn END").as("cn"))
+      val untouched = prior.join(lastRows.select(col("__u").as("__u2")),
+        col("__u") === col("__u2"), "left_anti")
+      untouched.unionByName(lastRows).coalesce(1)
+    }
   }
 
   /** One epoch of [[aggIngest]], separated so the batch path is
@@ -759,29 +667,32 @@ object StreamingIngest {
   def aggIngestBatch(batch: DataFrame, keys: Seq[String],
       sumCols: Seq[String], minCols: Seq[String], maxCols: Seq[String],
       stateDir: String, epochId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
     import graft.ops.IncrementalAgg
-    val spark = batch.sparkSession
-    recoverState(stateDir)
+    epochCommit(batch.sparkSession, stateDir, epochId) { committed =>
+      val delta = IncrementalAgg.aggState(batch, keys, sumCols, minCols,
+        maxCols)
+      committed.fold(delta)(c =>
+        IncrementalAgg.mergeState(Seq(c, delta), keys, sumCols, minCols, maxCols))
+    }
+  }
+
+  /** The `_epoch` ledger of the state writers: unless `epochId` was
+    * already merged into `<stateDir>/current` (a replayed epoch: no-op),
+    * `next` turns the committed `state`, if any, into the new one, which
+    * commits together with `epochId` as the ledger. */
+  private def epochCommit(spark: SparkSession, stateDir: String,
+      epochId: Long)(next: Option[DataFrame] => DataFrame): Unit = {
+    import java.nio.file.{Files, Paths}
     val cur = s"$stateDir/current"
-    val exists = Files.exists(Paths.get(cur))
-    val committedEpoch =
-      if (exists && Files.exists(Paths.get(s"$cur/_epoch")))
-        Files.readString(Paths.get(s"$cur/_epoch")).trim.toLong
-      else Long.MinValue
-    if (epochId <= committedEpoch) return // replayed epoch: no-op
-    val delta = IncrementalAgg.aggState(batch, keys, sumCols, minCols,
-      maxCols)
-    val state =
-      if (exists)
-        IncrementalAgg.mergeState(
-          Seq(spark.read.parquet(s"$cur/state"), delta),
-          keys, sumCols, minCols, maxCols)
-      else delta
-    val staging = s"$stateDir/staging"
-    state.write.mode("overwrite").parquet(s"$staging/state")
-    Files.writeString(Paths.get(s"$staging/_epoch"), epochId.toString)
-    commitState(stateDir)
+    val exists = DirCommit.current(cur)
+    val ledger = Paths.get(s"$cur/_epoch")
+    if (!(Files.exists(ledger) && epochId <= Files.readString(ledger).trim.toLong)) {
+      val state = next(Option.when(exists)(spark.read.parquet(s"$cur/state")))
+      DirCommit.commit(cur) { staging =>
+        state.write.mode("overwrite").parquet(s"$staging/state")
+        Files.writeString(Paths.get(s"$staging/_epoch"), epochId.toString)
+      }
+    }
   }
 
   /** Start the ingest. `validateBatch` is the fail-fast gate (reference
@@ -862,10 +773,10 @@ object StreamingIngest {
       .cache()
     try {
       validateBatch(staged)
-      val merged = currentSnapshot(spark, snapshotDir) match {
-        case Some(live) => Temporal.mergeScd2(live, staged, idCol)
-        case None => staged.toDF()
-      }
+      val merged =
+        if (DirCommit.current(snapshotDir))
+          Temporal.mergeScd2(spark.read.parquet(snapshotDir), staged, idCol)
+        else staged.toDF()
       ImportPipeline.commitSnapshot(merged, snapshotDir)
     } finally staged.unpersist()
   }

@@ -22,6 +22,38 @@ class BagJobSpec extends SparkSuite {
     header.mkString(";") +: rows.map(r => header.map(h => r.getOrElse(h, "")).mkString(";"))
   }
 
+  private val stadsdeelRows = Seq(
+    Map("identificatie" -> "SDL1", "volgnummer" -> "1",
+      "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+      "naam" -> "Centrum", "code" -> "A",
+      "ligtIn:BRK.GME.identificatie" -> "0363", "ligtIn:BRK.GME.volgnummer" -> "1"),
+    Map("identificatie" -> "SDL2", "volgnummer" -> "1",
+      "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+      "naam" -> "West", "code" -> "B",
+      "ligtIn:BRK.GME.identificatie" -> "0363"))
+
+  /** The three-table FK chain stadsdeel -> ggw_gebied -> wijk; one wijk
+    * row names a stadsdeel that does not exist. */
+  private def writeChain(data: String,
+      stadsdeel: Seq[Map[String, String]] = stadsdeelRows): Unit = {
+    writeCsv(data, "GBD_stadsdeel_ActueelEnHistorie.csv", csvFor(BagTables.stadsdeel, stadsdeel))
+    writeCsv(data, "GBD_ggw_gebied_ActueelEnHistorie.csv", csvFor(BagTables.ggwGebied, Seq(
+      Map("identificatie" -> "GGW1", "volgnummer" -> "1",
+        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+        "naam" -> "Gebied 1", "code" -> "G1",
+        "ligtIn:GBD.SDL.identificatie" -> "SDL1", "ligtIn:GBD.SDL.volgnummer" -> "1"))))
+    writeCsv(data, "GBD_wijk_ActueelEnHistorie.csv", csvFor(BagTables.wijk, Seq(
+      Map("identificatie" -> "WIJK1", "volgnummer" -> "1",
+        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+        "naam" -> "Wijk 1", "code" -> "W1", "cbsCode" -> "CBS1",
+        "ligtIn:GBD.SDL.identificatie" -> "SDL1", "ligtIn:GBD.SDL.volgnummer" -> "1",
+        "ligtIn:GBD.GGW.identificatie" -> "GGW1", "ligtIn:GBD.GGW.volgnummer" -> "1"),
+      Map("identificatie" -> "WIJK9", "volgnummer" -> "1",   // dangling stadsdeel
+        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+        "naam" -> "Spook", "code" -> "W9", "cbsCode" -> "CBS9",
+        "ligtIn:GBD.SDL.identificatie" -> "SDL9", "ligtIn:GBD.SDL.volgnummer" -> "1"))))
+  }
+
   private lazy val meter = RunMeter.attach(spark)
 
   /** `f`'s result and the number of Spark jobs it started. */
@@ -43,32 +75,7 @@ class BagJobSpec extends SparkSuite {
     val data = s"$base/data"; val out = s"$base/out"
     Files.createDirectories(Paths.get(data))
 
-    writeCsv(data, "GBD_stadsdeel_ActueelEnHistorie.csv", csvFor(BagTables.stadsdeel, Seq(
-      Map("identificatie" -> "SDL1", "volgnummer" -> "1",
-        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
-        "naam" -> "Centrum", "code" -> "A",
-        "ligtIn:BRK.GME.identificatie" -> "0363", "ligtIn:BRK.GME.volgnummer" -> "1"),
-      Map("identificatie" -> "SDL2", "volgnummer" -> "1",
-        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
-        "naam" -> "West", "code" -> "B",
-        "ligtIn:BRK.GME.identificatie" -> "0363"))))
-
-    writeCsv(data, "GBD_ggw_gebied_ActueelEnHistorie.csv", csvFor(BagTables.ggwGebied, Seq(
-      Map("identificatie" -> "GGW1", "volgnummer" -> "1",
-        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
-        "naam" -> "Gebied 1", "code" -> "G1",
-        "ligtIn:GBD.SDL.identificatie" -> "SDL1", "ligtIn:GBD.SDL.volgnummer" -> "1"))))
-
-    writeCsv(data, "GBD_wijk_ActueelEnHistorie.csv", csvFor(BagTables.wijk, Seq(
-      Map("identificatie" -> "WIJK1", "volgnummer" -> "1",
-        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
-        "naam" -> "Wijk 1", "code" -> "W1", "cbsCode" -> "CBS1",
-        "ligtIn:GBD.SDL.identificatie" -> "SDL1", "ligtIn:GBD.SDL.volgnummer" -> "1",
-        "ligtIn:GBD.GGW.identificatie" -> "GGW1", "ligtIn:GBD.GGW.volgnummer" -> "1"),
-      Map("identificatie" -> "WIJK9", "volgnummer" -> "1",   // dangling stadsdeel
-        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
-        "naam" -> "Spook", "code" -> "W9", "cbsCode" -> "CBS9",
-        "ligtIn:GBD.SDL.identificatie" -> "SDL9", "ligtIn:GBD.SDL.volgnummer" -> "1"))))
+    writeChain(data)
 
     // job budgets of the single tagged pass per table: a schema-
     // inference read or a recount of a commit shows up here
@@ -125,5 +132,60 @@ class BagJobSpec extends SparkSuite {
     // the row references SDL1 but stadsdeel's snapshot is an empty
     // spec-schema frame -> honest fk_miss rejection, zero rows loaded
     assert(byName("ggw_gebied").loaded == 0 && byName("ggw_gebied").rejected == 1)
+  }
+
+  test("BagJob: a restart after a crash between the commit's two moves keeps the snapshots") {
+    import org.apache.commons.io.FileUtils
+    val base = Files.createTempDirectory("graft-bagjob-crash").toString
+    val data = s"$base/data"; val out = s"$base/out"
+    Files.createDirectories(Paths.get(data))
+    writeChain(data)
+    BagJob.run(spark, data, out)
+    val tables = Seq("gemeente", "stadsdeel", "ggw_gebied", "wijk")
+    def rows(t: String) = spark.read.parquet(s"$out/$t").collect().map(_.toString).sorted.toSeq
+    val clean = tables.map(t => t -> rows(t)).toMap
+    def assertClean(): Unit = tables.foreach { t =>
+      assert(rows(t) == clean(t), t)
+      assert(!Files.exists(Paths.get(s"$out/$t.staging")), t)
+      assert(!Files.exists(Paths.get(s"$out/$t/_GRAFT_COMMIT_READY")), t)
+    }
+    val live = new java.io.File(s"$out/stadsdeel")
+    val staging = new java.io.File(s"$out/stadsdeel.staging")
+    // the residue of a crash between the commit's two moves: the live
+    // snapshot demoted to `.old`, its complete successor staged and sealed
+    def crash(): Unit = {
+      FileUtils.copyDirectory(live, staging)
+      Files.createFile(staging.toPath.resolve("_GRAFT_COMMIT_READY"))
+      FileUtils.deleteDirectory(new java.io.File(s"$out/stadsdeel.old"))
+      Files.move(live.toPath, Paths.get(s"$out/stadsdeel.old"))
+    }
+    def byName(os: Seq[BagJob.TableOutcome]) = os.map(o => o.name -> o).toMap
+
+    // restart at the crashed table's child: its FK checks see the
+    // rolled-forward parent, not an empty one
+    crash()
+    val child = byName(BagJob.run(spark, data, out, startAt = Some("ggw_gebied")))
+    assert(child("ggw_gebied").loaded == 1 && child("ggw_gebied").rejected == 0)
+    assert(child("wijk").loaded == 1 && child("wijk").rejected == 1)
+    assertClean()
+
+    // full restart: the crashed table re-imports against its history
+    crash()
+    val full = byName(BagJob.run(spark, data, out))
+    assert(full("stadsdeel").loaded == 2 && full("stadsdeel").errors.isEmpty)
+    assertClean()
+
+    // a re-import that drops a history row still aborts after a crash
+    crash()
+    writeChain(data, stadsdeelRows.take(1))
+    val dropped = byName(BagJob.run(spark, data, out))
+    assert(dropped("stadsdeel").errors == Seq("deleted_history_rows:1"))
+    assertClean()
+
+    // an unsealed staging next to the live snapshot is discarded, never
+    // promoted
+    spark.read.parquet(live.getPath).limit(1).write.parquet(staging.getPath)
+    BagJob.run(spark, data, out, startAt = Some("ggw_gebied"))
+    assertClean()
   }
 }

@@ -249,13 +249,6 @@ class CsvPipelineSpec extends SparkSuite {
     assert(spark.read.parquet(dir).count() == 2)
   }
 
-  test("runJob: named-task restart skips prefix (batch/batch.py:19-30)") {
-    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
-    val tasks = Seq("a", "b", "c").map(n => n -> (() => { ran += n; () }))
-    assert(ImportPipeline.runJob(tasks, Some("b")) == Seq("b", "c"))
-    assert(ran.toSeq == Seq("b", "c"))
-  }
-
   test("A2 metrics: QueryExecutionListener records action row counts") {
     import graft.pipeline.MetricsListener
     val l = MetricsListener.attach(spark)

@@ -55,10 +55,10 @@ object FilterChain {
       df.withColumn(name, expr)
     }
     val (fkOk, fkBad) = spec.fks.foldLeft((extra, Seq.empty[DataFrame])) {
-      case ((df, bad), FkSpec(child, parentName, parentKey, bcast)) =>
+      case ((df, bad), FkSpec(child, parentName, parentKey)) =>
         val parent = parents(parentName)
-        val ok = Relational.semiJoinFk(df, child, parent, parentKey, bcast)
-        val miss = Relational.fkViolations(df, child, parent, parentKey, bcast)
+        val ok = Relational.semiJoinFk(df, child, parent, parentKey)
+        val miss = Relational.fkViolations(df, child, parent, parentKey)
           .select(col("id"), lit(s"fk_miss:$child").as("reject_reason"))
         (ok, bad :+ miss)
     }

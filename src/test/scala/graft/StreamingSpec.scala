@@ -836,17 +836,17 @@ class StreamingSpec extends SparkSuite {
     // exact crash residue) — without roll-forward, the next epoch
     // would see "no state" and rebuild from its batch alone, losing
     // epoch 1
-    Files.move(Paths.get(s"$state/current"), Paths.get(s"$state/staging"),
+    Files.move(Paths.get(s"$state/current"), Paths.get(s"$state/current.staging"),
       StandardCopyOption.ATOMIC_MOVE)
-    Files.createFile(Paths.get(s"$state/staging/_GRAFT_COMMIT_READY"))
+    Files.createFile(Paths.get(s"$state/current.staging/_GRAFT_COMMIT_READY"))
     StreamingIngest.annIngestBatch(e2, "vec_id", "embedding", cb, cbs, state)
     val healed = spark.read.parquet(s"$state/current/index")
     assert(healed.count() == total) // nothing lost, replay added nothing
     assert(healed.filter($"neighbor_id" % 2 === 0).count() == e1.count())
     // stale staging next to a live current (crash after staging write,
     // before any move): the epoch replays and the stale copy is dropped
-    Files.createDirectories(Paths.get(s"$state/staging"))
-    Files.writeString(Paths.get(s"$state/staging/garbage"), "stale")
+    Files.createDirectories(Paths.get(s"$state/current.staging"))
+    Files.writeString(Paths.get(s"$state/current.staging/garbage"), "stale")
     StreamingIngest.annIngestBatch(e2, "vec_id", "embedding", cb, cbs, state)
     assert(spark.read.parquet(s"$state/current/index").count() == total)
   }
@@ -861,8 +861,8 @@ class StreamingSpec extends SparkSuite {
     // (e.g. corpus without keys) would make later epochs fail or
     // silently re-accept duplicates (ADVICE r8)
     val state = Files.createTempDirectory("graft-dedup-firstcrash").toString
-    Files.createDirectories(Paths.get(s"$state/staging/corpus"))
-    Files.writeString(Paths.get(s"$state/staging/corpus/part-00000"), "torn")
+    Files.createDirectories(Paths.get(s"$state/current.staging/corpus"))
+    Files.writeString(Paths.get(s"$state/current.staging/corpus/part-00000"), "torn")
     // no index/, no keys/, no commit marker — a torn first write
     val epoch = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
@@ -875,7 +875,7 @@ class StreamingSpec extends SparkSuite {
       .select($"doc_id").as[Long].collect().toSet
     assert(ids == Set(1L, 2L))
     assert(spark.read.parquet(s"$state/current/keys").count() == 2)
-    assert(!Files.exists(Paths.get(s"$state/staging")))
+    assert(!Files.exists(Paths.get(s"$state/current.staging")))
     // and a second epoch reads that state normally
     StreamingIngest.dedupIngestBatch(
       Seq((3L, "alpha beta gamma delta epsilon zeta"),
