@@ -49,10 +49,8 @@ object Bench {
             "upper(s) IN ('J','Y')", "try_to_timestamp(s)").count()
       } catch { case _: Throwable => () }
     }
-    // median-of-N per query (default 3): single-shot numbers on a
-    // shared host swing ±30%; the median is stable enough to compare
-    // across rounds. Total = sum of per-query medians.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    // median of RunMeter.Reps per query. Total = sum of per-query medians.
+    val reps = RunMeter.Reps
     // optional comma-separated name-prefix filter (e.g. "q49,q103") so
     // a single query's cost can be iterated on without the full sweep
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

@@ -53,7 +53,7 @@ object IndexedScale {
       .cache()
     batch.count()
 
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = RunMeter.Reps
     for ((label, f) <- Seq("1x" -> 1, s"${factor}x" -> factor).distinct) {
       val dir = s"$work/$label"
       (0 until f).map { i =>

@@ -38,45 +38,28 @@ object KendallScale {
       .reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$synth/orders.parquet")
 
-    def kendall(dir: String, buckets: Int, tall: Boolean) = {
+    def kendall(dir: String, buckets: Int) = {
       val o = spark.read.parquet(s"$dir/orders.parquet").select(
         col("o_orderpriority"), col("o_orderkey"),
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("long").as("x"),
         datediff(col("o_orderdate"), lit("1970-01-01"))
           .cast("long").as("y"))
-      if (tall)
-        graft.ops.Profile.kendallTauExactTall(o, "o_orderpriority",
-          "o_orderkey", "x", "y", buckets = buckets)
-      else
-        graft.ops.Profile.kendallTauExact(o, "o_orderpriority",
-          "o_orderkey", "x", "y", buckets = buckets)
+      graft.ops.Profile.kendallTauExact(o, "o_orderpriority",
+        "o_orderkey", "x", "y", buckets = buckets)
     }
 
-    // default arms: the gate shape, the (falsified — see SCALE.md
-    // round-15) B∝n arm, and fixed-B; override with
-    // SPARK_GRAFT_KENDALL_ARMS="1x:8,4x:16T,..." to bracket the
-    // optimum (a trailing T = the r16 TALL count-frame form, which
-    // is how B > 128 becomes expressible at all)
-    val arms = sys.env.get("SPARK_GRAFT_KENDALL_ARMS") match {
-      case Some(spec) => spec.split(',').toSeq.map { a =>
-        val Array(sc, bs) = a.split(':')
-        val tall = bs.endsWith("T")
-        val b = (if (tall) bs.dropRight(1) else bs).toInt
-        (s"${sc}_B$b${if (tall) "_tall" else ""}",
-          if (sc == "1x") base else synth, b, tall)
-      }
-      case None => Seq(
-        ("1x_B32_gate", base, 32, false),
-        (s"${factor}x_B${32 * factor}_contract", synth, 32 * factor,
-          false),
-        (s"${factor}x_B32_fixed_quadratic", synth, 32, false))
-    }
+    // arms: the gate shape, the (falsified — see SCALE.md round-15)
+    // B∝n arm, and fixed-B
+    val arms = Seq(
+      ("1x_B32_gate", base, 32),
+      (s"${factor}x_B${32 * factor}_contract", synth, 32 * factor),
+      (s"${factor}x_B32_fixed_quadratic", synth, 32))
     // warm pass (JVM/codegen startup bills to no arm)
-    kendall(base, 32, tall = false).queryExecution.toRdd.count()
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    for ((label, dir, b, tall) <- arms) {
-      val (sec, n, m) = meter.medianOf(reps)(() => kendall(dir, b, tall))
+    kendall(base, 32).queryExecution.toRdd.count()
+    val reps = RunMeter.Reps
+    for ((label, dir, b) <- arms) {
+      val (sec, n, m) = meter.medianOf(reps)(() => kendall(dir, b))
       println(String.format(java.util.Locale.ROOT,
         """{"arm":"%s","buckets":%d,"rows":%d,"sec":%.3f,"shuffle_mb":%.1f,"max_task_peak_mb":%.1f,"reps":%d}""",
         label, Int.box(b), Long.box(n),

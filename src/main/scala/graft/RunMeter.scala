@@ -115,6 +115,10 @@ final class RunMeter private (spark: SparkSession) extends SparkListener {
 }
 
 object RunMeter {
+  /** Repetitions per timed point in Bench and the stress mains: single
+    * shots on a shared host swing ±30%, their median does not. */
+  val Reps = 3
+
   final case class JobTime(id: Int, seconds: Double, description: String)
 
   final case class Reading(jobs: Int, jobTimes: Seq[JobTime],

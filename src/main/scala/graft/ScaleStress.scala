@@ -31,44 +31,9 @@ object ScaleStress {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
     val synth = if (args.length > 2) args(2) else "/tmp/graft_scale"
-    // Overridable shuffle-partition count: the SCALE.md claim "task
-    // peak is a partitioning config" is demonstrated by re-running an
-    // Nx arm with N× partitions and watching max_task_peak return to
-    // the 1× level — exactly what a cluster deployment does when
-    // partition count tracks input bytes.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    // AQE's partition coalescing rewrites the configured count back
-    // to ~advisory-size partitions, so a partitions-axis sweep would
-    // measure the advisory size, not the configured count —
-    // SPARK_GRAFT_AQE_COALESCE=0 pins the count for those arms.
-    val aqeCoalesce =
-      !sys.env.get("SPARK_GRAFT_AQE_COALESCE").contains("0")
-    // SPARK_GRAFT_NO_BROADCAST=1 forces the SMJ regime (the regime a
-    // 1000× cluster run is in anyway, post broadcast→SMJ transition):
-    // with broadcasts on, the peak task at bench scale is the
-    // broadcast-exchange BUILD, whose memory tracks the broadcast
-    // relation (governed by autoBroadcastJoinThreshold), masking the
-    // shuffle-task claim the partitions sweep measures.
-    val noBroadcast = sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1")
-    // SPARK_GRAFT_BCAST_CAP=<bytes> is the PRODUCTION-like middle arm
-    // (VERDICT r12 #6): a real cluster does not turn broadcasting off,
-    // it caps the relation size (10 MB is the Spark default) — so the
-    // honest peak-memory arm keeps small dims broadcasting while
-    // forcing every data-sized build side through the SMJ/shuffle
-    // path, instead of leaving the broadcast regime entirely
-    // (NO_BROADCAST, which also shuffles the tiny dims no cluster
-    // would). Mutually exclusive with NO_BROADCAST.
-    val bcastCap = sys.env.get("SPARK_GRAFT_BCAST_CAP")
-    require(!(noBroadcast && bcastCap.isDefined),
-      "set SPARK_GRAFT_NO_BROADCAST or SPARK_GRAFT_BCAST_CAP, not both")
-    val broadcastCap = if (noBroadcast) Some("-1") else bcastCap
+    val shufflePartitions = 32
     val spark = Sessions.local(conf = Seq(
-        "spark.sql.shuffle.partitions" -> shufflePartitions,
-        "spark.sql.adaptive.coalescePartitions.enabled" -> aqeCoalesce.toString) ++
-      broadcastCap.toSeq.flatMap(cap => Seq(
-        "spark.sql.autoBroadcastJoinThreshold" -> cap,
-        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> cap)))
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString))
     val meter = RunMeter.attach(spark)
 
     def copiesMulti(tbl: String, offsetCols: Seq[String],
@@ -107,14 +72,6 @@ object ScaleStress {
     def copies(tbl: String, idCol: String, prefixText: Boolean) =
       copiesMulti(tbl, Seq(idCol), if (prefixText) Seq("text") else Nil)
     val synthG = s"$synth/graph"
-    // SPARK_GRAFT_SCALE_REUSE=1 skips the (deterministic) synthesis
-    // when a previous run already wrote it — sweeping a config axis
-    // (e.g. shuffle partitions) over the same corpus shouldn't pay
-    // the multi-minute rebuild per point.
-    val reuse = sys.env.get("SPARK_GRAFT_SCALE_REUSE").contains("1") &&
-      java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$synthG/part.parquet"))
-    if (!reuse) {
     copies("documents", "doc_id", prefixText = true)
       .write.mode("overwrite").parquet(s"$synth/documents.parquet")
     copies("embeddings", "vec_id", prefixText = false)
@@ -162,7 +119,6 @@ object ScaleStress {
     copiesMulti("part", Seq("p_partkey"), Nil, offset = gOff,
         post = (d, i) => letterPerm("p_name", i)(d))
       .write.mode("overwrite").parquet(s"$synthG/part.parquet")
-    } // end !reuse synthesis
 
     val allQnames = Seq("q26_ngram_jaccard", "q63_jaccard_pruned",
       "q64_neardup_components", "q68_contamination", "q72_kmeans_micro",
@@ -323,19 +279,17 @@ object ScaleStress {
       SparkEntry.queries(q)(spark,
         if (graphShaped(q)) synthG else synth).count()
     }
-    // median-of-reps per point (Bench precedent): single shots on a
-    // shared host swing several x with identical shuffle bytes
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = RunMeter.Reps
     for (q <- qnames; (label, dir) <- Seq("1x" -> base,
         s"${factor}x" -> (if (graphShaped(q)) synthG else synth))) {
       val (sec, n, m) = meter.medianOf(reps)(() => SparkEntry.queries(q)(spark, dir))
       val mb = m.shuffleBytes / 1e6 / reps
       println(String.format(java.util.Locale.ROOT,
-        """{"query":"%s","scale":"%s","rows":%d,"sec":%.3f,"shuffle_mb":%.1f,"peak_mem_mb":%.1f,"max_task_peak_mb":%.1f,"max_task_stage":"%s","partitions":%s,"reps":%d}""",
+        """{"query":"%s","scale":"%s","rows":%d,"sec":%.3f,"shuffle_mb":%.1f,"peak_mem_mb":%.1f,"max_task_peak_mb":%.1f,"max_task_stage":"%s","partitions":%d,"reps":%d}""",
         q, label, Long.box(n), Double.box(sec),
         Double.box(mb), Double.box(m.stagePeakMem / 1e6),
         Double.box(m.maxTaskPeak / 1e6), m.maxTaskStage,
-        shufflePartitions, Int.box(reps)))
+        Int.box(shufflePartitions), Int.box(reps)))
     }
     spark.stop()
   }

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one way the program builds a session. Every main and the test
-  * suite plan with the settings and the plan rule the bench runs, so a
-  * plan or a count measured by one entry point holds for the others. */
+/** The one way the program builds a session and registers its plan
+  * rules. Every main and the test suite plan with the settings and the
+  * rules the bench runs, so a plan or a count measured by one entry
+  * point holds for the others. */
 object Sessions {
   /** Local cores: `SPARK_GRAFT_CPUS`, else every processor of the host. */
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -13,8 +14,9 @@ object Sessions {
   /** A session on `local[cores]` (or the deployment address
     * `SPARK_GRAFT_MASTER`) with `cores` shuffle partitions, UTC, no UI
     * and a listener bus large enough that no metering event is dropped,
-    * with [[plans.OrderedDumpSortRule]] installed. `conf` adds settings
-    * or overrides these. */
+    * with the program's plan rules installed: [[plans.OrderedDumpSortRule]],
+    * then [[plans.SummaryRewriteRule]] (inert until a summary is
+    * registered). `conf` adds settings or overrides these. */
   def local(cores: Int = Sessions.cores,
       conf: Seq[(String, String)] = Nil): SparkSession = {
     val b = SparkSession.builder()
@@ -28,7 +30,9 @@ object Sessions {
     val spark = conf.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    plans.OrderedDumpSortRule.install(spark)
+    val rules = Seq(plans.OrderedDumpSortRule, plans.SummaryRewriteRule)
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(rules.contains) ++ rules
     spark
   }
 }

@@ -55,7 +55,7 @@ object SkewStress {
         (col("id") * 7).as("attr"))
       .localCheckpoint()
 
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = RunMeter.Reps
     def run(tag: String, expect: Long)(mk: () => org.apache.spark.sql.DataFrame): Unit = {
       val (sec, n, m) = meter.medianOf(reps)(mk)
       require(n == expect, s"$tag: $n rows, expected $expect")

@@ -784,8 +784,7 @@ object EventAnalytics {
     // picks). A constant boundary keeps the slice a genuine row
     // function — same plan shape, no quantile job; the constant's
     // VALUE is irrelevant by the balance-only contract.
-    val smallBytes = df.sparkSession.conf
-      .get("spark.graft.skewslice.smallBytes", (64L << 20).toString).toLong
+    val smallBytes = 64L << 20
     val est =
       try {
         val plan = df.queryExecution.optimizedPlan

@@ -41,9 +41,15 @@ object BagJob {
     * table with validation errors aborts before its write (reference
     * fail-fast), but later independent tables still run — its children
     * will then FK-reject against the stale/absent parent, which is the
-    * honest cascade. */
+    * honest cascade. A `startAt` that names no table of
+    * [[BagTables.loadOrder]] throws before anything is written. */
   def run(spark: SparkSession, dataDir: String, outDir: String,
       startAt: Option[String] = None): Seq[TableOutcome] = {
+    startAt.foreach { s =>
+      require(BagTables.loadOrder.exists(_.name == s),
+        s"startAt '$s' names no table; one of: " +
+          BagTables.loadOrder.map(_.name).mkString(", "))
+    }
     val parents = scala.collection.mutable.Map[String, DataFrame]()
     def dir(name: String) = s"$outDir/$name"
     // the committed snapshot of `name`, once an interrupted commit of it

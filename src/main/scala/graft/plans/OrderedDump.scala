@@ -62,13 +62,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * not for sorting data-scale intermediates, which never pass through
   * a global Sort in this engine's operators. A deployment that truly
   * global-sorts large outputs can leave the rule unregistered (it is
-  * registered per session via `experimental.extraOptimizations`,
-  * exactly like [[SummaryRewriteRule]]). */
+  * registered per session via `experimental.extraOptimizations`, by
+  * [[graft.Sessions.local]] together with [[SummaryRewriteRule]]). */
 object OrderedDumpSortRule extends Rule[LogicalPlan] {
 
-  /** The ONE registration site (r20, VERDICT r19 wrong #2): the
-    * session factory [[graft.Sessions]] calls this instead of
-    * hand-appending to `experimental.extraOptimizations`. Idempotent. */
+  /** Appends this rule alone to a session built outside
+    * [[graft.Sessions.local]] (the benchmark harness's), into the same
+    * optimizer batch `Sessions.local` uses. Idempotent. */
   def install(spark: org.apache.spark.sql.SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.DecimalType
   * summary frame (count → Σn, sum(dec2(c)) → Σ sum_c, min/max →
   * min/max of the state's min/max), so a matching rollup over a
   * 100 TB fact table becomes a scan of |keys| rows — the classic
-  * materialized-view rewrite, via `SparkSessionExtensions`/
-  * `experimental.extraOptimizations` like any Catalyst rule.
+  * materialized-view rewrite, installed in every session by
+  * [[graft.Sessions.local]] via `experimental.extraOptimizations`.
   *
   * The match is deliberately EXACT (defense against silently
   * rewriting unrelated queries, since the registry lives for the
@@ -74,8 +74,11 @@ object SummaryRegistry {
     try graft.queries.FixtureCache.fingerprint(base)
     catch { case _: Exception => "" }
 
+  /** `None` with no filesystem call while nothing is registered: the
+    * rule is in every session, so this is on every aggregate's path. */
   private[plans] def lookup(rootPaths: Seq[String]): Option[SummarySpec] = {
     import scala.jdk.CollectionConverters._
+    if (reg.isEmpty) return None
     val canon = rootPaths.map(canonical)
     reg.asScala.collectFirst {
       case (base, spec)

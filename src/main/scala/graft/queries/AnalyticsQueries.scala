@@ -4643,16 +4643,14 @@ object AnalyticsQueries {
       |SELECT 'except_all', k, COUNT(*) FROM e GROUP BY 2
       |ORDER BY op, k""".stripMargin
 
-  /** Build-once full-table summary registration + rewrite-rule
-    * install (idempotent) — shared by the q168/q169/q173 gates. */
+  /** Build-once full-table summary registration (idempotent) — shared
+    * by the q168/q169/q173/q190 gates. The rewrite rule itself is in
+    * every session ([[graft.Sessions.local]]). */
   private def ensureSummaryRewrite(s: SparkSession, dir: String): Unit = {
-    import graft.plans.{SummaryRegistry, SummaryRewriteRule}
+    import graft.plans.SummaryRegistry
     SummaryRegistry.register(s"$dir/lineitem.parquet",
       SummaryRegistry.SummarySpec(s"${fullAggStateRoot(s, dir)}/state",
         AggKeys, AggSums, AggMins, AggMaxs))
-    if (!s.experimental.extraOptimizations.contains(SummaryRewriteRule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ SummaryRewriteRule
   }
 
   /** Build-once persisted summary over the FULL lineitem (the q168

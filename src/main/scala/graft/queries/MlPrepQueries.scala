@@ -11,12 +11,10 @@ import QuerySpec.table
   * DuckDB comparison is bit-stable regardless of shuffle order. */
 object MlPrepQueries {
 
-  /** q72 codebook size / Lloyd iterations — env-overridable so a
-    * scale-stress run can train a realistic quantizer without code
-    * edits. Both the Spark query and its generated oracle SQL read
-    * these, so they cannot drift. */
-  private val kmeansK = sys.env.getOrElse("SPARK_GRAFT_KMEANS_K", "4").toInt
-  private val kmeansIters = sys.env.getOrElse("SPARK_GRAFT_KMEANS_ITERS", "2").toInt
+  /** q72 codebook size / Lloyd iterations. Both the Spark query and
+    * its generated oracle SQL read these, so they cannot drift. */
+  private val kmeansK = 4
+  private val kmeansIters = 2
 
   /** q76 literal query set — terms drawn from the synthetic corpus
     * vocabulary; shared by the Spark query and the generated oracle.
@@ -457,10 +455,6 @@ object MlPrepQueries {
     // centroid means, fixed iteration count, id-ordered seeds + cent_id
     // tiebreaks — bit-replicable, so the oracle just unrolls the
     // iterations in SQL. Output: long-form (cent_id, dim, c_micro).
-    // k/iters come from SPARK_GRAFT_KMEANS_{K,ITERS} (defaults 4/2) so
-    // a scale-stress run can train a realistic codebook without code
-    // edits; the oracle SQL is GENERATED from the same values, so the
-    // two sides can never drift.
     QuerySpec("q72_kmeans_micro",
       (s, dir) => graft.ops.Similarity.kmeansMicro(
           table(s, dir, "embeddings"), "vec_id", "embedding",

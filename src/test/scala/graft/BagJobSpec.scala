@@ -134,6 +134,19 @@ class BagJobSpec extends SparkSuite {
     assert(byName("ggw_gebied").loaded == 0 && byName("ggw_gebied").rejected == 1)
   }
 
+  test("BagJob: a startAt that names no table throws before anything is committed") {
+    val base = Files.createTempDirectory("graft-bagjob-badstart").toString
+    val data = s"$base/data"; val out = s"$base/out"
+    Files.createDirectories(Paths.get(data))
+    Files.createDirectories(Paths.get(out))
+    writeChain(data)
+    val err = intercept[IllegalArgumentException] {
+      BagJob.run(spark, data, out, startAt = Some("wjik"))
+    }
+    assert(err.getMessage.contains("wjik"))
+    assert(new java.io.File(out).list().isEmpty, "the job wrote before rejecting startAt")
+  }
+
   test("BagJob: a restart after a crash between the commit's two moves keeps the snapshots") {
     import org.apache.commons.io.FileUtils
     val base = Files.createTempDirectory("graft-bagjob-crash").toString
