@@ -25,13 +25,18 @@ import org.apache.spark.sql.functions._
   * the job (the straggler — at cluster scale the whole stage waits on
   * it), plus shuffle bytes for sanity.
   *
-  * Usage: SkewStress [rows] [salts]   (default 8M rows, 32 salts)
+  * Usage: SkewStress [salts]   (default 32 salts; always [[Rows]] rows)
   */
 object SkewStress {
 
+  /** The input size. Each arm's expected row count is derived for it:
+    * every uniform key carries at least 8 rows, and 90% of the rows are
+    * as-of probes. */
+  val Rows = 8000000L
+
   def main(args: Array[String]): Unit = {
-    val rows = args.headOption.map(_.toLong).getOrElse(8000000L)
-    val salts = if (args.length > 1) args(1).toInt else 32
+    val rows = Rows
+    val salts = args.headOption.map(_.toInt).getOrElse(32)
     val spark = Sessions.local(conf = Seq(
       "spark.sql.shuffle.partitions" -> "32",
       // lowered skew-join thresholds: the planted hot partition is

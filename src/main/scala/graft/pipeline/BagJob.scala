@@ -1,5 +1,11 @@
 package graft.pipeline
 
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.Failure
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -7,10 +13,10 @@ import graft.model.BagTables
 
 /** The whole reference pipeline (`python manage.py run_import bagh`,
   * SURVEY.md §3.1) as one runnable job over the [[BagTables]] registry:
-  * seed gemeente, then each CSV task in FK-topological order — every
-  * table goes through the generic load → clean → validate → merge
-  * lifecycle with the parents loaded so far, and commits an atomic
-  * parquet snapshot per table.
+  * the gemeente seed and each CSV task run as the DAG of their FK
+  * dependencies — every table goes through the generic load → clean →
+  * validate → merge lifecycle once its FK parents are final, and commits
+  * an atomic parquet snapshot.
   *
   * Each table is imported in one cached, tagged pass
   * ([[ImportPipeline.importTable]]): its `loaded` and `rejected` counts
@@ -37,12 +43,19 @@ object BagJob {
     new java.io.File(s"$dataDir/${gobId}_${name}_ActueelEnHistorie.csv")
   }
 
-  /** Run the job. Returns per-table outcomes in execution order; a
-    * table with validation errors aborts before its write (reference
-    * fail-fast), but later independent tables still run — its children
-    * will then FK-reject against the stale/absent parent, which is the
-    * honest cascade. A `startAt` that names no table of
-    * [[BagTables.loadOrder]] throws before anything is written. */
+  /** Run the job. Each table is one node of the FK DAG, run on a pool of
+    * `defaultParallelism` threads that lives for this call: it reads its
+    * own committed snapshot (or an empty one), waits for its FK parents'
+    * final frames, then imports and commits, so tables without an FK path
+    * between them import concurrently. Returns per-table outcomes in
+    * [[BagTables.loadOrder]] order, after the gemeente seed. A table with
+    * validation errors aborts before its write (reference fail-fast), but
+    * the other tables still run — its children then FK-reject against the
+    * stale/absent parent, which is the honest cascade. A table that
+    * throws stops its FK descendants from importing; once every started
+    * table has finished, the first such error in load order is rethrown.
+    * A `startAt` that names no table of [[BagTables.loadOrder]] throws
+    * before anything is written. */
   def run(spark: SparkSession, dataDir: String, outDir: String,
       startAt: Option[String] = None): Seq[TableOutcome] = {
     startAt.foreach { s =>
@@ -50,54 +63,75 @@ object BagJob {
         s"startAt '$s' names no table; one of: " +
           BagTables.loadOrder.map(_.name).mkString(", "))
     }
-    val parents = scala.collection.mutable.Map[String, DataFrame]()
+    val importing = startAt.fold(BagTables.loadOrder)(s =>
+      BagTables.loadOrder.dropWhile(_.name != s)).map(_.name).toSet
     def dir(name: String) = s"$outDir/$name"
     // the committed snapshot of `name`, once an interrupted commit of it
     // is healed, read with its table's cleaned schema, so no job infers one
     def snapshot(name: String, schema: StructType): Option[DataFrame] =
       Some(dir(name)).filter(DirCommit.current).map(spark.read.schema(schema).parquet(_))
 
-    val gemeente = BagTables.gemeenteSeed(spark)
-    ImportPipeline.commitSnapshot(gemeente, dir("gemeente"))
-    parents("gemeente") = snapshot("gemeente", gemeente.schema).get
-
-    // Preload every table's last committed snapshot — or, when none
-    // exists, an empty spec-schema frame — so a mid-DAG `startAt`
-    // restart (reference batch/batch.py:19-30) and the absent/failed-
-    // parent cascade resolve FK checks against committed state instead
-    // of throwing on the `parents` lookup. loadOrder is FK-topological,
-    // so each emptySnapshot sees its own parents already present.
-    val live = BagTables.loadOrder.flatMap { spec =>
-      val empty = ImportPipeline.emptySnapshot(spark, spec, parents.toMap)
-      val committed = snapshot(spec.name, empty.schema)
-      parents(spec.name) = committed.getOrElse(empty)
-      committed.map(spec.name -> _)
-    }.toMap
-
-    val specs = startAt match {
-      case Some(s) => BagTables.loadOrder.dropWhile(_.name != s)
-      case None => BagTables.loadOrder
-    }
-    val outcomes = specs.map { spec =>
-      val f = csvFile(dataDir, spec.name)
-      if (!f.exists()) {
-        TableOutcome(spec.name, 0, 0, Nil, skipped = true)
-      } else {
-        val result = ImportPipeline.importTable(spark, spec, f.getPath,
-          parents.toMap, live.get(spec.name))
-        try {
-          if (result.report.failed) {
-            TableOutcome(spec.name, 0, result.rejectedRows,
-              result.report.errors, skipped = false, result.rejectedBy)
-          } else {
-            ImportPipeline.commitSnapshot(result.merged, dir(spec.name))
-            parents(spec.name) = snapshot(spec.name, parents(spec.name).schema).get
-            TableOutcome(spec.name, result.loaded, result.rejectedRows,
-              Nil, skipped = false, result.rejectedBy)
-          }
-        } finally result.release()
+    val threads = spark.sparkContext.defaultParallelism
+    val pool = new ThreadPoolExecutor(threads, threads, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, ThreadName)
+        t.setDaemon(true)
+        t
+      })
+    // every thread starts here, on the calling thread, so each inherits
+    // its Spark local properties (job labels, scheduler pool)
+    pool.prestartAllCoreThreads()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      // each table's final frame: its new commit, or its preloaded frame
+      val finals = scala.collection.mutable.Map[String, Future[DataFrame]]()
+      finals("gemeente") = Future {
+        val gemeente = BagTables.gemeenteSeed(spark)
+        ImportPipeline.commitSnapshot(gemeente, dir("gemeente"))
+        snapshot("gemeente", gemeente.schema).get
       }
+      val nodes = BagTables.loadOrder.map { spec =>
+        // the last committed snapshot — or, when none exists, an empty
+        // spec-schema frame — so a mid-DAG `startAt` restart (reference
+        // batch/batch.py:19-30) and the absent/failed-parent cascade
+        // resolve FK checks against committed state
+        val preloaded = Future {
+          val empty = ImportPipeline.emptySnapshot(spark, spec)
+          (snapshot(spec.name, empty.schema), empty)
+        }
+        val parents = Future.traverse(spec.fks.map(_.parentTable).distinct)(p =>
+          finals(p).map(p -> _))
+        val node = preloaded.zip(parents).map { case ((live, empty), ps) =>
+          val kept = live.getOrElse(empty)
+          val f = csvFile(dataDir, spec.name)
+          if (!importing(spec.name)) (None, kept)
+          else if (!f.exists()) (Some(TableOutcome(spec.name, 0, 0, Nil, skipped = true)), kept)
+          else {
+            val result = ImportPipeline.importTable(spark, spec, f.getPath, ps.toMap, live)
+            try {
+              if (result.report.failed) (Some(TableOutcome(spec.name, 0, result.rejectedRows,
+                result.report.errors, skipped = false, result.rejectedBy)), kept)
+              else {
+                ImportPipeline.commitSnapshot(result.merged, dir(spec.name))
+                (Some(TableOutcome(spec.name, result.loaded, result.rejectedRows,
+                  Nil, skipped = false, result.rejectedBy)), snapshot(spec.name, empty.schema).get)
+              }
+            } finally result.release()
+          }
+        }
+        finals(spec.name) = node.map(_._2)
+        node.map(_._1)
+      }
+      val done = (finals("gemeente").map(_ => None) +: nodes)
+        .map(Await.ready(_, Duration.Inf).value.get)
+      done.collectFirst { case Failure(e) => throw e }
+      TableOutcome("gemeente", 1, 0, Nil, skipped = false) +: done.flatMap(_.get)
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
-    TableOutcome("gemeente", 1, 0, Nil, skipped = false) +: outcomes
   }
+
+  /** The name of the threads [[run]] imports on. */
+  val ThreadName = "bag-job"
 }

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
 import graft.functions.parsers
 import graft.geo.geofunctions
 import graft.model.{FkSpec, TableSpec}
@@ -80,7 +81,7 @@ object ImportPipeline {
 
   private val v = VersionedCols()
 
-  /** The column [[tag]] adds: the first check a row fails, or null. */
+  /** The column [[parse]] adds: the first check a row fails, or null. */
   val Reason = "reject_reason"
 
   /** The tag of a row whose validity range is neither valid nor invalid
@@ -88,16 +89,27 @@ object ImportPipeline {
     * of [[clean]] and out of every count. */
   private val UndecidedRange = "undecided_date_range"
 
-  /** Parse, clean and check one raw (all-string) frame per the reference
-    * row pipeline (P1-P7): rename, parse the temporal block, synthesize
-    * id, then tag each row with the first check it fails, in order:
-    * `malformed_csv` (when `raw` carries [[CsvSource.CorruptCol]]), the
-    * validity range, the geometry, and each FK in turn. Extra columns
-    * are computed only for rows not yet rejected, so an extra column
-    * that raises on bad input (a non-numeric ref volgnummer) only does
-    * so for a row that would otherwise load. */
-  def tag(raw: DataFrame, spec: TableSpec,
-      parents: Map[String, DataFrame]): DataFrame = {
+  /** `df` with `cols` set in one projection: a column `df` has keeps its
+    * place, a new one is appended. The expressions read `df`'s columns
+    * only, so the projection equals a fold of `withColumn` over them. */
+  private def project(df: DataFrame, cols: (String, Column)*): DataFrame = {
+    val set = cols.toMap
+    val names = df.columns.toSeq
+    df.select(names.map(n => set.get(n).fold(col(s"`$n`"))(_.as(n))) ++
+      cols.collect { case (n, c) if !names.contains(n) => c.as(n) }: _*)
+  }
+
+  /** Parse and check one raw (all-string) frame per the reference row
+    * pipeline (P1-P5), in a handful of projections: rename, parse the
+    * temporal block, synthesize id, then tag each row with the first
+    * check it fails, in order: `malformed_csv` (when `raw` carries
+    * [[CsvSource.CorruptCol]]), the validity range and the geometry.
+    * Extra columns are computed only for rows not yet rejected, so an
+    * extra column that raises on bad input (a non-numeric ref
+    * volgnummer) only does so for a row that would otherwise load. The
+    * schema depends on `spec` alone: the FK checks ([[checkFks]]) only
+    * set [[Reason]]. */
+  def parse(raw: DataFrame, spec: TableSpec): DataFrame = {
     val reason = col(Reason)
     val open = reason.isNull
     val malformed =
@@ -110,17 +122,17 @@ object ImportPipeline {
     // temporal block parse (§3.2 step 2; bagh/batch.py:155-173); a
     // malformed row's volgnummer may hold any text and must not raise
     val volg = col("volgnummer")
-    val typed = renamed
-      .withColumn("volgnummer", when(open, volg.cast("int")).otherwise(volg.try_cast("int")))
-      .withColumn("registratiedatum", parsers.parseDateTime(col("registratiedatum")))
-      .withColumn(v.begin, parsers.parseDate(col(v.begin)))
-      .withColumn(v.eind, parsers.parseDate(col(v.eind)))
-      .withColumn("id", parsers.createId(col(v.identificatie), col("volgnummer")))
-    // P3 validity range
+    val typed = project(renamed,
+      "volgnummer" -> when(open, volg.cast("int")).otherwise(volg.try_cast("int")),
+      "registratiedatum" -> parsers.parseDateTime(col("registratiedatum")),
+      v.begin -> parsers.parseDate(col(v.begin)),
+      v.eind -> parsers.parseDate(col(v.eind)))
+    // id, and P3 validity range
     val valid = parsers.isValidDateRange(col(v.begin), col(v.eind))
-    val ranged = typed.withColumn(Reason, when(!open, reason)
-      .when(valid, lit(null)).when(!valid, lit("invalid_date_range"))
-      .otherwise(lit(UndecidedRange)))
+    val ranged = project(typed,
+      Reason -> when(!open, reason).when(valid, lit(null))
+        .when(!valid, lit("invalid_date_range")).otherwise(lit(UndecidedRange)),
+      "id" -> parsers.createId(col(v.identificatie), col("volgnummer")))
     // P4 geometry validate/promote: null WKT passes (warned upstream),
     // unparseable or unpromotable → reject
     val located = spec.geometry.fold(ranged) { g =>
@@ -131,32 +143,47 @@ object ImportPipeline {
       val declared = geofunctions.st_srid(col(g.col))
       val hasText = parsers.emptyToNull(col(g.col)).isNotNull
       val sridBad = hasText && declared.isNotNull && declared =!= lit(g.srid)
-      ranged
-        .withColumn("__geom_cast", when(open && hasText && !sridBad,
-          geofunctions.st_castto(col(g.col), g.targetType)))
-        .withColumn(Reason, when(open && hasText && col("__geom_cast").isNull,
+      val cast = project(ranged, "__geom_cast" -> when(open && hasText && !sridBad,
+        geofunctions.st_castto(col(g.col), g.targetType)))
+      val meta = new MetadataBuilder()
+        .putLong("srid", g.srid.toLong)
+        .putString("geom_type", g.targetType.toUpperCase).build()
+      project(cast,
+        Reason -> when(open && hasText && col("__geom_cast").isNull,
           when(sridBad, lit("srid_mismatch")).otherwise(lit("invalid_geometry")))
-          .otherwise(reason))
-        .withColumn(g.col, col("__geom_cast")).drop("__geom_cast")
-        .withMetadata(g.col, new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("srid", g.srid.toLong)
-          .putString("geom_type", g.targetType.toUpperCase).build())
+          .otherwise(reason),
+        g.col -> col("__geom_cast").as(g.col, meta)).drop("__geom_cast")
     }
     // P5 extra columns
-    val extra = spec.extraCols.foldLeft(located) { case (df, (name, expr)) =>
-      df.withColumn(name, when(open, expr))
-    }
-    // J1 FK checks, in turn: one left join per FK against the
-    // parent's distinct keys; a null FK passes (bagh/batch.py:231)
-    spec.fks.foldLeft(extra) {
-      case (df, FkSpec(child, parentName, parentKey)) =>
-        val keys = broadcast(parents(parentName).select(col(parentKey).as("__pk")).distinct())
-        df.join(keys, col(child) === col("__pk"), "left")
-          .withColumn(Reason, when(open && col(child).isNotNull && col("__pk").isNull,
-            lit(s"fk_miss:$child")).otherwise(reason))
-          .drop("__pk")
-    }
+    if (spec.extraCols.isEmpty) located
+    else project(located, spec.extraCols.map { case (n, e) => n -> when(open, e) }: _*)
   }
+
+  /** J1 FK checks of a [[parse]]d frame: one left join per FK against the
+    * parent's distinct keys, then one projection that tags a row not yet
+    * rejected with its first FK miss, in spec order. A null FK passes
+    * (bagh/batch.py:231). */
+  def checkFks(parsed: DataFrame, spec: TableSpec,
+      parents: Map[String, DataFrame]): DataFrame = if (spec.fks.isEmpty) parsed else {
+    val keys = spec.fks.indices.map(i => s"__pk$i")
+    val joined = spec.fks.zip(keys).foldLeft(parsed) {
+      case (df, (FkSpec(child, parentName, parentKey), pk)) =>
+        val parent = broadcast(parents(parentName).select(col(parentKey).as(pk)).distinct())
+        df.join(parent, col(child) === col(pk), "left")
+    }
+    val firstMiss = spec.fks.zip(keys).foldLeft(when(col(Reason).isNotNull, col(Reason))) {
+      case (w, (fk, pk)) => w.when(col(fk.childCol).isNotNull && col(pk).isNull,
+        lit(s"fk_miss:${fk.childCol}"))
+    }
+    joined.select(parsed.columns.toSeq.map(c =>
+      if (c == Reason) firstMiss.as(Reason) else col(s"`$c`")): _*)
+  }
+
+  /** Every row of `raw`, parsed and tagged with the first check it fails,
+    * or none: [[parse]], then [[checkFks]]. */
+  def tag(raw: DataFrame, spec: TableSpec,
+      parents: Map[String, DataFrame]): DataFrame =
+    checkFks(parse(raw, spec), spec, parents)
 
   /** The (clean, rejected-with-reason) splits of a [[tag]]ged frame. */
   private def split(tagged: DataFrame): (DataFrame, DataFrame) = (
@@ -205,18 +232,17 @@ object ImportPipeline {
   }
 
   /** The committed-snapshot schema of `spec` as a flat zero-row frame:
-    * the schema of `clean()` over an empty raw extract, on a
-    * LocalRelation, so neither a job nor the parents' plans come with
-    * it. Used to preload absent parents on a named-task restart: FK
-    * checks against it reject honestly instead of the `parents` lookup
-    * throwing (reference batch/batch.py:19-30 `--bagh_start`). */
-  def emptySnapshot(spark: SparkSession, spec: TableSpec,
-      parents: Map[String, DataFrame]): DataFrame = {
+    * the schema of [[parse]] over an empty raw extract, without
+    * [[Reason]], on a LocalRelation, so it needs neither a job nor the
+    * parents. Used to preload absent parents on a named-task restart:
+    * FK checks against it reject honestly instead of the `parents`
+    * lookup throwing (reference batch/batch.py:19-30 `--bagh_start`). */
+  def emptySnapshot(spark: SparkSession, spec: TableSpec): DataFrame = {
     val raw = spark.createDataFrame(
       java.util.Collections.emptyList[Row](),
       CsvSource.stringSchema(spec.sourceCols.map(_._1)))
     spark.createDataFrame(java.util.Collections.emptyList[Row](),
-      clean(raw, spec, parents)._1.schema)
+      StructType(parse(raw, spec).schema.filterNot(_.name == Reason)))
   }
 
   /** J2+J3+J4 as one full-outer join of `live` and `staged` on `id`: the

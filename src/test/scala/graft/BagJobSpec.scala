@@ -3,12 +3,68 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 import graft.model.BagTables
-import graft.pipeline.BagJob
+import graft.pipeline.{BagJob, DirCommit, ImportPipeline}
+
+/** The sequential loop the FK DAG of `BagJob.run` replaced: the seed, then
+  * every table in `loadOrder`, one after another. Kept here only as the
+  * witness the DAG is compared with. */
+object SequentialBagJob {
+  import BagJob.TableOutcome
+
+  private def csvFile(dataDir: String, name: String): java.io.File = {
+    val gobId = if (BagTables.gobPath(name) == "gebieden") "GBD" else "BAG"
+    new java.io.File(s"$dataDir/${gobId}_${name}_ActueelEnHistorie.csv")
+  }
+
+  def run(spark: SparkSession, dataDir: String, outDir: String): Seq[TableOutcome] = {
+    val parents = scala.collection.mutable.Map[String, DataFrame]()
+    def dir(name: String) = s"$outDir/$name"
+    def snapshot(name: String, schema: StructType): Option[DataFrame] =
+      Some(dir(name)).filter(DirCommit.current).map(spark.read.schema(schema).parquet(_))
+
+    val gemeente = BagTables.gemeenteSeed(spark)
+    ImportPipeline.commitSnapshot(gemeente, dir("gemeente"))
+    parents("gemeente") = snapshot("gemeente", gemeente.schema).get
+
+    val live = BagTables.loadOrder.flatMap { spec =>
+      val empty = ImportPipeline.emptySnapshot(spark, spec)
+      val committed = snapshot(spec.name, empty.schema)
+      parents(spec.name) = committed.getOrElse(empty)
+      committed.map(spec.name -> _)
+    }.toMap
+
+    val outcomes = BagTables.loadOrder.map { spec =>
+      val f = csvFile(dataDir, spec.name)
+      if (!f.exists()) {
+        TableOutcome(spec.name, 0, 0, Nil, skipped = true)
+      } else {
+        val result = ImportPipeline.importTable(spark, spec, f.getPath,
+          parents.toMap, live.get(spec.name))
+        try {
+          if (result.report.failed) {
+            TableOutcome(spec.name, 0, result.rejectedRows,
+              result.report.errors, skipped = false, result.rejectedBy)
+          } else {
+            ImportPipeline.commitSnapshot(result.merged, dir(spec.name))
+            parents(spec.name) = snapshot(spec.name, parents(spec.name).schema).get
+            TableOutcome(spec.name, result.loaded, result.rejectedRows,
+              Nil, skipped = false, result.rejectedBy)
+          }
+        } finally result.release()
+      }
+    }
+    TableOutcome("gemeente", 1, 0, Nil, skipped = false) +: outcomes
+  }
+}
 
 /** Whole-pipeline run over the registry (SURVEY §3.1): seed + a
   * three-table FK chain from GOB-named CSV extracts, with cascade
-  * rejection and idempotent re-run. */
+  * rejection and idempotent re-run, and the FK DAG against the
+  * sequential loop it replaced. */
 class BagJobSpec extends SparkSuite {
   import spark.implicits._
 
@@ -200,5 +256,105 @@ class BagJobSpec extends SparkSuite {
     spark.read.parquet(live.getPath).limit(1).write.parquet(staging.getPath)
     BagJob.run(spark, data, out, startAt = Some("ggw_gebied"))
     assertClean()
+  }
+
+  /** Every directory under `out` (`.old` versions included) with its
+    * rows and its schema, field metadata included. */
+  private def snapshots(out: String): Map[String, (Seq[String], StructType)] =
+    new java.io.File(out).listFiles().filter(_.isDirectory).map { d =>
+      val df = spark.read.parquet(d.getPath)
+      d.getName -> ((df.collect().map(_.toString).sorted.toSeq, df.schema))
+    }.toMap
+
+  test("BagJob: the FK DAG commits what the sequential loop commits") {
+    val base = Files.createTempDirectory("graft-bagjob-dag").toString
+    val data = s"$base/data"; val seqOut = s"$base/seq"; val dagOut = s"$base/dag"
+    Files.createDirectories(Paths.get(data))
+    writeChain(data)
+    def both(): Seq[BagJob.TableOutcome] = {
+      val seq = SequentialBagJob.run(spark, data, seqOut)
+      val dag = BagJob.run(spark, data, dagOut)
+      assert(dag == seq)
+      val (s, d) = (snapshots(seqOut), snapshots(dagOut))
+      assert(d.keySet == s.keySet)
+      s.foreach { case (t, (rows, schema)) =>
+        assert(d(t)._1 == rows, t)
+        assert(d(t)._2 == schema, t)
+        schema.fields.filter(_.metadata.contains("srid")).foreach { f =>
+          assert(d(t)._2(f.name).metadata == f.metadata, s"$t.${f.name}")
+        }
+      }
+      dag
+    }
+    both()                                    // load
+    assert(snapshots(dagOut)("stadsdeel")._2("geometrie").metadata.getLong("srid") == 28992)
+    both()                                    // re-import
+    writeChain(data, stadsdeelRows.take(1))   // drops a history row
+    val aborted = both()
+    assert(aborted.find(_.name == "stadsdeel").get.errors == Seq("deleted_history_rows:1"))
+  }
+
+  private def poolThreads(): Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(_.getName == BagJob.ThreadName)
+  }
+
+  test("BagJob: a table that throws stops its FK descendants, not independent tables") {
+    val base = Files.createTempDirectory("graft-bagjob-throw").toString
+    val data = s"$base/data"; val out = s"$base/out"
+    Files.createDirectories(Paths.get(data))
+    writeChain(data)
+    // ggw_gebied's stadsdeel ref raises at the action, like the
+    // reference's int(); wijk refers to ggw_gebied, pand to nothing
+    writeCsv(data, "GBD_ggw_gebied_ActueelEnHistorie.csv", csvFor(BagTables.ggwGebied, Seq(
+      Map("identificatie" -> "GGW1", "volgnummer" -> "1",
+        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+        "naam" -> "Gebied 1", "code" -> "G1",
+        "ligtIn:GBD.SDL.identificatie" -> "SDL1", "ligtIn:GBD.SDL.volgnummer" -> "abc"))))
+    writeCsv(data, "BAG_pand_ActueelEnHistorie.csv", csvFor(BagTables.pand, Seq(
+      Map("identificatie" -> "P1", "volgnummer" -> "1",
+        "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
+        "status" -> "Pand in gebruik"))))
+    val ex = intercept[Exception](BagJob.run(spark, data, out))
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
+    assert(messages(ex).exists(m => m != null && m.contains("non-numeric volgnummer")))
+    // the parent and the independent table committed before the rethrow;
+    // the failed table and its descendant did not
+    assert(spark.read.parquet(s"$out/stadsdeel").count() == 2)
+    assert(spark.read.parquet(s"$out/pand").count() == 1)
+    assert(!Files.exists(Paths.get(s"$out/ggw_gebied")))
+    assert(!Files.exists(Paths.get(s"$out/wijk")))
+    assert(!new java.io.File(out).list().exists(_.endsWith(".staging")))
+    assert(poolThreads().isEmpty)
+  }
+
+  test("BagJob: every job carries the calling thread's local properties") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = Files.createTempDirectory("graft-bagjob-props").toString
+    val data = s"$base/data"; val out = s"$base/out"
+    Files.createDirectories(Paths.get(data))
+    writeChain(data)
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        labels.add(String.valueOf(j.properties.getProperty("graft.test.label")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.label", "bag")
+    try {
+      BagJob.run(spark, data, out)  // a load
+      BagJob.run(spark, data, out)  // a re-import
+      assert(org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(sc, 60000L))
+    } finally {
+      sc.setLocalProperty("graft.test.label", null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = labels.asScala.toSeq
+    assert(seen.nonEmpty && seen.forall(_ == "bag"), seen)
+    assert(poolThreads().isEmpty)
   }
 }

@@ -85,11 +85,21 @@ class BagTablesSpec extends SparkSuite {
   test("registry: emptySnapshot schema matches the cleaned schema for every table") {
     // the restart path preloads absent parents as emptySnapshot frames;
     // any drift from the real clean() output schema would break FK
-    // resolution or the committed-snapshot union silently
+    // resolution or the committed-snapshot union silently. emptySnapshot
+    // takes no parents: the FK checks must add no column to clean()'s
     val parents = scala.collection.mutable.Map[String, org.apache.spark.sql.DataFrame](
       "gemeente" -> BagTables.gemeenteSeed(spark))
     BagTables.loadOrder.foreach { spec =>
-      val empty = ImportPipeline.emptySnapshot(spark, spec, parents.toMap)
+      val empty = ImportPipeline.emptySnapshot(spark, spec)
+      val raw = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        graft.sources.CsvSource.stringSchema(spec.sourceCols.map(_._1)))
+      val cleaned = ImportPipeline.clean(raw, spec, parents.toMap)._1.schema
+      // StructField equality covers name, type, nullability and metadata
+      assert(empty.schema == cleaned, spec.name)
+      spec.geometry.foreach { g =>
+        assert(empty.schema(g.col).metadata.getLong("srid") == g.srid, spec.name)
+        assert(empty.schema(g.col).metadata.getString("geom_type") == g.targetType, spec.name)
+      }
       // FK key columns present with string type (what semiJoinFk joins on)
       spec.fks.foreach { fk =>
         assert(empty.schema.fieldNames.contains(fk.childCol),

@@ -160,7 +160,7 @@ class ImportPipelineSpec extends SparkSuite {
       val witness = FilterChain.clean(empty, s, parents.toMap)._1.schema
       assert(tagged == witness, s.name)
       s.geometry.foreach(g => assert(tagged(g.col).metadata == witness(g.col).metadata))
-      parents(s.name) = ImportPipeline.emptySnapshot(spark, s, parents.toMap)
+      parents(s.name) = ImportPipeline.emptySnapshot(spark, s)
     }
   }
 
