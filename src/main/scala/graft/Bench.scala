@@ -60,7 +60,7 @@ object Bench {
     // results: name -> (median sec, shuffle MB per rep, peak exec-mem MB).
     // Bytes are summed across reps then divided: the plan is
     // deterministic, so per-rep bytes are identical and the division
-    // just undoes the repetition (ScaleStress precedent).
+    // just undoes the repetition.
     // Iterate specs (registration order), not the queries Map: Map
     // hash order reshuffles whenever a gate is added, so any residual
     // cross-query attribution artifact would move to a DIFFERENT

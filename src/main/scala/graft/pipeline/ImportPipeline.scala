@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -270,8 +272,10 @@ object ImportPipeline {
         (inLive && inStaged && Temporal.anyColumnDistinct("t", "e", cols.filterNot(_ == "id")))
           .as("__updated")): _*)
       .cache()
-    val n = flagged.agg(count(when(col("__deleted"), 1)), count(when(col("__inserted"), 1)),
-      count(when(col("__updated"), 1)), count(lit(1))).head()
+    val n = unpersistOnFailure(Seq(flagged)) {
+      flagged.agg(count(when(col("__deleted"), 1)), count(when(col("__inserted"), 1)),
+        count(when(col("__updated"), 1)), count(lit(1))).head()
+    }
     MergeJoin(flagged.select(cols.map(col): _*),
       MergeCounts(n.getLong(0), n.getLong(1), n.getLong(2), n.getLong(3)), flagged)
   }
@@ -286,9 +290,9 @@ object ImportPipeline {
       CsvSource.stringSchema(spec.sourceCols.map(_._1)))
     val tagged = tag(raw, spec, parents).cache()
     val (staged, rejected) = split(tagged)
-    val join = live.map(mergeJoin(_, staged))
-    val (report, counts) = validate(tagged, join.map(_.counts))
+    val join = unpersistOnFailure(Seq(tagged))(live.map(mergeJoin(_, staged)))
     val cached = tagged +: join.map(_.cached).toSeq
+    val (report, counts) = unpersistOnFailure(cached)(validate(tagged, join.map(_.counts)))
     if (report.failed)
       return ImportResult(live.getOrElse(staged.limit(0)), rejected, report,
         0, 0, 0, counts.rejectedBy, cached)
@@ -297,6 +301,12 @@ object ImportPipeline {
     ImportResult(merged, rejected, report, m.inserted, m.updated, m.merged,
       counts.rejectedBy, cached)
   }
+
+  /** `body`, or, when it throws, `cached` unpersisted and the error
+    * rethrown: a failed action returns no [[ImportResult]] whose
+    * `release()` could drop them. */
+  private def unpersistOnFailure[A](cached: Seq[DataFrame])(body: => A): A =
+    try body catch { case NonFatal(e) => cached.foreach(_.unpersist()); throw e }
 
   /** Commits `df` as the snapshot at `dir` ([[DirCommit]]): a crash
     * leaves either the previous snapshot or this one, never neither.

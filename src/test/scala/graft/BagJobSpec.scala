@@ -316,6 +316,7 @@ class BagJobSpec extends SparkSuite {
       Map("identificatie" -> "P1", "volgnummer" -> "1",
         "registratiedatum" -> "2020-01-01 00:00:00", "beginGeldigheid" -> "2020-01-01",
         "status" -> "Pand in gebruik"))))
+    spark.catalog.clearCache()
     val ex = intercept[Exception](BagJob.run(spark, data, out))
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
@@ -328,6 +329,8 @@ class BagJobSpec extends SparkSuite {
     assert(!Files.exists(Paths.get(s"$out/wijk")))
     assert(!new java.io.File(out).list().exists(_.endsWith(".staging")))
     assert(poolThreads().isEmpty)
+    // the failed import unpersisted what it cached before rethrowing
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("BagJob: every job carries the calling thread's local properties") {

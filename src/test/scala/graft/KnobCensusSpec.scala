@@ -5,8 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every environment variable and `spark.graft.*` setting the program
-  * reads. A knob stays only while two real workloads need different
-  * values; a new one is added to `kept` together with that reason. */
+  * reads, and every entry point it has. A knob stays only while two
+  * real workloads need different values; a new one is added to `kept`
+  * together with that reason. A new main is added to `mains` the same
+  * way. */
 class KnobCensusSpec extends AnyFunSuite {
   private val kept = Set(
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",             // deployment
@@ -14,19 +16,28 @@ class KnobCensusSpec extends AnyFunSuite {
     "SPARK_GRAFT_SHUFFLE_PARTITIONS",                      // Bench's partitions sweep
     "SPARK_GRAFT_BENCH_ONLY")                              // full vs targeted Bench run
 
+  private val mains = Set(
+    "Bench", "Verify",                                     // timing and correctness dump
+    "JobProfile", "PlanDump", "RuleAudit", "WindowAudit",  // per-gate profilers and audits
+    "pipeline.BagJobMain")                                 // the paper's job
+
   private val envRead = """(?:sys\.env|System\.getenv)""".r
   private val namedEnvRead =
     """(?:sys\.env|System\.getenv)\s*(?:\.\s*\w+\s*)?\(\s*"([^"]+)"""".r
   private val graftConf = """"(spark\.graft\.[^"]*)"""".r
 
-  test("src/main reads exactly the kept knobs") {
+  private val packageDecl = """(?m)^package\s+([\w.]+)""".r
+  private val objectOrMain = """(?m)^object\s+(\w+)|\bdef\s+main\s*\(""".r
+
+  private lazy val sources = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
-    val sources = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  test("src/main reads exactly the kept knobs") {
     val reads = sources.flatMap { p =>
       val text = java.nio.file.Files.readString(p)
       val named = namedEnvRead.findAllMatchIn(text).map(_.group(1)).toList
@@ -36,5 +47,22 @@ class KnobCensusSpec extends AnyFunSuite {
     }.toSet
     assert(reads == kept,
       s"added: ${(reads -- kept).toSeq.sorted}; gone: ${(kept -- reads).toSeq.sorted}")
+  }
+
+  test("src/main defines exactly the kept entry points") {
+    // each `def main(` belongs to the top-level `object` declared before it
+    val defined = sources.flatMap { p =>
+      val text = java.nio.file.Files.readString(p)
+      val qualifier = packageDecl.findFirstMatchIn(text).map(_.group(1)) match {
+        case Some("graft") | None => ""
+        case Some(pkg) => pkg.stripPrefix("graft.") + "."
+      }
+      objectOrMain.findAllMatchIn(text).foldLeft((Option.empty[String], List.empty[String])) {
+        case ((_, found), m) if m.group(1) != null => (Some(m.group(1)), found)
+        case ((obj, found), _) => (obj, qualifier + obj.getOrElse(s"<no object in $p>") :: found)
+      }._2
+    }.toSet
+    assert(defined == mains,
+      s"added: ${(defined -- mains).toSeq.sorted}; gone: ${(mains -- defined).toSeq.sorted}")
   }
 }

@@ -562,7 +562,13 @@ class PlanSpec extends SparkSuite {
       s"expected exactly 1 (batch-side) shingle_set, got $shingleEvals:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"indexed increment must stay keyed:\n$p")
-    assert(out.count() > 0)
+    // the persisted index keeps the survivors of the in-query form
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val got = ids(out)
+    assert(got.nonEmpty)
+    assert(got == ids(graft.ops.Dedup.dedupIncrement(docs, incoming,
+      "doc_id", "text", k = 3, threshold = 0.5)))
   }
 
   test("ivfadcTopKIndexed: probe reads the persisted ANN index, never re-encodes") {
@@ -591,7 +597,14 @@ class PlanSpec extends SparkSuite {
       s"expected only the ADC kernel over the index scan:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"indexed probe must stay a keyed join:\n$p")
-    assert(out.count() > 0)
+    // the persisted index answers what the in-memory one does
+    val direct = graft.ops.Similarity.ivfadcTopKIndexed(
+      graft.ops.Similarity.ivfadcIndex(emb, "vec_id", "embedding", cb, cbs),
+      emb.filter($"vec_id" < 3), "vec_id", "embedding", k = 10, cb, cbs,
+      nProbe = 2)
+    val got = out.collect().toSeq
+    assert(got.nonEmpty)
+    assert(got.sortBy(_.toString) == direct.collect().toSeq.sortBy(_.toString))
   }
 
   test("q94 IVFADC+R: two ranking windows, shortlist joins stay keyed") {
