@@ -170,9 +170,8 @@ object EventAnalytics {
     * numeric/date/timestamp (quantile-summarizable). Result column:
     * `outCol` = running sum of `valueCol`. */
   def runningTotalSkewSafe(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String, outCol: String, partitions: Int = 0): DataFrame =
-    runningAggSkewSafe(df, keyCol, ordCol, valueCol, outCol, "sum",
-      partitions)
+      valueCol: String, outCol: String): DataFrame =
+    runningAggSkewSafe(df, keyCol, ordCol, valueCol, outCol, "sum")
 
   /** The [[runningTotalSkewSafe]] algebra for any ASSOCIATIVE
     * combine — `op` ∈ sum | min | max (running totals, cumulative
@@ -181,10 +180,9 @@ object EventAnalytics {
     * passes the local value through, which is the correct identity
     * for all three ops. */
   def runningAggSkewSafe(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String, outCol: String, op: String,
-      partitions: Int = 0): DataFrame =
+      valueCol: String, outCol: String, op: String): DataFrame =
     runningAggsSkewSafe(df, keyCol, ordCol,
-      Seq((valueCol, op, outCol)), partitions)
+      Seq((valueCol, op, outCol)))
 
   /** N running aggregates in ONE two-pass plan — the same slice
     * algebra as [[runningAggSkewSafe]] (one local window keyed on
@@ -199,7 +197,6 @@ object EventAnalytics {
     * pass ([[runningMomentsSkewSafe]]). */
   def runningAggsSkewSafe(df: DataFrame, keyCol: String, ordCol: String,
       aggs: Seq[(String, String, String)],
-      partitions: Int = 0,
       bounds: Option[Array[Double]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(aggs.nonEmpty, "runningAggsSkewSafe: need at least one agg")
@@ -243,7 +240,7 @@ object EventAnalytics {
       case _ => (a, b) => greatest(a, b)
     }
     val sliced = df.withColumn("__slice",
-      sliceColumn(df, ordCol, partitions, bounds))
+      sliceColumn(df, ordCol, bounds))
     val wLocal = Window.partitionBy(col("__slice"), col(keyCol))
       .orderBy(col(ordCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -301,15 +298,13 @@ object EventAnalytics {
     * long. Contract: `valueCol` integral; rows where it is null are
     * excluded from all four outputs (SUM/COUNT(expr) semantics). */
   def runningMomentsSkewSafe(df: DataFrame, keyCol: String,
-      ordCol: String, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      ordCol: String, valueCol: String): DataFrame =
     runningAggsSkewSafe(
       df.withColumn("__sq",
         col(valueCol).cast("decimal(38,0)") * col(valueCol)),
       keyCol, ordCol,
       Seq((valueCol, "count", "run_n"), (valueCol, "sum", "run_sum"),
-        ("__sq", "sum", "__run_q")),
-      partitions)
+        ("__sq", "sum", "__run_q")))
       .withColumn("avg_micro",
         expr("(CAST(1000000 AS DECIMAL(38,0)) * run_sum) div run_n"))
       .withColumn("var_floor",
@@ -337,9 +332,9 @@ object EventAnalytics {
     * with `valueCol` (value-major, e.g. value·W + tiebreak) — the
     * same total-order contract every exact order statistic has. */
   def groupMedianSkewSafe(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String, partitions: Int = 0,
+      valueCol: String,
       knownGroups: Option[Long] = None): DataFrame =
-    pickGlobalRanks(df, keyCol, ordCol, valueCol, partitions, 2,
+    pickGlobalRanks(df, keyCol, ordCol, valueCol, 2,
       totals => totals.withColumn("__rk_t",
         explode(array(expr("(__n + 1) div 2"), expr("__n div 2 + 1"))))
         .distinct(),
@@ -360,11 +355,11 @@ object EventAnalytics {
     * `ordCol` contract as the median. */
   def groupPercentilesSkewSafe(df: DataFrame, keyCol: String,
       ordCol: String, valueCol: String, pMicros: Seq[Long],
-      partitions: Int = 0, knownGroups: Option[Long] = None): DataFrame = {
+      knownGroups: Option[Long] = None): DataFrame = {
     require(pMicros.nonEmpty &&
       pMicros.forall(p => p > 0 && p <= 1000000L),
       "percentiles must be micros in (0, 1000000]")
-    pickGlobalRanks(df, keyCol, ordCol, valueCol, partitions,
+    pickGlobalRanks(df, keyCol, ordCol, valueCol,
       pMicros.distinct.size,
       totals => totals
         .withColumn("p_micro",
@@ -396,14 +391,13 @@ object EventAnalytics {
     * (group, percentile). Same unique value-major `ordCol` contract
     * as every exact order statistic; p in [0, 10⁶]. */
   def percentileContSkewSafe(df: DataFrame, keyCol: String,
-      ordCol: String, valueCol: String, pMicros: Seq[Long],
-      partitions: Int = 0): DataFrame = {
+      ordCol: String, valueCol: String, pMicros: Seq[Long]): DataFrame = {
     require(pMicros.nonEmpty &&
       pMicros.forall(p => p >= 0 && p <= 1000000L),
       "percentiles must be micros in [0, 1000000]")
     val d38 = "decimal(38,0)"
     val picked = pickGlobalRanks(df, keyCol, ordCol, valueCol,
-      partitions, 2 * pMicros.distinct.size,
+      2 * pMicros.distinct.size,
       totals => totals
         .withColumn("p_micro",
           explode(typedLit(pMicros.distinct.sorted)))
@@ -447,11 +441,11 @@ object EventAnalytics {
     * caller-built unique value-major total order. */
   def groupWeightedPercentilesSkewSafe(df: DataFrame, keyCol: String,
       ordCol: String, valueCol: String, weightCol: String,
-      pMicros: Seq[Long], partitions: Int = 0): DataFrame = {
+      pMicros: Seq[Long]): DataFrame = {
     require(pMicros.nonEmpty &&
       pMicros.forall(p => p > 0 && p <= 1000000L),
       "percentiles must be micros in (0, 1000000]")
-    pickGlobalRanks(df, keyCol, ordCol, valueCol, partitions,
+    pickGlobalRanks(df, keyCol, ordCol, valueCol,
       pMicros.distinct.size,
       totals => totals
         .withColumn("p_micro",
@@ -487,10 +481,10 @@ object EventAnalytics {
     *
     * Same unique non-null `ordCol` contract as every exact rank. */
   def rankFeaturesSkewSafe(df: DataFrame, keyCol: String,
-      ordCol: String, buckets: Int, partitions: Int = 0): DataFrame = {
+      ordCol: String, buckets: Int): DataFrame = {
     require(buckets >= 1, "rankFeaturesSkewSafe: buckets must be >= 1")
     val ranked = runningAggsSkewSafe(df, keyCol, ordCol,
-      Seq((ordCol, "count", "rank")), partitions)
+      Seq((ordCol, "count", "rank")))
     val sizes = df.groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"))
       .select(col(keyCol).as("__nk"), col("n"))
@@ -522,14 +516,14 @@ object EventAnalytics {
     * the lag of a row after a null-valued row is null, matching the
     * window function. */
   def lagSkewSafe(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String, outCol: String, partitions: Int = 0,
+      valueCol: String, outCol: String,
       bounds: Option[Array[Double]] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // To honor null VALUES (a plain `last` carry would skip them),
     // carry the predecessor as a (ord, value) struct — never null
     // for an existing row — and project the value at the end.
     val sliced = df.withColumn("__slice",
-      sliceColumn(df, ordCol, partitions, bounds))
+      sliceColumn(df, ordCol, bounds))
     val wLoc = Window.partitionBy(col("__slice"), col(keyCol))
       .orderBy(col(ordCol))
     val pair = struct(col(ordCol).as("o"), col(valueCol).as("v"))
@@ -558,11 +552,11 @@ object EventAnalytics {
     * are given in terms of the ORIGINAL `ordCol` (the caller's
     * frame), negated and reversed here to match the mirrored order. */
   def leadSkewSafe(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String, outCol: String, partitions: Int = 0,
+      valueCol: String, outCol: String,
       bounds: Option[Array[Double]] = None): DataFrame = {
     val neg = "__neg_" + ordCol
     lagSkewSafe(df.withColumn(neg, -col(ordCol)), keyCol, neg,
-      valueCol, outCol, partitions,
+      valueCol, outCol,
       bounds.map(_.map(-_).reverse)).drop(neg)
   }
 
@@ -586,8 +580,8 @@ object EventAnalytics {
     * probe–probe ties are harmless (probes carry null). Probes with
     * no earlier quote get null. Output: the probe frame + `outCol`. */
   def asofJoinSkewSafe(probes: DataFrame, quotes: DataFrame,
-      keyCol: String, ordCol: String, valueCol: String, outCol: String,
-      partitions: Int = 0): DataFrame = {
+      keyCol: String, ordCol: String, valueCol: String,
+      outCol: String): DataFrame = {
     val vType = quotes.schema(quotes.schema.fieldIndex(valueCol)).dataType
     val extra = probes.columns.toSeq
       .filterNot(c => c == keyCol || c == ordCol)
@@ -604,7 +598,7 @@ object EventAnalytics {
       .map(col)
     runningAggsSkewSafe(
         pu.select(cols: _*).unionByName(qu.select(cols: _*)),
-        keyCol, ordCol, Seq(("__rv", "last", outCol)), partitions)
+        keyCol, ordCol, Seq(("__rv", "last", outCol)))
       .filter(col("__probe"))
       .drop("__rv", "__probe")
   }
@@ -641,7 +635,7 @@ object EventAnalytics {
     * unique value-major `ordCol` contract as every exact order
     * statistic. */
   private def pickGlobalRanks(df: DataFrame, keyCol: String,
-      ordCol: String, valueCol: String, partitions: Int,
+      ordCol: String, valueCol: String,
       picksPerGroup: Int,
       mkTargets: DataFrame => DataFrame,
       weightCol: Option[String] = None,
@@ -657,7 +651,7 @@ object EventAnalytics {
         Seq(col(keyCol), col(ordCol), col(valueCol)) ++
           weightCol.map(col): _*)
       .withColumn("__w", wExpr)
-      .withColumn("__slice", sliceColumn(df, ordCol, partitions))
+      .withColumn("__slice", sliceColumn(df, ordCol))
     val cnts = sliced.groupBy(col("__slice"), col(keyCol))
       .agg(sum(col("__w")).as("__cnt"), min(col("__w")).as("__mw"))
     val wBefore = Window.partitionBy(col(keyCol)).orderBy(col("__slice"))
@@ -729,9 +723,9 @@ object EventAnalytics {
     * under project collapse (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND,
     * reproduced on Spark 4.1.2). */
   private def sliceColumn(df: DataFrame, ordCol: String,
-      partitions: Int, shared: Option[Array[Double]] = None): Column = {
+      shared: Option[Array[Double]] = None): Column = {
     val bounds =
-      shared.getOrElse(sliceBoundsFor(df, ordCol, partitions))
+      shared.getOrElse(sliceBoundsFor(df, ordCol))
     val ordD = col(ordCol).cast("double")
     def sliceOf(lo: Int, hi: Int): Column = // slice known to be in [lo, hi]
       if (lo == hi) lit(lo)
@@ -752,11 +746,14 @@ object EventAnalytics {
     * pass per stage (VERDICT r12 #3). Sharing is always CORRECT:
     * the slice is a pure row function whose boundary quality affects
     * only load balance, never results, so bounds estimated on a
-    * count frame serve its derived prefix/lead frames too. */
-  def sliceBoundsFor(df: DataFrame, ordCol: String,
-      partitions: Int = 0): Array[Double] = {
-    val p = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    * count frame serve its derived prefix/lead frames too.
+    *
+    * The slice count P is the session's `spark.sql.shuffle.partitions`,
+    * the one source of it: no skew-safe op takes a per-call count, so
+    * a run or a test that wants another P sets it at the session.
+    * P − 1 bounds are asked for; P = 1 means no bounds (one slice). */
+  def sliceBoundsFor(df: DataFrame, ordCol: String): Array[Double] = {
+    val p = df.sparkSession.sessionState.conf.numShufflePartitions
     val probs = (1 until p).map(_.toDouble / p).toArray
     if (probs.isEmpty) return Array.empty[Double]
     // r19 optimization (guide §2, scale-adaptive partitioning): the
@@ -1238,8 +1235,7 @@ object EventAnalytics {
     * drop (ρ undefined). Output: (userCol, lag, n, sd2, rho_micro),
     * n = the number of (t, t−k) pairs. */
   def rankAutocorr(events: DataFrame, userCol: String, tsCol: String,
-      idCol: String, valCol: String, maxLag: Int,
-      partitions: Int = 0): DataFrame = {
+      idCol: String, valCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, "rankAutocorr: maxLag must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(userCol))
@@ -1278,7 +1274,7 @@ object EventAnalytics {
         struct(col(userCol).as("u"), col("__lag").as("l")))
       .localCheckpoint()
     Profile.spearmanExactPreGuarded(allPairs, "__gk", "__rn", "__v",
-        "__pv", partitions)
+        "__pv")
       .select(col("__gk.u").as(userCol), col("__gk.l").as("lag"),
         col("n"), col("sd2"), col("rho_micro"))
   }

@@ -272,9 +272,9 @@ object Profile {
     * whole drift family shares this contract). Output: one row
     * (n1, n2, d_num, ks_micro). */
   def ksDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String, partitions: Int = 0): DataFrame =
+      a: String, b: String): DataFrame =
     ksDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol, partitions)
+      valueCol)
 
   /** The ONE solo count stage of the whole drift family: a per-value
     * aggregate with per-sample conditional counts, map-side combined,
@@ -292,11 +292,11 @@ object Profile {
   /** [[ksDrift]]'s tail over a pre-built per-value count frame
     * `(valueCol, __ca, __cb)` — the shared reduce for the in-query
     * form and the persisted-reference probe ([[ksDriftAgainstRef]]). */
-  private def ksDriftFromCounts(cnt: DataFrame, valueCol: String,
-      partitions: Int): DataFrame = {
+  private def ksDriftFromCounts(cnt: DataFrame,
+      valueCol: String): DataFrame = {
     val cum = EventAnalytics.runningAggsSkewSafe(
       cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions)
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")))
     val totals = cnt.agg(sum(col("__ca")).as("n1"),
       sum(col("__cb")).as("n2"))
     cum.crossJoin(broadcast(totals)) // 1-row aggregate attach
@@ -326,12 +326,12 @@ object Profile {
     * (reference ∪ probe) by construction — the statistic only sees
     * the per-value counts. */
   def ksDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String, partitions: Int = 0): DataFrame =
+      valueCol: String): DataFrame =
     ksDriftAgainstRefCounts(refCounts,
       probe.filter(col(valueCol).isNotNull)
         .groupBy(col(valueCol))
         .agg(count(lit(1)).as("obs_n")),
-      valueCol, partitions)
+      valueCol)
 
   /** [[ksDriftAgainstRef]] with the probe side ALREADY counted —
     * `(valueCol, obs_n)` — the entry point for callers maintaining a
@@ -339,11 +339,10 @@ object Profile {
     * full-outer join of two ≤|values| count frames, zero-fill, the
     * shared KS tail. */
   def ksDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      probeCounts: DataFrame, valueCol: String): DataFrame =
     ksDriftFromCounts(
       mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol, partitions)
+      valueCol)
 
   /** The shared steady-state count merge: full-outer join of a
     * persisted `(valueCol, ref_n)` reference frame and a
@@ -376,52 +375,49 @@ object Profile {
     * (VERDICT r12 #4): hash-identical to [[mannWhitneyU]] on
     * (reference ∪ probe) by construction. */
   def mannWhitneyUAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String, partitions: Int = 0): DataFrame =
+      valueCol: String): DataFrame =
     mannWhitneyUAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol, partitions)
+      probeCounts(probe, valueCol), valueCol)
 
   /** [[mannWhitneyUAgainstRef]] with the probe side already counted —
     * the streaming-monitor entry point. */
   def mannWhitneyUAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      probeCounts: DataFrame, valueCol: String): DataFrame =
     mannWhitneyUFromCounts(
       mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol, partitions)
+      valueCol)
 
   /** Wasserstein-1 of a probe batch AGAINST a persisted reference
     * count frame — the magnitude-aware steady-state monitor
     * (VERDICT r12 #4); hash-identical to [[emdDrift]] on
     * (reference ∪ probe). */
   def emdDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String, partitions: Int = 0): DataFrame =
+      valueCol: String): DataFrame =
     emdDriftAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol, partitions)
+      probeCounts(probe, valueCol), valueCol)
 
   /** [[emdDriftAgainstRef]] with the probe side already counted. */
   def emdDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      probeCounts: DataFrame, valueCol: String): DataFrame =
     emdDriftFromCounts(
       mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol, partitions)
+      valueCol)
 
   /** Cramér–von Mises of a probe batch AGAINST a persisted reference
     * count frame — the whole-curve steady-state monitor
     * (VERDICT r12 #4); hash-identical to [[cvmDrift]] on
     * (reference ∪ probe). */
   def cvmDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String, partitions: Int = 0): DataFrame =
+      valueCol: String): DataFrame =
     cvmDriftAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol, partitions)
+      probeCounts(probe, valueCol), valueCol)
 
   /** [[cvmDriftAgainstRef]] with the probe side already counted. */
   def cvmDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      probeCounts: DataFrame, valueCol: String): DataFrame =
     cvmDriftFromCounts(
       mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol, partitions)
+      valueCol)
 
   /** Total-variation distance of a probe batch AGAINST a persisted
     * reference count frame — the categorical steady-state monitor
@@ -447,11 +443,10 @@ object Profile {
     * epoch (VERDICT r12 #4 — the nightly monitor is no longer one
     * statistic wide). */
   def driftReportAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      probeCounts: DataFrame, valueCol: String): DataFrame =
     driftReportFromCounts(
       mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol, partitions)
+      valueCol)
 
   /** [[driftReportAgainstRefCounts]] with the probe side counted
     * in-query — the one-call BATCH entry point of the steady-state
@@ -461,9 +456,9 @@ object Profile {
     * count frame. Hash-identical to [[driftReport]] on
     * (reference ∪ probe) by construction. */
   def driftReportAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String, partitions: Int = 0): DataFrame =
+      valueCol: String): DataFrame =
     driftReportAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol, partitions)
+      probeCounts(probe, valueCol), valueCol)
 
   /** Two-sample EARTH MOVER'S distance (Wasserstein-1), EXACT — the
     * magnitude-aware drift companion to [[ksDrift]]: KS sees only
@@ -478,26 +473,25 @@ object Profile {
     * (|i·n₂ − j·n₁| alone saturates long). Output: one row
     * (n1, n2, emd_num, emd_micro). */
   def emdDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String, partitions: Int = 0): DataFrame =
+      a: String, b: String): DataFrame =
     emdDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol, partitions)
+      valueCol)
 
   /** [[emdDrift]]'s tail over a pre-built per-value count frame —
     * the shared reduce for the in-query form and the persisted-
     * reference probe ([[emdDriftAgainstRef]]). */
-  private def emdDriftFromCounts(cnt: DataFrame, valueCol: String,
-      partitions: Int): DataFrame = {
+  private def emdDriftFromCounts(cnt: DataFrame,
+      valueCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     // prefix sum AND the Δv lead slice on the same ord: estimate the
     // GK bounds once, share across both stages (VERDICT r12 #3)
-    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol,
-      partitions))
+    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol))
     val cum = EventAnalytics.runningAggsSkewSafe(
       cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
       gkb)
     val withNext = EventAnalytics.leadSkewSafe(cum, "__g", valueCol,
-      valueCol, "__nv", partitions, gkb)
+      valueCol, "__nv", gkb)
     val totals = cnt.agg(sum(col("__ca")).as("n1"),
       sum(col("__cb")).as("n2"))
     withNext.crossJoin(broadcast(totals)) // 1-row aggregate attach
@@ -535,19 +529,19 @@ object Profile {
     * count aggregate, the constant-key prefix sum, a 1-row totals
     * attach. Output: (n1, n2, t_micro). */
   def cvmDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String, partitions: Int = 0): DataFrame =
+      a: String, b: String): DataFrame =
     cvmDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol, partitions)
+      valueCol)
 
   /** [[cvmDrift]]'s tail over a pre-built per-value count frame —
     * the shared reduce for the in-query form and the persisted-
     * reference probe ([[cvmDriftAgainstRef]]). */
-  private def cvmDriftFromCounts(cnt: DataFrame, valueCol: String,
-      partitions: Int): DataFrame = {
+  private def cvmDriftFromCounts(cnt: DataFrame,
+      valueCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     val cum = EventAnalytics.runningAggsSkewSafe(
       cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions)
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")))
     val totals = cnt.agg(sum(col("__ca")).as("n1"),
       sum(col("__cb")).as("n2"))
     cum.crossJoin(broadcast(totals)) // 1-row aggregate attach
@@ -842,10 +836,10 @@ object Profile {
     * Single-row groups are dropped (ρ undefined). Output:
     * (key, n, sd2, rho_micro). */
   def spearmanExact(df: DataFrame, keyCol: String, idCol: String,
-      xCol: String, yCol: String, partitions: Int = 0): DataFrame = {
+      xCol: String, yCol: String): DataFrame = {
     requireCompositeDomain(df, "spearmanExact", idCol,
       Seq(xCol, yCol))
-    spearmanExactPreGuarded(df, keyCol, idCol, xCol, yCol, partitions)
+    spearmanExactPreGuarded(df, keyCol, idCol, xCol, yCol)
   }
 
   /** [[spearmanExact]] WITHOUT the composite-domain guard — for
@@ -857,8 +851,7 @@ object Profile {
     * unguarded frame: the guard is what keeps an out-of-domain input
     * a THROW instead of silent rank corruption. */
   private[ops] def spearmanExactPreGuarded(df: DataFrame,
-      keyCol: String, idCol: String, xCol: String, yCol: String,
-      partitions: Int = 0): DataFrame = {
+      keyCol: String, idCol: String, xCol: String, yCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     val base = df.select(col(keyCol), col(idCol), col(xCol),
       col(yCol))
@@ -866,12 +859,12 @@ object Profile {
       .withColumn("__oy", col(yCol) * lit(1000000000L) + col(idCol))
     val rx = EventAnalytics.rankFeaturesSkewSafe(
         base.select(col(keyCol), col(idCol), col("__ox")),
-        keyCol, "__ox", 1, partitions)
+        keyCol, "__ox", 1)
       .select(col(keyCol).as("__kx"), col(idCol).as("__ix"),
         col("rank").as("__rx"), col("n"))
     val ry = EventAnalytics.rankFeaturesSkewSafe(
         base.select(col(keyCol), col(idCol), col("__oy")),
-        keyCol, "__oy", 1, partitions)
+        keyCol, "__oy", 1)
       .select(col(keyCol).as("__ky"), col(idCol).as("__iy"),
         col("rank").as("__ry"))
     rx.join(ry, col("__kx") === col("__ky") &&
@@ -937,8 +930,7 @@ object Profile {
     * unique non-null per group); single-row groups dropped (τ
     * undefined). Output: (key, n, d_pairs, tau_micro). */
   def kendallTauExact(df: DataFrame, keyCol: String, idCol: String,
-      xCol: String, yCol: String, buckets: Int = 8,
-      partitions: Int = 0): DataFrame = {
+      xCol: String, yCol: String, buckets: Int = 8): DataFrame = {
     // Upper bound = plan width, not correctness: each bucket is one
     // running-count lane (a column) and one crossContrib term; 128
     // lanes stays comfortably inside whole-stage codegen's method
@@ -963,7 +955,7 @@ object Profile {
     val ps = (1 until buckets).map(j => j.toLong * 1000000L / buckets)
     val bnds = EventAnalytics.groupPercentilesSkewSafe(
         base.select(col(keyCol), col("__oy")), keyCol, "__oy", "__oy",
-        ps, partitions, knownGroups = nG)
+        ps, knownGroups = nG)
       .groupBy(col(keyCol))
       .agg(sort_array(collect_list(col("__oy"))).as("__bnds"))
       .select(col(keyCol).as("__bk"), col("__bnds"))
@@ -988,8 +980,7 @@ object Profile {
       d.withColumn(s"__i$b",
         when(col("__bkt") === b + 1, 1L).otherwise(0L)))
     val pre = EventAnalytics.runningAggsSkewSafe(withInd, keyCol,
-      "__ox", (0 until buckets).map(b => (s"__i$b", "sum", s"__p$b")),
-      partitions)
+      "__ox", (0 until buckets).map(b => (s"__i$b", "sum", s"__p$b")))
     val crossContrib = (0 until buckets).map(b =>
         when(col("__bkt") < b + 1, col(s"__p$b")).otherwise(lit(0L)))
       .reduce(_ + _)
@@ -1061,7 +1052,7 @@ object Profile {
     * tau_micro). */
   def kendallTauExactTall(df: DataFrame, keyCol: String,
       idCol: String, xCol: String, yCol: String, buckets: Int = 32,
-      slices: Int = 0, partitions: Int = 0): DataFrame = {
+      slices: Int = 0): DataFrame = {
     val bN = buckets
     val sN = if (slices > 0) slices else buckets
     // bound = densified-grid state per group (S·B rows), not plan
@@ -1082,7 +1073,7 @@ object Profile {
       val ps = (1 until k).map(j => j.toLong * 1000000L / k)
       EventAnalytics.groupPercentilesSkewSafe(
           base.select(col(keyCol), col(ordCol)), keyCol, ordCol,
-          ordCol, ps, partitions, knownGroups = nG)
+          ordCol, ps, knownGroups = nG)
         .groupBy(col(keyCol))
         .agg(sort_array(collect_list(col(ordCol))).as(out))
         .select(col(keyCol).as(s"__k$out"), col(out))
@@ -1189,27 +1180,26 @@ object Profile {
     * P(A>B)+½P(=) for U (500000 = no drift), micro-value-units for
     * W₁, the nested-floor CvM T in micros. */
   def driftReport(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String, partitions: Int = 0): DataFrame =
+      a: String, b: String): DataFrame =
     driftReportFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol, partitions)
+      valueCol)
 
   /** [[driftReport]]'s four-statistic tail over a pre-built per-value
     * count frame — the shared reduce for the in-query report and the
     * steady-state monitor ([[driftReportAgainstRefCounts]], the form
     * the streaming drift monitor emits nightly). */
-  private def driftReportFromCounts(cnt: DataFrame, valueCol: String,
-      partitions: Int): DataFrame = {
+  private def driftReportFromCounts(cnt: DataFrame,
+      valueCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     // one GK bounds pass feeds BOTH the prefix sum and the Δv lead
     // of the shared subplan (VERDICT r12 #3)
-    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol,
-      partitions))
+    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol))
     val cum = EventAnalytics.runningAggsSkewSafe(
       cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
       gkb)
     val withNext = EventAnalytics.leadSkewSafe(cum, "__g", valueCol,
-      valueCol, "__nv", partitions, gkb)
+      valueCol, "__nv", gkb)
     val totals = cnt.agg(sum(col("__ca")).as("n1"),
       sum(col("__cb")).as("n2"))
     def attach(d: DataFrame) = d.crossJoin(broadcast(totals))
@@ -1268,11 +1258,10 @@ object Profile {
     * (PlanSpec-asserted) — the same four-for-one economy as the solo
     * report. One-sample groups drop per the keyed contract. */
   def driftReportBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String,
-      partitions: Int = 0): DataFrame =
+      sampleCol: String, a: String, b: String): DataFrame =
     driftReportByFromCounts(
       byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, partitions)
+      groupCol, valueCol)
 
   /** [[driftReportBy]]'s tail over a pre-built keyed count frame —
     * shared by the in-query form and the persisted-reference probe
@@ -1281,21 +1270,19 @@ object Profile {
     * the solo By forms each paid their own approxQuantile; the
     * report pays once). */
   private def driftReportByFromCounts(cnt: DataFrame,
-      groupCol: String, valueCol: String,
-      partitions: Int): DataFrame = {
-    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol,
-      partitions))
+      groupCol: String, valueCol: String): DataFrame = {
+    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol))
     def shape(d: DataFrame, stat: String, micro: String) =
       d.select(lit(stat).as("stat"), col(groupCol), col("n1"),
         col("n2"), col(micro).as("stat_micro"))
-    shape(ksDriftByTail(cnt, groupCol, valueCol, partitions, gkb),
+    shape(ksDriftByTail(cnt, groupCol, valueCol, gkb),
         "ks", "ks_micro")
-      .unionByName(shape(mannWhitneyUByTail(cnt, groupCol, valueCol,
-        partitions, gkb), "u", "u_micro"))
-      .unionByName(shape(emdDriftByTail(cnt, groupCol, valueCol,
-        partitions, gkb), "w1", "emd_micro"))
-      .unionByName(shape(cvmDriftByTail(cnt, groupCol, valueCol,
-        partitions, gkb), "cvm", "t_micro"))
+      .unionByName(shape(mannWhitneyUByTail(cnt, groupCol, valueCol, gkb),
+        "u", "u_micro"))
+      .unionByName(shape(emdDriftByTail(cnt, groupCol, valueCol, gkb),
+        "w1", "emd_micro"))
+      .unionByName(shape(cvmDriftByTail(cnt, groupCol, valueCol, gkb),
+        "cvm", "t_micro"))
   }
 
   /** Per-SEGMENT reference count profile — [[distCounts]] keyed on a
@@ -1346,23 +1333,20 @@ object Profile {
     * Hash-identical to [[driftReportBy]] on (reference ∪ probe) by
     * construction. */
   def driftReportByAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, groupCol: String, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      probeCounts: DataFrame, groupCol: String, valueCol: String): DataFrame =
     driftReportByFromCounts(
       mergeRefProbeCountsBy(refCounts, probeCounts, groupCol,
         valueCol),
-      groupCol, valueCol, partitions)
+      groupCol, valueCol)
 
   /** [[driftReportByAgainstRefCounts]] with the probe side counted
     * in-query — the per-segment nightly monitor: the reference is
     * never rescanned, each batch pays one (group, value) count
     * aggregate. */
   def driftReportByAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      groupCol: String, valueCol: String,
-      partitions: Int = 0): DataFrame =
+      groupCol: String, valueCol: String): DataFrame =
     driftReportByAgainstRefCounts(refCounts,
-      probeCountsBy(probe, groupCol, valueCol), groupCol, valueCol,
-      partitions)
+      probeCountsBy(probe, groupCol, valueCol), groupCol, valueCol)
 
   /** Per-GROUP Cramér–von Mises — [[cvmDrift]] keyed on a segment
     * column, completing the by-segment matrix for all four ordered
@@ -1370,19 +1354,18 @@ object Profile {
     * group, prefix sums keyed on the group, ≤|groups| totals joined
     * back by AQE broadcast, one-sample groups dropped. */
   def cvmDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String,
-      partitions: Int = 0): DataFrame =
+      sampleCol: String, a: String, b: String): DataFrame =
     cvmDriftByTail(byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, partitions, None)
+      groupCol, valueCol, None)
 
   /** [[cvmDriftBy]]'s tail over a pre-built keyed count frame
     * (shared GK `bounds` like [[ksDriftByTail]]). */
   private def cvmDriftByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String, partitions: Int,
+      valueCol: String,
       bounds: Option[Array[Double]]): DataFrame = {
     val d38 = "decimal(38,0)"
     val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
       bounds)
     cum.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
       .drop("__tk")
@@ -1411,26 +1394,25 @@ object Profile {
     * ≤|groups| totals joined back by AQE broadcast. One-sample
     * groups are dropped — W₁ is undefined there. */
   def emdDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String,
-      partitions: Int = 0): DataFrame =
+      sampleCol: String, a: String, b: String): DataFrame =
     emdDriftByTail(byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, partitions, None)
+      groupCol, valueCol, None)
 
   /** [[emdDriftBy]]'s tail over a pre-built keyed count frame. Its
     * prefix sum AND Δv lead slice on the same ord, so the GK bounds
     * are estimated once here even solo, and shared with the sibling
     * statistics in the keyed report (VERDICT r12 #3). */
   private def emdDriftByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String, partitions: Int,
+      valueCol: String,
       bounds: Option[Array[Double]]): DataFrame = {
     val d38 = "decimal(38,0)"
     val gkb = Some(bounds.getOrElse(
-      EventAnalytics.sliceBoundsFor(cnt, valueCol, partitions)))
+      EventAnalytics.sliceBoundsFor(cnt, valueCol)))
     val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
       gkb)
     val withNext = EventAnalytics.leadSkewSafe(cum, groupCol, valueCol,
-      valueCol, "__nv", partitions, gkb)
+      valueCol, "__nv", gkb)
     withNext.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
       .drop("__tk")
       .groupBy(col(groupCol))
@@ -1659,9 +1641,8 @@ object Profile {
     * histogram a cost model consumes. Same unique non-null `ordCol`
     * total-order contract as every exact rank. */
   def equiDepthHistogram(df: DataFrame, keyCol: String, ordCol: String,
-      valueCol: String, k: Int, partitions: Int = 0): DataFrame =
-    EventAnalytics.rankFeaturesSkewSafe(df, keyCol, ordCol, k,
-        partitions)
+      valueCol: String, k: Int): DataFrame =
+    EventAnalytics.rankFeaturesSkewSafe(df, keyCol, ordCol, k)
       .groupBy(col(keyCol), col("bucket"))
       .agg(count(lit(1)).as("n_rows"), min(col(valueCol)).as("lo"),
         max(col(valueCol)).as("hi"))
@@ -1691,12 +1672,11 @@ object Profile {
     * non-empty (a k-quantile of nothing is undefined — same contract
     * as the solo drift tests). */
   def binnedTvdDrift(df: DataFrame, valueCol: String, tieCol: String,
-      sampleCol: String, a: String, b: String, k: Int,
-      partitions: Int = 0): DataFrame = {
+      sampleCol: String, a: String, b: String, k: Int): DataFrame = {
     require(k >= 2 && 1000000 % k == 0,
       s"binnedTvdDrift: k must divide 10^6, got $k")
     val boundaries = binnedRefBoundaries(
-      df.filter(col(sampleCol) === a), valueCol, tieCol, k, partitions)
+      df.filter(col(sampleCol) === a), valueCol, tieCol, k)
     val both = df.filter(col(sampleCol) === a || col(sampleCol) === b)
       .filter(col(valueCol).isNotNull)
     val bucketed = bucketByBoundaries(both, valueCol, boundaries, k)
@@ -1710,7 +1690,7 @@ object Profile {
     * (standing rule 1: the reference sample is scanned once when the
     * boundary model is built). */
   def binnedRefBoundaries(ref: DataFrame, valueCol: String,
-      tieCol: String, k: Int, partitions: Int = 0): DataFrame = {
+      tieCol: String, k: Int): DataFrame = {
     require(k >= 2 && 1000000 % k == 0,
       s"binnedRefBoundaries: k must divide 10^6, got $k")
     // null reference values are excluded BEFORE the quantile pass —
@@ -1731,7 +1711,7 @@ object Profile {
         refNn.withColumn("__g", lit(0))
           .withColumn("__bord",
             col(valueCol) * lit(1000000000L) + col(tieCol)),
-        "__g", "__bord", valueCol, ps, partitions)
+        "__g", "__bord", valueCol, ps)
       .select(col(valueCol).as("v"))
   }
 
@@ -1795,10 +1775,9 @@ object Profile {
     * there, and emitting a null ratio would just defer the decision
     * to the caller. */
   def ksDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String,
-      partitions: Int = 0): DataFrame =
+      sampleCol: String, a: String, b: String): DataFrame =
     ksDriftByTail(byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, partitions, None)
+      groupCol, valueCol, None)
 
   /** The ONE keyed count stage of the drift-by family — the
     * (group, value) twin of [[soloCounts]], nulls excluded. */
@@ -1824,10 +1803,10 @@ object Profile {
     * (the per-segment drift report) passes shared GK `bounds` so the
     * family pays ONE approxQuantile pass, not one per statistic. */
   private def ksDriftByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String, partitions: Int,
+      valueCol: String,
       bounds: Option[Array[Double]]): DataFrame = {
     val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
       bounds)
     cum.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
       .drop("__tk")
@@ -1853,19 +1832,19 @@ object Profile {
     * skew-safe prefix sum over a constant key, a 1-row totals attach;
     * products ride DECIMAL(38,0). Output: (n1, n2, u2, u_micro). */
   def mannWhitneyU(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String, partitions: Int = 0): DataFrame =
+      a: String, b: String): DataFrame =
     mannWhitneyUFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol, partitions)
+      valueCol)
 
   /** [[mannWhitneyU]]'s tail over a pre-built per-value count frame —
     * the shared reduce for the in-query form and the persisted-
     * reference probe ([[mannWhitneyUAgainstRef]]). */
-  private def mannWhitneyUFromCounts(cnt: DataFrame, valueCol: String,
-      partitions: Int): DataFrame = {
+  private def mannWhitneyUFromCounts(cnt: DataFrame,
+      valueCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     val cum = EventAnalytics.runningAggsSkewSafe(
       cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions)
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")))
     val totals = cnt.agg(sum(col("__ca")).as("n1"),
       sum(col("__cb")).as("n2"))
     cum
@@ -1888,20 +1867,19 @@ object Profile {
     * the group-keyed prefix sum, ≤|groups| totals joined back (AQE
     * broadcasts), one-sample groups dropped (U undefined). */
   def mannWhitneyUBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String,
-      partitions: Int = 0): DataFrame =
+      sampleCol: String, a: String, b: String): DataFrame =
     mannWhitneyUByTail(
       byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, partitions, None)
+      groupCol, valueCol, None)
 
   /** [[mannWhitneyUBy]]'s tail over a pre-built keyed count frame
     * (shared GK `bounds` like [[ksDriftByTail]]). */
   private def mannWhitneyUByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String, partitions: Int,
+      valueCol: String,
       bounds: Option[Array[Double]]): DataFrame = {
     val d38 = "decimal(38,0)"
     val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), partitions,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
       bounds)
     cum.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
       .drop("__tk")
@@ -1957,8 +1935,7 @@ object Profile {
     * the estimator, not a bug. Output: flagged rows
     * `(group, id, v, dev4 = 4·|v−median|, mad4 = 4·MAD)`. */
   def madOutliers(df: DataFrame, groupCol: String, idCol: String,
-      valueCentiCol: String, zMicro: Long,
-      partitions: Int = 0): DataFrame = {
+      valueCentiCol: String, zMicro: Long): DataFrame = {
     require(zMicro > 0, "madOutliers: zMicro must be > 0")
     // r20 (VERDICT r19 #1): count groups in the guard action — an
     // UPPER bound for base's groups (the null-value filter below can
@@ -1978,7 +1955,7 @@ object Profile {
         col(valueCentiCol) * lit(1000000000L) + col(idCol))
       .localCheckpoint()
     val med = EventAnalytics.groupMedianSkewSafe(base, groupCol,
-        "__ord", valueCentiCol, partitions, knownGroups = nG)
+        "__ord", valueCentiCol, knownGroups = nG)
       .select(col(groupCol).as("__mg"),
         (col("median_lo") + col("median_hi")).as("__med2"))
     val dev = base.join(broadcast(med), col(groupCol) === col("__mg"))
@@ -1992,7 +1969,7 @@ object Profile {
     val mad = EventAnalytics.groupMedianSkewSafe(
         dev2.select(col(groupCol), col(idCol), col("__d2"),
           col("__ord2")),
-        groupCol, "__ord2", "__d2", partitions, knownGroups = nG)
+        groupCol, "__ord2", "__d2", knownGroups = nG)
       .select(col(groupCol).as("__ag"),
         (col("median_lo") + col("median_hi")).as("__mad4"))
     dev2.join(broadcast(mad), col(groupCol) === col("__ag"))
@@ -2045,13 +2022,12 @@ object Profile {
     * yields it exactly — `auc_micro` here IS that u_micro with the
     * positive class as sample a. One count aggregate + a sketch-sized
     * prefix; no sort of the data, no pairwise join. */
-  def aucExact(df: DataFrame, scoreCol: String, labelCol: String,
-      partitions: Int = 0): DataFrame =
+  def aucExact(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
     mannWhitneyU(
       df.filter(col(labelCol).isNotNull) // family contract: null labels
         .select(col(scoreCol),           // are excluded, not negatives
           when(col(labelCol), "pos").otherwise("neg").as("__lbl")),
-      scoreCol, "__lbl", "pos", "neg", partitions)
+      scoreCol, "__lbl", "pos", "neg")
       .select(col("n1").as("n_pos"), col("n2").as("n_neg"),
         col("u2"), col("u_micro").as("auc_micro"))
 
@@ -2061,12 +2037,12 @@ object Profile {
     * is anti-correlated): the keyed ties-adjusted U per group,
     * one-class groups dropped (AUC undefined). */
   def aucExactBy(df: DataFrame, groupCol: String, scoreCol: String,
-      labelCol: String, partitions: Int = 0): DataFrame =
+      labelCol: String): DataFrame =
     mannWhitneyUBy(
       df.filter(col(labelCol).isNotNull) // same null-label exclusion
         .select(col(groupCol), col(scoreCol), // as confusionAt/sweep
           when(col(labelCol), "pos").otherwise("neg").as("__lbl")),
-      groupCol, scoreCol, "__lbl", "pos", "neg", partitions)
+      groupCol, scoreCol, "__lbl", "pos", "neg")
       .select(col(groupCol), col("n1").as("n_pos"),
         col("n2").as("n_neg"), col("u2"),
         col("u_micro").as("auc_micro"))
@@ -2083,7 +2059,7 @@ object Profile {
     * trapezoid-integrating tpr over fpr recovers [[aucExact]] up to
     * tie handling. */
   def thresholdSweep(df: DataFrame, scoreCol: String,
-      labelCol: String, partitions: Int = 0): DataFrame = {
+      labelCol: String): DataFrame = {
     val spectrum = df
       .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .groupBy(col(scoreCol))
@@ -2094,8 +2070,7 @@ object Profile {
       .withColumn("__ord", -col(scoreCol))
       .withColumn("__g", lit(0))
     val cum = EventAnalytics.runningAggsSkewSafe(spectrum, "__g",
-      "__ord", Seq(("__p", "sum", "tp"), ("__q", "sum", "fp")),
-      partitions)
+      "__ord", Seq(("__p", "sum", "tp"), ("__q", "sum", "fp")))
     val totals = spectrum.agg(sum(col("__p")).as("__np"),
       sum(col("__q")).as("__nq"))
     cum.crossJoin(broadcast(totals)) // 1-row totals attach
@@ -2143,7 +2118,7 @@ object Profile {
     * Output per bin: `(bin, n, n_pos, pos_rate_micro, score_lo,
     * score_hi)` — the reliability-diagram rows, all integer. */
   def calibrationTable(df: DataFrame, scoreCol: String, idCol: String,
-      labelCol: String, bins: Int, partitions: Int = 0): DataFrame = {
+      labelCol: String, bins: Int): DataFrame = {
     require(bins >= 2, "calibrationTable: bins must be >= 2")
     val base = df
       .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
@@ -2153,8 +2128,7 @@ object Profile {
     val ord = base.withColumn("__ord",
       col(scoreCol) * lit(1000000000L) + col(idCol))
       .withColumn("__g", lit(0))
-    EventAnalytics.rankFeaturesSkewSafe(ord, "__g", "__ord", bins,
-        partitions)
+    EventAnalytics.rankFeaturesSkewSafe(ord, "__g", "__ord", bins)
       .groupBy(col("bucket").as("bin"))
       .agg(count(lit(1)).as("n"),
         sum(when(col(labelCol), 1L).otherwise(0L)).as("n_pos"),
@@ -2186,12 +2160,10 @@ object Profile {
     * binning pass. Output per bin: (bin, n, n_pos, pos_rate_micro,
     * iso_micro), iso_micro non-decreasing by construction. */
   def isotonicCalibration(df: DataFrame, scoreCol: String,
-      idCol: String, labelCol: String, bins: Int,
-      partitions: Int = 0): DataFrame = {
+      idCol: String, labelCol: String, bins: Int): DataFrame = {
     require(bins >= 2 && bins <= 64,
       s"isotonicCalibration: bins must sit in [2, 64], got $bins")
-    val cal = calibrationTable(df, scoreCol, idCol, labelCol, bins,
-        partitions)
+    val cal = calibrationTable(df, scoreCol, idCol, labelCol, bins)
       .select(col("bin"), col("n"), col("n_pos"),
         col("pos_rate_micro"))
       .localCheckpoint() // tiny frame, many consumers below
@@ -2320,8 +2292,7 @@ object Profile {
     * pure integer end to end. Output: every input row with its
     * group bounds and the clamped value. */
   def winsorize(df: DataFrame, groupCol: String, idCol: String,
-      valueCentiCol: String, loPMicro: Long, hiPMicro: Long,
-      partitions: Int = 0): DataFrame = {
+      valueCentiCol: String, loPMicro: Long, hiPMicro: Long): DataFrame = {
     require(loPMicro < hiPMicro,
       "winsorize: loPMicro must be < hiPMicro")
     val base = df.filter(col(valueCentiCol).isNotNull)
@@ -2332,7 +2303,7 @@ object Profile {
       col(valueCentiCol) * lit(1000000000L) + col(idCol))
     val bounds = EventAnalytics.groupPercentilesSkewSafe(
         ord, groupCol, "__ord", valueCentiCol,
-        Seq(loPMicro, hiPMicro), partitions)
+        Seq(loPMicro, hiPMicro))
       .groupBy(col(groupCol))
       .agg(min(when(col("p_micro") === loPMicro, col(valueCentiCol)))
           .as("lo"),
@@ -2357,8 +2328,7 @@ object Profile {
     * EQUI join on the computed rank. Output per probe row:
     * `(id, v, rank_b, v_norm)`. */
   def quantileNormalize(df: DataFrame, sampleCol: String, ref: String,
-      probe: String, idCol: String, valueCentiCol: String,
-      partitions: Int = 0): DataFrame = {
+      probe: String, idCol: String, valueCentiCol: String): DataFrame = {
     val base = df
       .filter(col(sampleCol) === ref || col(sampleCol) === probe)
       .filter(col(valueCentiCol).isNotNull)
@@ -2369,7 +2339,7 @@ object Profile {
       col(valueCentiCol) * lit(1000000000L) + col(idCol))
     def ranked(s: String) = EventAnalytics.rankFeaturesSkewSafe(
       ord.filter(col(sampleCol) === s).withColumn("__g", lit(0)),
-      "__g", "__ord", 1, partitions)
+      "__g", "__ord", 1)
     val ra = ranked(ref)
       .select(col("rank").as("__ra"), col(valueCentiCol).as("v_norm"),
         col("n").as("__na"))
@@ -2443,7 +2413,7 @@ object Profile {
     * ≤|ps|-row axis. */
   def qqCompare(df: DataFrame, sampleCol: String, a: String,
       b: String, idCol: String, valueCentiCol: String,
-      pMicros: Seq[Long], partitions: Int = 0): DataFrame = {
+      pMicros: Seq[Long]): DataFrame = {
     val base = df
       .filter(col(sampleCol) === a || col(sampleCol) === b)
       .filter(col(valueCentiCol).isNotNull)
@@ -2455,7 +2425,7 @@ object Profile {
     def side(s: String, nOut: String, qOut: String) =
       EventAnalytics.groupPercentilesSkewSafe(
           ord.filter(col(sampleCol) === s).withColumn("__g", lit(0)),
-          "__g", "__ord", valueCentiCol, pMicros, partitions)
+          "__g", "__ord", valueCentiCol, pMicros)
         .select(col("p_micro"), col("n").as(nOut),
           col(valueCentiCol).as(qOut))
     side(a, "n_a", "q_a")
@@ -2532,8 +2502,7 @@ object Profile {
     * uses the closed form 2·Σranks·c = c·m·(2·R_prev + m + 1), so
     * every intermediate stays integral in DECIMAL(38,0) with no
     * mid-sum division. Nulls excluded; empty input → empty output. */
-  def skewProfile(df: DataFrame, keyCol: String,
-      partitions: Int = 0): DataFrame = {
+  def skewProfile(df: DataFrame, keyCol: String): DataFrame = {
     val d38 = "decimal(38,0)"
     val counts = df.filter(col(keyCol).isNotNull)
       .groupBy(col(keyCol)).agg(count(lit(1)).as("__c"))
@@ -2541,7 +2510,7 @@ object Profile {
       .agg(count(lit(1)).as("__m"))
     val cum = EventAnalytics.runningAggsSkewSafe(
       freq.withColumn("__g", lit(0)), "__g", "__c",
-      Seq(("__m", "sum", "__cumm")), partitions)
+      Seq(("__m", "sum", "__cumm")))
     cum
       .withColumn("__rprev", col("__cumm") - col("__m"))
       .agg(

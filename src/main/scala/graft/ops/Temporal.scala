@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.parsers
 
-/** Column-name convention for an SCD2 versioned entity table
+/** Column names of an SCD2 versioned entity table
   * (SURVEY.md §1.1; reference temporal block at
   * /root/reference/src/dso_import/bagh/bagh_create.sql:20-24). */
-case class VersionedCols(
-    identificatie: String = "identificatie",
-    volgnummer: String = "volgnummer",
-    begin: String = "begin_geldigheid",
-    eind: String = "eind_geldigheid")
+object VersionedCols {
+  val identificatie = "identificatie"
+  val volgnummer = "volgnummer"
+  val begin = "begin_geldigheid"
+  val eind = "eind_geldigheid"
+}
 
 /** SCD2 / temporal operators (SURVEY.md §2.3 J2-J5, §2.4 A1, §2.5).
   *
@@ -21,12 +22,13 @@ case class VersionedCols(
   * never a driver-side collect.
   */
 object Temporal {
+  private val v = VersionedCols
 
   /** A1 duplicate-open-version check (bagh/batch.py:242-254): business
     * keys with more than one open (`eind IS NULL`) version — a load-
     * aborting invariant in the reference. One hash aggregate, partial+
     * final, on the filtered rows only. */
-  def duplicateOpenVersions(df: DataFrame, v: VersionedCols = VersionedCols()): DataFrame =
+  def duplicateOpenVersions(df: DataFrame): DataFrame =
     df.filter(col(v.eind).isNull)
       .groupBy(col(v.identificatie))
       .agg(count(lit(1)).as("n_open"))
@@ -36,7 +38,7 @@ object Temporal {
     * (highest volgnummer), the window form of the reference's
     * `eind_geldigheid IS NULL` convention (bagh/batch.py:185-187).
     * Single shuffle on the business key; no self-join. */
-  def currentVersion(df: DataFrame, v: VersionedCols = VersionedCols(),
+  def currentVersion(df: DataFrame,
       tiebreak: Seq[Column] = Nil): DataFrame = {
     val w = Window.partitionBy(col(v.identificatie))
       .orderBy(col(v.volgnummer).desc +: tiebreak: _*)
@@ -51,7 +53,7 @@ object Temporal {
     * Executes as a shuffled hash/sort-merge join on the equi key with
     * the range predicate as a post-join filter — correct but quadratic
     * per key; prefer [[overlapsWindow]] at scale. */
-  def overlapPairsJoin(df: DataFrame, v: VersionedCols = VersionedCols()): DataFrame = {
+  def overlapPairsJoin(df: DataFrame): DataFrame = {
     val a = df.alias("a")
     // SHUFFLE_HASH: per-business-key groups are tiny (a handful of
     // versions), so hash-building one side skips the two full-side
@@ -85,7 +87,7 @@ object Temporal {
     * (A naive lead()-based adjacent-pair check is NOT equivalent: it
     * wrongly flags same-begin ties and misses non-adjacent overlaps —
     * caught by the PropertySpec equivalence property.) */
-  def overlapsWindow(df: DataFrame, v: VersionedCols = VersionedCols()): DataFrame = {
+  def overlapsWindow(df: DataFrame): DataFrame = {
     val ord = col(v.begin).cast("timestamp").cast("long")
     val w = Window.partitionBy(col(v.identificatie)).orderBy(ord)
       .rangeBetween(Window.unboundedPreceding, -1)
@@ -126,14 +128,10 @@ object Temporal {
     * rows. Spark has no in-place UPDATE, so the merge rewrites the
     * snapshot — Delta's `MERGE WHEN MATCHED/NOT MATCHED` built from one
     * full-outer join (single shuffle on id for both sides; at 100 TB
-    * pre-bucketing both sides by id makes this shuffle-free).
-    *
-    * `compareCols` = non-key columns for the null-safe change predicate;
-    * defaults to all staged columns except `idCol`. */
-  def mergeScd2(live: DataFrame, staged: DataFrame, idCol: String = "id",
-      compareCols: Seq[String] = Nil): DataFrame = {
+    * pre-bucketing both sides by id makes this shuffle-free). */
+  def mergeScd2(live: DataFrame, staged: DataFrame,
+      idCol: String = "id"): DataFrame = {
     val cols = staged.columns.toSeq
-    val cmp = if (compareCols.nonEmpty) compareCols else cols.filterNot(_ == idCol)
     val l = live.alias("e")
     val s = staged.alias("t")
     val joined = l.join(s, col(s"e.$idCol") === col(s"t.$idCol"), "full_outer")
@@ -151,10 +149,9 @@ object Temporal {
     * one pass-per-metric. */
   case class MergeAudit(inserted: DataFrame, updated: DataFrame, deleted: DataFrame)
 
-  def mergeAudit(live: DataFrame, staged: DataFrame, idCol: String = "id",
-      compareCols: Seq[String] = Nil): MergeAudit = {
-    val cmp = if (compareCols.nonEmpty) compareCols
-      else staged.columns.toSeq.filterNot(_ == idCol)
+  def mergeAudit(live: DataFrame, staged: DataFrame,
+      idCol: String = "id"): MergeAudit = {
+    val cmp = staged.columns.toSeq.filterNot(_ == idCol)
     val changed = live.alias("e")
       .join(staged.alias("t"), col(s"e.$idCol") === col(s"t.$idCol"))
       .filter(anyColumnDistinct("t", "e", cmp))
@@ -202,8 +199,7 @@ object Temporal {
     * @param versions SCD2 table with VersionedCols + payload columns
     */
   def asOfJoin(probes: DataFrame, probeKey: String, probeTs: String,
-      versions: DataFrame, v: VersionedCols = VersionedCols(),
-      payloadCols: Seq[String]): DataFrame = {
+      versions: DataFrame, payloadCols: Seq[String]): DataFrame = {
     // the whole version is carried as ONE struct so that a null eind
     // (open version) travels with its version instead of being skipped
     // by last(ignoreNulls) and replaced by an older version's eind
@@ -241,7 +237,7 @@ object Temporal {
     * one business key into maximal ranges — the classic gaps-and-islands
     * rewrite (window form, one shuffle). Not in the reference, but the
     * natural companion of its interval algebra (SURVEY.md §2.10 demo). */
-  def coalesceIntervals(df: DataFrame, v: VersionedCols = VersionedCols()): DataFrame = {
+  def coalesceIntervals(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col(v.identificatie))
       .orderBy(col(v.begin), col(v.volgnummer))
     val wRun = Window.partitionBy(col(v.identificatie))

@@ -38,12 +38,11 @@ object TrainingPrep {
     * Spark's split of "" yields [""], so every document has ≥ 1
     * token). Returns (id, n_tokens, shard). */
   def packByTokenBudget(df: DataFrame, idCol: String, textCol: String,
-      budgetTokens: Long, partitions: Int = 0): DataFrame = {
+      budgetTokens: Long): DataFrame = {
     require(budgetTokens > 0, "budgetTokens must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    val nPart = if (partitions > 0) partitions
-      else spark.sessionState.conf.numShufflePartitions
+    val nPart = spark.sessionState.conf.numShufflePartitions
     val counted = df.select(col(idCol),
         graft.ops.TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
       .repartitionByRange(nPart, col(idCol))
@@ -126,10 +125,10 @@ object TrainingPrep {
     * (fixed-budget greedy): here the BIN COUNT is fixed and mass
     * balances. */
   def equalWeightShards(df: DataFrame, keyCol: String, ordCol: String,
-      weightCol: String, nShards: Int, partitions: Int = 0): DataFrame = {
+      weightCol: String, nShards: Int): DataFrame = {
     require(nShards >= 1, "nShards must be positive")
     val cum = EventAnalytics.runningAggsSkewSafe(df, keyCol, ordCol,
-      Seq((weightCol, "sum", "__cw")), partitions)
+      Seq((weightCol, "sum", "__cw")))
     val totals = df.groupBy(col(keyCol))
       .agg(sum(col(weightCol)).as("__tw"))
       .select(col(keyCol).as("__tk"), col("__tw"))

@@ -81,7 +81,7 @@ object ImportPipeline {
     def release(): Unit = cached.foreach(_.unpersist())
   }
 
-  private val v = VersionedCols()
+  private val v = VersionedCols
 
   /** The column [[parse]] adds: the first check a row fails, or null. */
   val Reason = "reject_reason"

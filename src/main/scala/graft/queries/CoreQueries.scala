@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.parsers
-import graft.ops.{Relational, Temporal, VersionedCols}
+import graft.ops.{Relational, Temporal}
 import QuerySpec.table
 
 /** Core operator queries (SURVEY.md §2.2-§2.5) over the driver testdata.

@@ -249,22 +249,6 @@ class CsvPipelineSpec extends SparkSuite {
     assert(spark.read.parquet(dir).count() == 2)
   }
 
-  test("A2 metrics: QueryExecutionListener records action row counts") {
-    import graft.pipeline.MetricsListener
-    val l = MetricsListener.attach(spark)
-    try {
-      import spark.implicits._
-      Seq(1, 2, 3).toDF("x").filter($"x" > 1).count()
-      // listener events are delivered asynchronously; wait for at least
-      // one successful action to land
-      val deadline = System.nanoTime + 10e9.toLong
-      while (l.metrics.isEmpty && System.nanoTime < deadline) Thread.sleep(50)
-      val m = l.metrics
-      assert(m.nonEmpty && m.forall(!_.failed))
-      assert(m.exists(_.action == "count"))
-    } finally spark.listenerManager.unregister(l)
-  }
-
   test("S10 JSONL source: typed scan + dead-letter split from one plan") {
     import graft.sources.JsonlSource
     import org.apache.spark.sql.types.StructType

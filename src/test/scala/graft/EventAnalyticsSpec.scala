@@ -464,44 +464,54 @@ class EventAnalyticsSpec extends SparkSuite {
     // 95% of rows on key 0 (forces the hot key across MANY range
     // slices), the rest over 7 keys; hostile input partitioning; a
     // tiny slice count so several keys share a slice AND the hot key
-    // spans slices — both offset paths exercised.
-    val df = spark.range(20000).select(
+    // spans slices — both offset paths exercised. The frame has no
+    // size estimate (noStats), so the ops run the real bounds pass
+    // and the multi-slice path, as at data scale.
+    val df = noStats(spark.range(20000).select(
         when(pmod(col("id"), lit(100)) < 95, lit(0L))
           .otherwise(pmod(col("id"), lit(7)) + 1).as("k"),
         col("id").as("ord"),
         (pmod(col("id") * 37, lit(1000)) - 250).as("v")) // negatives too
-      .repartition(13)
-    val fast = EventAnalytics
-      .runningTotalSkewSafe(df, "k", "ord", "v", "run", partitions = 5)
+      .repartition(13))
     val w = Window.partitionBy(col("k")).orderBy(col("ord"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val plain = df.withColumn("run", sum(col("v")).over(w))
-    assert(fast.exceptAll(plain).isEmpty && plain.exceptAll(fast).isEmpty)
-    assert(fast.count() == 20000)
-    // single-slice degenerate case: offsets are all zero
-    val one = EventAnalytics
-      .runningTotalSkewSafe(df, "k", "ord", "v", "run", partitions = 1)
-    assert(one.exceptAll(plain).isEmpty && plain.exceptAll(one).isEmpty)
-    // ordCol == valueCol (running total OF the order column itself)
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      val fast = EventAnalytics
+        .runningTotalSkewSafe(df, "k", "ord", "v", "run")
+      assert(fast.exceptAll(plain).isEmpty && plain.exceptAll(fast).isEmpty)
+      assert(fast.count() == 20000)
+      // min/max combines (q194): same slices, extrema offsets — v is
+      // NON-monotone in ord here (pmod·37 wraps), so cumulative extrema
+      // genuinely move mid-key and the null-offset first slice is hit
+      for (op <- Seq("min", "max")) {
+        val fastX = EventAnalytics
+          .runningAggSkewSafe(df, "k", "ord", "v", "run", op)
+        val plainX = df.withColumn("run",
+          (if (op == "min") min(col("v")) else max(col("v"))).over(w))
+        assert(fastX.exceptAll(plainX).isEmpty &&
+          plainX.exceptAll(fastX).isEmpty, s"op=$op")
+      }
+    }
+    // single-slice degenerate case (1 partition, no bounds): offsets
+    // are all zero
+    withConf(ShufflePartitions -> "1") {
+      val one = EventAnalytics
+        .runningTotalSkewSafe(df, "k", "ord", "v", "run")
+      assert(one.exceptAll(plain).isEmpty && plain.exceptAll(one).isEmpty)
+    }
+    // ordCol == valueCol (running total OF the order column itself),
+    // over 32 slices
     val df2 = df.select(col("k"), col("ord").as("v"))
     val w2 = Window.partitionBy(col("k")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fast2 = EventAnalytics
-      .runningTotalSkewSafe(df2, "k", "v", "v", "run", partitions = 32)
     val plain2 = df2.withColumn("run", sum(col("v")).over(w2))
-    assert(fast2.exceptAll(plain2).isEmpty && plain2.exceptAll(fast2).isEmpty)
-    // min/max combines (q194): same slices, extrema offsets — v is
-    // NON-monotone in ord here (pmod·37 wraps), so cumulative extrema
-    // genuinely move mid-key and the null-offset first slice is hit
-    for (op <- Seq("min", "max")) {
-      val fastX = EventAnalytics
-        .runningAggSkewSafe(df, "k", "ord", "v", "run", op, partitions = 5)
-      val wX = Window.partitionBy(col("k")).orderBy(col("ord"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val plainX = df.withColumn("run",
-        (if (op == "min") min(col("v")) else max(col("v"))).over(wX))
-      assert(fastX.exceptAll(plainX).isEmpty &&
-        plainX.exceptAll(fastX).isEmpty, s"op=$op")
+    withConf(ShufflePartitions -> "32") {
+      assert(EventAnalytics.sliceBoundsFor(df2, "v").length >= 2)
+      val fast2 = EventAnalytics
+        .runningTotalSkewSafe(df2, "k", "v", "v", "run")
+      assert(fast2.exceptAll(plain2).isEmpty && plain2.exceptAll(fast2).isEmpty)
     }
   }
 
@@ -513,8 +523,11 @@ class EventAnalyticsSpec extends SparkSuite {
       ("dense-negatives", (1L to 500L).map(i =>
         (i % 3, i, (i * 31 % 17) - 8L)))
     )
+    // (small local frames: under p > 1 the small-frame skip splits at
+    // ord 0 and every ord here is positive, so these run on one slice;
+    // the mega-key tests below cover several)
     for ((name, rows) <- shapes; op <- Seq("sum", "min", "max", "count");
-        p <- Seq(1, 4, 32)) {
+        p <- Seq(1, 4, 32)) withConf(ShufflePartitions -> p.toString) {
       val df = rows.toDF("k", "ord", "v").repartition(5)
       val w = Window.partitionBy(col("k")).orderBy(col("ord"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -525,20 +538,21 @@ class EventAnalyticsSpec extends SparkSuite {
         case _ => max(col("v")) }
       val plain = df.withColumn("run", agg.over(w))
       val fast = EventAnalytics
-        .runningAggSkewSafe(df, "k", "ord", "v", "run", op, p)
+        .runningAggSkewSafe(df, "k", "ord", "v", "run", op)
       assert(fast.exceptAll(plain).isEmpty &&
         plain.exceptAll(fast).isEmpty, s"$name / $op / p=$p")
     }
     // lag/lead ride the same slice algebra (the offsets chain carries
     // a struct instead of a scalar) — same shapes × partitions grid
-    for ((name, rows) <- shapes; p <- Seq(1, 4, 32)) {
+    for ((name, rows) <- shapes; p <- Seq(1, 4, 32))
+        withConf(ShufflePartitions -> p.toString) {
       val df = rows.toDF("k", "ord", "v").repartition(5)
       val w = Window.partitionBy(col("k")).orderBy(col("ord"))
       val plain = df.withColumn("prev", lag(col("v"), 1).over(w))
         .withColumn("next", lead(col("v"), 1).over(w))
       val fast = EventAnalytics.leadSkewSafe(
-        EventAnalytics.lagSkewSafe(df, "k", "ord", "v", "prev", p),
-        "k", "ord", "v", "next", p)
+        EventAnalytics.lagSkewSafe(df, "k", "ord", "v", "prev"),
+        "k", "ord", "v", "next")
         .select("k", "ord", "v", "prev", "next")
       assert(fast.exceptAll(plain).isEmpty &&
         plain.exceptAll(fast).isEmpty, s"$name / lag+lead / p=$p")
@@ -552,13 +566,16 @@ class EventAnalyticsSpec extends SparkSuite {
       val v = (i * 37) % 50
       (k, v * 1000000L + i, v)
     }
-    val df = rows.toDF("k", "ord", "v").repartition(11)
+    // no size estimate + 5 partitions: the hot key spans slices
+    val df = noStats(rows.toDF("k", "ord", "v").repartition(11))
     val ps = Seq(0L, 250000L, 333333L, 500000L, 1000000L)
-    val got = EventAnalytics.percentileContSkewSafe(
-        df, "k", "ord", "v", ps, partitions = 5)
-      .orderBy("k", "p_micro")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
+    val got = withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      EventAnalytics.percentileContSkewSafe(df, "k", "ord", "v", ps)
+        .orderBy("k", "p_micro")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq
+    }
     val exp = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
       case (k, g) =>
         val sorted = g.sortBy(_._2).map(_._3)
@@ -585,18 +602,26 @@ class EventAnalyticsSpec extends SparkSuite {
   test("groupMedianSkewSafe == sequential sort medians: mega-key, " +
       "odd/even sizes, single-row group, duplicate values") {
     // key 0 hogs ~95% of rows; duplicate values forced via mod 50;
-    // ord = value-major composite (v * 1e6 + id) — unique
+    // ord = value-major composite (v * 1e6 + id) — unique; no size
+    // estimate + 5 partitions: the hot key spans slices
     val rows = (0L until 8001L).map { i =>
       val k = if (i % 100 < 95) 0L else i % 7 + 1
       val v = (i * 37) % 50
       (k, v * 1000000L + i, v)
     } // 8001 rows → key sizes both odd and even across keys
-    val df = rows.toDF("k", "ord", "v").repartition(11)
-    val got = EventAnalytics
-      .groupMedianSkewSafe(df, "k", "ord", "v", partitions = 5)
-      .orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
+    val df = noStats(rows.toDF("k", "ord", "v").repartition(11))
+    val ps = Seq(10L, 250000L, 500000L, 950000L, 1000000L)
+    val (got, gotP) = withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      (EventAnalytics.groupMedianSkewSafe(df, "k", "ord", "v")
+        .orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq,
+       EventAnalytics.groupPercentilesSkewSafe(df, "k", "ord", "v", ps)
+        .orderBy("k", "p_micro")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq)
+    }
     val expected = rows.groupBy(_._1).toSeq.sortBy(_._1).map {
       case (k, g) =>
         val sorted = g.sortBy(_._2).map(_._3)
@@ -612,12 +637,6 @@ class EventAnalyticsSpec extends SparkSuite {
     // percentiles: percentile_disc semantics vs sequential reference
     // on the same mega-key frame — rank ceil(p·n/1e6), p100 = max,
     // tiny p = min
-    val ps = Seq(10L, 250000L, 500000L, 950000L, 1000000L)
-    val gotP = EventAnalytics
-      .groupPercentilesSkewSafe(df, "k", "ord", "v", ps, partitions = 5)
-      .orderBy("k", "p_micro")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
     val expP = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
       case (k, g) =>
         val sorted = g.sortBy(_._2).map(_._3)
@@ -643,37 +662,40 @@ class EventAnalyticsSpec extends SparkSuite {
       val v = (i * 37) % 50
       (k, v * 1000000L + i, v, (i % 9) + 1) // weights 1..9
     }
-    val df = rows.toDF("k", "ord", "v", "w").repartition(11)
+    // no size estimate + 5 partitions: the hot key spans slices
+    val df = noStats(rows.toDF("k", "ord", "v", "w").repartition(11))
     val ps = Seq(10L, 250000L, 500000L, 950000L, 1000000L)
-    val got = EventAnalytics
-      .groupWeightedPercentilesSkewSafe(df, "k", "ord", "v", "w", ps,
-        partitions = 5)
-      .orderBy("k", "p_micro")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    val exp = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
-      case (k, g) =>
-        val sorted = g.sortBy(_._2)
-        val tw = sorted.map(_._4).sum
-        val cum = sorted.map(_._4).scanLeft(0L)(_ + _).tail
-        ps.sorted.map { p =>
-          val t = math.max(1L, (p * tw + 999999L) / 1000000L)
-          val idx = cum.indexWhere(_ >= t)
-          (k, p, tw, sorted(idx)._3)
-        }
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      val got = EventAnalytics
+        .groupWeightedPercentilesSkewSafe(df, "k", "ord", "v", "w", ps)
+        .orderBy("k", "p_micro")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).toSeq
+      val exp = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+        case (k, g) =>
+          val sorted = g.sortBy(_._2)
+          val tw = sorted.map(_._4).sum
+          val cum = sorted.map(_._4).scanLeft(0L)(_ + _).tail
+          ps.sorted.map { p =>
+            val t = math.max(1L, (p * tw + 999999L) / 1000000L)
+            val idx = cum.indexWhere(_ >= t)
+            (k, p, tw, sorted(idx)._3)
+          }
+      }
+      assert(got == exp)
+      // weight ≡ 1 is the unweighted op exactly (same plan family,
+      // count axis): frame-level equality on renamed columns
+      val unit = EventAnalytics.groupWeightedPercentilesSkewSafe(
+        df.withColumn("one", lit(1L)), "k", "ord", "v", "one", ps)
+        .withColumnRenamed("w_total", "n")
+      val plainP = EventAnalytics.groupPercentilesSkewSafe(
+        df, "k", "ord", "v", ps)
+        .select("k", "p_micro", "n", "v")
+      assert(unit.select("k", "p_micro", "n", "v")
+        .exceptAll(plainP).isEmpty &&
+        plainP.exceptAll(unit.select("k", "p_micro", "n", "v")).isEmpty)
     }
-    assert(got == exp)
-    // weight ≡ 1 is the unweighted op exactly (same plan family,
-    // count axis): frame-level equality on renamed columns
-    val unit = EventAnalytics.groupWeightedPercentilesSkewSafe(
-      df.withColumn("one", lit(1L)), "k", "ord", "v", "one", ps,
-      partitions = 5).withColumnRenamed("w_total", "n")
-    val plainP = EventAnalytics.groupPercentilesSkewSafe(
-      df, "k", "ord", "v", ps, partitions = 5)
-      .select("k", "p_micro", "n", "v")
-    assert(unit.select("k", "p_micro", "n", "v")
-      .exceptAll(plainP).isEmpty &&
-      plainP.exceptAll(unit.select("k", "p_micro", "n", "v")).isEmpty)
     // positive-weight contract enforced
     val bad = intercept[IllegalArgumentException] {
       EventAnalytics.groupWeightedPercentilesSkewSafe(
@@ -690,21 +712,24 @@ class EventAnalyticsSpec extends SparkSuite {
       val k = if (i % 100 < 95) 0L else i % 9 + 1 // some keys < 8 rows
       (k, (i * 37) % 50 * 1000000L + i)
     }
-    val df = rows.toDF("k", "ord").repartition(7)
-    for (b <- Seq(1, 8, 1000)) { // 1000 > every group: bucket = rank
-      val w = Window.partitionBy(col("k")).orderBy(col("ord"))
-      val wAll = Window.partitionBy(col("k"))
-      val plain = df
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("pr_micro", when(col("n") === 1, lit(0L))
-          .otherwise(expr("(1000000 * (rank - 1)) div (n - 1)")))
-        .withColumn("cume_micro", expr("(1000000 * rank) div n"))
-        .withColumn("bucket", ntile(b).over(w).cast("long"))
-      val fast = EventAnalytics
-        .rankFeaturesSkewSafe(df, "k", "ord", b, partitions = 5)
-      assert(fast.exceptAll(plain).isEmpty &&
-        plain.exceptAll(fast).isEmpty, s"buckets=$b")
+    // no size estimate + 5 partitions: the hot key spans slices
+    val df = noStats(rows.toDF("k", "ord").repartition(7))
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      for (b <- Seq(1, 8, 1000)) { // 1000 > every group: bucket = rank
+        val w = Window.partitionBy(col("k")).orderBy(col("ord"))
+        val wAll = Window.partitionBy(col("k"))
+        val plain = df
+          .withColumn("rank", row_number().over(w).cast("long"))
+          .withColumn("n", count(lit(1)).over(wAll))
+          .withColumn("pr_micro", when(col("n") === 1, lit(0L))
+            .otherwise(expr("(1000000 * (rank - 1)) div (n - 1)")))
+          .withColumn("cume_micro", expr("(1000000 * rank) div n"))
+          .withColumn("bucket", ntile(b).over(w).cast("long"))
+        val fast = EventAnalytics.rankFeaturesSkewSafe(df, "k", "ord", b)
+        assert(fast.exceptAll(plain).isEmpty &&
+          plain.exceptAll(fast).isEmpty, s"buckets=$b")
+      }
     }
   }
 
@@ -722,13 +747,19 @@ class EventAnalyticsSpec extends SparkSuite {
       val k = if (i % 100 < 95) 0L else i % 5 + 1
       (k, (i % 1100) * 2 + 1, i) // some probes precede every quote
     }
-    val out = EventAnalytics.asofJoinSkewSafe(
-        probes.toDF("k", "ord", "pid"),
-        quotes.toDF("k", "ord", "qv"),
-        "k", "ord", "qv", "asof_v", partitions = 5)
-      .select("k", "pid", "asof_v").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq.sorted
+    // no size estimate + 5 partitions: the union the op slices spans
+    // several slices
+    val probeDf = noStats(probes.toDF("k", "ord", "pid"))
+    val quoteDf = noStats(quotes.toDF("k", "ord", "qv"))
+    val out = withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(probeDf.select("k", "ord")
+        .unionByName(quoteDf.select("k", "ord")), "ord").length >= 2)
+      EventAnalytics.asofJoinSkewSafe(probeDf, quoteDf,
+          "k", "ord", "qv", "asof_v")
+        .select("k", "pid", "asof_v").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq.sorted
+    }
     val qByK = quotes.groupBy(_._1)
     val exp = probes.map { case (k, o, pid) =>
       val best = qByK.getOrElse(k, Seq.empty).filter(_._2 <= o)
@@ -742,25 +773,28 @@ class EventAnalyticsSpec extends SparkSuite {
       "mega-key, incl. null values and slice-boundary rows") {
     import org.apache.spark.sql.expressions.Window
     // 95% on key 0 with ~4% null values (the struct-carry contract:
-    // the lag after a null-valued row is null, not the last non-null)
-    val df = spark.range(8000).select(
+    // the lag after a null-valued row is null, not the last non-null);
+    // no size estimate + 5 partitions: slice-boundary rows exist
+    val df = noStats(spark.range(8000).select(
         when(pmod(col("id"), lit(100)) < 95, lit(0L))
           .otherwise(pmod(col("id"), lit(7)) + 1).as("k"),
         col("id").as("ord"),
         when(pmod(col("id"), lit(25)) === 3, lit(null).cast("long"))
           .otherwise((col("id") * 13) % 97).as("v"))
-      .repartition(11)
+      .repartition(11))
     val w = Window.partitionBy(col("k")).orderBy(col("ord"))
     val plain = df.withColumn("prev", lag(col("v"), 1).over(w))
       .withColumn("next", lead(col("v"), 1).over(w))
-    val fast = EventAnalytics.leadSkewSafe(
-      EventAnalytics.lagSkewSafe(df, "k", "ord", "v", "prev",
-        partitions = 5),
-      "k", "ord", "v", "next", partitions = 5)
-    assert(fast.select("k", "ord", "v", "prev", "next")
-      .exceptAll(plain).isEmpty &&
-      plain.exceptAll(fast.select("k", "ord", "v", "prev", "next"))
-        .isEmpty)
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      val fast = EventAnalytics.leadSkewSafe(
+        EventAnalytics.lagSkewSafe(df, "k", "ord", "v", "prev"),
+        "k", "ord", "v", "next")
+      assert(fast.select("k", "ord", "v", "prev", "next")
+        .exceptAll(plain).isEmpty &&
+        plain.exceptAll(fast.select("k", "ord", "v", "prev", "next"))
+          .isEmpty)
+    }
   }
 
   test("runningAggsSkewSafe multi-agg ≡ chained singles; " +
@@ -768,47 +802,49 @@ class EventAnalyticsSpec extends SparkSuite {
       "under the mega-key, incl. null values") {
     import org.apache.spark.sql.expressions.Window
     // mega-key shape (95% on key 0), negatives, and ~4% NULL values
-    // so the count-of-non-null and null-safe-sum paths are both hit
-    val df = spark.range(20000).select(
+    // so the count-of-non-null and null-safe-sum paths are both hit;
+    // no size estimate + 5 partitions: the hot key spans slices
+    val df = noStats(spark.range(20000).select(
         when(pmod(col("id"), lit(100)) < 95, lit(0L))
           .otherwise(pmod(col("id"), lit(7)) + 1).as("k"),
         col("id").as("ord"),
         when(pmod(col("id"), lit(25)) === 3, lit(null).cast("long"))
           .otherwise(pmod(col("id") * 37, lit(1000)) - 250).as("v"))
-      .repartition(13)
-    // (a) one multi-agg pass ≡ two chained single passes
-    val multi = EventAnalytics.runningAggsSkewSafe(df, "k", "ord",
-      Seq(("v", "max", "run_max"), ("v", "min", "run_min")),
-      partitions = 5)
-    val chained = EventAnalytics.runningAggSkewSafe(
-      EventAnalytics.runningAggSkewSafe(df, "k", "ord", "v",
-        "run_max", "max", partitions = 5),
-      "k", "ord", "v", "run_min", "min", partitions = 5)
-      .select(multi.columns.map(col): _*)
-    assert(multi.exceptAll(chained).isEmpty &&
-      chained.exceptAll(multi).isEmpty)
-    // (b) moments vs the plain-window replay with identical integer
-    // floor derivations
-    val fast = EventAnalytics.runningMomentsSkewSafe(
-      df, "k", "ord", "v", partitions = 5)
-    val w = Window.partitionBy(col("k")).orderBy(col("ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val plain = df
-      .withColumn("run_n", count(col("v")).over(w))
-      .withColumn("run_sum", sum(col("v")).over(w))
-      .withColumn("__q",
-        sum(col("v").cast("decimal(38,0)") * col("v")).over(w))
-      .withColumn("avg_micro",
-        expr("(CAST(1000000 AS DECIMAL(38,0)) * run_sum) div run_n"))
-      .withColumn("var_floor",
-        expr("(CAST(run_n AS DECIMAL(38,0)) * __q - " +
-          "CAST(run_sum AS DECIMAL(38,0)) * run_sum) div " +
-          "(CAST(run_n AS DECIMAL(38,0)) * run_n)"))
-      .drop("__q")
-      .select(fast.columns.map(col): _*)
-    assert(fast.exceptAll(plain).isEmpty &&
-      plain.exceptAll(fast).isEmpty)
-    assert(fast.count() == 20000)
+      .repartition(13))
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      // (a) one multi-agg pass ≡ two chained single passes
+      val multi = EventAnalytics.runningAggsSkewSafe(df, "k", "ord",
+        Seq(("v", "max", "run_max"), ("v", "min", "run_min")))
+      val chained = EventAnalytics.runningAggSkewSafe(
+        EventAnalytics.runningAggSkewSafe(df, "k", "ord", "v",
+          "run_max", "max"),
+        "k", "ord", "v", "run_min", "min")
+        .select(multi.columns.map(col): _*)
+      assert(multi.exceptAll(chained).isEmpty &&
+        chained.exceptAll(multi).isEmpty)
+      // (b) moments vs the plain-window replay with identical integer
+      // floor derivations
+      val fast = EventAnalytics.runningMomentsSkewSafe(df, "k", "ord", "v")
+      val w = Window.partitionBy(col("k")).orderBy(col("ord"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val plain = df
+        .withColumn("run_n", count(col("v")).over(w))
+        .withColumn("run_sum", sum(col("v")).over(w))
+        .withColumn("__q",
+          sum(col("v").cast("decimal(38,0)") * col("v")).over(w))
+        .withColumn("avg_micro",
+          expr("(CAST(1000000 AS DECIMAL(38,0)) * run_sum) div run_n"))
+        .withColumn("var_floor",
+          expr("(CAST(run_n AS DECIMAL(38,0)) * __q - " +
+            "CAST(run_sum AS DECIMAL(38,0)) * run_sum) div " +
+            "(CAST(run_n AS DECIMAL(38,0)) * run_n)"))
+        .drop("__q")
+        .select(fast.columns.map(col): _*)
+      assert(fast.exceptAll(plain).isEmpty &&
+        plain.exceptAll(fast).isEmpty)
+      assert(fast.count() == 20000)
+    }
     // (c) hand check: variance of a known prefix — key 1 carries
     // ord ≡ 95..100 (mod 700)… keep it simple: single-key frame
     val tiny = Seq((1L, 1L, 2L), (1L, 2L, 4L), (1L, 3L, 9L))

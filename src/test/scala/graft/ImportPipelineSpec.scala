@@ -17,7 +17,7 @@ import graft.pipeline.ImportPipeline
   * and anti-join per check, each reject reason its own frame. Kept here
   * only as the witness the tagged pass is compared with. */
 object FilterChain {
-  private val v = VersionedCols()
+  private val v = VersionedCols
 
   def clean(raw: DataFrame, spec: TableSpec,
       parents: Map[String, DataFrame]): (DataFrame, DataFrame) = {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reads, and every entry point it has. A knob stays only while two
   * real workloads need different values; a new one is added to `kept`
   * together with that reason. A new main is added to `mains` the same
-  * way. */
+  * way. No operator takes a per-call partition count. */
 class KnobCensusSpec extends AnyFunSuite {
   private val kept = Set(
     "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER",             // deployment
@@ -28,6 +28,8 @@ class KnobCensusSpec extends AnyFunSuite {
 
   private val packageDecl = """(?m)^package\s+([\w.]+)""".r
   private val objectOrMain = """(?m)^object\s+(\w+)|\bdef\s+main\s*\(""".r
+
+  private val defaultedPartitions = """\bpartitions\s*:\s*\w+\s*=""".r
 
   private lazy val sources = {
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -64,5 +66,17 @@ class KnobCensusSpec extends AnyFunSuite {
     }.toSet
     assert(defined == mains,
       s"added: ${(defined -- mains).toSeq.sorted}; gone: ${(mains -- defined).toSeq.sorted}")
+  }
+
+  test("no def in src/main takes a defaulted partitions parameter") {
+    // the slice and range counts are the session's shuffle partitions
+    // (EventAnalytics.sliceBoundsFor, TrainingPrep.packByTokenBudget);
+    // a per-call default would be a second route to the same setting
+    val found = sources.flatMap { p =>
+      defaultedPartitions.findAllIn(java.nio.file.Files.readString(p))
+        .map(_ => p.getFileName.toString)
+    }
+    assert(found.isEmpty,
+      s"${found.size} defaulted partitions parameters in ${found.distinct.mkString(", ")}")
   }
 }

@@ -641,16 +641,13 @@ class PlanSpec extends SparkSuite {
     // thresholds exist for small inputs, so pin the REWRITE itself with
     // thresholds lowered — proving the engine config reaches the rule
     // — and assert results are unchanged by the filter.
-    val confs = Seq(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // creationSideThreshold is an UPPER bound (dim must be smaller);
       // applicationSideScanSizeThreshold a LOWER bound (fact must be bigger)
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "1GB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val fact = spark.read.parquet(s"$sf0001/lineitem.parquet")
         .select($"l_orderkey", $"l_quantity")
       // Filter on a NON-join column: a join-key predicate would be
@@ -667,9 +664,6 @@ class PlanSpec extends SparkSuite {
       val expected = fact.as("f").join(dim.as("d"),
         $"f.l_orderkey" === $"d.o_orderkey").count()
       assert(j.count() == expected)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -933,5 +927,20 @@ class PlanSpec extends SparkSuite {
     // the distance predicate is a post-join filter on an equi-join,
     // so SOME hash/merge join on the cell key must be present
     assert(p.contains("Join"), "expected a join operator")
+  }
+
+  test("PlanDump.mask: run-specific ids masked, plan text kept") {
+    val raw = "Exchange hashpartitioning(k#123L, 4), [plan_id=42]\n" +
+      "Arguments: [id#7L], MapPartitionsRDD[104] at localCheckpoint at " +
+      "Profile.scala:981, ExistingRDD\n" +
+      "Arguments: graft.ops.Multimodal$$$Lambda/0x00007f3c0c4b2a10@3ac3cae8, " +
+      "obj#9: scala.Tuple9\n" +
+      "vec_argmin_long(slice(v#5, 1, 16), [[J@523e0ffb)"
+    assert(PlanDump.mask(raw) ==
+      "Exchange hashpartitioning(k#NL, 4), [plan_id=N]\n" +
+      "Arguments: [id#NL], MapPartitionsRDD[N] at localCheckpoint at " +
+      "Profile.scala:N, ExistingRDD\n" +
+      "Arguments: graft.ops.Multimodal$$$Lambda@N, obj#N: scala.Tuple9\n" +
+      "vec_argmin_long(slice(v#N, 1, 16), [[J@N)")
   }
 }

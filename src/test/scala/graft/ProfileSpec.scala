@@ -1,10 +1,16 @@
 package graft
 
-import graft.ops.Profile
+import graft.ops.{EventAnalytics, Profile}
 import org.apache.spark.sql.functions.col
 
 /** Column-profile semantics on a planted frame (nulls, duplicates,
-  * type-native min/max) and the single-scan plan shape. */
+  * type-native min/max) and the single-scan plan shape.
+  *
+  * The skew-safe ops read their slice count from the session, so the
+  * drift tests set it with `withConf(ShufflePartitions -> n)`. Their
+  * small local frames take `sliceBoundsFor`'s small-frame skip and run
+  * on one slice; the mega-key tests feed `noStats` frames, which run
+  * the quantile pass and several slices. */
 class ProfileSpec extends SparkSuite {
   import spark.implicits._
 
@@ -82,10 +88,11 @@ class ProfileSpec extends SparkSuite {
   test("ksDrift: identical samples → 0; disjoint supports → 1e6; " +
       "hand-computed mixed case with cross-sample ties") {
     def ks(rows: Seq[(Long, String)]) =
-      Profile.ksDrift(rows.toDF("v", "s"), "v", "s", "A", "B",
-          partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).head
+      withConf(ShufflePartitions -> "3") {
+        Profile.ksDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).head
+      }
     // identical distributions: D = 0
     val same = (1L to 50L).flatMap(i => Seq((i, "A"), (i, "B")))
     assert(ks(same) == (50L, 50L, 0L, 0L))
@@ -104,10 +111,11 @@ class ProfileSpec extends SparkSuite {
   test("mannWhitneyU: stochastic order extremes, the all-tied case, " +
       "and a brute-force pair count with ties") {
     def mw(rows: Seq[(Long, String)]) =
-      Profile.mannWhitneyU(rows.toDF("v", "s"), "v", "s", "A", "B",
-          partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).head
+      withConf(ShufflePartitions -> "3") {
+        Profile.mannWhitneyU(rows.toDF("v", "s"), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).head
+      }
     // every A below every B: U = 0
     val below = (1L to 10L).map((_, "A")) ++ (11L to 15L).map((_, "B"))
     assert(mw(below) == (10L, 5L, 0L, 0L))
@@ -138,17 +146,18 @@ class ProfileSpec extends SparkSuite {
       (1L to 30L).map(v => ("g2", v, "B")) ++
       (1L to 9L).map(v => ("g3", v, "A")) // no B sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
-    val out = Profile.ksDriftBy(df, "g", "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))).toMap
-    assert(out.keySet == Set("g1", "g2"))
-    for (g <- Seq("g1", "g2")) {
-      val solo = Profile.ksDrift(
-          df.filter(col("g") === g), "v", "s", "A", "B", partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).head
-      assert(out(g) == solo, s"group $g disagrees with the solo op")
+    withConf(ShufflePartitions -> "3") {
+      val out = Profile.ksDriftBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))).toMap
+      assert(out.keySet == Set("g1", "g2"))
+      for (g <- Seq("g1", "g2")) {
+        val solo = Profile.ksDrift(
+            df.filter(col("g") === g), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).head
+        assert(out(g) == solo, s"group $g disagrees with the solo op")
+      }
     }
   }
 
@@ -160,19 +169,20 @@ class ProfileSpec extends SparkSuite {
       (1L to 30L).flatMap(v => Seq(("g2", v, "A"), ("g2", v, "B"))) ++
       (1L to 9L).map(v => ("g3", v, "B")) // no A sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
-    val out = Profile.mannWhitneyUBy(df, "g", "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))).toMap
-    assert(out.keySet == Set("g1", "g2"))
-    for (g <- Seq("g1", "g2")) {
-      val solo = Profile.mannWhitneyU(
-          df.filter(col("g") === g), "v", "s", "A", "B", partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).head
-      assert(out(g) == solo, s"group $g disagrees with the solo op")
+    withConf(ShufflePartitions -> "3") {
+      val out = Profile.mannWhitneyUBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))).toMap
+      assert(out.keySet == Set("g1", "g2"))
+      for (g <- Seq("g1", "g2")) {
+        val solo = Profile.mannWhitneyU(
+            df.filter(col("g") === g), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).head
+        assert(out(g) == solo, s"group $g disagrees with the solo op")
+      }
+      assert(out("g2")._4 == 500000L) // identical samples: no drift
     }
-    assert(out("g2")._4 == 500000L) // identical samples: no drift
   }
 
   test("equiDepthHistogram == plain NTILE roll-up under the mega-key; " +
@@ -189,32 +199,36 @@ class ProfileSpec extends SparkSuite {
         r.getLong(4)))
     assert(h.toSeq == Seq((1L, 3L, 10L, 30L), (2L, 3L, 40L, 60L),
       (3L, 2L, 70L, 80L), (4L, 2L, 90L, 100L)))
-    // mega-key differential vs the plain window form
-    val df = spark.range(4000).select(
+    // mega-key differential vs the plain window form; no size
+    // estimate + 5 partitions: the hot key spans slices
+    val df = noStats(spark.range(4000).select(
         when(pmod(col("id"), lit(100)) < 95, lit("hot"))
           .otherwise(concat(lit("k"), pmod(col("id"), lit(7))))
           .as("k"),
         ((col("id") * 37) % 1000).as("v"), col("id").as("ord"))
-      .repartition(9)
+      .repartition(9))
     val w = Window.partitionBy(col("k")).orderBy(col("ord"))
     val plain = df
       .withColumn("bucket", ntile(6).over(w).cast("long"))
       .groupBy(col("k"), col("bucket"))
       .agg(count(lit(1)).as("n_rows"), min(col("v")).as("lo"),
         max(col("v")).as("hi"))
-    val fast = Profile.equiDepthHistogram(df, "k", "ord", "v", 6,
-      partitions = 5)
-    assert(fast.exceptAll(plain).isEmpty &&
-      plain.exceptAll(fast).isEmpty)
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "ord").length >= 2)
+      val fast = Profile.equiDepthHistogram(df, "k", "ord", "v", 6)
+      assert(fast.exceptAll(plain).isEmpty &&
+        plain.exceptAll(fast).isEmpty)
+    }
   }
 
   test("cvmDrift: identical → 0, hand case exact, ≡ BigInt reference " +
       "with the same nested-floor on a planted frame") {
     def cvm(rows: Seq[(Long, String)]) =
-      Profile.cvmDrift(rows.toDF("v", "s"), "v", "s", "A", "B",
-          partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .head
+      withConf(ShufflePartitions -> "3") {
+        Profile.cvmDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .head
+      }
     val same = (1L to 40L).flatMap(v => Seq((v, "A"), (v, "B")))
     assert(cvm(same) == (40L, 40L, 0L))
     // hand case: A = {1,2}, B = {1,3} → T = 1/16 exactly
@@ -296,11 +310,15 @@ class ProfileSpec extends SparkSuite {
       val y = x + (i % 7) * 13 - 39 // correlated, not identical
       (g, i, x, y)
     }
-    val df = rows.toDF("g", "id", "x", "y").repartition(9)
-    val got = Profile.spearmanExact(df, "g", "id", "x", "y",
-        partitions = 5)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3)))).toMap
+    // no size estimate + 5 partitions: both rank passes slice the
+    // hot group (their x-/y-major composite orders follow x and y)
+    val df = noStats(rows.toDF("g", "id", "x", "y").repartition(9))
+    val got = withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "x").length >= 2)
+      Profile.spearmanExact(df, "g", "id", "x", "y")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap
+    }
     val exp = rows.groupBy(_._1).map { case (g, rs) =>
       val n = rs.size.toLong
       val rx = rs.sortBy(r => (r._3, r._2)).zipWithIndex
@@ -363,7 +381,9 @@ class ProfileSpec extends SparkSuite {
       val y = x + (i % 11) * 17 - 80 // correlated, not identical
       (g, i, x, y)
     }
-    val df = rows.toDF("g", "id", "x", "y").repartition(9)
+    // no size estimate + 5 partitions: the y-quantile pick over the
+    // composite y order slices the hot group
+    val df = noStats(rows.toDF("g", "id", "x", "y").repartition(9))
     val exp = rows.groupBy(_._1).collect { case (g, rs) if rs.size > 1 =>
       // pairwise BigInt reference on the composite orders
       val os = rs.map(r => (BigInt(r._3) * 1000000000L + r._2,
@@ -378,12 +398,15 @@ class ProfileSpec extends SparkSuite {
         (BigInt(1000000) - (BigInt(4000000) * d) / (n * (n - 1)))
           .toLong))
     }.toMap
-    for (b <- Seq(2, 8, 13)) {
-      val got = Profile.kendallTauExact(df, "g", "id", "x", "y",
-          buckets = b, partitions = 5)
-        .collect().map(r => (r.getString(0),
-          (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      assert(got == exp, s"buckets=$b")
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "y").length >= 2)
+      for (b <- Seq(2, 8, 13)) {
+        val got = Profile.kendallTauExact(df, "g", "id", "x", "y",
+            buckets = b)
+          .collect().map(r => (r.getString(0),
+            (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+        assert(got == exp, s"buckets=$b")
+      }
     }
     // perfect concordance / reversal / n=1 drop
     val mono = (1L to 60L).map(i => ("m", i, i, i * 2)) ++
@@ -404,7 +427,9 @@ class ProfileSpec extends SparkSuite {
       val y = x + (i % 11) * 17 - 80
       (g, i, x, y)
     }
-    val df = rows.toDF("g", "id", "x", "y").repartition(9)
+    // no size estimate + 5 partitions: the x- and y-quantile picks
+    // over the composite orders slice the hot group
+    val df = noStats(rows.toDF("g", "id", "x", "y").repartition(9))
     val exp = rows.groupBy(_._1).collect { case (g, rs) if rs.size > 1 =>
       val os = rs.map(r => (BigInt(r._3) * 1000000000L + r._2,
         BigInt(r._4) * 1000000000L + r._2))
@@ -418,23 +443,26 @@ class ProfileSpec extends SparkSuite {
         (BigInt(1000000) - (BigInt(4000000) * d) / (n * (n - 1)))
           .toLong))
     }.toMap
-    for ((b, s) <- Seq((2, 2), (8, 8), (13, 5), (5, 13), (256, 4))) {
-      val got = Profile.kendallTauExactTall(df, "g", "id", "x", "y",
-          buckets = b, slices = s, partitions = 5)
+    withConf(ShufflePartitions -> "5") {
+      assert(EventAnalytics.sliceBoundsFor(df, "x").length >= 2)
+      for ((b, s) <- Seq((2, 2), (8, 8), (13, 5), (5, 13), (256, 4))) {
+        val got = Profile.kendallTauExactTall(df, "g", "id", "x", "y",
+            buckets = b, slices = s)
+          .collect().map(r => (r.getString(0),
+            (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+        assert(got == exp, s"buckets=$b slices=$s")
+      }
+      // and bit-identical to the column form at the q246 gate shape
+      val colForm = Profile.kendallTauExact(df, "g", "id", "x", "y",
+          buckets = 32)
         .collect().map(r => (r.getString(0),
           (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      assert(got == exp, s"buckets=$b slices=$s")
+      val tallForm = Profile.kendallTauExactTall(df, "g", "id", "x", "y",
+          buckets = 32)
+        .collect().map(r => (r.getString(0),
+          (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      assert(tallForm == colForm && colForm == exp)
     }
-    // and bit-identical to the column form at the q246 gate shape
-    val colForm = Profile.kendallTauExact(df, "g", "id", "x", "y",
-        buckets = 32, partitions = 5)
-      .collect().map(r => (r.getString(0),
-        (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val tallForm = Profile.kendallTauExactTall(df, "g", "id", "x", "y",
-        buckets = 32, partitions = 5)
-      .collect().map(r => (r.getString(0),
-        (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    assert(tallForm == colForm && colForm == exp)
     val mono = (1L to 60L).map(i => ("m", i, i, i * 2)) ++
       (1L to 60L).map(i => ("a", i, i, 1000L - i)) :+
       (("one", 1L, 5L, 5L))
@@ -597,14 +625,14 @@ class ProfileSpec extends SparkSuite {
     val ref = Profile.distCountsBy(df.filter(col("s") === "A"),
       "g", "v")
     val probe = df.filter(col("s") === "B").select(col("g"), col("v"))
-    val steady = Profile.driftReportByAgainstRef(ref, probe, "g", "v",
-        partitions = 3)
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        r.toSeq.drop(2))).toMap
-    val inQuery = Profile.driftReportBy(df, "g", "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        r.toSeq.drop(2))).toMap
+    val (steady, inQuery) = withConf(ShufflePartitions -> "3") {
+      (Profile.driftReportByAgainstRef(ref, probe, "g", "v")
+        .collect().map(r => ((r.getString(0), r.getString(1)),
+          r.toSeq.drop(2))).toMap,
+       Profile.driftReportBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => ((r.getString(0), r.getString(1)),
+          r.toSeq.drop(2))).toMap)
+    }
     assert(steady == inQuery)
     assert(steady.keySet.map(_._2) == Set("g1", "g2")) // one-sided drop
     // the categorical keyed steady form rides the same merge
@@ -735,23 +763,21 @@ class ProfileSpec extends SparkSuite {
     val rows = (1L to 40L).map(v => (v, "A")) ++
       (21L to 60L).map(v => (v, "B"))
     val df = rows.toDF("v", "s").repartition(7)
-    val rep = Profile.driftReport(df, "v", "s", "A", "B", partitions = 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3)))).toMap
-    assert(rep.keySet == Set("ks", "u", "w1", "cvm"))
-    val ks = Profile.ksDrift(df, "v", "s", "A", "B", partitions = 3)
-      .collect().head
-    assert(rep("ks") == (ks.getLong(0), ks.getLong(1), ks.getLong(3)))
-    val u = Profile.mannWhitneyU(df, "v", "s", "A", "B", partitions = 3)
-      .collect().head
-    assert(rep("u") == (u.getLong(0), u.getLong(1), u.getLong(3)))
-    val w1 = Profile.emdDrift(df, "v", "s", "A", "B", partitions = 3)
-      .collect().head
-    assert(rep("w1") == (w1.getLong(0), w1.getLong(1), w1.getLong(3)))
-    val cvm = Profile.cvmDrift(df, "v", "s", "A", "B", partitions = 3)
-      .collect().head
-    assert(rep("cvm") == (cvm.getLong(0), cvm.getLong(1),
-      cvm.getLong(2)))
+    withConf(ShufflePartitions -> "3") {
+      val rep = Profile.driftReport(df, "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap
+      assert(rep.keySet == Set("ks", "u", "w1", "cvm"))
+      val ks = Profile.ksDrift(df, "v", "s", "A", "B").collect().head
+      assert(rep("ks") == (ks.getLong(0), ks.getLong(1), ks.getLong(3)))
+      val u = Profile.mannWhitneyU(df, "v", "s", "A", "B").collect().head
+      assert(rep("u") == (u.getLong(0), u.getLong(1), u.getLong(3)))
+      val w1 = Profile.emdDrift(df, "v", "s", "A", "B").collect().head
+      assert(rep("w1") == (w1.getLong(0), w1.getLong(1), w1.getLong(3)))
+      val cvm = Profile.cvmDrift(df, "v", "s", "A", "B").collect().head
+      assert(rep("cvm") == (cvm.getLong(0), cvm.getLong(1),
+        cvm.getLong(2)))
+    }
   }
 
   test("driftReportBy rows ≡ the four keyed statistics") {
@@ -760,20 +786,21 @@ class ProfileSpec extends SparkSuite {
       (21L to 60L).map(v => ("g1", v, "B")) ++
       (1L to 30L).flatMap(v => Seq(("g2", v, "A"), ("g2", v, "B")))
     val df = rows.toDF("g", "v", "s").repartition(7)
-    val rep = Profile.driftReportBy(df, "g", "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => ((r.getString(0), r.getString(1)),
-        (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    assert(rep.keySet.map(_._1) == Set("ks", "u", "w1", "cvm"))
-    val ks = Profile.ksDriftBy(df, "g", "v", "s", "A", "B", 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(4)))).toMap
-    for ((g, v) <- ks) assert(rep(("ks", g)) == v)
-    val cvm = Profile.cvmDriftBy(df, "g", "v", "s", "A", "B", 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3)))).toMap
-    for ((g, v) <- cvm) assert(rep(("cvm", g)) == v)
-    assert(rep(("cvm", "g2"))._3 == 0L) // identical samples
+    withConf(ShufflePartitions -> "3") {
+      val rep = Profile.driftReportBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => ((r.getString(0), r.getString(1)),
+          (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+      assert(rep.keySet.map(_._1) == Set("ks", "u", "w1", "cvm"))
+      val ks = Profile.ksDriftBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(4)))).toMap
+      for ((g, v) <- ks) assert(rep(("ks", g)) == v)
+      val cvm = Profile.cvmDriftBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap
+      for ((g, v) <- cvm) assert(rep(("cvm", g)) == v)
+      assert(rep(("cvm", "g2"))._3 == 0L) // identical samples
+    }
   }
 
   test("cvmDriftBy: per-group ≡ the solo op per slice; one-sample " +
@@ -785,29 +812,32 @@ class ProfileSpec extends SparkSuite {
       (1L to 30L).map(v => ("g2", v, "B")) ++
       (1L to 9L).map(v => ("g3", v, "A")) // no B sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
-    val out = Profile.cvmDriftBy(df, "g", "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3)))).toMap
-    assert(out.keySet == Set("g1", "g2"))
-    assert(out("g2")._3 == 0L) // identical samples: no drift
-    for (g <- Seq("g1", "g2")) {
-      val solo = Profile.cvmDrift(
-          df.filter(col("g") === g), "v", "s", "A", "B", partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .head
-      assert(out(g) == solo, s"group $g disagrees with the solo op")
+    withConf(ShufflePartitions -> "3") {
+      val out = Profile.cvmDriftBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap
+      assert(out.keySet == Set("g1", "g2"))
+      assert(out("g2")._3 == 0L) // identical samples: no drift
+      for (g <- Seq("g1", "g2")) {
+        val solo = Profile.cvmDrift(
+            df.filter(col("g") === g), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .head
+        assert(out(g) == solo, s"group $g disagrees with the solo op")
+      }
     }
   }
 
   test("binnedTvdDrift: identical → zero devs, hand-computed shift, " +
       "duplicate boundaries skip buckets deterministically") {
     def run(rows: Seq[(Long, Long, String)], k: Int = 10) =
-      Profile.binnedTvdDrift(rows.toDF("v", "id", "s"), "v", "id",
-          "s", "A", "B", k, partitions = 3)
-        .orderBy(col("bucket"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSeq
+      withConf(ShufflePartitions -> "3") {
+        Profile.binnedTvdDrift(rows.toDF("v", "id", "s"), "v", "id",
+            "s", "A", "B", k)
+          .orderBy(col("bucket"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).toSeq
+      }
     val refA = (1L to 100L).map(v => (v, v, "A"))
     // identical: every bucket 10/10, dev 0
     val same = run(refA ++ (1L to 100L).map(v => (v, 1000 + v, "B")))
@@ -830,13 +860,13 @@ class ProfileSpec extends SparkSuite {
     val rows = (1L to 100L).map(v => (v, v, "A")) ++
       (51L to 150L).map(v => (v, 1000 + v, "B"))
     val df = rows.toDF("v", "id", "s").repartition(7)
-    val inQuery = Profile.binnedTvdDrift(df, "v", "id", "s", "A", "B",
-        10, partitions = 3)
-      .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3)))).toMap
     val ref = df.filter(col("s") === "A").select(col("v"), col("id"))
-    val bnds = Profile.binnedRefBoundaries(ref, "v", "id", 10,
-      partitions = 3)
+    val (inQuery, bnds) = withConf(ShufflePartitions -> "3") {
+      (Profile.binnedTvdDrift(df, "v", "id", "s", "A", "B", 10)
+        .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap,
+       Profile.binnedRefBoundaries(ref, "v", "id", 10))
+    }
     // reference bucket masses: bucket the ref against its own
     // boundaries with zero opposing mass and read the cb lane
     val zero = Seq.empty[(Long, Long)].toDF("bucket", "ref_n")
@@ -857,18 +887,18 @@ class ProfileSpec extends SparkSuite {
     val ref = (1L to 40L).map(v => (v, "A"))
     val probe = (21L to 60L).map(v => (v, "B"))
     val both = (ref ++ probe).toDF("v", "s").repartition(7)
-    val inQuery = Profile.ksDrift(both, "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).head
     val refCounts = Profile.distCounts(
       both.filter(col("s") === "A").select(col("v")), "v")
-    val steady = Profile.ksDriftAgainstRef(refCounts,
-        both.filter(col("s") === "B").select(col("v")), "v",
-        partitions = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).head
-    assert(steady == inQuery)
+    withConf(ShufflePartitions -> "3") {
+      val inQuery = Profile.ksDrift(both, "v", "s", "A", "B")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).head
+      val steady = Profile.ksDriftAgainstRef(refCounts,
+          both.filter(col("s") === "B").select(col("v")), "v")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getLong(3))).head
+      assert(steady == inQuery)
+    }
   }
 
   test("tvdDrift: identical → 0, disjoint → 10⁶, hand-computed mix; " +
@@ -912,28 +942,30 @@ class ProfileSpec extends SparkSuite {
       (8L to 37L).map(v => ("g2", v, "B")) ++ // shift by 7
       (1L to 9L).map(v => ("g3", v, "A")) // no B sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
-    val out = Profile.emdDriftBy(df, "g", "v", "s", "A", "B",
-        partitions = 3)
-      .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))).toMap
-    assert(out.keySet == Set("g1", "g2"))
-    assert(out("g2")._4 == 7000000L) // the shift reads exactly
-    for (g <- Seq("g1", "g2")) {
-      val solo = Profile.emdDrift(
-          df.filter(col("g") === g), "v", "s", "A", "B", partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).head
-      assert(out(g) == solo, s"group $g disagrees with the solo op")
+    withConf(ShufflePartitions -> "3") {
+      val out = Profile.emdDriftBy(df, "g", "v", "s", "A", "B")
+        .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4)))).toMap
+      assert(out.keySet == Set("g1", "g2"))
+      assert(out("g2")._4 == 7000000L) // the shift reads exactly
+      for (g <- Seq("g1", "g2")) {
+        val solo = Profile.emdDrift(
+            df.filter(col("g") === g), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).head
+        assert(out(g) == solo, s"group $g disagrees with the solo op")
+      }
     }
   }
 
   test("emdDrift: identical → 0, constant shift → exactly the " +
       "shift, and a hand-computed mixed case") {
     def emd(rows: Seq[(Long, String)]) =
-      Profile.emdDrift(rows.toDF("v", "s"), "v", "s", "A", "B",
-          partitions = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).head
+      withConf(ShufflePartitions -> "3") {
+        Profile.emdDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3))).head
+      }
     // identical distributions: W1 = 0
     val same = (1L to 50L).flatMap(i => Seq((i, "A"), (i, "B")))
     assert(emd(same) == (50L, 50L, 0L, 0L))

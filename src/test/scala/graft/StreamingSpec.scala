@@ -302,10 +302,13 @@ class StreamingSpec extends SparkSuite {
       .map(e => (e.key, e.ord, e.pid)).toDF("k", "ord", "pid")
     val quotes = evs.filter(_.isQuote)
       .map(e => (e.key, e.ord, e.value)).toDF("k", "ord", "qv")
-    val batch = graft.ops.EventAnalytics.asofJoinSkewSafe(
-        probes, quotes, "k", "ord", "qv", "asof_v", partitions = 5)
-      .select($"k", $"pid", $"asof_v")
-      .as[(Long, Long, Option[Long])].collect().toSeq.sorted
+    // the batch op on these small frames: the small-frame skip, one slice
+    val batch = withConf(ShufflePartitions -> "5") {
+      graft.ops.EventAnalytics.asofJoinSkewSafe(
+          probes, quotes, "k", "ord", "qv", "asof_v")
+        .select($"k", $"pid", $"asof_v")
+        .as[(Long, Long, Option[Long])].collect().toSeq.sorted
+    }
     assert(streamed == batch)
     assert(batch.exists(_._3.isEmpty)) // the pre-first-quote lane ran
   }

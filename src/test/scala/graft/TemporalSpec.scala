@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Temporal, VersionedCols}
+import graft.ops.Temporal
 
 /** SCD2 merge semantics (bagh/batch.py:85-137) + the FIXTURES.md §2
   * scenarios: inserts-only, single-column update, idempotence,

@@ -52,14 +52,16 @@ class TrainingPrepSpec extends SparkSuite {
   }
 
   test("packByTokenBudget equals the sequential prefix sum, any partitioning") {
-    // uneven token counts; force many small range partitions so the
-    // offset pass actually matters
+    // uneven token counts; 13 shuffle partitions give many small
+    // range partitions, so the offset pass actually matters
     val docs = (1L to 200L).map(i => (i, ("w " * (i % 17 + 1).toInt).trim))
       .toDF("doc_id", "text")
-    val packed = TrainingPrep.packByTokenBudget(docs, "doc_id", "text",
-        budgetTokens = 40, partitions = 13)
-      .orderBy($"doc_id")
-      .as[(Long, Long, Long)].collect().toSeq
+    val packed = withConf(ShufflePartitions -> "13") {
+      TrainingPrep.packByTokenBudget(docs, "doc_id", "text",
+          budgetTokens = 40)
+        .orderBy($"doc_id")
+        .as[(Long, Long, Long)].collect().toSeq
+    }
     // sequential reference
     var cum = 0L
     val expected = (1L to 200L).map { i =>
