@@ -29,7 +29,9 @@ object PlanDump {
     *  - the JVM names of the lambdas that typed operators such as
     *    `MapPartitions` print: `$$Lambda/0x…@1a2b` → `$$Lambda@N`;
     *  - identity hashes in the default `toString` of arrays and
-    *    objects held by literals: `[[D@54c1dfd8` → `[[D@N`. */
+    *    objects held by literals: `[[D@54c1dfd8` → `[[D@N`;
+    *  - the process-id suffix of a per-process fixture dir (q34, q48):
+    *    `/tmp/graft_wkt_scan_123_4567` → `/tmp/graft_wkt_scan_123`. */
   def mask(plan: String): String =
     plan.replaceAll("#\\d+", "#N")
       .replaceAll("plan_id=\\d+", "plan_id=N")
@@ -37,6 +39,7 @@ object PlanDump {
       .replaceAll("(?<=\\.scala:)\\d+", "N")
       .replaceAll("\\$\\$Lambda[^\\s,)\\]]*", "\\$\\$Lambda@N")
       .replaceAll("(?<=\\w)@[0-9a-f]+\\b", "@N")
+      .replaceAll("(/tmp/graft_[a-z_]+_\\d+)_\\d+", "$1")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")

@@ -893,12 +893,13 @@ object Profile {
     * concordance, −10⁶ = perfect reversal. The previously-skipped
     * hard part is counting D = #{i,j : ox_i < ox_j ∧ oy_i > oy_j}
     * without an all-pairs join; the distributed plan splits D into
-    * two DISJOINT parts by an EQUI-DEPTH bucketing of the y
-    * composite order (boundaries = the exact (j/B)-quantiles of
-    * `__oy` per group via [[EventAnalytics.groupPercentilesSkewSafe]]
-    * — unique composite ranks make equi-depth skew-IMPOSSIBLE:
-    * every (group, bucket) cell holds ⌈n/B⌉±1 rows no matter how
-    * hot a key or value is):
+    * two DISJOINT parts by a bucketing of the y composite order
+    * (boundaries = approximate per-group (j/B)-quantiles of `__oy`
+    * from [[kendallGraded]]'s one map-side aggregate). The count is
+    * exact for ANY monotone bucketing, so the bounds only balance the
+    * cells: at the derived accuracy A = max(10⁴, 100·B) a bound's rank
+    * is within n/A of its target, and every (group, bucket) cell holds
+    * n/B ± (2n/A + 1) rows no matter how hot a key or value is:
     *
     *  - CROSS-bucket pairs need NO value comparison — a pair in
     *    different y buckets is discordant iff the earlier-x row sits
@@ -909,7 +910,7 @@ object Profile {
     *    and reducing per group counts every cross pair exactly once.
     *  - SAME-bucket pairs ride a cell-keyed equi self-join
     *    ((group, bucket) SMJ + the two order filters): per-cell pair
-    *    work is (n/B)²/2 with cells equi-sized by construction, so
+    *    work is about (n/B)²/2 with balanced cells, so
     *    `buckets` is the knob trading lane count for cell width —
     *    total work O(n²/B + n·B) with NO all-pairs stage and no
     *    skewable task anywhere.
@@ -927,8 +928,10 @@ object Profile {
     *
     * Same contracts as [[spearmanExact]] (integral dtypes, id ∈
     * [0, 1e9), |v| ≤ maxAbsV — enforced by the shared guard; `idCol`
-    * unique non-null per group); single-row groups dropped (τ
-    * undefined). Output: (key, n, d_pairs, tau_micro). */
+    * unique per group). Rows whose id, x or y is null are dropped
+    * before n and D are counted, as [[madOutliers]] drops null values,
+    * and so are rows with a null key; single-row groups are dropped
+    * (τ undefined). Output: (key, n, d_pairs, tau_micro). */
   def kendallTauExact(df: DataFrame, keyCol: String, idCol: String,
       xCol: String, yCol: String, buckets: Int = 8): DataFrame = {
     // Upper bound = plan width, not correctness: each bucket is one
@@ -941,37 +944,10 @@ object Profile {
     require(buckets >= 2 && buckets <= 128,
       s"kendallTauExact: buckets must sit in [2, 128], got $buckets")
     val d38 = "decimal(38,0)"
-    // r20 (VERDICT r19 #1): the guard action also counts the groups,
-    // so the percentile pick below skips its own eager head() barrier
-    val nG = requireCompositeDomain(df, "kendallTauExact", idCol,
-      Seq(xCol, yCol), countGroupsOf = Some(keyCol))
-    val base = df.select(col(keyCol), col(idCol), col(xCol),
-      col(yCol))
-      .withColumn("__ox", col(xCol) * lit(1000000000L) + col(idCol))
-      .withColumn("__oy", col(yCol) * lit(1000000000L) + col(idCol))
-    // exact (j/B)-quantile boundaries of the y order, per group —
-    // ≤|groups|·(B−1) rows collapse to one sorted array per group
-    // and attach by an AQE-broadcast equi join
-    val ps = (1 until buckets).map(j => j.toLong * 1000000L / buckets)
-    val bnds = EventAnalytics.groupPercentilesSkewSafe(
-        base.select(col(keyCol), col("__oy")), keyCol, "__oy", "__oy",
-        ps, knownGroups = nG)
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(col("__oy"))).as("__bnds"))
-      .select(col(keyCol).as("__bk"), col("__bnds"))
     // the bucketed frame feeds THREE consumers (the lane prefix and
-    // both self-join sides) — localCheckpoint pays the scan +
-    // quantile + boundary attach once instead of three times (the
-    // q150 graph precedent; rows × few longs, block-cache-sized)
-    val bucketed = base.join(bnds, col(keyCol) === col("__bk"))
-      .drop("__bk")
-      .withColumn("__bkt",
-        (1 until buckets).map(i =>
-          when(col("__oy") > element_at(col("__bnds"), i), 1)
-            .otherwise(0))
-        .reduce(_ + _) + lit(1))
-      .drop("__bnds")
-      .localCheckpoint()
+    // both self-join sides); kendallGraded checkpoints it
+    val bucketed = kendallGraded(df, "kendallTauExact", keyCol, idCol,
+      xCol, yCol, Seq(("__oy", buckets, "__bkt")))
     // cross-bucket: B running-count lanes over the x order; a row's
     // contribution is the earlier-row count of every STRICTLY HIGHER
     // bucket (its own lane's inclusive self never counts — self sits
@@ -988,8 +964,8 @@ object Profile {
       .groupBy(col(keyCol))
       .agg(count(lit(1)).as("n"),
         sum(col("__cx")).cast(d38).as("__cross"))
-    // same-bucket: cell-keyed equi self-join, cells ⌈n/B⌉-sized by
-    // construction — no all-pairs, no skewable cell
+    // same-bucket: cell-keyed equi self-join over balanced cells —
+    // no all-pairs, no skewable cell
     val a = bucketed.select(col(keyCol).as("__k"), col("__bkt"),
       col("__ox").as("__ax"), col("__oy").as("__ay"))
     val b2 = bucketed.select(col(keyCol).as("__k2"),
@@ -1018,12 +994,16 @@ object Profile {
     * no per-bucket COLUMNS anywhere, so `buckets` can follow
     * B* ≈ 0.19·√n_g into the thousands (B* ≈ 6k at n_g = 10⁹, where
     * the column form's whole-stage-codegen method limits died at
-    * ~128). Same math, carried by a SECOND equi-depth axis:
+    * ~128). Same math, carried by a SECOND balanced axis:
     *
     * grid the data by (x-slice s ∈ [1,S], y-bucket b ∈ [1,B]) — both
-    * axes exact per-group equi-depth quantiles of the composite
-    * orders, so every cell holds ⌈n/S⌉·⌈n/B⌉-ish rows no matter the
-    * skew — and split the discordant pairs THREE disjoint ways:
+    * axes approximate per-group equi-depth quantiles of the composite
+    * orders from the same one map-side aggregate of [[kendallGraded]]
+    * (accuracy max(10⁴, 100·k) per axis, so each slice holds
+    * n/S ± (2n/A + 1) rows and each bucket n/B ± (2n/A + 1) no matter
+    * the skew) — and split the discordant pairs THREE disjoint ways
+    * (exact for ANY monotone slicing and bucketing; the bounds only
+    * balance the cells):
     *
     *  - DIFFERENT slice, DIFFERENT bucket: no row comparison at all —
     *    slices are x-ordered (s_i < s_j ⇒ ox_i < ox_j) and buckets
@@ -1036,8 +1016,8 @@ object Profile {
     *    cell's dominance sum reads earlier-slice counts of buckets
     *    the cell's own slice never saw).
     *  - SAME slice: a (group, slice)-keyed equi self-join with both
-    *    order filters (ox < ox' ∧ oy > oy') — ⌈n/S⌉-sized cells,
-    *    (n/S)²/2 pair work, skew-impossible by equi-depth.
+    *    order filters (ox < ox' ∧ oy > oy') — balanced n/S-row cells,
+    *    about (n/S)²/2 pair work.
     *  - SAME bucket, different slice: a (group, bucket)-keyed equi
     *    self-join — the slice order already settles the x comparison
     *    (s_a < s_b ⇒ ox_a < ox_b), leaving one y filter.
@@ -1047,9 +1027,9 @@ object Profile {
     * measured α/β ≈ 0.034 lane economics of the COLUMN form carry
     * over as cell economics, and the gate pins B = S = 32 ≡ q246.
     * Same contracts as [[kendallTauExact]] (integral dtypes, id ∈
-    * [0, 1e9) via the shared guard, single-row groups dropped);
-    * IDENTICAL output schema and values: (key, n, d_pairs,
-    * tau_micro). */
+    * [0, 1e9) via the shared guard; null id, x, y or key rows and
+    * single-row groups dropped); IDENTICAL output schema and values:
+    * (key, n, d_pairs, tau_micro). */
   def kendallTauExactTall(df: DataFrame, keyCol: String,
       idCol: String, xCol: String, yCol: String, buckets: Int = 32,
       slices: Int = 0): DataFrame = {
@@ -1061,45 +1041,10 @@ object Profile {
       s"kendallTauExactTall: buckets/slices must sit in [2, 65536], " +
         s"got $bN/$sN")
     val d38 = "decimal(38,0)"
-    // r20 (VERDICT r19 #1): one guard action counts the groups for
-    // BOTH boundary picks — two eager head() barriers disappear
-    val nG = requireCompositeDomain(df, "kendallTauExactTall", idCol,
-      Seq(xCol, yCol), countGroupsOf = Some(keyCol))
-    val base = df.select(col(keyCol), col(idCol), col(xCol),
-      col(yCol))
-      .withColumn("__ox", col(xCol) * lit(1000000000L) + col(idCol))
-      .withColumn("__oy", col(yCol) * lit(1000000000L) + col(idCol))
-    def bounds(ordCol: String, k: Int, out: String) = {
-      val ps = (1 until k).map(j => j.toLong * 1000000L / k)
-      EventAnalytics.groupPercentilesSkewSafe(
-          base.select(col(keyCol), col(ordCol)), keyCol, ordCol,
-          ordCol, ps, knownGroups = nG)
-        .groupBy(col(keyCol))
-        .agg(sort_array(collect_list(col(ordCol))).as(out))
-        .select(col(keyCol).as(s"__k$out"), col(out))
-    }
-    def grade(d: DataFrame, arr: String, ordCol: String, k: Int,
-        out: String) =
-      d.withColumn(out,
-        (1 until k).map(i =>
-          when(col(ordCol) > element_at(col(arr), i), 1)
-            .otherwise(0))
-          .reduce(_ + _) + lit(1))
-        .drop(arr)
-    // both boundary attaches are AQE-broadcast equi joins (≤ |groups|
-    // rows each); the graded frame feeds FOUR consumers (cell frame,
-    // n frame, both self-join sides) — localCheckpoint as in the
-    // column form
-    val graded = grade(grade(
-        base.join(bounds("__oy", bN, "__by"),
-            col(keyCol) === col("__k__by")).drop("__k__by"),
-        "__by", "__oy", bN, "__bkt")
-        .join(bounds("__ox", sN, "__bx"),
-          col(keyCol) === col("__k__bx")).drop("__k__bx"),
-      "__bx", "__ox", sN, "__slc")
-      .select(col(keyCol), col("__ox"), col("__oy"), col("__bkt"),
-        col("__slc"))
-      .localCheckpoint()
+    // the graded frame feeds FOUR consumers (cell frame, n frame,
+    // both self-join sides); kendallGraded checkpoints it
+    val graded = kendallGraded(df, "kendallTauExactTall", keyCol, idCol,
+      xCol, yCol, Seq(("__oy", bN, "__bkt"), ("__ox", sN, "__slc")))
     // tall cell frame + densified grid: the cross-cell count's ONLY
     // input — S·B rows per group, data-size-independent
     val cells = graded.groupBy(col(keyCol), col("__slc"), col("__bkt"))
@@ -1129,7 +1074,7 @@ object Profile {
       .groupBy(col(keyCol))
       .agg(sum(expr(s"CAST(__cn AS $d38) * __g")).cast(d38)
         .as("__grid"))
-    // same-slice pairs: full discordance check inside ⌈n/S⌉ cells
+    // same-slice pairs: full discordance check inside n/S-row cells
     val sa = graded.select(col(keyCol).as("__k1"), col("__slc"),
       col("__ox").as("__ax"), col("__oy").as("__ay"))
     val sb = graded.select(col(keyCol).as("__k2"),
@@ -1165,6 +1110,53 @@ object Profile {
         "CAST(1000000 - (CAST(4000000 AS DECIMAL(38,0)) * __dd) div " +
           "(CAST(n AS DECIMAL(38,0)) * (n - 1)) AS BIGINT)"))
       .select(col(keyCol), col("n"), col("d_pairs"), col("tau_micro"))
+  }
+
+  /** GK accuracy of a k-cell axis: a bound's rank error is at most
+    * n/accuracy, about 1 % of a cell's n/k. */
+  private[graft] def kendallAccuracy(k: Int): Int = math.max(10000, 100 * k)
+
+  /** The graded frame both Kendall forms count on, localCheckpointed
+    * (eager: a lazy checkpoint still materialises every upstream
+    * shuffle stage when it takes the plan's RDD): after the composite-
+    * domain guard, the rows of `df` with a non-null id, x and y as
+    * (key, __ox, __oy) composite orders plus, per axis
+    * (ordCol, k, cellCol), the row's cell in [1, k] among the
+    * per-group approximate (j/k)-quantiles of `ordCol`. All axes'
+    * bounds come from ONE `percentile_approx` aggregate per group,
+    * attached by an AQE-broadcast equi join (≤ |groups| rows).
+    * Partial aggregation merges fixed-size GK summaries (Greenwald &
+    * Khanna, SIGMOD 2001), so a mega-group never sends its rows to
+    * one task; at [[kendallAccuracy]] every cell holds
+    * n/k ± (2n/accuracy + 1) rows. */
+  private[graft] def kendallGraded(df: DataFrame, op: String,
+      keyCol: String, idCol: String, xCol: String, yCol: String,
+      axes: Seq[(String, Int, String)]): DataFrame = {
+    requireCompositeDomain(df, op, idCol, Seq(xCol, yCol))
+    val base = df
+      .filter(col(idCol).isNotNull && col(xCol).isNotNull &&
+        col(yCol).isNotNull)
+      .select(col(keyCol),
+        (col(xCol) * lit(1000000000L) + col(idCol)).as("__ox"),
+        (col(yCol) * lit(1000000000L) + col(idCol)).as("__oy"))
+    val bnds = axes.map { case (ordCol, k, cellCol) =>
+      percentile_approx(col(ordCol),
+          lit((1 until k).map(_.toDouble / k).toArray),
+          lit(kendallAccuracy(k)))
+        .as(s"__b$cellCol")
+    }
+    val withBnds = base.join(
+        base.groupBy(col(keyCol).as("__bk")).agg(bnds.head, bnds.tail: _*),
+        col(keyCol) === col("__bk"))
+      .drop("__bk")
+    axes.foldLeft(withBnds) { case (d, (ordCol, k, cellCol)) =>
+      d.withColumn(cellCol,
+          (1 until k).map(i =>
+            when(col(ordCol) > element_at(col(s"__b$cellCol"), i), 1)
+              .otherwise(0))
+            .reduce(_ + _) + lit(1))
+        .drop(s"__b$cellCol")
+    }.localCheckpoint()
   }
 
   /** One-call DRIFT REPORT — all four ordered two-sample statistics

@@ -3088,13 +3088,14 @@ object AnalyticsQueries {
     // Exact Kendall τ (r14): the concordance correlation on q231's
     // exact inputs — previously SKIPPED for want of a distributed
     // inversion-count plan; the shipped plan splits discordant pairs
-    // by an equi-depth y-order bucketing (cross-bucket pairs ride B
-    // running-count lanes with no value comparison, same-bucket
-    // pairs a cell-keyed self-join over ⌈n/B⌉-sized cells — unique
-    // composite ranks make the equi-depth skew-IMPOSSIBLE). The
-    // oracle is the definition itself: the full per-group pairwise
-    // discordance count, so the gate proves the decomposition
-    // against brute force.
+    // by an approximately equi-depth y-order bucketing (cross-bucket
+    // pairs ride B running-count lanes with no value comparison,
+    // same-bucket pairs a cell-keyed self-join over n/B-row cells;
+    // the bounds come from one map-side percentile_approx aggregate
+    // and only balance the cells — the count is exact for any
+    // monotone bucketing). The oracle is the definition itself: the
+    // full per-group pairwise discordance count, so the gate proves
+    // the decomposition against brute force.
     QuerySpec("q246_kendall",
       (s, dir) => {
         // r17 fixture diet (VERDICT r16 #1): the oracle handshake

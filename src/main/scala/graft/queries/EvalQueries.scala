@@ -801,7 +801,9 @@ object EvalQueries {
     // (group, slice, bucket) count-frame plan — no per-bucket
     // columns, so B can follow the corrected B* ∝ √n contract past
     // the column form's ~128-lane codegen bound (KendallScale's
-    // tall arms carry the cost curve in SCALE.md). Same fixture and
+    // tall arms carry the cost curve in SCALE.md). Both axes' bounds
+    // come from ONE map-side percentile_approx aggregate, so building
+    // the gate runs 6 of its 19 jobs at sf0.1. Same fixture and
     // knobs as q246; the oracle is the brute-force pairwise
     // definition VERBATIM from q246, so the gate pins the grid
     // decomposition ≡ the lane decomposition ≡ the definition.

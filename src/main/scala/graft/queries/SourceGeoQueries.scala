@@ -16,7 +16,10 @@ object SourceGeoQueries {
     // reference dialect (all-string schema + downstream casts), agg.
     QuerySpec("q34_csv_roundtrip",
       (s, dir) => {
-        val out = s"/tmp/graft_csv_roundtrip_${math.abs(dir.hashCode)}"
+        // per-process dir: two JVMs running this gate at once would
+        // otherwise overwrite each other's write in flight
+        val out = s"/tmp/graft_csv_roundtrip_${math.abs(dir.hashCode)}" +
+          s"_${ProcessHandle.current.pid}"
         table(s, dir, "nation")
           .coalesce(1).write.mode("overwrite")
           .option("header", "true").option("delimiter", ";")
@@ -46,7 +49,8 @@ object SourceGeoQueries {
             concat(lit("POLYGON ((0 0, "), sz, lit(" 0, "), sz, lit(" "), sz,
               lit(", 0 0))")))
           .otherwise(lit("NOTWKT"))
-        val out = s"/tmp/graft_wkt_scan_${math.abs(dir.hashCode)}"
+        val out = s"/tmp/graft_wkt_scan_${math.abs(dir.hashCode)}" +
+          s"_${ProcessHandle.current.pid}" // per-process, as q34
         table(s, dir, "part").select(col("p_partkey"), wkt.as("wkt"))
           .coalesce(1).write.mode("overwrite")
           .option("delimiter", "|").option("header", "false").csv(out)

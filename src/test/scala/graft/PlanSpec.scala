@@ -935,12 +935,14 @@ class PlanSpec extends SparkSuite {
       "Profile.scala:981, ExistingRDD\n" +
       "Arguments: graft.ops.Multimodal$$$Lambda/0x00007f3c0c4b2a10@3ac3cae8, " +
       "obj#9: scala.Tuple9\n" +
-      "vec_argmin_long(slice(v#5, 1, 16), [[J@523e0ffb)"
+      "vec_argmin_long(slice(v#5, 1, 16), [[J@523e0ffb)\n" +
+      "Location: InMemoryFileIndex [file:/tmp/graft_wkt_scan_123_4567]"
     assert(PlanDump.mask(raw) ==
       "Exchange hashpartitioning(k#NL, 4), [plan_id=N]\n" +
       "Arguments: [id#NL], MapPartitionsRDD[N] at localCheckpoint at " +
       "Profile.scala:N, ExistingRDD\n" +
       "Arguments: graft.ops.Multimodal$$$Lambda@N, obj#N: scala.Tuple9\n" +
-      "vec_argmin_long(slice(v#N, 1, 16), [[J@N)")
+      "vec_argmin_long(slice(v#N, 1, 16), [[J@N)\n" +
+      "Location: InMemoryFileIndex [file:/tmp/graft_wkt_scan_123]")
   }
 }

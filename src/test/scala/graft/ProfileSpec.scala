@@ -1,7 +1,8 @@
 package graft
 
 import graft.ops.{EventAnalytics, Profile}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Column-profile semantics on a planted frame (nulls, duplicates,
   * type-native min/max) and the single-scan plan shape.
@@ -372,20 +373,20 @@ class ProfileSpec extends SparkSuite {
     assert(empty.forall(_ == ((0L, 0, 0L))))
   }
 
-  test("kendallTauExact: ≡ sequential pairwise reference under the " +
-      "mega-key for several bucket counts; ±10⁶ endpoints; " +
-      "single-row group dropped") {
-    val rows = (0L until 3001L).map { i =>
-      val g = if (i % 100 < 95) "hot" else s"g${i % 4}"
-      val x = (i * 37) % 997
-      val y = x + (i % 11) * 17 - 80 // correlated, not identical
-      (g, i, x, y)
-    }
-    // no size estimate + 5 partitions: the y-quantile pick over the
-    // composite y order slices the hot group
-    val df = noStats(rows.toDF("g", "id", "x", "y").repartition(9))
-    val exp = rows.groupBy(_._1).collect { case (g, rs) if rs.size > 1 =>
-      // pairwise BigInt reference on the composite orders
+  /** The kendall tests' mega-key rows: 95% on one group, y a noisy
+    * monotone of x. */
+  private val kendallRows = (0L until 3001L).map { i =>
+    val g = if (i % 100 < 95) "hot" else s"g${i % 4}"
+    val x = (i * 37) % 997
+    val y = x + (i % 11) * 17 - 80 // correlated, not identical
+    (g, i, x, y)
+  }
+
+  /** Per group (n, d_pairs, tau_micro) from the sequential pairwise
+    * BigInt definition on the composite orders; n = 1 groups dropped. */
+  private def pairwiseKendall(rows: Seq[(String, Long, Long, Long)])
+      : Map[String, (Long, Long, Long)] =
+    rows.groupBy(_._1).collect { case (g, rs) if rs.size > 1 =>
       val os = rs.map(r => (BigInt(r._3) * 1000000000L + r._2,
         BigInt(r._4) * 1000000000L + r._2))
       var d = BigInt(0)
@@ -397,14 +398,25 @@ class ProfileSpec extends SparkSuite {
       g -> ((rs.size.toLong, d.toLong,
         (BigInt(1000000) - (BigInt(4000000) * d) / (n * (n - 1)))
           .toLong))
-    }.toMap
+    }
+
+  private def kendallOut(df: DataFrame)
+      : Map[String, (Long, Long, Long)] =
+    df.collect().map(r => (r.getString(0),
+      (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+
+  test("kendallTauExact: ≡ sequential pairwise reference under the " +
+      "mega-key for several bucket counts; ±10⁶ endpoints; " +
+      "single-row group dropped") {
+    // no size estimate + 5 partitions: the running-count lanes over
+    // the composite x order slice the hot group
+    val df = noStats(kendallRows.toDF("g", "id", "x", "y").repartition(9))
+    val exp = pairwiseKendall(kendallRows)
     withConf(ShufflePartitions -> "5") {
       assert(EventAnalytics.sliceBoundsFor(df, "y").length >= 2)
       for (b <- Seq(2, 8, 13)) {
-        val got = Profile.kendallTauExact(df, "g", "id", "x", "y",
-            buckets = b)
-          .collect().map(r => (r.getString(0),
-            (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+        val got = kendallOut(Profile.kendallTauExact(df, "g", "id", "x",
+          "y", buckets = b))
         assert(got == exp, s"buckets=$b")
       }
     }
@@ -421,46 +433,23 @@ class ProfileSpec extends SparkSuite {
   test("kendallTauExactTall: ≡ sequential pairwise reference under " +
       "the mega-key for several (buckets, slices) grids incl. " +
       "asymmetric; ≡ the column form; ±10⁶ endpoints") {
-    val rows = (0L until 3001L).map { i =>
-      val g = if (i % 100 < 95) "hot" else s"g${i % 4}"
-      val x = (i * 37) % 997
-      val y = x + (i % 11) * 17 - 80
-      (g, i, x, y)
-    }
-    // no size estimate + 5 partitions: the x- and y-quantile picks
-    // over the composite orders slice the hot group
-    val df = noStats(rows.toDF("g", "id", "x", "y").repartition(9))
-    val exp = rows.groupBy(_._1).collect { case (g, rs) if rs.size > 1 =>
-      val os = rs.map(r => (BigInt(r._3) * 1000000000L + r._2,
-        BigInt(r._4) * 1000000000L + r._2))
-      var d = BigInt(0)
-      for (i <- os.indices; j <- os.indices if i < j) {
-        val (a, b) = (os(i), os(j))
-        if ((a._1 < b._1) != (a._2 < b._2)) d += 1
-      }
-      val n = BigInt(rs.size)
-      g -> ((rs.size.toLong, d.toLong,
-        (BigInt(1000000) - (BigInt(4000000) * d) / (n * (n - 1)))
-          .toLong))
-    }.toMap
+    // no size estimate + 5 partitions: the x- and y-bounds aggregate
+    // merges per-partition summaries of the hot group, and the
+    // skew-safe prefix and pair stages over the graded frame slice it
+    val df = noStats(kendallRows.toDF("g", "id", "x", "y").repartition(9))
+    val exp = pairwiseKendall(kendallRows)
     withConf(ShufflePartitions -> "5") {
       assert(EventAnalytics.sliceBoundsFor(df, "x").length >= 2)
       for ((b, s) <- Seq((2, 2), (8, 8), (13, 5), (5, 13), (256, 4))) {
-        val got = Profile.kendallTauExactTall(df, "g", "id", "x", "y",
-            buckets = b, slices = s)
-          .collect().map(r => (r.getString(0),
-            (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+        val got = kendallOut(Profile.kendallTauExactTall(df, "g", "id",
+          "x", "y", buckets = b, slices = s))
         assert(got == exp, s"buckets=$b slices=$s")
       }
       // and bit-identical to the column form at the q246 gate shape
-      val colForm = Profile.kendallTauExact(df, "g", "id", "x", "y",
-          buckets = 32)
-        .collect().map(r => (r.getString(0),
-          (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-      val tallForm = Profile.kendallTauExactTall(df, "g", "id", "x", "y",
-          buckets = 32)
-        .collect().map(r => (r.getString(0),
-          (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      val colForm = kendallOut(Profile.kendallTauExact(df, "g", "id",
+        "x", "y", buckets = 32))
+      val tallForm = kendallOut(Profile.kendallTauExactTall(df, "g",
+        "id", "x", "y", buckets = 32))
       assert(tallForm == colForm && colForm == exp)
     }
     val mono = (1L to 60L).map(i => ("m", i, i, i * 2)) ++
@@ -470,6 +459,84 @@ class ProfileSpec extends SparkSuite {
         "g", "id", "x", "y")
       .collect().map(r => (r.getString(0), r.getLong(3))).toMap
     assert(ends == Map("m" -> 1000000L, "a" -> -1000000L))
+  }
+
+  test("kendall forms: null id, x or y rows are dropped, so the " +
+      "output ≡ the pairwise reference over the non-null rows for " +
+      "every bucket count and both forms") {
+    // a null ord kept in the frame would grade into cell 1, and the
+    // grid counts by cell, so d_pairs would move with `buckets`
+    val rows = (0L until 400L).map { i =>
+      val x = (i * 37) % 397
+      (if (i % 101 == 7) None else Some(i), // 4 null ids
+        if (i % 37 == 5) None else Some(x), // 11 null x
+        if (i % 53 == 9) None else Some(x + (i % 11) * 17 - 80))
+    }
+    val df = rows.map { case (id, x, y) => ("g", id, x, y) }
+      .toDF("g", "id", "x", "y")
+    val exp = pairwiseKendall(rows.collect {
+      case (Some(id), Some(x), Some(y)) => ("g", id, x, y)
+    })
+    assert(exp("g")._1 == 377) // 23 rows carry a null
+    for (b <- Seq(2, 8, 13)) {
+      assert(kendallOut(Profile.kendallTauExact(df, "g", "id", "x", "y",
+        buckets = b)) == exp, s"column form, buckets=$b")
+      assert(kendallOut(Profile.kendallTauExactTall(df, "g", "id", "x",
+        "y", buckets = b)) == exp, s"tall form, buckets=$b")
+    }
+  }
+
+  test("kendallGraded: every cell of both axes holds " +
+      "n/k ± (2n/accuracy + 1) rows of its group under the mega-key " +
+      "and past the accuracy") {
+    def assertBalanced(df: DataFrame, k: Int) = {
+      val graded = Profile.kendallGraded(df, "test", "g", "id", "x", "y",
+        Seq(("__oy", k, "__bkt"), ("__ox", k, "__slc")))
+      val n = graded.groupBy("g").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      for (cell <- Seq("__bkt", "__slc")) {
+        val got = graded.groupBy("g", cell).count().collect()
+          .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+        assert(got.keySet.forall { case (_, c) => c >= 1 && c <= k })
+        for ((g, ng) <- n; c <- 1 to k) {
+          val tol = 2.0 * ng / Profile.kendallAccuracy(k) + 1
+          val cnt = got.getOrElse((g, c), 0L)
+          assert(math.abs(cnt - ng.toDouble / k) <= tol,
+            s"$g $cell=$c of k=$k: $cnt rows, n=$ng")
+        }
+      }
+    }
+    val mega = noStats(kendallRows.toDF("g", "id", "x", "y").repartition(9))
+    // 60k rows in one group, more than the accuracy: merging the
+    // per-partition summaries compresses them, so the bounds are
+    // approximate
+    val big = noStats(spark.range(60000).select(lit("big").as("g"),
+        col("id"), ((col("id") * 7919) % 60013).as("x"),
+        ((col("id") * 104729) % 59999).as("y"))
+      .repartition(9))
+    withConf(ShufflePartitions -> "5") {
+      for (k <- Seq(2, 8, 13, 256)) assertBalanced(mega, k)
+      for (k <- Seq(8, 32)) assertBalanced(big, k)
+    }
+  }
+
+  test("kendall forms: building each runs at most 6 jobs (the guard, " +
+      "then the bounds aggregate and checkpoint stages)") {
+    val meter = RunMeter.attach(spark)
+    val df = noStats(kendallRows.toDF("g", "id", "x", "y").repartition(9))
+    def buildJobs(build: => Any): Int = {
+      meter.reset()
+      build
+      meter.read().jobs
+    }
+    withConf(ShufflePartitions -> "5") {
+      val colJobs = buildJobs(Profile.kendallTauExact(df, "g", "id", "x",
+        "y", buckets = 8))
+      val tallJobs = buildJobs(Profile.kendallTauExactTall(df, "g", "id",
+        "x", "y", buckets = 8))
+      assert(colJobs <= 6, s"column form built with $colJobs jobs")
+      assert(tallJobs <= 6, s"tall form built with $tallJobs jobs")
+    }
   }
 
   test("spearmanExact: out-of-domain input THROWS instead of " +
