@@ -76,27 +76,8 @@ object Bench {
     val results = specs.map(sp => sp.name -> sp.fn)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .map { case (name, fn) =>
-      // Clear the Spark cache between queries: an op that `.cache()`s
-      // an intermediate registers it by LOGICAL PLAN, so a later
-      // query (or rep) building the same sub-plan silently serves it
-      // from memory — its exchanges never run and its byte reading
-      // collapses to 0.0 depending on execution ORDER (VERDICT r16
-      // wrong #3). Per-query clearing makes each gate's bytes a
-      // function of its own plan alone. (Reps still share: same
-      // query, intended steady-state.)
-      spark.catalog.clearCache()
-      // ... and release CHECKPOINT blocks too: clearCache only covers
-      // cacheManager entries, but every rep's eager localCheckpoint
-      // registers a persistent RDD the context holds a strong
-      // reference to — over a 336-query × 3-rep run that pins
-      // thousands of block sets, and the LATE queries pay the
-      // eviction/GC thrash (observed r17: q328 75 s at suite position
-      // ~330 vs 2.0 s in isolation, identical bytes). Between
-      // queries, everything persisted is garbage by design — each
-      // query rebuilds its own state; only /tmp parquet carries.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // ... and give the ContextCleaner a chance to act on them:
+      Sessions.dropCached(spark)
+      // ... and give the ContextCleaner a chance to act on what it dropped:
       // shuffle files, broadcast blocks and RDD state are reclaimed
       // via WEAK references, i.e. only after a driver GC — which a
       // 48 GB heap almost never triggers on its own (the reason

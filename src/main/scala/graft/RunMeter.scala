@@ -4,9 +4,9 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.GraftShim
 
-/** The one metrics listener of Bench, the profilers and the tests. It
+/** The one metrics listener of Bench, the gate census and the tests. It
   * counts what a run did since the last [[reset]]: jobs (with each job's
-  * seconds and description), shuffle-write bytes, and `stagePeakMem`,
+  * seconds), shuffle-write bytes, and `stagePeakMem`,
   * the max over stages of the stage's SUMMED per-task peak execution
   * memory. That peak scales with the stage's task count, so 10x data
   * read as 10x scan tasks inflates it even when no task needs more
@@ -24,20 +24,19 @@ final class RunMeter private (spark: SparkSession) extends SparkListener {
   import RunMeter._
 
   private var jobs = 0
-  private val jobStarts = collection.mutable.Map.empty[Int, (Long, String)]
+  private val jobStarts = collection.mutable.Map.empty[Int, Long]
   private val jobTimes = collection.mutable.ArrayBuffer.empty[JobTime]
   private var shuffleBytes = 0L
   private var stagePeakMem = 0L
 
   override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
     jobs += 1
-    jobStarts(j.jobId) = (j.time, Option(j.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    jobStarts(j.jobId) = j.time
   }
 
   override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
-    jobStarts.remove(j.jobId).foreach { case (t, d) =>
-      jobTimes += JobTime(j.jobId, (j.time - t) / 1000.0, d)
+    jobStarts.remove(j.jobId).foreach { t =>
+      jobTimes += JobTime(j.jobId, (j.time - t) / 1000.0)
     }
   }
 
@@ -78,7 +77,7 @@ object RunMeter {
     * host swing ±30%, their median does not. */
   val Reps = 3
 
-  final case class JobTime(id: Int, seconds: Double, description: String)
+  final case class JobTime(id: Int, seconds: Double)
 
   final case class Reading(jobs: Int, jobTimes: Seq[JobTime],
       shuffleBytes: Long, stagePeakMem: Long)

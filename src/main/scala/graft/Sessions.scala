@@ -35,4 +35,23 @@ object Sessions {
       spark.experimental.extraOptimizations.filterNot(rules.contains) ++ rules
     spark
   }
+
+  /** Drops what earlier gates left cached, before the next gate runs.
+    * An op that `.cache()`s an intermediate registers it by LOGICAL
+    * PLAN, so a later gate building the same sub-plan would silently
+    * serve it from memory: its exchanges never run and its byte
+    * reading depends on execution order. `clearCache` covers only
+    * those cache-manager entries; every eager `localCheckpoint` also
+    * registers a persistent RDD the context holds a strong reference
+    * to, and over a whole-suite walk those pin thousands of block sets
+    * that the late gates pay for in eviction and GC (observed: q328
+    * 75 s at suite position ~330 vs 2.0 s in isolation, identical
+    * bytes). Between gates everything persisted is garbage by design:
+    * each gate rebuilds its own state; only the /tmp fixture roots
+    * carry over. */
+  def dropCached(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
 }

@@ -5,11 +5,33 @@ import org.apache.spark.sql.functions._
 
 /** Column profiling — the ANALYZE surface of an analytics engine:
   * per-column row/null/distinct counts and min/max, computed in ONE
-  * pass over the table (a single multi-aggregate job; Spark plans the
-  * distinct aggregates through one Expand, not one scan per column)
-  * and unpivoted to a row per column. At 100 TB profiling cost is one
-  * scan, not #columns scans. */
+  * pass over the table (the distinct counts ride one Expand, not one
+  * scan per column) and unpivoted to a row per column. At 100 TB
+  * profiling cost is one scan, not #columns scans. */
 object Profile {
+
+  /** `keys` (renamed `__k0`, `__k1`, …) grouped by each of `sets`
+    * (indexes into `keys`) in turn, with each group's row count `__m`:
+    * one Expand, one map-side-combined aggregate, native-typed
+    * distinctness. Returns the frame and, per set, the predicate
+    * that selects its rows (`__g`, the grouping id).
+    *
+    * This is the Expand that Spark's distinct-aggregate rewrite plans
+    * for several COUNT(DISTINCT)s in one aggregate, but with its
+    * groups in the order of `sets`: the rewrite orders them by
+    * expression-id hashes, so one build's plan would move with how
+    * many ids earlier plans took. */
+  private def groupedBySets(df: DataFrame, keys: Seq[Column],
+      sets: Seq[Seq[Int]]): (DataFrame, Seq[Column]) = {
+    val k = keys.indices.map(j => s"__k$j")
+    val counted = df.select(keys.zip(k).map { case (c, n) => c.as(n) }: _*)
+      .groupingSets(sets.map(_.map(j => col(k(j)))), k.map(col): _*)
+      .agg(count(lit(1)).as("__m"), grouping_id().as("__g"))
+    // grouping_id: one bit per key, most significant first, set when
+    // the key is NOT grouped
+    (counted, sets.map(set => col("__g") === keys.indices
+      .filterNot(set.contains).map(j => 1L << (keys.size - 1 - j)).sum))
+  }
 
   /** One profile row per listed column:
     * (col_name, n, n_nonnull, n_distinct, min_s, max_s). min/max are
@@ -20,13 +42,18 @@ object Profile {
     * chronologically). */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty)
-    val aggs = cols.flatMap { c =>
-      Seq(count(col(c)).as(s"${c}__nn"),
-        countDistinct(col(c)).as(s"${c}__nd"),
-        min(col(c)).cast("string").as(s"${c}__min"),
-        max(col(c)).cast("string").as(s"${c}__max"))
+    val (counted, in) = groupedBySets(df, cols.map(col),
+      cols.indices.map(Seq(_)))
+    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+      val v = when(in(i), col(s"__k$i"))
+      Seq(coalesce(sum(when(v.isNotNull, col("__m"))), lit(0L))
+          .as(s"${c}__nn"),
+        count(v).as(s"${c}__nd"),
+        min(v).cast("string").as(s"${c}__min"),
+        max(v).cast("string").as(s"${c}__max"))
     }
-    val wide = df.agg(count(lit(1)).as("__n"), aggs: _*)
+    val wide = counted.agg(
+      coalesce(sum(when(in(0), col("__m"))), lit(0L)).as("__n"), aggs: _*)
     val stackExpr = s"stack(${cols.size}, " + cols.map { c =>
       s"'$c', `${c}__nn`, `${c}__nd`, `${c}__min`, `${c}__max`"
     }.mkString(", ") +
@@ -596,15 +623,18 @@ object Profile {
     }
     cols.map { lhs =>
       val others = cols.filterNot(_ == lhs)
-      val agg0 = base.groupBy(col(lhs))
-        .agg(countDistinct(col(others.head)).as(s"__cd_0"),
-          others.tail.zipWithIndex.map { case (c, i) =>
-            countDistinct(col(c)).as(s"__cd_${i + 1}") }: _*)
-      val sums = agg0.agg(
-        sum(greatest(col("__cd_0") - 1L, lit(0L))).as("__v_0"),
-        others.tail.zipWithIndex.map { case (_, i) =>
-          sum(greatest(col(s"__cd_${i + 1}") - 1L, lit(0L)))
-            .as(s"__v_${i + 1}") }: _*)
+      // grouped by (lhs, rhs) per rhs; an rhs is null outside its own
+      // set, so the count over all rhs keys of a (lhs, set) group is
+      // that lhs value's distinct non-null images
+      val (counted, in) = groupedBySets(base, (lhs +: others).map(col),
+        others.indices.map(i => Seq(0, i + 1)))
+      val cd = counted.groupBy(col("__k0"), col("__g"))
+        .agg(others.indices.map(i => count(col(s"__k${i + 1}")))
+          .reduce(_ + _).as("__cd"))
+      val violations = greatest(col("__cd") - 1L, lit(0L))
+      val sums = cd.agg(sum(when(in(0), violations)).as("__v_0"),
+        others.indices.tail.map(i =>
+          sum(when(in(i), violations)).as(s"__v_$i")): _*)
       val stackExpr = s"stack(${others.size}, " +
         others.zipWithIndex.map { case (c, i) =>
           s"'$c', coalesce(`__v_$i`, 0L)" }.mkString(", ") +
@@ -618,9 +648,9 @@ object Profile {
   /** Candidate-KEY profile — the uniqueness half of schema discovery
     * beside [[fdProfile]]: for each candidate (a column or column
     * tuple), its exact distinct count and whether it is a unique key
-    * of the table. ALL candidates ride ONE multi-distinct aggregate
-    * (a single job; Catalyst plans the distinct set through one
-    * Expand — the exact-oracle shape, like [[profile]]; at 100 TB
+    * of the table. ALL candidates ride ONE Expand and one
+    * map-side-combined aggregate over one scan (the exact-oracle
+    * shape, like [[profile]]; at 100 TB
     * you run this on a sample or ask [[profileApproxStats]] for the
     * HLL answer first and verify only the near-unique ones exactly).
     * Tuple candidates count via a struct (null FIELDS make the
@@ -632,13 +662,17 @@ object Profile {
       : DataFrame = {
     require(candidates.nonEmpty &&
       candidates.forall(_.nonEmpty), "keyProfile: empty candidate")
-    val aggs = candidates.zipWithIndex.map { case (cs, i) =>
-      val target =
-        if (cs.size == 1) col(cs.head)
-        else struct(cs.map(col): _*)
-      countDistinct(target).as(s"__cd_$i")
-    }
-    val wide = df.agg(count(lit(1)).as("__n"), aggs: _*)
+    // a repeated candidate would repeat its grouping set, and both
+    // copies would add their rows to the same groups
+    require(candidates.distinct.size == candidates.size,
+      s"keyProfile: repeated candidate in $candidates")
+    val (counted, in) = groupedBySets(df, candidates.map(cs =>
+      if (cs.size == 1) col(cs.head) else struct(cs.map(col): _*)),
+      candidates.indices.map(Seq(_)))
+    val wide = counted.agg(
+      coalesce(sum(when(in(0), col("__m"))), lit(0L)).as("__n"),
+      candidates.indices.map(i =>
+        count(when(in(i), col(s"__k$i"))).as(s"__cd_$i")): _*)
     val stackExpr = s"stack(${candidates.size}, " +
       candidates.zipWithIndex.map { case (cs, i) =>
         s"'${cs.mkString("+")}', `__cd_$i`" }.mkString(", ") +

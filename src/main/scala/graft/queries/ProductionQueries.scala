@@ -1143,17 +1143,8 @@ object ProductionQueries {
     QuerySpec("q348_ann_index_compact",
       (s, dir) => {
         val e = table(s, dir, "embeddings")
-        val root = steadyAnnIndexTwoEpoch(s, dir)
+        val root = annLifecycleRoot(s, dir)
         val suffix = root.substring(root.lastIndexOf('/') + 1)
-        FixtureCache.ensureSidecar(root, "index_compact",
-          "_COMPACT_READY") { tmp =>
-          graft.sources.BucketedIndex.write(
-            graft.sources.BucketedIndex.read(s, s"$root/index",
-              s"graft_annidx2ca_$suffix", "cell", 8)
-              .unionByName(graft.sources.BucketedIndex.read(s,
-                s"$root/index2", s"graft_annidx2cb_$suffix", "cell", 8)),
-            tmp, "cell", 8)
-        }
         val cb = Similarity.coarseCodebook(e, "vec_id", "embedding", 8)
         val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding",
           m = 4, ksub = 8)
@@ -1179,8 +1170,7 @@ object ProductionQueries {
     QuerySpec("q356_ann_tombstone_probe",
       (s, dir) => {
         val e = table(s, dir, "embeddings")
-        val root = steadyAnnIndexTwoEpoch(s, dir)
-        annTombstones(s, dir, root)
+        val root = annLifecycleRoot(s, dir)
         val suffix = root.substring(root.lastIndexOf('/') + 1)
         val idx = graft.sources.BucketedIndex.read(s, s"$root/index",
             s"graft_annidx2ta_$suffix", "cell", 8)
@@ -1212,20 +1202,8 @@ object ProductionQueries {
     QuerySpec("q357_ann_compact_with_deletes",
       (s, dir) => {
         val e = table(s, dir, "embeddings")
-        val root = steadyAnnIndexTwoEpoch(s, dir)
-        annTombstones(s, dir, root)
+        val root = annLifecycleRoot(s, dir)
         val suffix = root.substring(root.lastIndexOf('/') + 1)
-        FixtureCache.ensureSidecar(root, "index_compact_del",
-          "_COMPACT_DEL_READY") { tmp =>
-          graft.sources.BucketedIndex.write(
-            Similarity.annIndexApplyTombstones(
-              graft.sources.BucketedIndex.read(s, s"$root/index",
-                s"graft_annidx2da_$suffix", "cell", 8)
-                .unionByName(graft.sources.BucketedIndex.read(s,
-                  s"$root/index2", s"graft_annidx2db_$suffix", "cell", 8)),
-              s.read.parquet(s"$root/tombstones"), "vec_id"),
-            tmp, "cell", 8)
-        }
         val cb = Similarity.coarseCodebook(e, "vec_id", "embedding", 8)
         val cbs = Similarity.pqCodebooks(e, "vec_id", "embedding",
           m = 4, ksub = 8)
@@ -1259,6 +1237,35 @@ object ProductionQueries {
           .select(col("vec_id"))
           .write.mode("overwrite").parquet(tmp)
     }
+
+  /** The two-epoch ANN index root with every sidecar the lifecycle
+    * gates read: the tombstones (q356, q357), the compaction of both
+    * parts (q348) and the compaction with the tombstones applied
+    * (q357). Built as one prewarmed root, so no gate's build contains
+    * a sidecar build on a cold /tmp. */
+  private def annLifecycleRoot(s: org.apache.spark.sql.SparkSession,
+      dir: String): String = {
+    val root = steadyAnnIndexTwoEpoch(s, dir)
+    val suffix = root.substring(root.lastIndexOf('/') + 1)
+    def parts(a: String, b: String) =
+      graft.sources.BucketedIndex.read(s, s"$root/index",
+        s"graft_annidx2${a}_$suffix", "cell", 8)
+        .unionByName(graft.sources.BucketedIndex.read(s,
+          s"$root/index2", s"graft_annidx2${b}_$suffix", "cell", 8))
+    annTombstones(s, dir, root)
+    FixtureCache.ensureSidecar(root, "index_compact",
+      "_COMPACT_READY") { tmp =>
+      graft.sources.BucketedIndex.write(parts("ca", "cb"), tmp, "cell", 8)
+    }
+    FixtureCache.ensureSidecar(root, "index_compact_del",
+      "_COMPACT_DEL_READY") { tmp =>
+      graft.sources.BucketedIndex.write(
+        Similarity.annIndexApplyTombstones(parts("da", "db"),
+          s.read.parquet(s"$root/tombstones"), "vec_id"),
+        tmp, "cell", 8)
+    }
+    root
+  }
 
   /** q117 ≡ q119 oracle: replay tokenization, both bucket hashes, the
     * reference counts, the micro-nat floor, and the integer keep rule.
@@ -1327,7 +1334,7 @@ object ProductionQueries {
     Seq[(org.apache.spark.sql.SparkSession, String) => String](
       steadyDedupIndex _,
       steadyAnnIndex _,
-      steadyAnnIndexTwoEpoch _,
+      annLifecycleRoot _,
       dsirModelRoot _,
       lmModelRoot _)
       .foreach(f => FixtureCache.registerPrewarm((s, d) => { f(s, d); () }))

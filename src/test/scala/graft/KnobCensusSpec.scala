@@ -18,7 +18,7 @@ class KnobCensusSpec extends AnyFunSuite {
 
   private val mains = Set(
     "Bench", "Verify",                                     // timing and correctness dump
-    "JobProfile", "PlanDump", "RuleAudit", "WindowAudit",  // per-gate profilers and audits
+    "GateCensus",                                          // per-gate plan facts and counts, one walk
     "pipeline.BagJobMain")                                 // the paper's job
 
   private val envRead = """(?:sys\.env|System\.getenv)""".r

@@ -769,15 +769,15 @@ class PlanSpec extends SparkSuite {
 
   test("no unpartitioned WindowExec anywhere a window is planned") {
     // The r8/r9 bench tails carried an unattributed "WindowExec: No
-    // Partition Defined" warning; WindowAudit traced it to the global
+    // Partition Defined" warning; the window audit traced it to the global
     // Σw window in temperatureQuotas, now a broadcast 1-row cross
     // join. Pin the fix on the quota users plus the suite's heaviest
     // window consumers so a regression is caught here, not in a bench
-    // tail. (The full-suite sweep lives in `runMain graft.WindowAudit`.)
+    // tail. (The full-suite sweep is `graft.GateCensus`.)
     for (q <- Seq("q95_temperature_mix", "q99_unimax_mix",
         "q03_current_version", "q85_rrf_fusion", "q12_create_ids")) {
       val p = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
-      val bad = WindowAudit.unpartitionedWindows(p)
+      val bad = GateCensus.unpartitionedWindows(p)
       assert(bad.isEmpty,
         s"$q plans an unpartitioned WindowExec: ${bad.mkString("; ")}")
     }
@@ -797,7 +797,7 @@ class PlanSpec extends SparkSuite {
         "q363_jpeg_color_progressive", "q364_png_color_luma",
         "q365_warc_compliance_chain")) {
       val p = SparkEntry.queries(q)(spark, sf0001).queryExecution.executedPlan
-      val bad = WindowAudit.unpartitionedWindows(p)
+      val bad = GateCensus.unpartitionedWindows(p)
       assert(bad.isEmpty,
         s"$q plans an unpartitioned WindowExec: ${bad.mkString("; ")}")
     }
@@ -824,7 +824,7 @@ class PlanSpec extends SparkSuite {
     val df = spark.range(100).toDF("v")
     val global = df.withColumn("r",
       sum(col("v")).over(Window.orderBy(col("v"))))
-    assert(WindowAudit.unpartitionedWindows(
+    assert(GateCensus.unpartitionedWindows(
       global.queryExecution.executedPlan).nonEmpty,
       "a global data window escaped the audit")
     // the constant-key drift op folds its offsets partition spec
@@ -842,7 +842,7 @@ class PlanSpec extends SparkSuite {
       here ++ pl.collect { case x => x.subqueries.flatMap(raw) }.flatten
     }
     assert(raw(p).nonEmpty, "expected the folded offsets window in q213")
-    assert(WindowAudit.unpartitionedWindows(p).isEmpty,
+    assert(GateCensus.unpartitionedWindows(p).isEmpty,
       "the bounded offsets chain must be exempt")
   }
 
@@ -929,20 +929,38 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("Join"), "expected a join operator")
   }
 
-  test("PlanDump.mask: run-specific ids masked, plan text kept") {
+  test("GateCensus.mask: run-specific ids masked, plan text kept") {
     val raw = "Exchange hashpartitioning(k#123L, 4), [plan_id=42]\n" +
       "Arguments: [id#7L], MapPartitionsRDD[104] at localCheckpoint at " +
       "Profile.scala:981, ExistingRDD\n" +
       "Arguments: graft.ops.Multimodal$$$Lambda/0x00007f3c0c4b2a10@3ac3cae8, " +
       "obj#9: scala.Tuple9\n" +
       "vec_argmin_long(slice(v#5, 1, 16), [[J@523e0ffb)\n" +
+      "transform(a#3, lambdafunction((lambda x_51#8 + 1), lambda x_51#8, false))\n" +
       "Location: InMemoryFileIndex [file:/tmp/graft_wkt_scan_123_4567]"
-    assert(PlanDump.mask(raw) ==
+    assert(GateCensus.mask(raw) ==
       "Exchange hashpartitioning(k#NL, 4), [plan_id=N]\n" +
       "Arguments: [id#NL], MapPartitionsRDD[N] at localCheckpoint at " +
       "Profile.scala:N, ExistingRDD\n" +
       "Arguments: graft.ops.Multimodal$$$Lambda@N, obj#N: scala.Tuple9\n" +
       "vec_argmin_long(slice(v#N, 1, 16), [[J@N)\n" +
+      "transform(a#N, lambdafunction((lambda x_N#N + 1), lambda x_N#N, false))\n" +
       "Location: InMemoryFileIndex [file:/tmp/graft_wkt_scan_123]")
+  }
+
+  test("q245 profile diff: the masked plan does not depend on how many " +
+      "expression ids earlier plans took") {
+    // the profile family's distinct counts are one Expand; its group
+    // order must not follow expression-id hashes, or a cold and a warm
+    // census of one build disagree on the plan
+    def masked = GateCensus.mask(SparkEntry.queries("q245_profile_diff")(
+      spark, sf0001).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode))
+    val first = masked
+    for (skip <- Seq(1, 7, 40, 333)) {
+      (1 to skip).foreach(_ =>
+        org.apache.spark.sql.catalyst.expressions.NamedExpression.newExprId)
+      assert(masked == first, s"plan moved after $skip more expression ids")
+    }
   }
 }

@@ -1,30 +1,40 @@
 #!/usr/bin/env python3
-"""Name the gates whose plans differ between two PlanDump outputs.
+"""Name the gates whose plan facts or counts differ between two census files.
 
-  python3 tools/plandiff.py <dumpA> <dumpB>
+  python3 tools/plandiff.py <censusA.jsonl> <censusB.jsonl>
 
-Each dump is the stdout of a no-argument `graft.PlanDump` (ids already
-masked). Both are split at their `========== <gate> ==========` headers;
-a gate present in only one dump, or whose plan text differs, is printed
-one per line. The last line is the number of such gates. Exits 0.
+Each file is the stdout of `graft.GateCensus`: one JSON line per gate.
+For every gate present in only one file, or whose `plan`, `dump_sort`,
+`windows`, `eager_jobs`, `jobs`, `shuffle_bytes` or `error` differ, one
+line `<gate> <field>[,<field>...]` is printed (`missing` for a gate in
+only one file). Seconds are ignored: they vary from run to run. The
+last line is the number of such gates. Exits 0.
 """
-import re
+import json
 import sys
 
+FIELDS = ("plan", "dump_sort", "windows", "eager_jobs", "jobs",
+          "shuffle_bytes", "error")
 
-def gates(path):
+
+def census(path):
     with open(path) as f:
-        parts = re.split(r"^========== (\S+) ==========$", f.read(),
-                         flags=re.M)
-    return dict(zip(parts[1::2], parts[2::2]))
+        recs = (json.loads(line) for line in f if line.startswith("{"))
+        return {r["gate"]: r for r in recs}
 
 
 def main():
-    a, b = gates(sys.argv[1]), gates(sys.argv[2])
-    moved = sorted(g for g in a.keys() | b.keys() if a.get(g) != b.get(g))
-    for g in moved:
-        print(g)
-    print(f"{len(moved)} gates differ")
+    a, b = census(sys.argv[1]), census(sys.argv[2])
+    moved = 0
+    for g in sorted(a.keys() | b.keys()):
+        if g not in a or g not in b:
+            fields = ["missing"]
+        else:
+            fields = [f for f in FIELDS if a[g].get(f) != b[g].get(f)]
+        if fields:
+            moved += 1
+            print(g, ",".join(fields))
+    print(f"{moved} gates differ")
 
 
 if __name__ == "__main__":
