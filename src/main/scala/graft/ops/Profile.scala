@@ -274,318 +274,219 @@ object Profile {
         col("mode_value"), col("mode_count"), col("gini_micro"))
   }
 
-  /** Two-sample Kolmogorov–Smirnov drift statistic, EXACT — the
-    * distribution-shift monitor between two sources:
-    * D = max over x of |F₁(x) − F₂(x)| is a RATIONAL with
-    * denominator n₁·n₂, so the supremum is computed entirely in
-    * integers — d_num = max |i·n₂ − j·n₁| over the distinct values'
-    * cumulative counts (i, j), ks_micro = floor(10⁶·d_num / n₁·n₂) —
-    * and gates hash-exact (the float KS of a stats library cannot).
-    * Ties across samples are handled by construction: both CDFs are
-    * evaluated AFTER each distinct value's full mass (one row per
-    * distinct value).
+  /** The two-sample DRIFT KERNEL. Every statistic reads one count
+    * shape, `(group?, value, __ca, __cb)`: per distinct (group, value),
+    * the mass of sample A and of sample B. Three builders make it —
+    * [[driftCounts]] from one frame with a sample column,
+    * [[refProbeCounts]] from a persisted reference and a probe batch,
+    * both [[distCounts]] frames — and the statistics ([[ksDrift]],
+    * [[mannWhitneyU]], [[emdDrift]], [[cvmDrift]], [[tvdDrift]],
+    * [[driftReport]]) take `(counts, value, group)`. Since a statistic
+    * only sees per-value counts, the steady-state form over
+    * `refProbeCounts(distCounts(A), distCounts(B))` is hash-identical
+    * to the in-query form over A ∪ B by construction.
     *
-    * Plan: one (value) count aggregate with per-sample conditional
-    * counts (map-side combinable); the cumulative counts ride the
-    * skew-safe prefix sum over a constant key (a global ORDER BY
-    * window over |V| distinct values would otherwise be one task —
-    * the packSequences discipline); the two totals attach by a 1-row
-    * broadcast (PlanSpec BNL allowlist, bound = an .agg() with no
-    * grouping). 10⁶·d_num rides DECIMAL(38,0) (d_num ≤ n₁·n₂ ≈ 10¹⁸
-    * already saturates long). Null values are excluded from the
-    * count frame — the same non-null contract as [[distCounts]], so
-    * the solo and steady-state forms see IDENTICAL frames (and the
-    * engines' NULLS FIRST/LAST window divergence never enters; the
-    * whole drift family shares this contract). Output: one row
-    * (n1, n2, d_num, ks_micro). */
-  def ksDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String): DataFrame =
-    ksDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol)
+    * `group = None` gives one row; `Some(g)` gives one row per group,
+    * and groups where either sample is empty are dropped (every
+    * statistic is undefined there). A solo input with an empty sample
+    * throws DIVIDE_BY_ZERO under ANSI, as its micros divide by n₁·n₂.
+    * Null values are excluded from every count frame, so the
+    * engines' NULLS FIRST/LAST window divergence never enters.
+    *
+    * [[driftCounts]] counts the rows of `df` whose `sample` is `a`
+    * into `__ca` and those whose `sample` is `b` into `__cb`, in one
+    * map-side-combinable aggregate. */
+  def driftCounts(df: DataFrame, value: String, sample: String,
+      a: String, b: String, group: Option[String] = None): DataFrame =
+    df.filter(col(sample) === a || col(sample) === b)
+      .filter(col(value).isNotNull)
+      .groupBy(group.toSeq.map(col) :+ col(value): _*)
+      .agg(sum(when(col(sample) === a, 1L).otherwise(0L)).as("__ca"),
+        sum(when(col(sample) === b, 1L).otherwise(0L)).as("__cb"))
 
-  /** The ONE solo count stage of the whole drift family: a per-value
-    * aggregate with per-sample conditional counts, map-side combined,
-    * null values excluded (the family's non-null contract — keeps
-    * every in-query form hash-identical to its [[distCounts]]-probed
-    * steady twin). */
-  private def soloCounts(df: DataFrame, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    df.filter(col(sampleCol) === a || col(sampleCol) === b)
-      .filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol))
-      .agg(sum(when(col(sampleCol) === a, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(sampleCol) === b, 1L).otherwise(0L)).as("__cb"))
-
-  /** [[ksDrift]]'s tail over a pre-built per-value count frame
-    * `(valueCol, __ca, __cb)` — the shared reduce for the in-query
-    * form and the persisted-reference probe ([[ksDriftAgainstRef]]). */
-  private def ksDriftFromCounts(cnt: DataFrame,
-      valueCol: String): DataFrame = {
-    val cum = EventAnalytics.runningAggsSkewSafe(
-      cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")))
-    val totals = cnt.agg(sum(col("__ca")).as("n1"),
-      sum(col("__cb")).as("n2"))
-    cum.crossJoin(broadcast(totals)) // 1-row aggregate attach
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        max(abs(col("__ia") * col("n2") - col("__ib") * col("n1")))
-          .as("d_num"))
-      .withColumn("ks_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * d_num) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)"))
-  }
-
-  /** Per-value counts of one sample, the PERSISTABLE reference half
-    * of a drift check: `(valueCol, ref_n)`, ≤ |distinct values| rows.
-    * At 100 TB this is the once-per-reference scan — the probe side
-    * ([[ksDriftAgainstRef]]) never rescans the reference sample. */
-  def distCounts(df: DataFrame, valueCol: String): DataFrame =
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol))
+  /** Per-value counts of one sample, `(group?, value, ref_n)`,
+    * ≤ |groups|·|values| rows. Built over the reference when it
+    * freezes, this is the PERSISTED half of a steady-state drift
+    * check (the reference sample is scanned once, never per batch);
+    * built over a batch, it is the probe half. Either way
+    * [[refProbeCounts]] merges two of them. */
+  def distCounts(df: DataFrame, value: String,
+      group: Option[String] = None): DataFrame =
+    df.filter(col(value).isNotNull)
+      .groupBy(group.toSeq.map(col) :+ col(value): _*)
       .agg(count(lit(1)).as("ref_n"))
 
-  /** KS drift of a probe batch AGAINST a persisted reference count
-    * frame ([[distCounts]] output) — the steady-state monitor shape:
-    * the reference sample is scanned once when the profile is built;
-    * each batch's check costs one batch-sized count aggregate plus a
-    * full-outer join of two ≤|values| count frames (both sides
-    * sketch-sized; AQE broadcasts). Hash-identical to [[ksDrift]] on
-    * (reference ∪ probe) by construction — the statistic only sees
-    * the per-value counts. */
-  def ksDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String): DataFrame =
-    ksDriftAgainstRefCounts(refCounts,
-      probe.filter(col(valueCol).isNotNull)
-        .groupBy(col(valueCol))
-        .agg(count(lit(1)).as("obs_n")),
-      valueCol)
-
-  /** [[ksDriftAgainstRef]] with the probe side ALREADY counted —
-    * `(valueCol, obs_n)` — the entry point for callers maintaining a
-    * cumulative observed-count state (the streaming drift monitor):
-    * full-outer join of two ≤|values| count frames, zero-fill, the
-    * shared KS tail. */
-  def ksDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame =
-    ksDriftFromCounts(
-      mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol)
-
-  /** The shared steady-state count merge: full-outer join of a
-    * persisted `(valueCol, ref_n)` reference frame and a
-    * `(valueCol, obs_n)` probe frame — both ≤|values| rows (AQE
-    * broadcasts) — zero-filled into the family's (__ca, __cb) count
-    * shape, so every statistic's tail is reusable verbatim. */
-  private def mergeRefProbeCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame = {
-    val p = probeCounts
-      .select(col(valueCol).as("__pv"), col("obs_n").as("__pn"))
-    refCounts
-      .join(p, col(valueCol) === col("__pv"), "full_outer")
-      .select(coalesce(col(valueCol), col("__pv")).as(valueCol),
-        coalesce(col("ref_n"), lit(0L)).as("__ca"),
-        coalesce(col("__pn"), lit(0L)).as("__cb"))
+  /** The steady-state count merge: a full-outer join of a reference
+    * and a probe [[distCounts]] frame on (group?, value) — both
+    * ≤ |groups|·|values| rows — zero-filled into the kernel's count
+    * shape, the reference as sample A. A group with mass on one side
+    * only survives the merge and drops at the keyed totals, as in the
+    * in-query form. */
+  def refProbeCounts(ref: DataFrame, probe: DataFrame, value: String,
+      group: Option[String] = None): DataFrame = {
+    val keys = group.toSeq :+ value
+    val p = probe.select(
+      keys.map(k => col(k).as(s"__p_$k")) :+ col("ref_n").as("__pcnt"): _*)
+    ref.join(p, keys.map(k => col(k) === col(s"__p_$k")).reduce(_ && _),
+        "full_outer")
+      .select(keys.map(k => coalesce(col(k), col(s"__p_$k")).as(k)) ++
+        Seq(coalesce(col("ref_n"), lit(0L)).as("__ca"),
+          coalesce(col("__pcnt"), lit(0L)).as("__cb")): _*)
   }
 
-  /** The in-query probe half shared by every AgainstRef form: count
-    * the probe batch per value, nulls excluded (the family
-    * contract). */
-  private def probeCounts(probe: DataFrame, valueCol: String)
-      : DataFrame =
-    probe.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol))
-      .agg(count(lit(1)).as("obs_n"))
+  /** Two-sample Kolmogorov–Smirnov, EXACT: D = max over x of
+    * |F₁(x) − F₂(x)| is a rational with denominator n₁·n₂, so
+    * d_num = max |i·n₂ − j·n₁| over the distinct values' cumulative
+    * counts (i, j) and ks_micro = floor(10⁶·d_num / n₁n₂) gate
+    * hash-exact. Both CDFs are read after each distinct value's full
+    * mass, which handles ties across samples. Output:
+    * (group?, n1, n2, d_num, ks_micro). */
+  def ksDrift(counts: DataFrame, value: String,
+      group: Option[String] = None): DataFrame =
+    finish("ks", prefix(counts, value, group, lead = false), value, group)
 
-  /** Mann–Whitney U of a probe batch AGAINST a persisted reference
-    * count frame ([[distCounts]] output) — completing the
-    * steady-state monitor matrix for the rank-sum statistic
-    * (VERDICT r12 #4): hash-identical to [[mannWhitneyU]] on
-    * (reference ∪ probe) by construction. */
-  def mannWhitneyUAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String): DataFrame =
-    mannWhitneyUAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol)
+  /** Two-sample Mann–Whitney U, EXACT — the whole-distribution
+    * stochastic order beside KS's largest CDF gap. Tie-averaged ranks
+    * stay integral in HALF-UNITS: 2·ΣR_A = Σ cₐ·(2·prev + cₐ + c_b + 1)
+    * (prev = combined mass before the value) and 2U = 2·ΣR_A −
+    * n₁(n₁+1). u_micro = floor(10⁶·U / n₁n₂) is the common-language
+    * P(A > B) + ½P(A = B); 500000 means no drift. Output:
+    * (group?, n1, n2, u2, u_micro). */
+  def mannWhitneyU(counts: DataFrame, value: String,
+      group: Option[String] = None): DataFrame =
+    finish("u", prefix(counts, value, group, lead = false), value, group)
 
-  /** [[mannWhitneyUAgainstRef]] with the probe side already counted —
-    * the streaming-monitor entry point. */
-  def mannWhitneyUAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame =
-    mannWhitneyUFromCounts(
-      mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol)
-
-  /** Wasserstein-1 of a probe batch AGAINST a persisted reference
-    * count frame — the magnitude-aware steady-state monitor
-    * (VERDICT r12 #4); hash-identical to [[emdDrift]] on
-    * (reference ∪ probe). */
-  def emdDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String): DataFrame =
-    emdDriftAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol)
-
-  /** [[emdDriftAgainstRef]] with the probe side already counted. */
-  def emdDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame =
-    emdDriftFromCounts(
-      mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol)
-
-  /** Cramér–von Mises of a probe batch AGAINST a persisted reference
-    * count frame — the whole-curve steady-state monitor
-    * (VERDICT r12 #4); hash-identical to [[cvmDrift]] on
-    * (reference ∪ probe). */
-  def cvmDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String): DataFrame =
-    cvmDriftAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol)
-
-  /** [[cvmDriftAgainstRef]] with the probe side already counted. */
-  def cvmDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame =
-    cvmDriftFromCounts(
-      mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol)
-
-  /** Total-variation distance of a probe batch AGAINST a persisted
-    * reference count frame — the categorical steady-state monitor
-    * (VERDICT r12 #4); hash-identical to [[tvdDrift]] on
-    * (reference ∪ probe). Categorical values ride [[distCounts]]
-    * unchanged (per-value counts have no ordering requirement). */
-  def tvdDriftAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String): DataFrame =
-    tvdDriftAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol)
-
-  /** [[tvdDriftAgainstRef]] with the probe side already counted. */
-  def tvdDriftAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame =
-    tvdDriftFromCounts(
-      mergeRefProbeCounts(refCounts, probeCounts, valueCol))
-
-  /** One-call DRIFT REPORT against a persisted reference — all four
-    * ordered statistics (KS/U/W₁/CvM) of everything observed so far
-    * vs the frozen reference profile, off ONE merged count frame and
-    * ONE shared prefix subplan: the row set the streaming
-    * [[graft.streaming.StreamingIngest.driftMonitor]] lands per
-    * epoch (VERDICT r12 #4 — the nightly monitor is no longer one
-    * statistic wide). */
-  def driftReportAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, valueCol: String): DataFrame =
-    driftReportFromCounts(
-      mergeRefProbeCounts(refCounts, probeCounts, valueCol),
-      valueCol)
-
-  /** [[driftReportAgainstRefCounts]] with the probe side counted
-    * in-query — the one-call BATCH entry point of the steady-state
-    * monitor (the nightly "everything since the reference froze"
-    * check): the reference is never rescanned, the probe costs one
-    * count aggregate, and all four statistics ride the one merged
-    * count frame. Hash-identical to [[driftReport]] on
-    * (reference ∪ probe) by construction. */
-  def driftReportAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      valueCol: String): DataFrame =
-    driftReportAgainstRefCounts(refCounts,
-      probeCounts(probe, valueCol), valueCol)
-
-  /** Two-sample EARTH MOVER'S distance (Wasserstein-1), EXACT — the
-    * magnitude-aware drift companion to [[ksDrift]]: KS sees only
+  /** Two-sample EARTH MOVER'S distance (Wasserstein-1), EXACT: KS sees
     * the largest CDF gap, W₁ integrates it —
-    * W₁ = ∫|F₁−F₂| dx = Σ |i·n₂ − j·n₁|·Δv / (n₁·n₂) over the
-    * distinct values, Δv = gap to the next distinct value. Every
-    * term is integral, so the statistic gates hash-exact in
-    * micro-VALUE-units (emd_micro = floor(10⁶·Σ/n₁n₂) — for integer
-    * value columns, 10⁶ × the distance expressed in those units).
-    * The value gaps come from the skew-safe LEAD over the same
-    * constant-key prefix frame; products ride DECIMAL(38,0)
-    * (|i·n₂ − j·n₁| alone saturates long). Output: one row
-    * (n1, n2, emd_num, emd_micro). */
-  def emdDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String): DataFrame =
-    emdDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol)
+    * W₁ = Σ |i·n₂ − j·n₁|·Δv / (n₁·n₂) over the distinct values,
+    * Δv = gap to the next distinct value (the skew-safe LEAD).
+    * emd_micro = floor(10⁶·Σ / n₁n₂) is in micro-value-units. Output:
+    * (group?, n1, n2, emd_num, emd_micro). */
+  def emdDrift(counts: DataFrame, value: String,
+      group: Option[String] = None): DataFrame =
+    finish("w1", prefix(counts, value, group, lead = true), value, group)
 
-  /** [[emdDrift]]'s tail over a pre-built per-value count frame —
-    * the shared reduce for the in-query form and the persisted-
-    * reference probe ([[emdDriftAgainstRef]]). */
-  private def emdDriftFromCounts(cnt: DataFrame,
-      valueCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    // prefix sum AND the Δv lead slice on the same ord: estimate the
-    // GK bounds once, share across both stages (VERDICT r12 #3)
-    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol))
-    val cum = EventAnalytics.runningAggsSkewSafe(
-      cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
-      gkb)
-    val withNext = EventAnalytics.leadSkewSafe(cum, "__g", valueCol,
-      valueCol, "__nv", gkb)
-    val totals = cnt.agg(sum(col("__ca")).as("n1"),
-      sum(col("__cb")).as("n2"))
-    withNext.crossJoin(broadcast(totals)) // 1-row aggregate attach
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(when(col("__nv").isNotNull,
-          (abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
-            .cast(d38) * (col("__nv") - col(valueCol))).cast(d38))
-          .otherwise(lit(0).cast(d38))).cast(d38).as("__s"))
-      .withColumn("emd_num", expr("CAST(__s AS BIGINT)"))
-      .withColumn("emd_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * __s) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)"))
-      .select(col("n1"), col("n2"), col("emd_num"), col("emd_micro"))
+  /** Two-sample Cramér–von Mises, EXACT sufficient statistics: the
+    * SQUARED CDF gap integrated over probability mass,
+    * T = Σ cᵢ·dᵢ² / (N²·n₁·n₂) with dᵢ = i·n₂ − j·n₁, cᵢ the value's
+    * combined mass and N = n₁ + n₂. Σcᵢdᵢ² is carried TWO-LEVEL in
+    * DECIMAL(38,0) — qᵢ = dᵢ² div n₁n₂ and rᵢ = dᵢ² mod n₁n₂ sum
+    * apart — and the gate number is the defined nested floor
+    * `t_micro = (10⁶·Σcᵢqᵢ + (10⁶·Σcᵢrᵢ) div n₁n₂) div N²`, which both
+    * engines compute identically. Domain: n₁·n₂ < 10¹⁹. Output:
+    * (group?, n1, n2, t_micro). */
+  def cvmDrift(counts: DataFrame, value: String,
+      group: Option[String] = None): DataFrame =
+    finish("cvm", prefix(counts, value, group, lead = false), value, group)
+
+  /** Two-sample CATEGORICAL drift, EXACT total-variation distance —
+    * the unordered statistic, for columns with no value order:
+    * TVD = Σ |cₐᵢ·n₂ − c_bᵢ·n₁| / (2·n₁·n₂), a pure integer
+    * numerator (χ² and PSI/KL cannot hash-gate).
+    * tvd_micro = floor(10⁶·Σ / 2n₁n₂) ∈ [0, 10⁶]. No prefix sums:
+    * the totals attach straight to the counts. Output:
+    * (group?, n1, n2, tvd_num, tvd_micro). */
+  def tvdDrift(counts: DataFrame, value: String,
+      group: Option[String] = None): DataFrame =
+    finish("tvd", attach(counts, counts, group), value, group)
+
+  /** One-call DRIFT REPORT — the four ordered statistics as
+    * (stat, group?, n1, n2, stat_micro) rows, stat ∈ ks/u/w1/cvm and
+    * stat_micro the statistic's own micro (ks_micro, u_micro,
+    * emd_micro, t_micro). One slice-bounds pass serves all four
+    * prefixes; the KS, U and CvM prefixes are the same subplan, which
+    * W₁'s lead extends, so AQE's exchange reuse runs the count and
+    * prefix work once (PlanSpec-asserted). */
+  def driftReport(counts: DataFrame, value: String,
+      group: Option[String] = None): DataFrame = {
+    val bounds = Some(EventAnalytics.sliceBoundsFor(counts, value))
+    Seq("ks" -> "ks_micro", "u" -> "u_micro", "w1" -> "emd_micro",
+        "cvm" -> "t_micro").map { case (stat, micro) =>
+      finish(stat, prefix(counts, value, group, lead = stat == "w1", bounds),
+          value, group)
+        .select(lit(stat).as("stat") +: (group.toSeq.map(col) ++
+          Seq(col("n1"), col("n2"), col(micro).as("stat_micro"))): _*)
+    }.reduce(_ unionByName _)
   }
 
-  /** Two-sample Cramér–von Mises drift, EXACT sufficient statistics —
-    * the whole-curve companion completing the ordered quartet: KS
-    * takes the sup of the CDF gap, W₁ integrates it over VALUE, CvM
-    * integrates its SQUARE over PROBABILITY mass:
-    * T = Σ cᵢ·dᵢ² / (N²·n₁·n₂) with dᵢ = i·n₂ − j·n₁ at each distinct
-    * value and cᵢ its combined mass, N = n₁+n₂ — more sensitive than
-    * KS to many small gaps, insensitive (unlike W₁) to value units.
-    *
-    * Σcᵢdᵢ² itself would need 10⁴⁸ digits at planetary samples, so
-    * the sum is carried TWO-LEVEL in DECIMAL(38,0): qᵢ = dᵢ² div
-    * n₁n₂ and rᵢ = dᵢ² mod n₁n₂ — both ≤ n₁n₂ — accumulate
-    * separately, and the statistic
-    * `t_micro = (10⁶·Σcᵢqᵢ + (10⁶·Σcᵢrᵢ) div n₁n₂) div N²` is the
-    * DEFINED gate number — a deterministic nested-floor both engines
-    * compute identically (within 1 micro of the true floor; t_micro
-    * ≤ 10⁶·min(n₁,n₂), long-safe). Domain: dᵢ² must fit
-    * DECIMAL(38,0) → n₁·n₂ < 10¹⁹ (≈3·10⁹ rows per sample — beyond
-    * that, run CvM per segment or on a sample; at that size any
-    * shift is "significant" anyway). Same plan as [[ksDrift]]: one
-    * count aggregate, the constant-key prefix sum, a 1-row totals
-    * attach. Output: (n1, n2, t_micro). */
-  def cvmDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String): DataFrame =
-    cvmDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol)
-
-  /** [[cvmDrift]]'s tail over a pre-built per-value count frame —
-    * the shared reduce for the in-query form and the persisted-
-    * reference probe ([[cvmDriftAgainstRef]]). */
-  private def cvmDriftFromCounts(cnt: DataFrame,
-      valueCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
+  /** The shared prefix of the ordered statistics: the running sums
+    * (__ia, __ib) in value order per group, riding the skew-safe
+    * prefix sum (a constant key for the solo form — a global ORDER BY
+    * window would be one task); then the Δv lead `__nv` when `lead`,
+    * sliced by the same bounds (one GK pass, or the caller's);
+    * then the totals attach. */
+  private def prefix(cnt: DataFrame, value: String,
+      group: Option[String], lead: Boolean,
+      bounds: Option[Array[Double]] = None): DataFrame = {
+    val key = group.getOrElse("__g")
+    val b = Some(bounds.getOrElse(EventAnalytics.sliceBoundsFor(cnt, value)))
     val cum = EventAnalytics.runningAggsSkewSafe(
-      cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")))
-    val totals = cnt.agg(sum(col("__ca")).as("n1"),
-      sum(col("__cb")).as("n2"))
-    cum.crossJoin(broadcast(totals)) // 1-row aggregate attach
-      .withColumn("__m", expr(s"CAST(n1 AS $d38) * n2"))
-      .withColumn("__d",
-        abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
-          .cast(d38))
-      .withColumn("__c", (col("__ca") + col("__cb")).cast(d38))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(expr("__c * ((__d * __d) div __m)")).cast(d38).as("__sq"),
-        sum(expr("__c * ((__d * __d) % __m)")).cast(d38).as("__sr"))
-      .withColumn("t_micro", expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * __sq + " +
-          "(CAST(1000000 AS DECIMAL(38,0)) * __sr) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)) div " +
-          "(CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2)) AS BIGINT)"))
-      .select(col("n1"), col("n2"), col("t_micro"))
+      if (group.isEmpty) cnt.withColumn(key, lit(0)) else cnt, key, value,
+      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")), b)
+    attach(if (lead) EventAnalytics.leadSkewSafe(cum, key, value, value,
+      "__nv", b) else cum, cnt, group)
+  }
+
+  /** Attaches the sample totals (n1, n2) of `cnt` to `d`: one row, or
+    * one per group with both samples non-empty (the others drop). Both
+    * are ≤ |groups| rows, so the attach is an explicit broadcast —
+    * a cross join solo, an equi join on the group keyed. */
+  private def attach(d: DataFrame, cnt: DataFrame,
+      group: Option[String]): DataFrame = {
+    val totals = cnt.groupBy(group.toSeq.map(col): _*)
+      .agg(sum(col("__ca")).as("n1"), sum(col("__cb")).as("n2"))
+    group match {
+      case None => d.crossJoin(broadcast(totals))
+      case Some(g) =>
+        d.join(broadcast(totals.filter(col("n1") > 0 && col("n2") > 0)
+            .withColumnRenamed(g, "__tk")), col(g) === col("__tk"))
+          .drop("__tk")
+    }
+  }
+
+  /** The one formula of each statistic over an attached prefix `p`:
+    * a per-group reduce, then the statistic's output columns. Every
+    * product rides DECIMAL(38,0) (|i·n₂ − j·n₁| alone saturates
+    * long); every micro is an integer floor. */
+  private def finish(stat: String, p: DataFrame, value: String,
+      group: Option[String]): DataFrame = {
+    val d38 = "decimal(38,0)"
+    val m = "CAST(1000000 AS DECIMAL(38,0))"
+    val n1n2 = "CAST(n1 AS DECIMAL(38,0)) * n2"
+    val gap = abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
+    // (the frame to reduce, its aggregates, the outputs in order)
+    val (d, aggs, outs) = stat match {
+      case "ks" => (p, Seq(max(gap).as("d_num")),
+        Seq("ks_micro" -> s"($m * d_num) div ($n1n2)"))
+      case "u" => (p.withColumn("__r2", (col("__ca").cast(d38) *
+          (lit(2) * (col("__ia") - col("__ca") + col("__ib") - col("__cb"))
+            + col("__ca") + col("__cb") + 1)).cast(d38)),
+        Seq(sum(col("__r2")).cast(d38).as("__r2a")),
+        Seq("u2" -> ("CAST(__r2a - CAST(n1 AS DECIMAL(38,0)) * (n1 + 1) " +
+            "AS BIGINT)"),
+          "u_micro" -> s"($m * u2) div (2 * $n1n2)"))
+      case "w1" => (p, Seq(sum(when(col("__nv").isNotNull,
+          (gap.cast(d38) * (col("__nv") - col(value))).cast(d38))
+          .otherwise(lit(0).cast(d38))).cast(d38).as("__s")),
+        Seq("emd_num" -> "CAST(__s AS BIGINT)",
+          "emd_micro" -> s"($m * __s) div ($n1n2)"))
+      case "cvm" => (p.withColumn("__m", expr(s"CAST(n1 AS $d38) * n2"))
+          .withColumn("__d", gap.cast(d38))
+          .withColumn("__c", (col("__ca") + col("__cb")).cast(d38)),
+        Seq(sum(expr("__c * ((__d * __d) div __m)")).cast(d38).as("__sq"),
+          sum(expr("__c * ((__d * __d) % __m)")).cast(d38).as("__sr")),
+        Seq("t_micro" -> (s"CAST(($m * __sq + ($m * __sr) div ($n1n2)) " +
+          "div (CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2)) AS BIGINT)")))
+      case "tvd" => (p, Seq(sum(abs(col("__ca").cast(d38) * col("n2") -
+          col("__cb").cast(d38) * col("n1")).cast(d38)).cast(d38).as("__s")),
+        Seq("tvd_num" -> "CAST(__s AS BIGINT)",
+          "tvd_micro" -> s"($m * __s) div (2 * $n1n2)"))
+    }
+    outs.foldLeft(d.groupBy(group.toSeq.map(col): _*)
+        .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2") +: aggs: _*)) {
+        case (r, (name, e)) => r.withColumn(name, expr(e))
+      }
+      .drop("__r2a", "__s", "__sq", "__sr")
   }
 
   /** Functional-dependency PROFILE — schema discovery over all
@@ -1193,305 +1094,6 @@ object Profile {
     }.localCheckpoint()
   }
 
-  /** One-call DRIFT REPORT — all four ordered two-sample statistics
-    * (KS, Mann–Whitney U, Wasserstein-1, Cramér–von Mises) from ONE
-    * shared per-value count frame: the monitoring run a pipeline
-    * schedules nightly, emitted as (stat, n1, n2, stat_micro) rows.
-    * The four tails are single-row aggregates over the SAME
-    * cum-with-lead subplan, so Spark's ReusedExchange materializes
-    * the count/prefix work once (PlanSpec-asserted) — four
-    * statistics for one scan + one sketch-sized prefix sum, not
-    * four pipelines. Micros mean what each solo gate defines:
-    * ks/tvd-style sup in [0,10⁶] for KS, the common-language
-    * P(A>B)+½P(=) for U (500000 = no drift), micro-value-units for
-    * W₁, the nested-floor CvM T in micros. */
-  def driftReport(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String): DataFrame =
-    driftReportFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol)
-
-  /** [[driftReport]]'s four-statistic tail over a pre-built per-value
-    * count frame — the shared reduce for the in-query report and the
-    * steady-state monitor ([[driftReportAgainstRefCounts]], the form
-    * the streaming drift monitor emits nightly). */
-  private def driftReportFromCounts(cnt: DataFrame,
-      valueCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    // one GK bounds pass feeds BOTH the prefix sum and the Δv lead
-    // of the shared subplan (VERDICT r12 #3)
-    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol))
-    val cum = EventAnalytics.runningAggsSkewSafe(
-      cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
-      gkb)
-    val withNext = EventAnalytics.leadSkewSafe(cum, "__g", valueCol,
-      valueCol, "__nv", gkb)
-    val totals = cnt.agg(sum(col("__ca")).as("n1"),
-      sum(col("__cb")).as("n2"))
-    def attach(d: DataFrame) = d.crossJoin(broadcast(totals))
-    val ks = attach(withNext)
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        max(abs(col("__ia") * col("n2") - col("__ib") * col("n1")))
-          .as("__d"))
-      .select(lit("ks").as("stat"), col("n1"), col("n2"), expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * __d) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2) AS BIGINT)")
-        .as("stat_micro"))
-    val u = attach(withNext
-        .withColumn("__r2", (col("__ca").cast(d38) *
-          (lit(2) * (col("__ia") - col("__ca") + col("__ib") -
-            col("__cb")) + col("__ca") + col("__cb") + 1)).cast(d38))
-        .agg(sum(col("__r2")).cast(d38).as("__r2a")))
-      .select(lit("u").as("stat"), col("n1"), col("n2"), expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * " +
-          "(__r2a - CAST(n1 AS DECIMAL(38,0)) * (n1 + 1))) div " +
-          "(2 * CAST(n1 AS DECIMAL(38,0)) * n2) AS BIGINT)")
-        .as("stat_micro"))
-    val w1 = attach(withNext)
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(when(col("__nv").isNotNull,
-          (abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
-            .cast(d38) * (col("__nv") - col(valueCol))).cast(d38))
-          .otherwise(lit(0).cast(d38))).cast(d38).as("__s"))
-      .select(lit("w1").as("stat"), col("n1"), col("n2"), expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * __s) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2) AS BIGINT)")
-        .as("stat_micro"))
-    val cvm = attach(withNext)
-      .withColumn("__m", expr(s"CAST(n1 AS $d38) * n2"))
-      .withColumn("__d",
-        abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
-          .cast(d38))
-      .withColumn("__c", (col("__ca") + col("__cb")).cast(d38))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(expr("__c * ((__d * __d) div __m)")).cast(d38).as("__sq"),
-        sum(expr("__c * ((__d * __d) % __m)")).cast(d38).as("__sr"))
-      .select(lit("cvm").as("stat"), col("n1"), col("n2"), expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * __sq + " +
-          "(CAST(1000000 AS DECIMAL(38,0)) * __sr) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)) div " +
-          "(CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2)) AS BIGINT)")
-        .as("stat_micro"))
-    ks.unionByName(u).unionByName(w1).unionByName(cvm)
-  }
-
-  /** Per-GROUP drift report — [[driftReport]] keyed on a segment
-    * column: one row per (group, statistic), the per-segment nightly
-    * monitoring run. Composes the four keyed statistics
-    * ([[ksDriftBy]]/[[mannWhitneyUBy]]/[[emdDriftBy]]/[[cvmDriftBy]])
-    * whose count/prefix subplans are IDENTICAL, so AQE's exchange
-    * reuse materializes the shared work once here too
-    * (PlanSpec-asserted) — the same four-for-one economy as the solo
-    * report. One-sample groups drop per the keyed contract. */
-  def driftReportBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    driftReportByFromCounts(
-      byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol)
-
-  /** [[driftReportBy]]'s tail over a pre-built keyed count frame —
-    * shared by the in-query form and the persisted-reference probe
-    * ([[driftReportByAgainstRef]]). ONE keyed count frame and ONE GK
-    * bounds pass feed all four statistics' tails (VERDICT r12 #3 —
-    * the solo By forms each paid their own approxQuantile; the
-    * report pays once). */
-  private def driftReportByFromCounts(cnt: DataFrame,
-      groupCol: String, valueCol: String): DataFrame = {
-    val gkb = Some(EventAnalytics.sliceBoundsFor(cnt, valueCol))
-    def shape(d: DataFrame, stat: String, micro: String) =
-      d.select(lit(stat).as("stat"), col(groupCol), col("n1"),
-        col("n2"), col(micro).as("stat_micro"))
-    shape(ksDriftByTail(cnt, groupCol, valueCol, gkb),
-        "ks", "ks_micro")
-      .unionByName(shape(mannWhitneyUByTail(cnt, groupCol, valueCol, gkb),
-        "u", "u_micro"))
-      .unionByName(shape(emdDriftByTail(cnt, groupCol, valueCol, gkb),
-        "w1", "emd_micro"))
-      .unionByName(shape(cvmDriftByTail(cnt, groupCol, valueCol, gkb),
-        "cvm", "t_micro"))
-  }
-
-  /** Per-SEGMENT reference count profile — [[distCounts]] keyed on a
-    * segment column: the persistable half of the KEYED steady-state
-    * monitor (standing rule 1 — built once when the reference
-    * freezes). ≤ |groups|·|values| rows, nulls excluded per the
-    * family contract. */
-  def distCountsBy(df: DataFrame, groupCol: String,
-      valueCol: String): DataFrame =
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(col(groupCol), col(valueCol))
-      .agg(count(lit(1)).as("ref_n"))
-
-  /** The keyed steady-state count merge — [[mergeRefProbeCounts]]
-    * on the (group, value) composite key: full-outer of a persisted
-    * `(group, value, ref_n)` reference and a `(group, value, obs_n)`
-    * probe frame, zero-filled into the keyed family's (__ca, __cb)
-    * shape. Groups with mass on only one side survive the merge but
-    * drop at [[byTotals]] (n1 > 0 AND n2 > 0) — exactly the keyed
-    * in-query contract. */
-  private def mergeRefProbeCountsBy(refCounts: DataFrame,
-      probeCounts: DataFrame, groupCol: String,
-      valueCol: String): DataFrame = {
-    val p = probeCounts.select(col(groupCol).as("__pg"),
-      col(valueCol).as("__pv"), col("obs_n").as("__pn"))
-    refCounts
-      .join(p, col(groupCol) === col("__pg") &&
-        col(valueCol) === col("__pv"), "full_outer")
-      .select(coalesce(col(groupCol), col("__pg")).as(groupCol),
-        coalesce(col(valueCol), col("__pv")).as(valueCol),
-        coalesce(col("ref_n"), lit(0L)).as("__ca"),
-        coalesce(col("__pn"), lit(0L)).as("__cb"))
-  }
-
-  /** The keyed in-query probe half: count the probe batch per
-    * (group, value), nulls excluded. */
-  private def probeCountsBy(probe: DataFrame, groupCol: String,
-      valueCol: String): DataFrame =
-    probe.filter(col(valueCol).isNotNull)
-      .groupBy(col(groupCol), col(valueCol))
-      .agg(count(lit(1)).as("obs_n"))
-
-  /** Per-segment drift report AGAINST a persisted keyed reference
-    * count frame ([[distCountsBy]] output), probe side already
-    * counted — the streaming-monitor entry point of the KEYED
-    * steady-state matrix: all four ordered statistics per segment
-    * off ONE merged keyed count frame and one shared GK bounds pass.
-    * Hash-identical to [[driftReportBy]] on (reference ∪ probe) by
-    * construction. */
-  def driftReportByAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, groupCol: String, valueCol: String): DataFrame =
-    driftReportByFromCounts(
-      mergeRefProbeCountsBy(refCounts, probeCounts, groupCol,
-        valueCol),
-      groupCol, valueCol)
-
-  /** [[driftReportByAgainstRefCounts]] with the probe side counted
-    * in-query — the per-segment nightly monitor: the reference is
-    * never rescanned, each batch pays one (group, value) count
-    * aggregate. */
-  def driftReportByAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      groupCol: String, valueCol: String): DataFrame =
-    driftReportByAgainstRefCounts(refCounts,
-      probeCountsBy(probe, groupCol, valueCol), groupCol, valueCol)
-
-  /** Per-GROUP Cramér–von Mises — [[cvmDrift]] keyed on a segment
-    * column, completing the by-segment matrix for all four ordered
-    * statistics (KS/U/W₁/CvM): the same two-level q/r carry per
-    * group, prefix sums keyed on the group, ≤|groups| totals joined
-    * back by AQE broadcast, one-sample groups dropped. */
-  def cvmDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    cvmDriftByTail(byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, None)
-
-  /** [[cvmDriftBy]]'s tail over a pre-built keyed count frame
-    * (shared GK `bounds` like [[ksDriftByTail]]). */
-  private def cvmDriftByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String,
-      bounds: Option[Array[Double]]): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
-      bounds)
-    cum.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
-      .drop("__tk")
-      .withColumn("__m", expr(s"CAST(n1 AS $d38) * n2"))
-      .withColumn("__d",
-        abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
-          .cast(d38))
-      .withColumn("__c", (col("__ca") + col("__cb")).cast(d38))
-      .groupBy(col(groupCol))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(expr("__c * ((__d * __d) div __m)")).cast(d38).as("__sq"),
-        sum(expr("__c * ((__d * __d) % __m)")).cast(d38).as("__sr"))
-      .withColumn("t_micro", expr(
-        "CAST((CAST(1000000 AS DECIMAL(38,0)) * __sq + " +
-          "(CAST(1000000 AS DECIMAL(38,0)) * __sr) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)) div " +
-          "(CAST(n1 + n2 AS DECIMAL(38,0)) * (n1 + n2)) AS BIGINT)"))
-      .select(col(groupCol), col("n1"), col("n2"), col("t_micro"))
-  }
-
-  /** Per-GROUP Earth Mover's distance — [[emdDrift]] keyed on a
-    * segment column, completing the drift-by-segment trio beside
-    * [[ksDriftBy]] and [[mannWhitneyUBy]]: the same integral
-    * Σ |i·n₂ − j·n₁|·Δv per group, cumulative counts and the Δv LEAD
-    * both keyed on the GROUP (a hot segment spreads across slices),
-    * ≤|groups| totals joined back by AQE broadcast. One-sample
-    * groups are dropped — W₁ is undefined there. */
-  def emdDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    emdDriftByTail(byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, None)
-
-  /** [[emdDriftBy]]'s tail over a pre-built keyed count frame. Its
-    * prefix sum AND Δv lead slice on the same ord, so the GK bounds
-    * are estimated once here even solo, and shared with the sibling
-    * statistics in the keyed report (VERDICT r12 #3). */
-  private def emdDriftByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String,
-      bounds: Option[Array[Double]]): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val gkb = Some(bounds.getOrElse(
-      EventAnalytics.sliceBoundsFor(cnt, valueCol)))
-    val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
-      gkb)
-    val withNext = EventAnalytics.leadSkewSafe(cum, groupCol, valueCol,
-      valueCol, "__nv", gkb)
-    withNext.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
-      .drop("__tk")
-      .groupBy(col(groupCol))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(when(col("__nv").isNotNull,
-          (abs(col("__ia") * col("n2") - col("__ib") * col("n1"))
-            .cast(d38) * (col("__nv") - col(valueCol))).cast(d38))
-          .otherwise(lit(0).cast(d38))).cast(d38).as("__s"))
-      .withColumn("emd_num", expr("CAST(__s AS BIGINT)"))
-      .withColumn("emd_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * __s) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)"))
-      .select(col(groupCol), col("n1"), col("n2"), col("emd_num"),
-        col("emd_micro"))
-  }
-
-  /** Two-sample CATEGORICAL drift via total-variation distance,
-    * EXACT — the unordered companion to [[ksDrift]]/[[emdDrift]]
-    * (those need a value ORDER; a language/topic/label column has
-    * none): TVD = ½ Σ_categories |cₐᵢ/n₁ − c_bᵢ/n₂|
-    *           = Σ |cₐᵢ·n₂ − c_bᵢ·n₁| / (2·n₁·n₂),
-    * the largest probability gap any event set can see — and a pure
-    * integer numerator, so the statistic gates hash-exact where χ²
-    * (per-category rational denominators) and PSI/KL (logs) cannot.
-    * tvd_micro = floor(10⁶·Σ/2n₁n₂) ∈ [0, 10⁶]. Plan: one
-    * per-category count aggregate (map-side combinable — no ordering,
-    * no prefix sums, the cheapest drift plan in the family), a 1-row
-    * totals attach, one reduce; products ride DECIMAL(38,0) (cᵢ·n at
-    * 100 TB counts squares past int64). Output: one row
-    * (n1, n2, tvd_num, tvd_micro). */
-  def tvdDrift(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String): DataFrame =
-    tvdDriftFromCounts(soloCounts(df, valueCol, sampleCol, a, b))
-
-  /** [[tvdDrift]]'s tail over a pre-built per-value count frame —
-    * the shared reduce for the in-query form and the persisted-
-    * reference probe ([[tvdDriftAgainstRef]]). */
-  private def tvdDriftFromCounts(cnt: DataFrame): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val totals = cnt.agg(sum(col("__ca")).as("n1"),
-      sum(col("__cb")).as("n2"))
-    cnt.crossJoin(broadcast(totals)) // 1-row aggregate attach
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(abs(col("__ca").cast(d38) * col("n2") -
-          col("__cb").cast(d38) * col("n1")).cast(d38))
-          .cast(d38).as("__s"))
-      .withColumn("tvd_num", expr("CAST(__s AS BIGINT)"))
-      .withColumn("tvd_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * __s) div " +
-          "(2 * CAST(n1 AS DECIMAL(38,0)) * n2)"))
-      .select(col("n1"), col("n2"), col("tvd_num"), col("tvd_micro"))
-  }
-
   /** CONTINGENCY association profile between two categorical
     * columns — the STATISTICAL-dependence half of schema discovery
     * beside the FD map ([[fdProfile]] finds deterministic
@@ -1601,58 +1203,6 @@ object Profile {
           col("cells"), col("assoc_micro"))
     }.reduce(_ unionByName _)
   }
-
-  /** Per-GROUP total-variation drift — [[tvdDrift]] keyed on a
-    * segment column: label-mix drift per length bucket / topic /
-    * time window. Same integer numerator per group; ≤|groups| totals
-    * joined back by AQE broadcast; one-sample groups dropped (TVD is
-    * undefined against an empty sample). */
-  def tvdDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    tvdDriftByFromCounts(
-      byCounts(df, groupCol, valueCol, sampleCol, a, b), groupCol)
-
-  /** [[tvdDriftBy]]'s tail over a pre-built keyed count frame — the
-    * shared reduce for the in-query form and the persisted-reference
-    * probe ([[tvdDriftByAgainstRef]]). */
-  private def tvdDriftByFromCounts(cnt: DataFrame,
-      groupCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    cnt.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
-      .drop("__tk")
-      .groupBy(col(groupCol))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(abs(col("__ca").cast(d38) * col("n2") -
-          col("__cb").cast(d38) * col("n1")).cast(d38))
-          .cast(d38).as("__s"))
-      .withColumn("tvd_num", expr("CAST(__s AS BIGINT)"))
-      .withColumn("tvd_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * __s) div " +
-          "(2 * CAST(n1 AS DECIMAL(38,0)) * n2)"))
-      .select(col(groupCol), col("n1"), col("n2"), col("tvd_num"),
-        col("tvd_micro"))
-  }
-
-  /** Per-segment categorical drift AGAINST a persisted keyed
-    * reference count frame ([[distCountsBy]] output), probe side
-    * already counted — completes the KEYED steady matrix for the
-    * unordered statistic (the ordered quartet rides
-    * [[driftReportByAgainstRefCounts]]): label-mix drift per segment
-    * with the reference never rescanned. Hash-identical to
-    * [[tvdDriftBy]] on (reference ∪ probe). */
-  def tvdDriftByAgainstRefCounts(refCounts: DataFrame,
-      probeCounts: DataFrame, groupCol: String,
-      valueCol: String): DataFrame =
-    tvdDriftByFromCounts(
-      mergeRefProbeCountsBy(refCounts, probeCounts, groupCol,
-        valueCol), groupCol)
-
-  /** [[tvdDriftByAgainstRefCounts]] with the probe side counted
-    * in-query. */
-  def tvdDriftByAgainstRef(refCounts: DataFrame, probe: DataFrame,
-      groupCol: String, valueCol: String): DataFrame =
-    tvdDriftByAgainstRefCounts(refCounts,
-      probeCountsBy(probe, groupCol, valueCol), groupCol, valueCol)
 
   /** Per-group EXACT equi-depth (equi-height) histogram — the
     * optimizer/ANALYZE statistic beside [[profile]]: k buckets of
@@ -1791,139 +1341,6 @@ object Profile {
         coalesce(col("__pn"), lit(0L)).as("cb")))
   }
 
-  /** Per-GROUP two-sample KS — [[ksDrift]] keyed on a segment column
-    * (drift per language, per topic, per time bucket): the same
-    * integer supremum, with the cumulative counts riding the
-    * skew-safe prefix sum keyed on the GROUP (a hot segment spreads
-    * across slices) and the ≤|groups| totals joined back (AQE
-    * broadcasts; no 1-row attach needed in the keyed form). Groups
-    * where either sample is empty are dropped — D is undefined
-    * there, and emitting a null ratio would just defer the decision
-    * to the caller. */
-  def ksDriftBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    ksDriftByTail(byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, None)
-
-  /** The ONE keyed count stage of the drift-by family — the
-    * (group, value) twin of [[soloCounts]], nulls excluded. */
-  private def byCounts(df: DataFrame, groupCol: String,
-      valueCol: String, sampleCol: String, a: String,
-      b: String): DataFrame =
-    df.filter(col(sampleCol) === a || col(sampleCol) === b)
-      .filter(col(valueCol).isNotNull)
-      .groupBy(col(groupCol), col(valueCol))
-      .agg(sum(when(col(sampleCol) === a, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(sampleCol) === b, 1L).otherwise(0L)).as("__cb"))
-
-  /** Shared keyed totals: ≤|groups| rows, one-sample groups dropped
-    * (every keyed statistic is undefined there). */
-  private def byTotals(cnt: DataFrame, groupCol: String): DataFrame =
-    cnt.groupBy(col(groupCol))
-      .agg(sum(col("__ca")).as("n1"), sum(col("__cb")).as("n2"))
-      .filter(col("n1") > 0 && col("n2") > 0)
-      .select(col(groupCol).as("__tk"), col("n1"), col("n2"))
-
-  /** [[ksDriftBy]]'s tail over a pre-built keyed count frame; a
-    * caller composing several keyed statistics over the SAME frame
-    * (the per-segment drift report) passes shared GK `bounds` so the
-    * family pays ONE approxQuantile pass, not one per statistic. */
-  private def ksDriftByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String,
-      bounds: Option[Array[Double]]): DataFrame = {
-    val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
-      bounds)
-    cum.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
-      .drop("__tk")
-      .groupBy(col(groupCol))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        max(abs(col("__ia") * col("n2") - col("__ib") * col("n1")))
-          .as("d_num"))
-      .withColumn("ks_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * d_num) div " +
-          "(CAST(n1 AS DECIMAL(38,0)) * n2)"))
-  }
-
-  /** Two-sample Mann–Whitney U, EXACT — the rank-sum drift test
-    * beside [[ksDrift]] (KS sees the largest CDF gap; U sees the
-    * whole-distribution stochastic order). Tie handling is the
-    * textbook average rank, kept integral by working in HALF-UNITS:
-    * over the distinct values' combined cumulative counts,
-    * 2·ΣR_A = Σ cₐ·(2·prev + cₐ + c_b + 1) (prev = combined mass
-    * before the value), and 2U = 2·ΣR_A − n₁(n₁+1). The effect size
-    * u_micro = floor(10⁶·U / n₁n₂) is the common-language
-    * P(A > B) + ½P(A = B) in micros — u_micro = 500000 means no
-    * drift. Same plan as ksDrift: one per-value count aggregate, the
-    * skew-safe prefix sum over a constant key, a 1-row totals attach;
-    * products ride DECIMAL(38,0). Output: (n1, n2, u2, u_micro). */
-  def mannWhitneyU(df: DataFrame, valueCol: String, sampleCol: String,
-      a: String, b: String): DataFrame =
-    mannWhitneyUFromCounts(soloCounts(df, valueCol, sampleCol, a, b),
-      valueCol)
-
-  /** [[mannWhitneyU]]'s tail over a pre-built per-value count frame —
-    * the shared reduce for the in-query form and the persisted-
-    * reference probe ([[mannWhitneyUAgainstRef]]). */
-  private def mannWhitneyUFromCounts(cnt: DataFrame,
-      valueCol: String): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val cum = EventAnalytics.runningAggsSkewSafe(
-      cnt.withColumn("__g", lit(0)), "__g", valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")))
-    val totals = cnt.agg(sum(col("__ca")).as("n1"),
-      sum(col("__cb")).as("n2"))
-    cum
-      .withColumn("__r2", (col("__ca").cast(d38) *
-        (lit(2) * (col("__ia") - col("__ca") + col("__ib") - col("__cb"))
-          + col("__ca") + col("__cb") + 1)).cast(d38))
-      .agg(sum(col("__r2")).cast(d38).as("__r2a"))
-      .crossJoin(broadcast(totals)) // 1-row aggregate attach
-      .withColumn("u2", expr(
-        "CAST(__r2a - CAST(n1 AS DECIMAL(38,0)) * (n1 + 1) AS BIGINT)"))
-      .withColumn("u_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * u2) div " +
-          "(2 * CAST(n1 AS DECIMAL(38,0)) * n2)"))
-      .select(col("n1"), col("n2"), col("u2"), col("u_micro"))
-  }
-
-  /** Per-GROUP Mann–Whitney U — [[mannWhitneyU]] keyed on a segment
-    * column, completing the drift-by-segment pair with [[ksDriftBy]]:
-    * the same half-unit rank algebra per group, cumulative counts on
-    * the group-keyed prefix sum, ≤|groups| totals joined back (AQE
-    * broadcasts), one-sample groups dropped (U undefined). */
-  def mannWhitneyUBy(df: DataFrame, groupCol: String, valueCol: String,
-      sampleCol: String, a: String, b: String): DataFrame =
-    mannWhitneyUByTail(
-      byCounts(df, groupCol, valueCol, sampleCol, a, b),
-      groupCol, valueCol, None)
-
-  /** [[mannWhitneyUBy]]'s tail over a pre-built keyed count frame
-    * (shared GK `bounds` like [[ksDriftByTail]]). */
-  private def mannWhitneyUByTail(cnt: DataFrame, groupCol: String,
-      valueCol: String,
-      bounds: Option[Array[Double]]): DataFrame = {
-    val d38 = "decimal(38,0)"
-    val cum = EventAnalytics.runningAggsSkewSafe(cnt, groupCol, valueCol,
-      Seq(("__ca", "sum", "__ia"), ("__cb", "sum", "__ib")),
-      bounds)
-    cum.join(byTotals(cnt, groupCol), col(groupCol) === col("__tk"))
-      .drop("__tk")
-      .withColumn("__r2", (col("__ca").cast(d38) *
-        (lit(2) * (col("__ia") - col("__ca") + col("__ib") - col("__cb"))
-          + col("__ca") + col("__cb") + 1)).cast(d38))
-      .groupBy(col(groupCol))
-      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2"),
-        sum(col("__r2")).cast(d38).as("__r2a"))
-      .withColumn("u2", expr(
-        "CAST(__r2a - CAST(n1 AS DECIMAL(38,0)) * (n1 + 1) AS BIGINT)"))
-      .withColumn("u_micro", expr(
-        "(CAST(1000000 AS DECIMAL(38,0)) * u2) div " +
-          "(2 * CAST(n1 AS DECIMAL(38,0)) * n2)"))
-      .select(col(groupCol), col("n1"), col("n2"), col("u2"),
-        col("u_micro"))
-  }
-
   def groupOutliers(df: DataFrame, groupCol: String, idCols: Seq[String],
       valueCentiCol: String, z: Int): DataFrame = {
     val d38 = "decimal(38,0)"
@@ -2049,11 +1466,11 @@ object Profile {
     * positive class as sample a. One count aggregate + a sketch-sized
     * prefix; no sort of the data, no pairwise join. */
   def aucExact(df: DataFrame, scoreCol: String, labelCol: String): DataFrame =
-    mannWhitneyU(
+    mannWhitneyU(driftCounts(
       df.filter(col(labelCol).isNotNull) // family contract: null labels
         .select(col(scoreCol),           // are excluded, not negatives
           when(col(labelCol), "pos").otherwise("neg").as("__lbl")),
-      scoreCol, "__lbl", "pos", "neg")
+      scoreCol, "__lbl", "pos", "neg"), scoreCol)
       .select(col("n1").as("n_pos"), col("n2").as("n_neg"),
         col("u2"), col("u_micro").as("auc_micro"))
 
@@ -2064,11 +1481,12 @@ object Profile {
     * one-class groups dropped (AUC undefined). */
   def aucExactBy(df: DataFrame, groupCol: String, scoreCol: String,
       labelCol: String): DataFrame =
-    mannWhitneyUBy(
+    mannWhitneyU(driftCounts(
       df.filter(col(labelCol).isNotNull) // same null-label exclusion
         .select(col(groupCol), col(scoreCol), // as confusionAt/sweep
           when(col(labelCol), "pos").otherwise("neg").as("__lbl")),
-      groupCol, scoreCol, "__lbl", "pos", "neg")
+      scoreCol, "__lbl", "pos", "neg", Some(groupCol)),
+      scoreCol, Some(groupCol))
       .select(col(groupCol), col("n1").as("n_pos"),
         col("n2").as("n_neg"), col("u2"),
         col("u_micro").as("auc_micro"))

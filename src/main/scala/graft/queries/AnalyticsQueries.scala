@@ -1958,10 +1958,10 @@ object AnalyticsQueries {
     // where a float KS cannot. The source-distribution-shift monitor
     // (here: n_chars between src1 and src2).
     QuerySpec("q213_ks_drift",
-      (s, dir) => graft.ops.Profile.ksDrift(
+      (s, dir) => graft.ops.Profile.ksDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("n_chars"),
             col("source")),
-          "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2"), "n_chars")
         .select(col("n1"), col("n2"), col("d_num"), col("ks_micro")),
       Some(ksDriftOracleSql)),
 
@@ -1971,10 +1971,10 @@ object AnalyticsQueries {
     // n₁(n₁+1), effect size u_micro = floor(10⁶·U/n₁n₂) = the
     // common-language P(src1 > src2) + ½P(=) (500000 = no drift).
     QuerySpec("q214_mannwhitney",
-      (s, dir) => graft.ops.Profile.mannWhitneyU(
+      (s, dir) => graft.ops.Profile.mannWhitneyU(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("n_chars"),
             col("source")),
-          "n_chars", "source", "src1", "src2"),
+          "n_chars", "source", "src1", "src2"), "n_chars"),
       Some("""WITH c AS (SELECT n_chars AS v,
         |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
         |      AS BIGINT) AS ca,
@@ -2000,10 +2000,11 @@ object AnalyticsQueries {
     // dropped (D undefined). The cumulative counts ride the
     // prefix sum keyed on the group, totals join back ≤|groups|.
     QuerySpec("q215_ks_drift_by",
-      (s, dir) => graft.ops.Profile.ksDriftBy(
+      (s, dir) => graft.ops.Profile.ksDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("lang"),
             col("n_chars"), col("source")),
-          "lang", "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2", Some("lang")),
+          "n_chars", Some("lang"))
         .select(col("lang"), col("n1"), col("n2"), col("d_num"),
           col("ks_micro"))
         .orderBy(col("lang")),
@@ -2037,10 +2038,11 @@ object AnalyticsQueries {
     // completes the drift-by-segment pair with q215. Same half-unit
     // rank algebra per group; one-sample groups dropped.
     QuerySpec("q216_mannwhitney_by",
-      (s, dir) => graft.ops.Profile.mannWhitneyUBy(
+      (s, dir) => graft.ops.Profile.mannWhitneyU(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("lang"),
             col("n_chars"), col("source")),
-          "lang", "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2", Some("lang")),
+          "n_chars", Some("lang"))
         .select(col("lang"), col("n1"), col("n2"), col("u2"),
           col("u_micro"))
         .orderBy(col("lang")),
@@ -2110,10 +2112,10 @@ object AnalyticsQueries {
     // The Δv gaps ride the skew-safe LEAD (q217's op) over the same
     // constant-key prefix frame.
     QuerySpec("q218_emd_drift",
-      (s, dir) => graft.ops.Profile.emdDrift(
+      (s, dir) => graft.ops.Profile.emdDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("n_chars"),
             col("source")),
-          "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2"), "n_chars")
         .select(col("n1"), col("n2"), col("emd_num"),
           col("emd_micro")),
       Some("""WITH c AS (SELECT n_chars AS v,
@@ -2144,10 +2146,11 @@ object AnalyticsQueries {
     // sums and the Δv LEAD both keyed on the group; one-sample
     // groups dropped (W₁ undefined).
     QuerySpec("q219_emd_drift_by",
-      (s, dir) => graft.ops.Profile.emdDriftBy(
+      (s, dir) => graft.ops.Profile.emdDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("lang"),
             col("n_chars"), col("source")),
-          "lang", "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2", Some("lang")),
+          "n_chars", Some("lang"))
         .select(col("lang"), col("n1"), col("n2"), col("emd_num"),
           col("emd_micro"))
         .orderBy(col("lang")),
@@ -2186,10 +2189,10 @@ object AnalyticsQueries {
     // (chi-squared and PSI are not rational/log-free), one map-side-
     // combinable count aggregate, no prefix sums at all.
     QuerySpec("q220_tvd_drift",
-      (s, dir) => graft.ops.Profile.tvdDrift(
+      (s, dir) => graft.ops.Profile.tvdDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("lang"),
             col("source")),
-          "lang", "source", "src1", "src2")
+          "lang", "source", "src1", "src2"), "lang")
         .select(col("n1"), col("n2"), col("tvd_num"),
           col("tvd_micro")),
       Some("""WITH c AS (SELECT lang,
@@ -2210,11 +2213,12 @@ object AnalyticsQueries {
     // Per-group TVD (r12): label-mix drift per hectochar length
     // bucket — the keyed form, completing the categorical pair.
     QuerySpec("q221_tvd_drift_by",
-      (s, dir) => graft.ops.Profile.tvdDriftBy(
+      (s, dir) => graft.ops.Profile.tvdDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(
             expr("n_chars div 100").as("hchar_bucket"),
             col("lang"), col("source")),
-          "hchar_bucket", "lang", "source", "src1", "src2")
+          "lang", "source", "src1", "src2", Some("hchar_bucket")),
+          "lang", Some("hchar_bucket"))
         .select(col("hchar_bucket"), col("n1"), col("n2"),
           col("tvd_num"), col("tvd_micro"))
         .orderBy(col("hchar_bucket")),
@@ -2230,11 +2234,11 @@ object AnalyticsQueries {
     QuerySpec("q222_ks_drift_steady",
       (s, dir) => {
         val root = refDistRoot(s, dir)
-        graft.ops.Profile.ksDriftAgainstRef(
+        graft.ops.Profile.ksDrift(graft.ops.Profile.refProbeCounts(
             s.read.parquet(s"$root/ref"),
-            table(s, dir, "documents")
-              .filter(col("source") === "src2").select(col("n_chars")),
-            "n_chars")
+            graft.ops.Profile.distCounts(table(s, dir, "documents")
+              .filter(col("source") === "src2"), "n_chars"),
+            "n_chars"), "n_chars")
           .select(col("n1"), col("n2"), col("d_num"), col("ks_micro"))
       },
       Some(ksDriftOracleSql)),
@@ -2309,10 +2313,10 @@ object AnalyticsQueries {
     // (PlanSpec-asserted); the oracle shares one CTE chain the same
     // way.
     QuerySpec("q230_drift_report",
-      (s, dir) => graft.ops.Profile.driftReport(
+      (s, dir) => graft.ops.Profile.driftReport(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("n_chars"),
             col("source")),
-          "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2"), "n_chars")
         .orderBy(col("stat")),
       Some(driftReportOracleSql)),
 
@@ -2529,10 +2533,11 @@ object AnalyticsQueries {
     // row per (segment, statistic). The four keyed statistics share
     // identical count/prefix subplans, so AQE reuse pays for one.
     QuerySpec("q237_drift_report_by",
-      (s, dir) => graft.ops.Profile.driftReportBy(
+      (s, dir) => graft.ops.Profile.driftReport(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("lang"),
             col("n_chars"), col("source")),
-          "lang", "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2", Some("lang")),
+          "n_chars", Some("lang"))
         .orderBy(col("stat"), col("lang")),
       Some(driftReportByOracleSql))
   ) ++ lateSpecs
@@ -2826,10 +2831,10 @@ object AnalyticsQueries {
     // keeps every intermediate inside DECIMAL(38,0)/HUGEINT; t_micro
     // is the defined nested-floor both engines compute identically.
     QuerySpec("q227_cvm_drift",
-      (s, dir) => graft.ops.Profile.cvmDrift(
+      (s, dir) => graft.ops.Profile.cvmDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("n_chars"),
             col("source")),
-          "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2"), "n_chars")
         .select(col("n1"), col("n2"), col("t_micro")),
       Some("""WITH c AS (SELECT n_chars AS v,
         |    CAST(SUM(CASE WHEN source = 'src1' THEN 1 ELSE 0 END)
@@ -2864,10 +2869,11 @@ object AnalyticsQueries {
     // Per-group CvM (r12): q227 keyed on language — the by-segment
     // matrix now covers all four ordered statistics.
     QuerySpec("q228_cvm_drift_by",
-      (s, dir) => graft.ops.Profile.cvmDriftBy(
+      (s, dir) => graft.ops.Profile.cvmDrift(graft.ops.Profile.driftCounts(
           table(s, dir, "documents").select(col("lang"),
             col("n_chars"), col("source")),
-          "lang", "n_chars", "source", "src1", "src2")
+          "n_chars", "source", "src1", "src2", Some("lang")),
+          "n_chars", Some("lang"))
         .select(col("lang"), col("n1"), col("n2"), col("t_micro"))
         .orderBy(col("lang")),
       Some("""WITH c AS (SELECT lang, n_chars AS v,
@@ -2911,18 +2917,21 @@ object AnalyticsQueries {
     // one-call nightly monitor: the reference is never rescanned,
     // the probe costs one count aggregate, and KS/U/W₁/CvM all ride
     // the ONE merged count frame. Hash-identical to q230 by
-    // construction, so the oracle is shared verbatim. This single
-    // gate also covers the four solo AgainstRef forms:
-    // driftReportAgainstRefCounts calls their shared statistic
-    // tails on the same merged frame.
+    // construction, so the oracle is shared verbatim. The report
+    // runs the one formula of each ordered statistic — the code
+    // ksDrift, mannWhitneyU, emdDrift and cvmDrift run — over the
+    // refProbeCounts merge, so this gate also checks U, W₁ and CvM
+    // against a persisted reference (q222 checks KS's own columns;
+    // the solo TVD over the merge has no gate, q243 is its keyed
+    // form).
     QuerySpec("q238_drift_report_steady",
       (s, dir) => {
         val root = refDistRoot(s, dir)
-        graft.ops.Profile.driftReportAgainstRef(
+        graft.ops.Profile.driftReport(graft.ops.Profile.refProbeCounts(
             s.read.parquet(s"$root/ref"),
-            table(s, dir, "documents")
-              .filter(col("source") === "src2").select(col("n_chars")),
-            "n_chars")
+            graft.ops.Profile.distCounts(table(s, dir, "documents")
+              .filter(col("source") === "src2"), "n_chars"),
+            "n_chars"), "n_chars")
           .orderBy(col("stat"))
       },
       Some(driftReportOracleSql)),
@@ -3022,7 +3031,7 @@ object AnalyticsQueries {
 
     // KEYED steady-state drift report (r14, standing rule 1): q237's
     // per-segment four-statistic report with the src1 side answered
-    // from a persisted PER-SEGMENT count profile (distCountsBy —
+    // from a persisted PER-SEGMENT count profile (keyed distCounts —
     // ≤|groups|·|values| rows, built once when the reference
     // freezes) — the per-language nightly monitor: each batch pays
     // one (group, value) count aggregate, the merge is a full-outer
@@ -3034,12 +3043,11 @@ object AnalyticsQueries {
     QuerySpec("q242_drift_report_by_steady",
       (s, dir) => {
         val root = refDistByRoot(s, dir)
-        graft.ops.Profile.driftReportByAgainstRef(
+        graft.ops.Profile.driftReport(graft.ops.Profile.refProbeCounts(
             s.read.parquet(s"$root/ref"),
-            table(s, dir, "documents")
-              .filter(col("source") === "src2")
-              .select(col("lang"), col("n_chars")),
-            "lang", "n_chars")
+            graft.ops.Profile.distCounts(table(s, dir, "documents")
+              .filter(col("source") === "src2"), "n_chars", Some("lang")),
+            "n_chars", Some("lang")), "n_chars", Some("lang"))
           .orderBy(col("stat"), col("lang"))
       },
       Some(driftReportByOracleSql)),
@@ -3055,13 +3063,13 @@ object AnalyticsQueries {
     QuerySpec("q243_tvd_drift_by_steady",
       (s, dir) => {
         val root = refTvdByRoot(s, dir)
-        graft.ops.Profile.tvdDriftByAgainstRef(
+        graft.ops.Profile.tvdDrift(graft.ops.Profile.refProbeCounts(
             s.read.parquet(s"$root/ref"),
-            table(s, dir, "documents")
+            graft.ops.Profile.distCounts(table(s, dir, "documents")
               .filter(col("source") === "src2")
               .select(expr("n_chars div 100").as("hchar_bucket"),
-                col("lang")),
-            "hchar_bucket", "lang")
+                col("lang")), "lang", Some("hchar_bucket")),
+            "lang", Some("hchar_bucket")), "lang", Some("hchar_bucket"))
           .select(col("hchar_bucket"), col("n1"), col("n2"),
             col("tvd_num"), col("tvd_micro"))
           .orderBy(col("hchar_bucket"))
@@ -4401,15 +4409,15 @@ object AnalyticsQueries {
 
   /** Build-once persisted PER-SEGMENT reference count profile for
     * q242 (standing rule 1): the src1 (lang, n_chars) count frame
-    * ([[graft.ops.Profile.distCountsBy]]) — the keyed twin of
-    * [[refDistRoot]]; ≤ |langs|·|values| rows → coalesce(1). */
+    * ([[graft.ops.Profile.distCounts]] keyed on lang) — the keyed
+    * twin of [[refDistRoot]]; ≤ |langs|·|values| rows → coalesce(1). */
   private def refDistByRoot(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val fp = FixtureCache.fingerprint(s"$dir/documents.parquet")
     FixtureCache.ensure(s"/tmp/graft_ref_dist_by/${tag}_$fp") { tmp =>
-      graft.ops.Profile.distCountsBy(
+      graft.ops.Profile.distCounts(
           table(s, dir, "documents")
-            .filter(col("source") === "src1"), "lang", "n_chars")
+            .filter(col("source") === "src1"), "n_chars", Some("lang"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/ref")
     }
@@ -4536,12 +4544,12 @@ object AnalyticsQueries {
     val tag = dir.replaceAll("[^A-Za-z0-9.]+", "_")
     val fp = FixtureCache.fingerprint(s"$dir/documents.parquet")
     FixtureCache.ensure(s"/tmp/graft_ref_tvd_by/${tag}_$fp") { tmp =>
-      graft.ops.Profile.distCountsBy(
+      graft.ops.Profile.distCounts(
           table(s, dir, "documents")
             .filter(col("source") === "src1")
             .select(expr("n_chars div 100").as("hchar_bucket"),
               col("lang")),
-          "hchar_bucket", "lang")
+          "lang", Some("hchar_bucket"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/ref")
     }

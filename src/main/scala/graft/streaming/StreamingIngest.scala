@@ -372,7 +372,7 @@ object StreamingIngest {
   }
 
   /** Streaming DRIFT MONITOR — the readStream twin of the
-    * steady-state drift probe (`Profile.ksDriftAgainstRef`): per
+    * steady-state drift probe (`Profile.refProbeCounts`): per
     * micro-batch, the batch's values merge into a cumulative
     * per-value count state (exactly [[aggIngestBatch]] with the value
     * as the key and no agg columns — the same `_epoch` replay ledger
@@ -480,9 +480,9 @@ object StreamingIngest {
     * report — all four ordered statistics (KS/U/W₁/CvM) of
     * everything observed so far vs the frozen reference, off ONE
     * merged count frame and one shared prefix subplan
-    * (`Profile.driftReportAgainstRefCounts`; VERDICT r12 #4 — the
-    * nightly monitor is no longer one statistic wide): four
-    * `(epoch, stat, n1, n2, stat_micro)` rows per epoch. */
+    * (`Profile.driftReport` over `Profile.refProbeCounts`; VERDICT
+    * r12 #4 — the nightly monitor is no longer one statistic wide):
+    * four `(epoch, stat, n1, n2, stat_micro)` rows per epoch. */
   def driftMonitorBatch(batch: DataFrame, valueCol: String,
       refCounts: DataFrame, stateDir: String, monitorDir: String,
       epochId: Long): Unit = {
@@ -492,9 +492,10 @@ object StreamingIngest {
       batch.select(col(valueCol)).filter(col(valueCol).isNotNull),
       Seq(valueCol), Nil, Nil, Nil, stateDir, epochId)
     val observed = spark.read.parquet(s"$stateDir/current/state")
-      .select(col(valueCol), col("n").as("obs_n"))
+      .select(col(valueCol), col("n").as("ref_n"))
     graft.ops.Profile
-      .driftReportAgainstRefCounts(refCounts, observed, valueCol)
+      .driftReport(graft.ops.Profile.refProbeCounts(refCounts, observed,
+        valueCol), valueCol)
       .withColumn("epoch", lit(epochId))
       .select(col("epoch"), col("stat"), col("n1"), col("n2"),
         col("stat_micro"))
@@ -554,7 +555,7 @@ object StreamingIngest {
     * `(epoch, stat, group, n1, n2, stat_micro)` row per
     * (statistic, two-sided segment) — against the frozen
     * PER-SEGMENT reference profile
-    * ([[graft.ops.Profile.distCountsBy]]); segments the state has
+    * ([[graft.ops.Profile.distCounts]] keyed); segments the state has
     * not seen yet (or that the reference lacks) drop per the keyed
     * contract. State is ≤|groups|·|values|-sized; the reference is
     * never rescanned. */
@@ -582,10 +583,10 @@ object StreamingIngest {
         .filter(col(valueCol).isNotNull),
       Seq(groupCol, valueCol), Nil, Nil, Nil, stateDir, epochId)
     val observed = spark.read.parquet(s"$stateDir/current/state")
-      .select(col(groupCol), col(valueCol), col("n").as("obs_n"))
+      .select(col(groupCol), col(valueCol), col("n").as("ref_n"))
     graft.ops.Profile
-      .driftReportByAgainstRefCounts(refCounts, observed, groupCol,
-        valueCol)
+      .driftReport(graft.ops.Profile.refProbeCounts(refCounts, observed,
+        valueCol, Some(groupCol)), valueCol, Some(groupCol))
       .withColumn("epoch", lit(epochId))
       .select(col("epoch"), col("stat"), col(groupCol), col("n1"),
         col("n2"), col("stat_micro"))

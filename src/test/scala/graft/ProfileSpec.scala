@@ -15,6 +15,11 @@ import org.apache.spark.sql.functions.{col, lit}
 class ProfileSpec extends SparkSuite {
   import spark.implicits._
 
+  /** The drift kernel's count frame of samples A and B of `s` over
+    * `v` — the input every drift test below feeds its statistic. */
+  private def ab(df: DataFrame, group: Option[String] = None) =
+    Profile.driftCounts(df, "v", "s", "A", "B", group)
+
   test("profile: counts/nulls/distincts/min-max, native-type ordering") {
     val df = Seq(
       (Some(9L), Some("b")),
@@ -90,7 +95,7 @@ class ProfileSpec extends SparkSuite {
       "hand-computed mixed case with cross-sample ties") {
     def ks(rows: Seq[(Long, String)]) =
       withConf(ShufflePartitions -> "3") {
-        Profile.ksDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+        Profile.ksDrift(ab(rows.toDF("v", "s")), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).head
       }
@@ -113,7 +118,7 @@ class ProfileSpec extends SparkSuite {
       "and a brute-force pair count with ties") {
     def mw(rows: Seq[(Long, String)]) =
       withConf(ShufflePartitions -> "3") {
-        Profile.mannWhitneyU(rows.toDF("v", "s"), "v", "s", "A", "B")
+        Profile.mannWhitneyU(ab(rows.toDF("v", "s")), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).head
       }
@@ -148,13 +153,12 @@ class ProfileSpec extends SparkSuite {
       (1L to 9L).map(v => ("g3", v, "A")) // no B sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
     withConf(ShufflePartitions -> "3") {
-      val out = Profile.ksDriftBy(df, "g", "v", "s", "A", "B")
+      val out = Profile.ksDrift(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4)))).toMap
       assert(out.keySet == Set("g1", "g2"))
       for (g <- Seq("g1", "g2")) {
-        val solo = Profile.ksDrift(
-            df.filter(col("g") === g), "v", "s", "A", "B")
+        val solo = Profile.ksDrift(ab(df.filter(col("g") === g)), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).head
         assert(out(g) == solo, s"group $g disagrees with the solo op")
@@ -171,13 +175,12 @@ class ProfileSpec extends SparkSuite {
       (1L to 9L).map(v => ("g3", v, "B")) // no A sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
     withConf(ShufflePartitions -> "3") {
-      val out = Profile.mannWhitneyUBy(df, "g", "v", "s", "A", "B")
+      val out = Profile.mannWhitneyU(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4)))).toMap
       assert(out.keySet == Set("g1", "g2"))
       for (g <- Seq("g1", "g2")) {
-        val solo = Profile.mannWhitneyU(
-            df.filter(col("g") === g), "v", "s", "A", "B")
+        val solo = Profile.mannWhitneyU(ab(df.filter(col("g") === g)), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).head
         assert(out(g) == solo, s"group $g disagrees with the solo op")
@@ -226,7 +229,7 @@ class ProfileSpec extends SparkSuite {
       "with the same nested-floor on a planted frame") {
     def cvm(rows: Seq[(Long, String)]) =
       withConf(ShufflePartitions -> "3") {
-        Profile.cvmDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+        Profile.cvmDrift(ab(rows.toDF("v", "s")), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .head
       }
@@ -628,6 +631,53 @@ class ProfileSpec extends SparkSuite {
     assert(e.getMessage.contains("collide"))
   }
 
+  test("drift kernel matrix: for every statistic and the report, " +
+      "ref/probe counts ≡ in-query counts solo and keyed, each keyed " +
+      "row ≡ the solo statistic on its group, the one-sample group " +
+      "drops, and an empty sample B throws DIVIDE_BY_ZERO") {
+    // g1 shifted supports with ties, g2 small hand-sized samples,
+    // g3 sample A only
+    val rows = (1L to 12L).map(v => ("g1", v, "A")) ++
+      (6L to 15L).map(v => ("g1", v / 2 * 2, "B")) ++
+      Seq(3L, 3L, 7L, 9L).map(v => ("g2", v, "A")) ++
+      Seq(3L, 5L, 9L, 9L, 11L).map(v => ("g2", v, "B")) ++
+      (1L to 4L).map(v => ("g3", v, "A"))
+    val df = rows.toDF("g", "v", "s").repartition(4)
+    val (a, b) = (df.filter(col("s") === "A"), df.filter(col("s") === "B"))
+    val stats: Seq[(String, (DataFrame, String, Option[String]) => DataFrame)] =
+      Seq("ks" -> (Profile.ksDrift(_, _, _)),
+        "u" -> (Profile.mannWhitneyU(_, _, _)),
+        "w1" -> (Profile.emdDrift(_, _, _)),
+        "cvm" -> (Profile.cvmDrift(_, _, _)),
+        "tvd" -> (Profile.tvdDrift(_, _, _)),
+        "report" -> (Profile.driftReport(_, _, _)))
+    def rowSet(d: DataFrame) = d.collect().map(_.toSeq).toSet
+    // keyed rows by group, the group column cut out
+    def byGroup(d: DataFrame) = d.collect().toSeq.groupBy(_.getAs[String]("g"))
+      .map { case (g, rs) =>
+        g -> rs.map(r => r.toSeq.patch(r.fieldIndex("g"), Nil, 1)).toSet }
+    def rootCause(t: Throwable): String =
+      if (t.getCause == null) t.getMessage else rootCause(t.getCause)
+    withConf(ShufflePartitions -> "3") {
+      for ((name, stat) <- stats; group <- Seq(None, Some("g"))) {
+        val merged = Profile.refProbeCounts(Profile.distCounts(a, "v", group),
+          Profile.distCounts(b, "v", group), "v", group)
+        assert(rowSet(stat(merged, "v", group)) ==
+          rowSet(stat(ab(df, group), "v", group)), s"$name $group: (a)")
+      }
+      for ((name, stat) <- stats) {
+        val keyed = byGroup(stat(ab(df, Some("g")), "v", Some("g")))
+        assert(keyed.keySet == Set("g1", "g2"), s"$name: (c)")
+        for (g <- Seq("g1", "g2"))
+          assert(keyed(g) ==
+            rowSet(stat(ab(df.filter(col("g") === g)), "v", None)),
+            s"$name $g: (b)")
+        val e = intercept[Exception](stat(ab(a), "v", None).collect())
+        assert(rootCause(e).contains("DIVIDE_BY_ZERO"), s"$name: (d)")
+      }
+    }
+  }
+
   test("drift family: null values are excluded — solo forms see the " +
       "same frame as the distCounts-probed steady forms") {
     val rows: Seq[(java.lang.Long, String)] =
@@ -638,17 +688,18 @@ class ProfileSpec extends SparkSuite {
     val withNulls = rows.toDF("v", "s")
     val clean = withNulls.filter(col("v").isNotNull)
     def one(d: org.apache.spark.sql.DataFrame) = d.collect().head.toSeq
-    assert(one(Profile.ksDrift(withNulls, "v", "s", "A", "B")) ==
-      one(Profile.ksDrift(clean, "v", "s", "A", "B")))
-    assert(one(Profile.tvdDrift(withNulls, "v", "s", "A", "B")) ==
-      one(Profile.tvdDrift(clean, "v", "s", "A", "B")))
+    assert(one(Profile.ksDrift(ab(withNulls), "v")) ==
+      one(Profile.ksDrift(ab(clean), "v")))
+    assert(one(Profile.tvdDrift(ab(withNulls), "v")) ==
+      one(Profile.tvdDrift(ab(clean), "v")))
     // and solo ≡ steady on the SAME nullful input (the ADVICE claim)
     val ref = Profile.distCounts(
       withNulls.filter(col("s") === "A"), "v")
-    val steady = Profile.ksDriftAgainstRef(ref,
-      withNulls.filter(col("s") === "B").select(col("v")), "v")
+    val steady = Profile.ksDrift(Profile.refProbeCounts(ref,
+      Profile.distCounts(withNulls.filter(col("s") === "B"), "v"), "v"),
+      "v")
     assert(one(steady) ==
-      one(Profile.ksDrift(withNulls, "v", "s", "A", "B")))
+      one(Profile.ksDrift(ab(withNulls), "v")))
   }
 
   test("steady-state quartet: U/W1/CvM/TVD against a persisted " +
@@ -659,21 +710,24 @@ class ProfileSpec extends SparkSuite {
     val ref = Profile.distCounts(df.filter(col("s") === "A"), "v")
     val probe = df.filter(col("s") === "B").select(col("v"))
     def one(d: org.apache.spark.sql.DataFrame) = d.collect().head.toSeq
-    assert(one(Profile.mannWhitneyUAgainstRef(ref, probe, "v")) ==
-      one(Profile.mannWhitneyU(df, "v", "s", "A", "B")))
-    assert(one(Profile.emdDriftAgainstRef(ref, probe, "v")) ==
-      one(Profile.emdDrift(df, "v", "s", "A", "B")))
-    assert(one(Profile.cvmDriftAgainstRef(ref, probe, "v")) ==
-      one(Profile.cvmDrift(df, "v", "s", "A", "B")))
-    assert(one(Profile.tvdDriftAgainstRef(ref, probe, "v")) ==
-      one(Profile.tvdDrift(df, "v", "s", "A", "B")))
+    val merged = Profile.refProbeCounts(ref, Profile.distCounts(probe, "v"),
+      "v")
+    assert(one(Profile.mannWhitneyU(merged, "v")) ==
+      one(Profile.mannWhitneyU(ab(df), "v")))
+    assert(one(Profile.emdDrift(merged, "v")) ==
+      one(Profile.emdDrift(ab(df), "v")))
+    assert(one(Profile.cvmDrift(merged, "v")) ==
+      one(Profile.cvmDrift(ab(df), "v")))
+    assert(one(Profile.tvdDrift(merged, "v")) ==
+      one(Profile.tvdDrift(ab(df), "v")))
     // the one-call monitor report ≡ the in-query report
     val obs = probe.groupBy(col("v"))
       .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("obs_n"))
-    val repSteady = Profile.driftReportAgainstRefCounts(ref, obs, "v")
+        org.apache.spark.sql.functions.lit(1)).as("ref_n"))
+    val repSteady = Profile.driftReport(Profile.refProbeCounts(ref, obs,
+        "v"), "v")
       .collect().map(r => (r.getString(0), r.toSeq.tail)).toMap
-    val repSolo = Profile.driftReport(df, "v", "s", "A", "B")
+    val repSolo = Profile.driftReport(ab(df), "v")
       .collect().map(r => (r.getString(0), r.toSeq.tail)).toMap
     assert(repSteady == repSolo)
   }
@@ -689,23 +743,25 @@ class ProfileSpec extends SparkSuite {
       (1L to 10L).map(v => ("g3", v, "A")) ++
       (1L to 10L).map(v => ("g4", v, "B"))
     val df = rows.toDF("g", "v", "s").repartition(6)
-    val ref = Profile.distCountsBy(df.filter(col("s") === "A"),
-      "g", "v")
+    val ref = Profile.distCounts(df.filter(col("s") === "A"), "v",
+      Some("g"))
     val probe = df.filter(col("s") === "B").select(col("g"), col("v"))
+    val merged = Profile.refProbeCounts(ref,
+      Profile.distCounts(probe, "v", Some("g")), "v", Some("g"))
     val (steady, inQuery) = withConf(ShufflePartitions -> "3") {
-      (Profile.driftReportByAgainstRef(ref, probe, "g", "v")
+      (Profile.driftReport(merged, "v", Some("g"))
         .collect().map(r => ((r.getString(0), r.getString(1)),
           r.toSeq.drop(2))).toMap,
-       Profile.driftReportBy(df, "g", "v", "s", "A", "B")
+       Profile.driftReport(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => ((r.getString(0), r.getString(1)),
           r.toSeq.drop(2))).toMap)
     }
     assert(steady == inQuery)
     assert(steady.keySet.map(_._2) == Set("g1", "g2")) // one-sided drop
     // the categorical keyed steady form rides the same merge
-    val tvdSteady = Profile.tvdDriftByAgainstRef(ref, probe, "g", "v")
+    val tvdSteady = Profile.tvdDrift(merged, "v", Some("g"))
       .collect().map(r => (r.getString(0), r.toSeq.tail)).toMap
-    val tvdInQuery = Profile.tvdDriftBy(df, "g", "v", "s", "A", "B")
+    val tvdInQuery = Profile.tvdDrift(ab(df, Some("g")), "v", Some("g"))
       .collect().map(r => (r.getString(0), r.toSeq.tail)).toMap
     assert(tvdSteady == tvdInQuery)
     assert(tvdSteady.keySet == Set("g1", "g2"))
@@ -831,17 +887,17 @@ class ProfileSpec extends SparkSuite {
       (21L to 60L).map(v => (v, "B"))
     val df = rows.toDF("v", "s").repartition(7)
     withConf(ShufflePartitions -> "3") {
-      val rep = Profile.driftReport(df, "v", "s", "A", "B")
+      val rep = Profile.driftReport(ab(df), "v")
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(3)))).toMap
       assert(rep.keySet == Set("ks", "u", "w1", "cvm"))
-      val ks = Profile.ksDrift(df, "v", "s", "A", "B").collect().head
+      val ks = Profile.ksDrift(ab(df), "v").collect().head
       assert(rep("ks") == (ks.getLong(0), ks.getLong(1), ks.getLong(3)))
-      val u = Profile.mannWhitneyU(df, "v", "s", "A", "B").collect().head
+      val u = Profile.mannWhitneyU(ab(df), "v").collect().head
       assert(rep("u") == (u.getLong(0), u.getLong(1), u.getLong(3)))
-      val w1 = Profile.emdDrift(df, "v", "s", "A", "B").collect().head
+      val w1 = Profile.emdDrift(ab(df), "v").collect().head
       assert(rep("w1") == (w1.getLong(0), w1.getLong(1), w1.getLong(3)))
-      val cvm = Profile.cvmDrift(df, "v", "s", "A", "B").collect().head
+      val cvm = Profile.cvmDrift(ab(df), "v").collect().head
       assert(rep("cvm") == (cvm.getLong(0), cvm.getLong(1),
         cvm.getLong(2)))
     }
@@ -854,15 +910,15 @@ class ProfileSpec extends SparkSuite {
       (1L to 30L).flatMap(v => Seq(("g2", v, "A"), ("g2", v, "B")))
     val df = rows.toDF("g", "v", "s").repartition(7)
     withConf(ShufflePartitions -> "3") {
-      val rep = Profile.driftReportBy(df, "g", "v", "s", "A", "B")
+      val rep = Profile.driftReport(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => ((r.getString(0), r.getString(1)),
           (r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
       assert(rep.keySet.map(_._1) == Set("ks", "u", "w1", "cvm"))
-      val ks = Profile.ksDriftBy(df, "g", "v", "s", "A", "B")
+      val ks = Profile.ksDrift(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(4)))).toMap
       for ((g, v) <- ks) assert(rep(("ks", g)) == v)
-      val cvm = Profile.cvmDriftBy(df, "g", "v", "s", "A", "B")
+      val cvm = Profile.cvmDrift(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(3)))).toMap
       for ((g, v) <- cvm) assert(rep(("cvm", g)) == v)
@@ -880,14 +936,13 @@ class ProfileSpec extends SparkSuite {
       (1L to 9L).map(v => ("g3", v, "A")) // no B sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
     withConf(ShufflePartitions -> "3") {
-      val out = Profile.cvmDriftBy(df, "g", "v", "s", "A", "B")
+      val out = Profile.cvmDrift(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(3)))).toMap
       assert(out.keySet == Set("g1", "g2"))
       assert(out("g2")._3 == 0L) // identical samples: no drift
       for (g <- Seq("g1", "g2")) {
-        val solo = Profile.cvmDrift(
-            df.filter(col("g") === g), "v", "s", "A", "B")
+        val solo = Profile.cvmDrift(ab(df.filter(col("g") === g)), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .head
         assert(out(g) == solo, s"group $g disagrees with the solo op")
@@ -957,11 +1012,12 @@ class ProfileSpec extends SparkSuite {
     val refCounts = Profile.distCounts(
       both.filter(col("s") === "A").select(col("v")), "v")
     withConf(ShufflePartitions -> "3") {
-      val inQuery = Profile.ksDrift(both, "v", "s", "A", "B")
+      val inQuery = Profile.ksDrift(ab(both), "v")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).head
-      val steady = Profile.ksDriftAgainstRef(refCounts,
-          both.filter(col("s") === "B").select(col("v")), "v")
+      val steady = Profile.ksDrift(Profile.refProbeCounts(refCounts,
+          Profile.distCounts(both.filter(col("s") === "B"), "v"), "v"),
+          "v")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).head
       assert(steady == inQuery)
@@ -971,7 +1027,7 @@ class ProfileSpec extends SparkSuite {
   test("tvdDrift: identical → 0, disjoint → 10⁶, hand-computed mix; " +
       "tvdDriftBy ≡ solo per group + one-sample drop") {
     def tvd(rows: Seq[(String, String)]) =
-      Profile.tvdDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+      Profile.tvdDrift(ab(rows.toDF("v", "s")), "v")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).head
     // identical category mix: TVD = 0
@@ -992,7 +1048,7 @@ class ProfileSpec extends SparkSuite {
       Seq("x", "y").flatMap(v => Seq(("g2", v, "A"), ("g2", v, "B"))) ++
       Seq(("g3", "x", "B")) // no A sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(5)
-    val out = Profile.tvdDriftBy(df, "g", "v", "s", "A", "B")
+    val out = Profile.tvdDrift(ab(df, Some("g")), "v", Some("g"))
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))).toMap
     assert(out.keySet == Set("g1", "g2"))
@@ -1010,14 +1066,13 @@ class ProfileSpec extends SparkSuite {
       (1L to 9L).map(v => ("g3", v, "A")) // no B sample → dropped
     val df = rows.toDF("g", "v", "s").repartition(7)
     withConf(ShufflePartitions -> "3") {
-      val out = Profile.emdDriftBy(df, "g", "v", "s", "A", "B")
+      val out = Profile.emdDrift(ab(df, Some("g")), "v", Some("g"))
         .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4)))).toMap
       assert(out.keySet == Set("g1", "g2"))
       assert(out("g2")._4 == 7000000L) // the shift reads exactly
       for (g <- Seq("g1", "g2")) {
-        val solo = Profile.emdDrift(
-            df.filter(col("g") === g), "v", "s", "A", "B")
+        val solo = Profile.emdDrift(ab(df.filter(col("g") === g)), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).head
         assert(out(g) == solo, s"group $g disagrees with the solo op")
@@ -1029,7 +1084,7 @@ class ProfileSpec extends SparkSuite {
       "shift, and a hand-computed mixed case") {
     def emd(rows: Seq[(Long, String)]) =
       withConf(ShufflePartitions -> "3") {
-        Profile.emdDrift(rows.toDF("v", "s"), "v", "s", "A", "B")
+        Profile.emdDrift(ab(rows.toDF("v", "s")), "v")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
             r.getLong(3))).head
       }

@@ -136,16 +136,21 @@ class StreamingSpec extends SparkSuite {
     assert(e0.keySet == Set("ks", "u", "w1", "cvm"))
     // each epoch's report == the four batch ops on the cumulative
     // prefix (the steady forms are spec-pinned ≡ the solo forms in
-    // ProfileSpec, so pinning vs AgainstRef pins the whole chain)
-    def expect(vs: Seq[Long]) = Map(
-      "ks" -> { val r = Profile.ksDriftAgainstRef(ref, vs.toDF("v"),
-        "v").collect().head; (r.getLong(0), r.getLong(1), r.getLong(3)) },
-      "u" -> { val r = Profile.mannWhitneyUAgainstRef(ref, vs.toDF("v"),
-        "v").collect().head; (r.getLong(0), r.getLong(1), r.getLong(3)) },
-      "w1" -> { val r = Profile.emdDriftAgainstRef(ref, vs.toDF("v"),
-        "v").collect().head; (r.getLong(0), r.getLong(1), r.getLong(3)) },
-      "cvm" -> { val r = Profile.cvmDriftAgainstRef(ref, vs.toDF("v"),
-        "v").collect().head; (r.getLong(0), r.getLong(1), r.getLong(2)) })
+    // ProfileSpec, so pinning vs the merged counts pins the whole
+    // chain)
+    def expect(vs: Seq[Long]) = {
+      val c = Profile.refProbeCounts(ref,
+        Profile.distCounts(vs.toDF("v"), "v"), "v")
+      Map(
+        "ks" -> { val r = Profile.ksDrift(c, "v").collect().head
+          (r.getLong(0), r.getLong(1), r.getLong(3)) },
+        "u" -> { val r = Profile.mannWhitneyU(c, "v").collect().head
+          (r.getLong(0), r.getLong(1), r.getLong(3)) },
+        "w1" -> { val r = Profile.emdDrift(c, "v").collect().head
+          (r.getLong(0), r.getLong(1), r.getLong(3)) },
+        "cvm" -> { val r = Profile.cvmDrift(c, "v").collect().head
+          (r.getLong(0), r.getLong(1), r.getLong(2)) })
+    }
     assert(e0 == expect(b1))
     assert(e1 == expect(b1 ++ b2))
     assert(e1("ks")._3 > e0("ks")._3,
@@ -169,7 +174,7 @@ class StreamingSpec extends SparkSuite {
     val refRows = (1L to 40L).map(("g1", _)) ++
       (1L to 40L).map(v => ("g2", v * 2)) ++
       (1L to 5L).map(("g3", _))
-    val ref = Profile.distCountsBy(refRows.toDF("g", "v"), "g", "v")
+    val ref = Profile.distCounts(refRows.toDF("g", "v"), "v", Some("g"))
       .cache()
     val b1 = (11L to 50L).map(("g1", _)) ++
       (21L to 60L).map(v => ("g2", v * 2))
@@ -194,8 +199,9 @@ class StreamingSpec extends SparkSuite {
     // epoch 1 added g4 (probe-only) — still only g1/g2 report
     assert(e1.keySet == e0.keySet)
     def expect(vs: Seq[(String, Long)]) =
-      rep(Profile.driftReportByAgainstRef(ref, vs.toDF("g", "v"),
-        "g", "v"))
+      rep(Profile.driftReport(Profile.refProbeCounts(ref,
+        Profile.distCounts(vs.toDF("g", "v"), "v", Some("g")), "v",
+        Some("g")), "v", Some("g")))
     assert(e0 == expect(b1))
     assert(e1 == expect(b1 ++ b2))
     // replayed last epoch: ledger no-ops, overwrite idempotent

@@ -7,10 +7,14 @@ Each file is the stdout of `graft.GateCensus`: one JSON line per gate.
 For every gate present in only one file, or whose `plan`, `dump_sort`,
 `windows`, `eager_jobs`, `jobs`, `shuffle_bytes` or `error` differ, one
 line `<gate> <field>[,<field>...]` is printed (`missing` for a gate in
-only one file). Seconds are ignored: they vary from run to run. The
-last line is the number of such gates. Exits 0.
+only one file). When the plans differ, the line ends with the number of
+exchange nodes (`Exchange` and `BroadcastExchange`; a reused exchange is
+not counted) in each masked plan, e.g. `q215 plan (exchanges 7→6)`.
+Seconds are ignored: they vary from run to run. The last line is the
+number of such gates. Exits 0.
 """
 import json
+import re
 import sys
 
 FIELDS = ("plan", "dump_sort", "windows", "eager_jobs", "jobs",
@@ -23,6 +27,11 @@ def census(path):
         return {r["gate"]: r for r in recs}
 
 
+def exchanges(plan):
+    """Exchange nodes of a formatted plan, counted on its node details."""
+    return len(re.findall(r"^\(\d+\) (?:Broadcast)?Exchange\b", plan, re.M))
+
+
 def main():
     a, b = census(sys.argv[1]), census(sys.argv[2])
     moved = 0
@@ -33,7 +42,11 @@ def main():
             fields = [f for f in FIELDS if a[g].get(f) != b[g].get(f)]
         if fields:
             moved += 1
-            print(g, ",".join(fields))
+            note = ""
+            if "plan" in fields:
+                note = (f" (exchanges {exchanges(a[g]['plan'])}"
+                        f"→{exchanges(b[g]['plan'])})")
+            print(g, ",".join(fields) + note)
     print(f"{moved} gates differ")
 
 
