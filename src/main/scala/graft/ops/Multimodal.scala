@@ -214,60 +214,21 @@ object Multimodal {
     * gate (the generator controls the bytes, so the oracle re-derives
     * the attributes arithmetically) and a real writer of valid
     * (header-only) PNG streams. */
-  def encodePng(width: Int, height: Int, colorType: Int, bitDepth: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    PngSig.foreach(out.write)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      val len = data.length
-      out.write((len >>> 24) & 0xff); out.write((len >>> 16) & 0xff)
-      out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-      val typeAndData = typ.getBytes("US-ASCII") ++ data
-      out.write(typeAndData, 0, typeAndData.length)
-      val crc = new java.util.zip.CRC32()
-      crc.update(typeAndData)
-      val c = crc.getValue
-      out.write(((c >>> 24) & 0xff).toInt); out.write(((c >>> 16) & 0xff).toInt)
-      out.write(((c >>> 8) & 0xff).toInt); out.write((c & 0xff).toInt)
-    }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = ((width >>> 24) & 0xff).toByte; ihdr(1) = ((width >>> 16) & 0xff).toByte
-    ihdr(2) = ((width >>> 8) & 0xff).toByte; ihdr(3) = (width & 0xff).toByte
-    ihdr(4) = ((height >>> 24) & 0xff).toByte; ihdr(5) = ((height >>> 16) & 0xff).toByte
-    ihdr(6) = ((height >>> 8) & 0xff).toByte; ihdr(7) = (height & 0xff).toByte
-    ihdr(8) = bitDepth.toByte; ihdr(9) = colorType.toByte
-    ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0 // deflate, adaptive, no interlace
-    chunk("IHDR", ihdr)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
+  def encodePng(width: Int, height: Int, colorType: Int, bitDepth: Int): Array[Byte] =
+    PngSig.map(_.toByte) ++
+      pngChunk("IHDR", pngIhdr(width, height, bitDepth, colorType)) ++
+      pngChunk("IEND", Array.emptyByteArray)
 
   /** Minimal spec-conformant JPEG: SOI + APP0/JFIF + SOF0 + EOI. The
     * APP0 segment is deliberate — a parser that doesn't walk marker
     * segments properly trips on it before reaching the SOF. */
   def encodeJpeg(width: Int, height: Int, nComp: Int, precision: Int = 8): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xff); out.write(0xd8) // SOI
-    // APP0 "JFIF\0" v1.02, no density, no thumbnail (len = 16)
-    out.write(0xff); out.write(0xe0); out.write(0); out.write(16)
-    out.write("JFIF".getBytes("US-ASCII"), 0, 4); out.write(0)
-    out.write(1); out.write(2); out.write(0)
-    out.write(0); out.write(1); out.write(0); out.write(1)
-    out.write(0); out.write(0)
-    // SOF0: len = 8 + 3*Nf
-    out.write(0xff); out.write(0xc0)
-    val len = 8 + 3 * nComp
-    out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-    out.write(precision)
-    out.write((height >>> 8) & 0xff); out.write(height & 0xff)
-    out.write((width >>> 8) & 0xff); out.write(width & 0xff)
-    out.write(nComp)
-    (1 to nComp).foreach { c =>
-      out.write(c)    // component id
-      out.write(0x11) // 1x1 sampling
-      out.write(if (c == 1) 0 else 1) // quant table
-    }
-    out.write(0xff); out.write(0xd9) // EOI
-    out.toByteArray
+    val jw = new JpegWriter
+    // APP0 "JFIF\0" v1.02, no density, no thumbnail
+    jw.seg(0xe0, "JFIF".map(_.toInt) ++ Seq(0, 1, 2, 0, 0, 1, 0, 1, 0, 0))
+    jw.sof(0xc0, precision, width, height,
+      (1 to nComp).map(c => (0x11, if (c == 1) 0 else 1)))
+    jw.bytes
   }
 
   // -------------------------------------------------------------------
@@ -438,6 +399,13 @@ object Multimodal {
       if (acc == 0xff) out.write(0x00)
       acc = 0; nbits = 0
     }
+    /** The Huffman code of `sym` in table `t`. */
+    def putSym(t: JpegHuff, sym: Int): Unit =
+      put(t.encCode(sym), t.encLen(sym))
+    /** The `t` additional bits of `v` (§F.1.2.1: negatives as
+      * v + 2ᵗ − 1); nothing when t = 0. */
+    def putVal(v: Int, t: Int): Unit =
+      if (t > 0) put(if (v >= 0) v else v + (1 << t) - 1, t)
   }
 
   /** DC/AC magnitude category (T.81 Table F.1): bits needed for |v|;
@@ -447,14 +415,14 @@ object Multimodal {
 
   /** MSB-first entropy-segment bit reader (§F.2.2.5 NEXTBIT): byte
     * unstuffing (0xFF 0x00 → 0xFF), any other marker mid-entropy →
-    * `truncated`, Huffman decode via MINCODE/MAXCODE, and the
-    * §F.2.2.1 EXTEND sign extension. The progressive scan decoder's
-    * reader (r19) — one instance per scan, `p` resuming the marker
-    * walk when the scan's blocks are exhausted. */
+    * `truncated`, Huffman decode via MINCODE/MAXCODE, the §F.2.2.1
+    * EXTEND sign extension, and the RSTm check. One instance per
+    * scan, `p` resuming the marker walk when the scan's blocks are
+    * exhausted. */
   private final class JpegBitReader(b: Array[Byte], var p: Int) {
     var acc = 0; var nb = 0
     var err: String = null
-    def alignByte(): Unit = nb = 0
+    private var rst = 0
     def nextBit(): Int = {
       if (nb == 0) {
         if (p >= b.length) { err = "truncated"; return -1 }
@@ -481,11 +449,7 @@ object Multimodal {
       err = "bad_huffman"; -1
     }
     def receiveExtend(t: Int): Int = {
-      var v = 0; var i = 0
-      while (i < t) {
-        val bit = nextBit(); if (bit < 0) return 0
-        v = (v << 1) | bit; i += 1
-      }
+      val v = receive(t)
       if (t > 0 && v < (1 << (t - 1))) v - (1 << t) + 1 else v
     }
     /** Raw `t`-bit receive WITHOUT sign extension (EOBn run length
@@ -498,694 +462,415 @@ object Multimodal {
       }
       v
     }
+    /** §F.2.2.5 restart: drop the pad bits, then expect RSTm with m
+      * cycling 0..7 — `truncated` when the stream ends first,
+      * `bad_huffman` when anything else stands there. */
+    def restart(): Boolean = {
+      nb = 0
+      if (p + 1 >= b.length) err = "truncated"
+      else if ((b(p) & 0xff) != 0xff || (b(p + 1) & 0xff) != 0xd0 + rst)
+        err = "bad_huffman"
+      else { p += 2; rst = (rst + 1) % 8 }
+      err == null
+    }
   }
 
-  /** COMPLETE baseline JPEG encoder from QUANTIZED COEFFICIENTS:
-    * SOI + DQT (8-bit, zigzag order) + SOF0 (greyscale, precision 8)
-    * + DHT (the Annex K.3 typical pair) + optional DRI + SOS + a real
-    * entropy-coded segment (DC difference coding, AC run/size with
-    * ZRL and EOB, byte stuffing, RSTm cycling) + EOI. `quant(u,v)` ∈
-    * [1,255] in natural frequency order (u horizontal); `coeff(blk,
-    * u, v)` is the QUANTIZED value of block `blk` (raster order over
-    * the ceil(w/8)×ceil(h/8) grid), |coeff| ≤ 1023 (the 10-bit AC /
-    * 11-bit DC-diff range the typical tables encode). This is the
-    * fixture source for the q337-family gates: the generator controls
-    * the coefficients, so the oracle re-derives every decoded pixel
-    * arithmetically without parsing a byte. */
-  def encodeJpegGrayCoeffs(width: Int, height: Int,
-      quant: (Int, Int) => Int, coeff: (Int, Int, Int) => Int,
-      restartInterval: Int = 0): Array[Byte] = {
-    require(width > 0 && width <= 0xffff && height > 0 &&
-      height <= 0xffff, "encodeJpegGrayCoeffs: dims must be 1..65535")
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, body: Array[Int]): Unit = {
-      marker(m); val len = body.length + 2
-      out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-      body.foreach(v => out.write(v & 0xff))
-    }
-    marker(0xd8)
-    val q = new Array[Int](64)
-    for (k <- 0 until 64) {
-      val n = zigzag(k); val qv = quant(n % 8, n / 8)
-      require(qv >= 1 && qv <= 255,
-        s"encodeJpegGrayCoeffs: quant $qv outside 8-bit DQT range")
-      q(k) = qv
-    }
-    seg(0xdb, 0 +: q) // Pq=0 Tq=0
-    seg(0xc0, Array(8, (height >>> 8) & 0xff, height & 0xff,
-      (width >>> 8) & 0xff, width & 0xff, 1, 1, 0x11, 0))
-    seg(0xc4, 0x00 +: (jDcBits ++ jDcVals))
-    seg(0xc4, 0x10 +: (jAcBits ++ jAcVals))
-    if (restartInterval > 0)
-      seg(0xdd, Array((restartInterval >>> 8) & 0xff,
-        restartInterval & 0xff))
-    seg(0xda, Array(1, 1, 0x00, 0, 63, 0))
-    val dc = buildHuff(jDcBits, jDcVals).get
-    val ac = buildHuff(jAcBits, jAcVals).get
-    val bw = new JBitWriter(out)
-    def putSym(t: JpegHuff, sym: Int): Unit =
-      bw.put(t.encCode(sym), t.encLen(sym))
-    def putVal(v: Int, t: Int): Unit =
-      if (t > 0) bw.put(if (v >= 0) v else v + (1 << t) - 1, t)
-    val bxN = (width + 7) / 8; val byN = (height + 7) / 8
-    var pred = 0; var rst = 0; var blk = 0
-    val total = bxN * byN
-    while (blk < total) {
-      if (restartInterval > 0 && blk > 0 && blk % restartInterval == 0) {
-        bw.flush()
-        marker(0xd0 + rst); rst = (rst + 1) % 8
-        pred = 0
-      }
-      val z = new Array[Int](64)
-      for (k <- 0 until 64) {
-        val n = zigzag(k)
-        val v = coeff(blk, n % 8, n / 8)
-        // DC legitimately spans T.81's 8-bit range [-1024, 1016]
-        // (DC-diff category ≤ 11 covers ±2047, so any diff of two
-        // in-range DCs encodes); ACs carry the 10-bit AC-table range
-        // (ADVICE r18: an all-black pixel encode quantizes DC to
-        // exactly -1024 — rejecting it crashed a legal input)
-        if (k == 0) require(v >= -1024 && v <= 1016,
-          s"encodeJpegGrayCoeffs: DC $v outside [-1024, 1016]")
-        else require(v >= -1023 && v <= 1023,
-          s"encodeJpegGrayCoeffs: coeff $v outside the 10-bit range")
-        z(k) = v
-      }
-      val diff = z(0) - pred; pred = z(0)
-      val t = jCategory(diff)
-      putSym(dc, t); putVal(diff, t)
-      var k = 1
-      while (k < 64) {
-        if (z(k) == 0) {
-          var e = k
-          while (e < 64 && z(e) == 0) e += 1
-          if (e == 64) { putSym(ac, 0x00); k = 64 } // EOB
-          else {
-            var run = e - k
-            while (run > 15) { putSym(ac, 0xf0); run -= 16 } // ZRL
-            val s = jCategory(z(e))
-            putSym(ac, (run << 4) | s); putVal(z(e), s)
-            k = e + 1
-          }
-        } else {
-          val s = jCategory(z(k))
-          putSym(ac, s); putVal(z(k), s)
-          k += 1
-        }
-      }
-      blk += 1
-    }
-    bw.flush()
-    marker(0xd9)
-    out.toByteArray
+  /** T.81 §A.2 block geometry of a `w`×`h` frame whose components
+    * sample at `hs`×`vs`: the MCU grid and, per component, its TRUE
+    * block grid (what a scan of that component alone walks), stored
+    * raster over the MCU-padded grid `padW(c)` blocks wide. A lone
+    * component samples 1×1 whatever the SOF says: its MCU is one
+    * block (§A.2.2). */
+  private final class JpegGeom(w: Int, h: Int, hs: Array[Int],
+      vs: Array[Int]) {
+    val ch: Array[Int] = if (hs.length == 1) Array(1) else hs
+    val cv: Array[Int] = if (vs.length == 1) Array(1) else vs
+    private val hmax = ch.max; private val vmax = cv.max
+    val mcuX: Int = (w + 8 * hmax - 1) / (8 * hmax)
+    val mcuY: Int = (h + 8 * vmax - 1) / (8 * vmax)
+    def padW(c: Int): Int = mcuX * ch(c)
+    def padH(c: Int): Int = mcuY * cv(c)
+    def trueW(c: Int): Int = ((w * ch(c) + hmax - 1) / hmax + 7) / 8
+    def trueH(c: Int): Int = ((h * cv(c) + vmax - 1) / vmax + 7) / 8
   }
 
-  /** PROGRESSIVE (SOF2, spectral selection) greyscale JPEG encoder
-    * from quantized coefficients (r19): the same frame parameters and
-    * coefficient contract as [[encodeJpegGrayCoeffs]], but the
-    * entropy data ships as ONE DC scan (Ss = Se = 0) followed by one
-    * AC scan per `bands` entry (1 ≤ Ss ≤ Se ≤ 63, §G.1.1.1.1), with
-    * real §G.1.2.2 EOBn run coding — consecutive blocks whose band is
-    * entirely zero collapse into one EOBn symbol (run ≤ 32767) — ZRL
-    * inside blocks, per-scan RSTm resync (DRI counts blocks in
-    * non-interleaved scans), successive approximation not emitted
-    * (Ah = Al = 0). Bands need not cover 1..63 (uncovered
-    * coefficients decode as zero — progressive's defining property);
-    * the q359 fixture covers fully so the decode pins bit-for-bit to
-    * the sequential container of the SAME coefficients. */
-  def encodeJpegGrayProgressiveCoeffs(width: Int, height: Int,
-      quant: (Int, Int) => Int, coeff: (Int, Int, Int) => Int,
-      restartInterval: Int = 0,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63)),
-      approxLow: Int = 0): Array[Byte] = {
-    require(width > 0 && width <= 0xffff && height > 0 &&
-      height <= 0xffff, "encodeJpegGrayProgressiveCoeffs: dims 1..65535")
-    require(bands.forall { case (ss, se) =>
-      ss >= 1 && se >= ss && se <= 63 },
-      "encodeJpegGrayProgressiveCoeffs: bands must satisfy 1<=Ss<=Se<=63")
-    require(approxLow >= 0 && approxLow <= 10,
-      "encodeJpegGrayProgressiveCoeffs: approxLow must be 0..10")
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, body: Array[Int]): Unit = {
-      marker(m); val len = body.length + 2
-      out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-      body.foreach(v => out.write(v & 0xff))
+  /** One scan's block order (the encoder's and the decoder's): a lone
+    * component raster over its true grid (§A.2.2), several
+    * interleaved per MCU, h×v blocks each in raster order (§A.2.3).
+    * `block(c, blk)` gets the block's index in component c's padded
+    * grid; `restart()` runs before every `ri`-th unit (block or MCU).
+    * Stops at the first false either returns. */
+  private def walkScan(g: JpegGeom, cs: Array[Int], ri: Int)(
+      restart: () => Boolean)(block: (Int, Int) => Boolean): Unit = {
+    val lone = cs.length == 1
+    val tw = g.trueW(cs(0))
+    val units = if (lone) tw * g.trueH(cs(0)) else g.mcuX * g.mcuY
+    var ok = true; var i = 0
+    while (ok && i < units) {
+      if (ri > 0 && i > 0 && i % ri == 0) ok = restart()
+      if (ok && lone) ok = block(cs(0), (i / tw) * g.padW(cs(0)) + i % tw)
+      else if (ok) {
+        val mx = i % g.mcuX; val my = i / g.mcuX
+        for (c <- cs; v2 <- 0 until g.cv(c); h2 <- 0 until g.ch(c))
+          if (ok) ok = block(c,
+            (my * g.cv(c) + v2) * g.padW(c) + mx * g.ch(c) + h2)
+      }
+      i += 1
     }
-    marker(0xd8)
-    val q = new Array[Int](64)
-    for (k <- 0 until 64) {
-      val n = zigzag(k); val qv = quant(n % 8, n / 8)
-      require(qv >= 1 && qv <= 255,
-        s"encodeJpegGrayProgressiveCoeffs: quant $qv outside DQT range")
-      q(k) = qv
-    }
-    seg(0xdb, 0 +: q)
-    seg(0xc2, Array(8, (height >>> 8) & 0xff, height & 0xff,
-      (width >>> 8) & 0xff, width & 0xff, 1, 1, 0x11, 0))
-    seg(0xc4, 0x00 +: (jDcBits ++ jDcVals))
-    // progressive AC coding needs EOBn symbols the Annex K table
-    // cannot hold — ship the [[jAcProgBits]] table instead
-    seg(0xc4, 0x10 +: (jAcProgBits ++ jAcProgVals))
-    if (restartInterval > 0)
-      seg(0xdd, Array((restartInterval >>> 8) & 0xff,
-        restartInterval & 0xff))
-    val dc = buildHuff(jDcBits, jDcVals).get
-    val ac = buildHuff(jAcProgBits, jAcProgVals).get
-    val bxN = (width + 7) / 8; val byN = (height + 7) / 8
-    val total = bxN * byN
-    // zigzag-order coefficient fetch, validated once (the same DC/AC
-    // split as the sequential encoder)
-    def zOf(blk: Int, k: Int): Int = {
+  }
+
+  /** One frame component of the coefficient encoders: sampling
+    * `h`×`v` (1..4), quant table `tq`, and `coeff(blk, u, v)`, the
+    * QUANTIZED coefficient of block `blk` raster over the component's
+    * MCU-padded block grid (`mcuX·h` blocks wide), u horizontal. DC
+    * spans T.81's 8-bit [-1024, 1016] — an all-black pixel encode
+    * quantizes DC to exactly -1024 (ADVICE r18) — and ACs the 10-bit
+    * ±1023 the Annex K tables code. */
+  final case class JpegComp(h: Int, v: Int, tq: Int,
+      coeff: (Int, Int, Int) => Int)
+
+  /** A frame for the coefficient encoders: DQT tables `quants`
+    * (`quant(u, v)` ∈ [1, 255], natural order, table id = position)
+    * and `comps` in SOF order (component id = position + 1). */
+  final case class JpegFrame(quants: Seq[(Int, Int) => Int],
+      comps: Seq[JpegComp]) {
+    require(comps.nonEmpty && comps.length <= 4, "JPEG: 1..4 components")
+    require(comps.forall(c => c.h >= 1 && c.h <= 4 && c.v >= 1 &&
+      c.v <= 4 && quants.indices.contains(c.tq)),
+      "JPEG: sampling must be 1..4 and tq a table index")
+
+    /** Zigzag coefficient `k` of block `blk` of component `c`. */
+    private[Multimodal] def z(c: Int, blk: Int, k: Int): Int = {
       val n = zigzag(k)
-      val v = coeff(blk, n % 8, n / 8)
+      val v = comps(c).coeff(blk, n % 8, n / 8)
       if (k == 0) require(v >= -1024 && v <= 1016,
-        s"encodeJpegGrayProgressiveCoeffs: DC $v outside [-1024, 1016]")
+        s"JPEG: DC $v outside [-1024, 1016]")
       else require(v >= -1023 && v <= 1023,
-        s"encodeJpegGrayProgressiveCoeffs: coeff $v outside 10-bit range")
+        s"JPEG: coeff $v outside the 10-bit range")
       v
     }
-    // ---- DC first scan (point transform = approxLow) ----
-    seg(0xda, Array(1, 1, 0x00, 0, 0, approxLow))
-    locally {
-      val bw = new JBitWriter(out)
-      var pred = 0; var rst = 0; var blk = 0
-      while (blk < total) {
-        if (restartInterval > 0 && blk > 0 &&
-          blk % restartInterval == 0) {
-          bw.flush(); marker(0xd0 + rst); rst = (rst + 1) % 8
-          pred = 0
-        }
-        // §G.1.2.1: DC point transform is an ARITHMETIC shift — the
-        // refinement bit then reconstructs negatives exactly via the
-        // two's-complement OR on the decode side
-        val v = zOf(blk, 0) >> approxLow
-        val diff = v - pred; pred = v
-        val t = jCategory(diff)
-        bw.put(dc.encCode(t), dc.encLen(t))
-        if (t > 0) bw.put(if (diff >= 0) diff else diff + (1 << t) - 1, t)
-        blk += 1
-      }
-      bw.flush()
-    }
-    // ---- AC first scans, one per band (point transform sign·(|v|>>Al)) ----
-    for ((ss, se) <- bands) {
-      seg(0xda, Array(1, 1, 0x00, ss, se, approxLow))
-      val bw = new JBitWriter(out)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val n = 31 - Integer.numberOfLeadingZeros(eobrun)
-        bw.put(ac.encCode(n << 4), ac.encLen(n << 4))
-        if (n > 0) bw.put(eobrun - (1 << n), n)
-        eobrun = 0
-      }
-      var rst = 0; var blk = 0
-      while (blk < total) {
-        if (restartInterval > 0 && blk > 0 &&
-          blk % restartInterval == 0) {
-          flushEob(); bw.flush()
-          marker(0xd0 + rst); rst = (rst + 1) % 8
-        }
-        val z = Array.tabulate(se - ss + 1) { i =>
-          val v = zOf(blk, ss + i)
-          if (v >= 0) v >> approxLow else -((-v) >> approxLow)
-        }
-        if (z.forall(_ == 0)) {
-          eobrun += 1
-          if (eobrun == 32767) flushEob() // §G.1.2.2 run cap
-        } else {
-          flushEob()
-          var k = 0
-          while (k < z.length) {
-            var e = k
-            while (e < z.length && z(e) == 0) e += 1
-            if (e == z.length) { eobrun = 1; k = z.length }
-            else {
-              var run = e - k
-              while (run > 15) {
-                bw.put(ac.encCode(0xf0), ac.encLen(0xf0)); run -= 16
-              }
-              val s = jCategory(z(e))
-              val sym = (run << 4) | s
-              bw.put(ac.encCode(sym), ac.encLen(sym))
-              bw.put(if (z(e) >= 0) z(e) else z(e) + (1 << s) - 1, s)
-              k = e + 1
-            }
-          }
-        }
-        blk += 1
-      }
-      flushEob(); bw.flush()
-    }
-    // ---- successive-approximation refinements, one bit plane per
-    // pass (Ah = a + 1 → Al = a), DC then the AC bands — §G.1.2.1 /
-    // §G.1.2.3 with correction bits buffered across EOB runs ----
-    var a = approxLow - 1
-    while (a >= 0) {
-      // DC refinement: one raw bit per block — bit `a` of the value
-      seg(0xda, Array(1, 1, 0x00, 0, 0, ((a + 1) << 4) | a))
-      locally {
-        val bw = new JBitWriter(out)
-        var rst = 0; var blk = 0
-        while (blk < total) {
-          if (restartInterval > 0 && blk > 0 &&
-            blk % restartInterval == 0) {
-            bw.flush(); marker(0xd0 + rst); rst = (rst + 1) % 8
-          }
-          bw.put((zOf(blk, 0) >> a) & 1, 1)
-          blk += 1
-        }
-        bw.flush()
-      }
-      for ((ss, se) <- bands) {
-        seg(0xda, Array(1, 1, 0x00, ss, se, ((a + 1) << 4) | a))
-        val bw = new JBitWriter(out)
-        // TWO correction-bit buffers (the §G.1.2.3 emission order the
-        // decoder's advance loop implies): `beBits` ride with the
-        // pending EOB run and are emitted right after its EOBn
-        // symbol; `brBits` are the CURRENT block's corrections and
-        // follow the next new-significant symbol's sign bit (or roll
-        // into the run if the block ends without one)
-        var eobrun = 0
-        val beBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-        val brBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def emitEobrun(): Unit = {
-          if (eobrun > 0) {
-            val n = 31 - Integer.numberOfLeadingZeros(eobrun)
-            bw.put(ac.encCode(n << 4), ac.encLen(n << 4))
-            if (n > 0) bw.put(eobrun - (1 << n), n)
-            eobrun = 0
-          }
-          beBits.foreach(bit => bw.put(bit, 1))
-          beBits.clear()
-        }
-        def emitBr(): Unit = {
-          brBits.foreach(bit => bw.put(bit, 1))
-          brBits.clear()
-        }
-        var rst = 0; var blk = 0
-        while (blk < total) {
-          if (restartInterval > 0 && blk > 0 &&
-            blk % restartInterval == 0) {
-            emitEobrun(); bw.flush()
-            marker(0xd0 + rst); rst = (rst + 1) % 8
-          }
-          val vs = Array.tabulate(se - ss + 1)(i => zOf(blk, ss + i))
-          val absv = vs.map(v => (if (v < 0) -v else v) >> a)
-          // last newly-significant position: zeros beyond it fold
-          // into the EOB run instead of ZRLs
-          val eobPos = absv.lastIndexWhere(_ == 1)
-          var r = 0
-          var i = 0
-          while (i < absv.length) {
-            val t = absv(i)
-            if (t == 0) r += 1
-            else {
-              // the ZRL flush runs at EVERY nonzero position — before
-              // the correction-buffer branch — so the buffered bits
-              // stay a positional PREFIX of what the decoder's next
-              // advance consumes (emitting it only at new-significant
-              // positions would desync corrections across ZRLs)
-              while (r > 15 && i <= eobPos) {
-                emitEobrun()
-                bw.put(ac.encCode(0xf0), ac.encLen(0xf0)); r -= 16
-                emitBr()
-              }
-              if (t > 1) brBits += (t & 1) // correction bit
-              else { // newly significant (this scan's bit is its MSB)
-                emitEobrun()
-                val sym = (r << 4) | 1
-                bw.put(ac.encCode(sym), ac.encLen(sym))
-                bw.put(if (vs(i) >= 0) 1 else 0, 1) // sign bit
-                emitBr()
-                r = 0
-              }
-            }
-            i += 1
-          }
-          if (r > 0 || brBits.nonEmpty) {
-            eobrun += 1
-            beBits ++= brBits; brBits.clear()
-            // run cap (§G.1.2.2) and the libjpeg-style buffered-bit
-            // cap, so neither state grows unbounded
-            if (eobrun == 32767 || beBits.length > 937) emitEobrun()
-          }
-          blk += 1
-        }
-        emitEobrun(); bw.flush()
-      }
-      a -= 1
-    }
-    marker(0xd9)
-    out.toByteArray
   }
 
-  /** PROGRESSIVE COLOR (SOF2, 3 components) encoder from quantized
-    * coefficients (r19): the [[encodeJpegColorCoeffs]] frame geometry
-    * (luma hy×vy, chroma 1×1, two DQTs) with a progressive scan
-    * script — ONE interleaved DC scan (the only legal interleaved
-    * form, §G.1), then per-component non-interleaved AC band scans
-    * (luma bands from `bands`, each chroma as one 1..63 band), then
-    * `approxLow` bit-plane refinement passes over the same script.
-    * Restart intervals deliberately not emitted (the greyscale
-    * encoder covers RST paths). Same per-component coefficient
-    * conventions as the sequential color encoder, so the q363
-    * fixture shares q346's formulas verbatim. */
-  def encodeJpegColorProgressiveCoeffs(width: Int, height: Int,
-      hy: Int, vy: Int, quantY: (Int, Int) => Int,
-      quantC: (Int, Int) => Int, coeffY: (Int, Int, Int) => Int,
-      coeffC: (Int, Int, Int, Int) => Int,
-      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63)),
-      approxLow: Int = 0): Array[Byte] = {
-    require(width > 0 && width <= 0xffff && height > 0 &&
-      height <= 0xffff, "encodeJpegColorProgressiveCoeffs: dims")
-    require(hy >= 1 && hy <= 4 && vy >= 1 && vy <= 4,
-      "encodeJpegColorProgressiveCoeffs: luma sampling 1..4")
-    require(bands.forall { case (ss, se) =>
-      ss >= 1 && se >= ss && se <= 63 },
-      "encodeJpegColorProgressiveCoeffs: bands 1<=Ss<=Se<=63")
-    require(approxLow >= 0 && approxLow <= 10,
-      "encodeJpegColorProgressiveCoeffs: approxLow 0..10")
-    val out = new java.io.ByteArrayOutputStream()
+  object JpegFrame {
+    /** One greyscale component, `coeff` raster over the
+      * ceil(w/8)×ceil(h/8) grid. */
+    def gray(quant: (Int, Int) => Int,
+        coeff: (Int, Int, Int) => Int): JpegFrame =
+      JpegFrame(Seq(quant), Seq(JpegComp(1, 1, 0, coeff)))
+
+    /** YCbCr: luma at `hy`×`vy` (2×2 is 4:2:0, 2×1 4:2:2, 1×1 4:4:4)
+      * on table 0, both chroma 1×1 on table 1; `coeffC(comp, mcu, u,
+      * v)` with comp ∈ {1, 2} indexes chroma blocks by MCU. */
+    def ycc(hy: Int, vy: Int, quantY: (Int, Int) => Int,
+        quantC: (Int, Int) => Int, coeffY: (Int, Int, Int) => Int,
+        coeffC: (Int, Int, Int, Int) => Int): JpegFrame =
+      JpegFrame(Seq(quantY, quantC), JpegComp(hy, vy, 0, coeffY) +:
+        Seq(1, 2).map(c =>
+          JpegComp(1, 1, 1, (m: Int, u: Int, v: Int) => coeffC(c, m, u, v))))
+  }
+
+  private lazy val jDcHuff = buildHuff(jDcBits, jDcVals).get
+  private lazy val jAcHuff = buildHuff(jAcBits, jAcVals).get
+  private lazy val jAcProgHuff = buildHuff(jAcProgBits, jAcProgVals).get
+
+  /** The JPEG frame writer: SOI on construction, one method per
+    * marker segment, entropy-coded scans, EOI in `bytes`. */
+  private final class JpegWriter {
+    private val out = new java.io.ByteArrayOutputStream()
+    private val bits = new JBitWriter(out)
+    marker(0xd8)
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, body: Array[Int]): Unit = {
+    def seg(m: Int, body: Seq[Int]): Unit = {
       marker(m); val len = body.length + 2
       out.write((len >>> 8) & 0xff); out.write(len & 0xff)
       body.foreach(v => out.write(v & 0xff))
     }
-    marker(0xd8)
-    def dqt(tq: Int, quant: (Int, Int) => Int): Unit = {
-      val q = new Array[Int](64)
-      for (k <- 0 until 64) {
+    def dqt(tq: Int, quant: (Int, Int) => Int): Unit =
+      seg(0xdb, tq +: Seq.tabulate(64) { k =>
         val n = zigzag(k); val qv = quant(n % 8, n / 8)
         require(qv >= 1 && qv <= 255,
-          s"encodeJpegColorProgressiveCoeffs: quant $qv out of range")
-        q(k) = qv
-      }
-      seg(0xdb, tq +: q)
+          s"JPEG: quant $qv outside 8-bit DQT range")
+        qv
+      })
+    /** SOFn; `comps` are (sampling byte, quant table) in id order. */
+    def sof(m: Int, precision: Int, width: Int, height: Int,
+        comps: Seq[(Int, Int)]): Unit =
+      seg(m, Seq(precision, (height >>> 8) & 0xff, height & 0xff,
+        (width >>> 8) & 0xff, width & 0xff, comps.length) ++
+        comps.zipWithIndex.flatMap { case ((hv, tq), i) =>
+          Seq(i + 1, hv, tq) })
+    def dht(tcth: Int, counts: Array[Int], vals: Array[Int]): Unit =
+      seg(0xc4, tcth +: (counts.toSeq ++ vals))
+    def dri(ri: Int): Unit = seg(0xdd, Seq((ri >>> 8) & 0xff, ri & 0xff))
+    /** SOS over components `cs` (frame indices, all on tables 0/0),
+      * band Ss..Se, approximation byte `ahal`, then the blocks in
+      * [[walkScan]] order through `coder`, RSTm every `ri` units. */
+    def scan(g: JpegGeom, ri: Int, cs: Array[Int], ss: Int, se: Int,
+        ahal: Int, coder: ScanCoder): Unit = {
+      seg(0xda, (cs.length +: cs.toSeq.flatMap(c => Seq(c + 1, 0x00))) ++
+        Seq(ss, se, ahal))
+      var rst = 0
+      walkScan(g, cs, ri) { () =>
+        coder.end(bits); bits.flush()
+        marker(0xd0 + rst); rst = (rst + 1) % 8
+        true
+      } { (c, blk) => coder.block(bits, c, blk); true }
+      coder.end(bits); bits.flush()
     }
-    dqt(0, quantY); dqt(1, quantC)
-    seg(0xc2, Array(8, (height >>> 8) & 0xff, height & 0xff,
-      (width >>> 8) & 0xff, width & 0xff, 3,
-      1, (hy << 4) | vy, 0, 2, 0x11, 1, 3, 0x11, 1))
-    seg(0xc4, 0x00 +: (jDcBits ++ jDcVals))
-    seg(0xc4, 0x10 +: (jAcProgBits ++ jAcProgVals))
-    val dc = buildHuff(jDcBits, jDcVals).get
-    val ac = buildHuff(jAcProgBits, jAcProgVals).get
-    val mcuX = (width + 8 * hy - 1) / (8 * hy)
-    val mcuY = (height + 8 * vy - 1) / (8 * vy)
-    val lumaW = mcuX * hy
-    val trueBxN = (width + 7) / 8; val trueByN = (height + 7) / 8
-    // zigzag fetch with the sequential encoders' DC/AC validation
-    def zY(blk: Int, k: Int): Int = {
-      val n = zigzag(k); val v = coeffY(blk, n % 8, n / 8)
-      if (k == 0) require(v >= -1024 && v <= 1016, s"DC $v")
-      else require(v >= -1023 && v <= 1023, s"AC $v")
-      v
-    }
-    def zC(comp: Int)(m: Int, k: Int): Int = {
-      val n = zigzag(k); val v = coeffC(comp, m, n % 8, n / 8)
-      if (k == 0) require(v >= -1024 && v <= 1016, s"DC $v")
-      else require(v >= -1023 && v <= 1023, s"AC $v")
-      v
-    }
-    // ---- interleaved DC scan (first or refinement) ----
-    def dcScan(ah: Int, al: Int): Unit = {
-      seg(0xda, Array(3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 0,
-        (ah << 4) | al))
-      val bw = new JBitWriter(out)
-      val preds = new Array[Int](3)
-      var m = 0
-      val total = mcuX * mcuY
-      while (m < total) {
-        val mx = m % mcuX; val my = m / mcuX
-        def put(ci: Int, v0: Int): Unit =
-          if (ah == 0) {
-            val v = v0 >> al // arithmetic point transform (§G.1.2.1)
-            val diff = v - preds(ci); preds(ci) = v
-            val t = jCategory(diff)
-            bw.put(dc.encCode(t), dc.encLen(t))
-            if (t > 0)
-              bw.put(if (diff >= 0) diff else diff + (1 << t) - 1, t)
-          } else bw.put((v0 >> al) & 1, 1)
-        for (v2 <- 0 until vy; h2 <- 0 until hy)
-          put(0, zY((my * vy + v2) * lumaW + (mx * hy + h2), 0))
-        put(1, zC(1)(m, 0)); put(2, zC(2)(m, 0))
-        m += 1
-      }
-      bw.flush()
-    }
-    // ---- non-interleaved AC band scan, first pass ----
-    def acFirst(cs: Int, ss: Int, se: Int, al: Int, nBlk: Int,
-        zf: (Int, Int) => Int): Unit = {
-      seg(0xda, Array(1, cs, 0x00, ss, se, al))
-      val bw = new JBitWriter(out)
-      var eobrun = 0
-      def flushEob(): Unit = if (eobrun > 0) {
-        val n = 31 - Integer.numberOfLeadingZeros(eobrun)
-        bw.put(ac.encCode(n << 4), ac.encLen(n << 4))
-        if (n > 0) bw.put(eobrun - (1 << n), n)
-        eobrun = 0
-      }
-      var blk = 0
-      while (blk < nBlk) {
-        val z = Array.tabulate(se - ss + 1) { i =>
-          val v = zf(blk, ss + i)
-          if (v >= 0) v >> al else -((-v) >> al)
-        }
-        if (z.forall(_ == 0)) {
-          eobrun += 1
-          if (eobrun == 32767) flushEob()
-        } else {
-          flushEob()
-          var k = 0
-          while (k < z.length) {
-            var e = k
-            while (e < z.length && z(e) == 0) e += 1
-            if (e == z.length) { eobrun = 1; k = z.length }
-            else {
-              var run = e - k
-              while (run > 15) {
-                bw.put(ac.encCode(0xf0), ac.encLen(0xf0)); run -= 16
-              }
-              val sv = jCategory(z(e))
-              val sym = (run << 4) | sv
-              bw.put(ac.encCode(sym), ac.encLen(sym))
-              bw.put(if (z(e) >= 0) z(e) else z(e) + (1 << sv) - 1, sv)
-              k = e + 1
-            }
-          }
-        }
-        blk += 1
-      }
-      flushEob(); bw.flush()
-    }
-    // ---- non-interleaved AC band scan, refinement pass ----
-    def acRefine(cs: Int, ss: Int, se: Int, a: Int, nBlk: Int,
-        zf: (Int, Int) => Int): Unit = {
-      seg(0xda, Array(1, cs, 0x00, ss, se, ((a + 1) << 4) | a))
-      val bw = new JBitWriter(out)
-      var eobrun = 0
-      val beBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val brBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      def emitEobrun(): Unit = {
-        if (eobrun > 0) {
-          val n = 31 - Integer.numberOfLeadingZeros(eobrun)
-          bw.put(ac.encCode(n << 4), ac.encLen(n << 4))
-          if (n > 0) bw.put(eobrun - (1 << n), n)
-          eobrun = 0
-        }
-        beBits.foreach(bit => bw.put(bit, 1))
-        beBits.clear()
-      }
-      def emitBr(): Unit = {
-        brBits.foreach(bit => bw.put(bit, 1))
-        brBits.clear()
-      }
-      var blk = 0
-      while (blk < nBlk) {
-        val vs = Array.tabulate(se - ss + 1)(i => zf(blk, ss + i))
-        val absv = vs.map(v => (if (v < 0) -v else v) >> a)
-        val eobPos = absv.lastIndexWhere(_ == 1)
-        var r = 0
-        var i = 0
-        while (i < absv.length) {
-          val t = absv(i)
-          if (t == 0) r += 1
-          else {
-            while (r > 15 && i <= eobPos) {
-              emitEobrun()
-              bw.put(ac.encCode(0xf0), ac.encLen(0xf0)); r -= 16
-              emitBr()
-            }
-            if (t > 1) brBits += (t & 1)
-            else {
-              emitEobrun()
-              val sym = (r << 4) | 1
-              bw.put(ac.encCode(sym), ac.encLen(sym))
-              bw.put(if (vs(i) >= 0) 1 else 0, 1)
-              emitBr()
-              r = 0
-            }
-          }
-          i += 1
-        }
-        if (r > 0 || brBits.nonEmpty) {
-          eobrun += 1
-          beBits ++= brBits; brBits.clear()
-          if (eobrun == 32767 || beBits.length > 937) emitEobrun()
-        }
-        blk += 1
-      }
-      emitEobrun(); bw.flush()
-    }
-    // luma AC scans enumerate the TRUE ceil grid, fetching from the
-    // MCU-padded raster coeffY indexes (the decoder's mapping)
-    def zYTrue(blk: Int, k: Int): Int =
-      zY((blk / trueBxN) * lumaW + (blk % trueBxN), k)
-    val nChroma = mcuX * mcuY
-    // first passes
-    dcScan(0, approxLow)
-    for ((ss, se) <- bands)
-      acFirst(1, ss, se, approxLow, trueBxN * trueByN, zYTrue)
-    acFirst(2, 1, 63, approxLow, nChroma, zC(1))
-    acFirst(3, 1, 63, approxLow, nChroma, zC(2))
-    // refinement passes, one bit plane per pass
-    var a = approxLow - 1
-    while (a >= 0) {
-      dcScan(a + 1, a)
-      for ((ss, se) <- bands)
-        acRefine(1, ss, se, a, trueBxN * trueByN, zYTrue)
-      acRefine(2, 1, 63, a, nChroma, zC(1))
-      acRefine(3, 1, 63, a, nChroma, zC(2))
-      a -= 1
-    }
-    marker(0xd9)
-    out.toByteArray
+    def bytes: Array[Byte] = { marker(0xd9); out.toByteArray }
   }
 
-  /** COMPLETE baseline COLOR JPEG encoder from quantized coefficients
-    * (r18): SOF0 with Nf = 3 — luma at (hy × vy) sampling, both
-    * chroma at 1×1 (hy = vy = 2 is 4:2:0; hy = 2, vy = 1 is 4:2:2;
-    * 1×1 is 4:4:4) — two DQT tables (luma id 0, chroma id 1), the
-    * Annex-K DHT pair shared by every component, and an INTERLEAVED
-    * entropy-coded segment: per MCU, hy·vy luma blocks (raster within
-    * the MCU) then one Cb and one Cr block, per-component DC
-    * predictors, RSTm every `restartInterval` MCUs. `coeffY(blk, u,
-    * v)` indexes luma blocks raster over the mcuX·hy grid (the
-    * decoder's blit order — for full-image luma this matches
-    * [[encodeJpegGrayCoeffs]]'s convention whenever width/height are
-    * MCU-aligned); `coeffC(comp, mcu, u, v)` with comp ∈ {1, 2}
-    * indexes chroma blocks by MCU. Fixture source for the q346 gate:
-    * the decoder must recover EXACTLY the luma the coefficients
-    * define, regardless of how much chroma it walks past. */
-  def encodeJpegColorCoeffs(width: Int, height: Int, hy: Int, vy: Int,
-      quantY: (Int, Int) => Int, quantC: (Int, Int) => Int,
-      coeffY: (Int, Int, Int) => Int,
-      coeffC: (Int, Int, Int, Int) => Int,
-      restartInterval: Int = 0): Array[Byte] = {
-    require(width > 0 && width <= 0xffff && height > 0 &&
-      height <= 0xffff, "encodeJpegColorCoeffs: dims must be 1..65535")
-    require(hy >= 1 && hy <= 4 && vy >= 1 && vy <= 4,
-      "encodeJpegColorCoeffs: luma sampling must be 1..4")
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def seg(m: Int, body: Array[Int]): Unit = {
-      marker(m); val len = body.length + 2
-      out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-      body.foreach(v => out.write(v & 0xff))
-    }
-    marker(0xd8)
-    def dqt(tq: Int, quant: (Int, Int) => Int): Unit = {
-      val q = new Array[Int](64)
-      for (k <- 0 until 64) {
-        val n = zigzag(k); val qv = quant(n % 8, n / 8)
-        require(qv >= 1 && qv <= 255,
-          s"encodeJpegColorCoeffs: quant $qv outside 8-bit DQT range")
-        q(k) = qv
-      }
-      seg(0xdb, tq +: q)
-    }
-    dqt(0, quantY); dqt(1, quantC)
-    seg(0xc0, Array(8, (height >>> 8) & 0xff, height & 0xff,
-      (width >>> 8) & 0xff, width & 0xff, 3,
-      1, (hy << 4) | vy, 0, // Y: full-res luma, table 0
-      2, 0x11, 1, // Cb: 1x1, table 1
-      3, 0x11, 1)) // Cr
-    seg(0xc4, 0x00 +: (jDcBits ++ jDcVals))
-    seg(0xc4, 0x10 +: (jAcBits ++ jAcVals))
-    if (restartInterval > 0)
-      seg(0xdd, Array((restartInterval >>> 8) & 0xff,
-        restartInterval & 0xff))
-    seg(0xda, Array(3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0))
-    val dc = buildHuff(jDcBits, jDcVals).get
-    val ac = buildHuff(jAcBits, jAcVals).get
-    val bw = new JBitWriter(out)
-    def putSym(t: JpegHuff, sym: Int): Unit =
-      bw.put(t.encCode(sym), t.encLen(sym))
-    def putVal(v: Int, t: Int): Unit =
-      if (t > 0) bw.put(if (v >= 0) v else v + (1 << t) - 1, t)
-    def putBlock(coeff: (Int, Int) => Int, pred: Int): Int = {
-      val z = new Array[Int](64)
-      for (k <- 0 until 64) {
-        val n = zigzag(k)
-        val v = coeff(n % 8, n / 8)
-        // same DC/AC split as the greyscale encoder (ADVICE r18):
-        // DC ∈ [-1024, 1016] is legal T.81, ACs keep the 10-bit range
-        if (k == 0) require(v >= -1024 && v <= 1016,
-          s"encodeJpegColorCoeffs: DC $v outside [-1024, 1016]")
-        else require(v >= -1023 && v <= 1023,
-          s"encodeJpegColorCoeffs: coeff $v outside the 10-bit range")
-        z(k) = v
-      }
-      val diff = z(0) - pred
+  /** One scan kind's entropy coder: `block` codes a block, `end`
+    * closes a restart interval or the scan (a pending EOB run, the DC
+    * predictors). */
+  private trait ScanCoder {
+    def block(bw: JBitWriter, c: Int, blk: Int): Unit
+    def end(bw: JBitWriter): Unit
+  }
+
+  /** §F.1.2 sequential block coder: per-component DC difference, AC
+    * run/size with ZRL and EOB. */
+  private final class SeqCoder(f: JpegFrame) extends ScanCoder {
+    private val preds = new Array[Int](f.comps.length)
+    def block(bw: JBitWriter, c: Int, blk: Int): Unit = {
+      val z = Array.tabulate(64)(k => f.z(c, blk, k))
+      val diff = z(0) - preds(c); preds(c) = z(0)
       val t = jCategory(diff)
-      putSym(dc, t); putVal(diff, t)
+      bw.putSym(jDcHuff, t); bw.putVal(diff, t)
       var k = 1
       while (k < 64) {
         if (z(k) == 0) {
           var e = k
           while (e < 64 && z(e) == 0) e += 1
-          if (e == 64) { putSym(ac, 0x00); k = 64 }
+          if (e == 64) { bw.putSym(jAcHuff, 0x00); k = 64 } // EOB
           else {
             var run = e - k
-            while (run > 15) { putSym(ac, 0xf0); run -= 16 }
+            while (run > 15) { bw.putSym(jAcHuff, 0xf0); run -= 16 } // ZRL
             val s = jCategory(z(e))
-            putSym(ac, (run << 4) | s); putVal(z(e), s)
+            bw.putSym(jAcHuff, (run << 4) | s); bw.putVal(z(e), s)
             k = e + 1
           }
         } else {
           val s = jCategory(z(k))
-          putSym(ac, s); putVal(z(k), s)
+          bw.putSym(jAcHuff, s); bw.putVal(z(k), s)
           k += 1
         }
       }
-      z(0)
     }
-    val mcuX = (width + 8 * hy - 1) / (8 * hy)
-    val mcuY = (height + 8 * vy - 1) / (8 * vy)
-    val preds = new Array[Int](3)
-    var rst = 0; var m = 0
-    val total = mcuX * mcuY
-    while (m < total) {
-      if (restartInterval > 0 && m > 0 && m % restartInterval == 0) {
-        bw.flush()
-        marker(0xd0 + rst); rst = (rst + 1) % 8
-        java.util.Arrays.fill(preds, 0)
-      }
-      val mx = m % mcuX; val my = m / mcuX
-      for (v2 <- 0 until vy; h2 <- 0 until hy) {
-        val blk = (my * vy + v2) * (mcuX * hy) + (mx * hy + h2)
-        preds(0) = putBlock((u, v) => coeffY(blk, u, v), preds(0))
-      }
-      preds(1) = putBlock((u, v) => coeffC(1, m, u, v), preds(1))
-      preds(2) = putBlock((u, v) => coeffC(2, m, u, v), preds(2))
-      m += 1
+    def end(bw: JBitWriter): Unit = java.util.Arrays.fill(preds, 0)
+  }
+
+  /** §G.1.2.1 DC scan. First (ah = 0): the difference of the point-
+    * transformed values — an ARITHMETIC shift, so the refinement bit
+    * rebuilds negatives exactly via the decoder's two's-complement
+    * OR. Refinement: bit `al` raw. */
+  private final class DcCoder(f: JpegFrame, ah: Int, al: Int)
+      extends ScanCoder {
+    private val preds = new Array[Int](f.comps.length)
+    def block(bw: JBitWriter, c: Int, blk: Int): Unit = {
+      val v0 = f.z(c, blk, 0)
+      if (ah == 0) {
+        val v = v0 >> al
+        val diff = v - preds(c); preds(c) = v
+        val t = jCategory(diff)
+        bw.putSym(jDcHuff, t); bw.putVal(diff, t)
+      } else bw.put((v0 >> al) & 1, 1)
     }
-    bw.flush()
-    marker(0xd9)
-    out.toByteArray
+    def end(bw: JBitWriter): Unit = java.util.Arrays.fill(preds, 0)
+  }
+
+  /** An AC band scan's pending EOB run (§G.1.2.2): consecutive blocks
+    * with nothing left to code collapse into one EOBn symbol. */
+  private abstract class AcCoder extends ScanCoder {
+    protected var eobrun = 0
+    protected def flushEob(bw: JBitWriter): Unit = if (eobrun > 0) {
+      val n = 31 - Integer.numberOfLeadingZeros(eobrun)
+      bw.putSym(jAcProgHuff, n << 4); bw.putVal(eobrun - (1 << n), n)
+      eobrun = 0
+    }
+  }
+
+  /** AC first scan of band Ss..Se at point transform sign·(|v|>>Al):
+    * EOBn runs (≤ 32767) across all-zero blocks, ZRL inside blocks. */
+  private final class AcFirstCoder(f: JpegFrame, ss: Int, se: Int,
+      al: Int) extends AcCoder {
+    def block(bw: JBitWriter, c: Int, blk: Int): Unit = {
+      val z = Array.tabulate(se - ss + 1) { i =>
+        val v = f.z(c, blk, ss + i)
+        if (v >= 0) v >> al else -((-v) >> al)
+      }
+      if (z.forall(_ == 0)) {
+        eobrun += 1
+        if (eobrun == 32767) flushEob(bw) // §G.1.2.2 run cap
+      } else {
+        flushEob(bw)
+        var k = 0
+        while (k < z.length) {
+          var e = k
+          while (e < z.length && z(e) == 0) e += 1
+          if (e == z.length) { eobrun = 1; k = z.length }
+          else {
+            var run = e - k
+            while (run > 15) { bw.putSym(jAcProgHuff, 0xf0); run -= 16 }
+            val s = jCategory(z(e))
+            bw.putSym(jAcProgHuff, (run << 4) | s); bw.putVal(z(e), s)
+            k = e + 1
+          }
+        }
+      }
+    }
+    def end(bw: JBitWriter): Unit = flushEob(bw)
+  }
+
+  /** AC refinement scan of band Ss..Se for bit plane `a` (§G.1.2.3):
+    * newly significant coefficients as run/1 plus a sign bit, one
+    * correction bit per coefficient with history. */
+  private final class AcRefineCoder(f: JpegFrame, ss: Int, se: Int,
+      a: Int) extends AcCoder {
+    // TWO correction-bit buffers (the §G.1.2.3 emission order the
+    // decoder's advance loop implies): `beBits` ride with the pending
+    // EOB run and are emitted right after its EOBn symbol; `brBits`
+    // are the CURRENT block's corrections and follow the next
+    // new-significant symbol's sign bit (or roll into the run if the
+    // block ends without one)
+    private val beBits = scala.collection.mutable.ArrayBuffer.empty[Int]
+    private val brBits = scala.collection.mutable.ArrayBuffer.empty[Int]
+    private def emitEobrun(bw: JBitWriter): Unit = {
+      flushEob(bw)
+      beBits.foreach(bit => bw.put(bit, 1))
+      beBits.clear()
+    }
+    private def emitBr(bw: JBitWriter): Unit = {
+      brBits.foreach(bit => bw.put(bit, 1))
+      brBits.clear()
+    }
+    def block(bw: JBitWriter, c: Int, blk: Int): Unit = {
+      val vs = Array.tabulate(se - ss + 1)(i => f.z(c, blk, ss + i))
+      val absv = vs.map(v => (if (v < 0) -v else v) >> a)
+      // last newly-significant position: zeros beyond it fold into the
+      // EOB run instead of ZRLs
+      val eobPos = absv.lastIndexWhere(_ == 1)
+      var r = 0
+      var i = 0
+      while (i < absv.length) {
+        val t = absv(i)
+        if (t == 0) r += 1
+        else {
+          // the ZRL flush runs at EVERY nonzero position — before the
+          // correction-buffer branch — so the buffered bits stay a
+          // positional PREFIX of what the decoder's next advance
+          // consumes (emitting it only at new-significant positions
+          // would desync corrections across ZRLs)
+          while (r > 15 && i <= eobPos) {
+            emitEobrun(bw)
+            bw.putSym(jAcProgHuff, 0xf0); r -= 16
+            emitBr(bw)
+          }
+          if (t > 1) brBits += (t & 1) // correction bit
+          else { // newly significant (this scan's bit is its MSB)
+            emitEobrun(bw)
+            bw.putSym(jAcProgHuff, (r << 4) | 1)
+            bw.put(if (vs(i) >= 0) 1 else 0, 1) // sign bit
+            emitBr(bw)
+            r = 0
+          }
+        }
+        i += 1
+      }
+      if (r > 0 || brBits.nonEmpty) {
+        eobrun += 1
+        beBits ++= brBits; brBits.clear()
+        // run cap (§G.1.2.2) and the libjpeg-style buffered-bit cap, so
+        // neither state grows unbounded
+        if (eobrun == 32767 || beBits.length > 937) emitEobrun(bw)
+      }
+    }
+    def end(bw: JBitWriter): Unit = emitEobrun(bw)
+  }
+
+  /** SOI, the DQTs, SOF `sof`, the Annex K DC table and `ac`, and DRI
+    * when `ri` > 0 — the head both coefficient encoders share. */
+  private def jpegHead(sof: Int, width: Int, height: Int, f: JpegFrame,
+      acBits: Array[Int], acVals: Array[Int], ri: Int): JpegWriter = {
+    require(width > 0 && width <= 0xffff && height > 0 &&
+      height <= 0xffff, "JPEG: dims must be 1..65535")
+    val jw = new JpegWriter
+    f.quants.zipWithIndex.foreach { case (q, tq) => jw.dqt(tq, q) }
+    jw.sof(sof, 8, width, height, f.comps.map(c => ((c.h << 4) | c.v, c.tq)))
+    jw.dht(0x00, jDcBits, jDcVals)
+    jw.dht(0x10, acBits, acVals)
+    if (ri > 0) jw.dri(ri)
+    jw
+  }
+
+  private def geomOf(width: Int, height: Int, f: JpegFrame): JpegGeom =
+    new JpegGeom(width, height, f.comps.map(_.h).toArray,
+      f.comps.map(_.v).toArray)
+
+  /** COMPLETE baseline JPEG encoder from QUANTIZED COEFFICIENTS: SOI +
+    * DQTs + SOF0 (precision 8) + DHT (the Annex K.3 typical pair,
+    * shared by every component) + optional DRI + ONE SOS over every
+    * component + a real entropy-coded segment (DC difference coding,
+    * AC run/size with ZRL and EOB, byte stuffing, RSTm every
+    * `restartInterval` MCUs with every predictor reset) + EOI. A
+    * greyscale frame's scan walks its block grid; a color frame's
+    * interleaves per MCU h·v luma blocks (raster within the MCU)
+    * then one Cb and one Cr block. The fixture source for the
+    * q337-family gates: the generator controls the coefficients, so
+    * the oracle re-derives every decoded pixel arithmetically without
+    * parsing a byte; q346's luma, at full resolution, must decode to
+    * EXACTLY the pixels its coefficients define whatever chroma the
+    * decoder walks past. */
+  def encodeJpegCoeffs(width: Int, height: Int, frame: JpegFrame,
+      restartInterval: Int = 0): Array[Byte] = {
+    val jw = jpegHead(0xc0, width, height, frame, jAcBits, jAcVals,
+      restartInterval)
+    jw.scan(geomOf(width, height, frame), restartInterval,
+      frame.comps.indices.toArray, 0, 63, 0, new SeqCoder(frame))
+    jw.bytes
+  }
+
+  /** PROGRESSIVE (SOF2) encoder from quantized coefficients (r19): the
+    * frame of [[encodeJpegCoeffs]] with the [[jAcProgBits]] AC table
+    * (progressive AC coding needs EOBn symbols the Annex K table
+    * cannot hold), entropy data as a scan script — ONE DC scan over
+    * every component (interleaved when there are several, the only
+    * legal interleaved form, §G.1), then one AC scan per band: the
+    * first component's `bands` (1 ≤ Ss ≤ Se ≤ 63, §G.1.1.1.1), every
+    * other component one 1..63 band — at point transform
+    * `approxLow`, then `approxLow` bit-plane refinement passes over
+    * the same script (Ah = a + 1 → Al = a). AC scans code real
+    * §G.1.2.2 EOBn runs; RSTm resync per scan (DRI counts MCUs in the
+    * DC scan of a color frame, blocks elsewhere). Bands need not cover
+    * 1..63 (uncovered coefficients decode as zero — progressive's
+    * defining property); the q359 fixture covers fully so the decode
+    * pins bit-for-bit to the sequential container of the SAME
+    * coefficients. */
+  def encodeJpegProgressiveCoeffs(width: Int, height: Int,
+      frame: JpegFrame, restartInterval: Int = 0,
+      bands: Seq[(Int, Int)] = Seq((1, 5), (6, 63)),
+      approxLow: Int = 0): Array[Byte] = {
+    require(bands.forall { case (ss, se) =>
+      ss >= 1 && se >= ss && se <= 63 },
+      "encodeJpegProgressiveCoeffs: bands must satisfy 1<=Ss<=Se<=63")
+    require(approxLow >= 0 && approxLow <= 10,
+      "encodeJpegProgressiveCoeffs: approxLow must be 0..10")
+    val jw = jpegHead(0xc2, width, height, frame, jAcProgBits,
+      jAcProgVals, restartInterval)
+    val g = geomOf(width, height, frame)
+    val script = bands.map((0, _)) ++
+      (1 until frame.comps.length).map((_, (1, 63)))
+    def pass(ah: Int, al: Int): Unit = {
+      jw.scan(g, restartInterval, frame.comps.indices.toArray, 0, 0,
+        (ah << 4) | al, new DcCoder(frame, ah, al))
+      for ((c, (ss, se)) <- script)
+        jw.scan(g, restartInterval, Array(c), ss, se, (ah << 4) | al,
+          if (ah == 0) new AcFirstCoder(frame, ss, se, al)
+          else new AcRefineCoder(frame, ss, se, al))
+    }
+    pass(0, approxLow)
+    for (a <- approxLow - 1 to 0 by -1) pass(a + 1, a)
+    jw.bytes
   }
 
   /** REAL lossy pixel-path encode: level shift, exact fixed-point
@@ -1193,7 +878,7 @@ object Multimodal {
     * sums, no intermediate rounding), round-half-up quantization in
     * ONE division (denominator 4·10¹²·q, the nonnegative-offset floor
     * so any engine's integer division agrees), then
-    * [[encodeJpegGrayCoeffs]]. Partial edge blocks pad by edge
+    * [[encodeJpegCoeffs]]. Partial edge blocks pad by edge
     * replication (the standard MCU completion rule). */
   def encodeJpegGrayPixels(width: Int, height: Int,
       pixel: (Int, Int) => Int, quant: (Int, Int) => Int,
@@ -1232,8 +917,9 @@ object Multimodal {
           else qv
       }
     }
-    encodeJpegGrayCoeffs(width, height, quant,
-      (blk, u, v) => coeffs(blk)(v * 8 + u), restartInterval)
+    encodeJpegCoeffs(width, height,
+      JpegFrame.gray(quant, (blk, u, v) => coeffs(blk)(v * 8 + u)),
+      restartInterval)
   }
 
   /** Exact integer 8×8 IDCT over DEQUANTIZED coefficients in natural
@@ -1318,6 +1004,7 @@ object Multimodal {
     var compV: Array[Int] = null; var compTq: Array[Int] = null
     var dcIds: Array[Int] = null; var acIds: Array[Int] = null
     var dri = 0; var sawSof = false
+    var geo: JpegGeom = null
     // progressive (SOF2) state, r19: scans accumulate quantized
     // coefficients in zigzag order into zAll until EOI
     var progressive = false
@@ -1404,6 +1091,7 @@ object Multimodal {
             }
             if (w.toLong * h > 64L * 1024 * 1024)
               return Left("unsupported")
+            geo = new JpegGeom(w, h, compH, compV)
             if (sof == 0xc2) {
               // progressive tier (r19; multi-component since the
               // color extension): luma must be full-resolution (the
@@ -1426,14 +1114,7 @@ object Multimodal {
               // luma grid is MCU-PADDED (interleaved DC scans walk
               // full MCUs); non-interleaved scans cover the TRUE
               // ceil(w/8)×ceil(h/8) grid and map into it
-              val hm = compH.max; val vm = compV.max
-              val mx = if (nf == 1) (w + 7) / 8
-                else (w + 8 * hm - 1) / (8 * hm)
-              val my = if (nf == 1) (h + 7) / 8
-                else (h + 8 * vm - 1) / (8 * vm)
-              val gw = mx * (if (nf == 1) 1 else compH(0))
-              val gh = my * (if (nf == 1) 1 else compV(0))
-              zAll = Array.ofDim[Int](gw * gh, 64)
+              zAll = Array.ofDim[Int](geo.padW(0) * geo.padH(0), 64)
             }
             sawSof = true
           case mm if mm >= 0xc1 && mm <= 0xcf && mm != 0xc2 &&
@@ -1503,17 +1184,6 @@ object Multimodal {
             // geometry — valid JPEG outside this tier
             if (ns > 1 && !isDc) return Left("bad_header")
             if (ns > 1 && ns != nf) return Left("unsupported")
-            // luma coefficient grid (MCU-padded) + the TRUE grid
-            // non-interleaved scans cover
-            val hm = compH.max; val vm = compV.max
-            val mcx = if (nf == 1) (w + 7) / 8
-              else (w + 8 * hm - 1) / (8 * hm)
-            val mcy = if (nf == 1) (h + 7) / 8
-              else (h + 8 * vm - 1) / (8 * vm)
-            val g1h = if (nf == 1) 1 else compH(0)
-            val g1v = if (nf == 1) 1 else compV(0)
-            val lumaW = mcx * g1h
-            val trueBxN = (w + 7) / 8; val trueByN = (h + 7) / 8
             val p1 = 1 << al; val m1 = -(1 << al)
             if (ns == 1 && scanCi(0) != 0) {
               // chroma-only scan: the output is the luma plane, and
@@ -1531,209 +1201,122 @@ object Multimodal {
               }
               progScans += 1
               progPos = q
-            } else if (ns > 1) {
-              // INTERLEAVED DC scan (first or refinement): the full
-              // MCU walk — luma coefficients land in zAll, chroma
-              // DCs are entropy-consumed (first) or cost one raw bit
+            } else {
+              // the luma scan alone (blocks raster over its TRUE grid)
+              // or the INTERLEAVED DC scan over every component (the
+              // full MCU walk): both put scan index = component index,
+              // luma coefficients land in zAll, chroma DCs are
+              // entropy-consumed (first) or cost one raw bit
               // (refinement) to keep the stream in sync, then drop
-              if (!refine)
-                for (i <- 0 until ns)
-                  if (scanTd(i) > 3 || dcT(scanTd(i)) == null)
-                    return Left("bad_header")
+              if (!isDc && !progDcDone) return Left("bad_header")
+              if (isDc && !refine &&
+                scanTd.exists(t => t > 3 || dcT(t) == null))
+                return Left("bad_header")
+              if (!isDc && (scanTa(0) > 3 || acT(scanTa(0)) == null))
+                return Left("bad_header")
+              val huff = if (isDc) null else acT(scanTa(0))
               val rd = new JpegBitReader(b, end)
               val preds = new Array[Int](ns)
-              var rstExpect = 0
-              var m = 0
-              val totalMcu = mcx * mcy
-              while (m < totalMcu && rd.err == null) {
-                if (dri > 0 && m > 0 && m % dri == 0) {
-                  rd.alignByte()
-                  if (rd.p + 1 >= b.length) rd.err = "truncated"
-                  else if (u8(b, rd.p) != 0xff ||
-                    u8(b, rd.p + 1) != 0xd0 + rstExpect)
-                    rd.err = "bad_huffman"
-                  else {
-                    rd.p += 2; rstExpect = (rstExpect + 1) % 8
-                    java.util.Arrays.fill(preds, 0)
+              var eobrun = 0
+              walkScan(geo, scanCi, dri) { () =>
+                eobrun = 0
+                rd.restart() && { java.util.Arrays.fill(preds, 0); true }
+              } { (c, blk) =>
+                val z = if (c == 0) zAll(blk) else null
+                if (isDc && !refine) {
+                  // DC first scan: diffs in the Al-shifted domain
+                  val t = rd.decodeSym(dcT(scanTd(c)))
+                  if (rd.err == null) {
+                    if (t > 15) rd.err = "bad_huffman"
+                    else {
+                      preds(c) += rd.receiveExtend(t)
+                      if (z != null) z(0) = preds(c) << al
+                    }
                   }
-                }
-                if (rd.err == null) {
-                  val mx0 = m % mcx; val my0 = m / mcx
-                  var i = 0
-                  while (i < ns && rd.err == null) {
-                    val ci = scanCi(i)
-                    val ch = compH(ci); val cv = compV(ci)
-                    var v2 = 0
-                    while (v2 < cv && rd.err == null) {
-                      var h2 = 0
-                      while (h2 < ch && rd.err == null) {
-                        if (!refine) {
-                          val t = rd.decodeSym(dcT(scanTd(i)))
-                          if (rd.err == null) {
-                            if (t > 15) rd.err = "bad_huffman"
-                            else {
-                              preds(i) += rd.receiveExtend(t)
-                              if (ci == 0) {
-                                val blk = (my0 * cv + v2) * lumaW +
-                                  (mx0 * ch + h2)
-                                zAll(blk)(0) = preds(i) << al
-                              }
-                            }
+                } else if (isDc) {
+                  // DC refinement: one raw bit, OR'd into the two's-
+                  // complement partial value (§G.1.2.1 — arithmetic
+                  // shift on encode makes this exact for negatives)
+                  val bit = rd.nextBit()
+                  if (rd.err == null && bit == 1 && z != null) z(0) |= p1
+                } else if (!refine) {
+                  // AC first scan (§G.1.2.2): spectral selection with
+                  // EOBn runs, values scaled by the point transform
+                  if (eobrun > 0) eobrun -= 1
+                  else {
+                    var k = ss
+                    while (k <= se && rd.err == null) {
+                      val sym = rd.decodeSym(huff)
+                      if (rd.err == null) {
+                        val run = sym >> 4; val sv = sym & 15
+                        if (sv == 0) {
+                          if (run == 15) k += 16 // ZRL
+                          else {
+                            // EOBn: 2^run + `run` raw bits, THIS block
+                            // included
+                            eobrun = (1 << run) + rd.receive(run) - 1
+                            k = 64
                           }
                         } else {
-                          val bit = rd.nextBit()
-                          if (rd.err == null && bit == 1 && ci == 0) {
-                            val blk = (my0 * cv + v2) * lumaW +
-                              (mx0 * ch + h2)
-                            zAll(blk)(0) |= p1
-                          }
-                        }
-                        h2 += 1
-                      }
-                      v2 += 1
-                    }
-                    i += 1
-                  }
-                  m += 1
-                }
-              }
-              if (rd.err != null) return Left(rd.err)
-              if (!refine) progDcDone = true
-              progScans += 1
-              progPos = rd.p
-            } else {
-              // single-component LUMA scan — blocks raster over the
-              // TRUE ceil grid, mapped into the MCU-padded store
-              if (!isDc && !progDcDone) return Left("bad_header")
-              val huff = if (isDc) {
-                if (refine) null
-                else {
-                  if (scanTd(0) > 3 || dcT(scanTd(0)) == null)
-                    return Left("bad_header")
-                  dcT(scanTd(0))
-                }
-              } else {
-                if (scanTa(0) > 3 || acT(scanTa(0)) == null)
-                  return Left("bad_header")
-                acT(scanTa(0))
-              }
-              val rd = new JpegBitReader(b, end)
-              val nBlk = trueBxN * trueByN
-              def zOfBlk(blk: Int): Array[Int] =
-                zAll((blk / trueBxN) * lumaW + (blk % trueBxN))
-              var pred = 0; var eobrun = 0
-              var rstExpect = 0
-              var blk = 0
-              while (blk < nBlk && rd.err == null) {
-                if (dri > 0 && blk > 0 && blk % dri == 0) {
-                  rd.alignByte(); eobrun = 0
-                  if (rd.p + 1 >= b.length) rd.err = "truncated"
-                  else if (u8(b, rd.p) != 0xff ||
-                    u8(b, rd.p + 1) != 0xd0 + rstExpect)
-                    rd.err = "bad_huffman"
-                  else {
-                    rd.p += 2; rstExpect = (rstExpect + 1) % 8
-                    pred = 0
-                  }
-                }
-                if (rd.err == null) {
-                  val z = zOfBlk(blk)
-                  if (isDc && !refine) {
-                    // DC first scan: diffs in the Al-shifted domain
-                    val t = rd.decodeSym(huff)
-                    if (rd.err == null) {
-                      if (t > 15) rd.err = "bad_huffman"
-                      else { pred += rd.receiveExtend(t); z(0) = pred << al }
-                    }
-                  } else if (isDc) {
-                    // DC refinement: one raw bit, OR'd into the two's-
-                    // complement partial value (§G.1.2.1 — arithmetic
-                    // shift on encode makes this exact for negatives)
-                    val bit = rd.nextBit()
-                    if (rd.err == null && bit == 1) z(0) |= p1
-                  } else if (!refine) {
-                    // AC first scan (§G.1.2.2): spectral selection with
-                    // EOBn runs, values scaled by the point transform
-                    if (eobrun > 0) eobrun -= 1
-                    else {
-                      var k = ss
-                      while (k <= se && rd.err == null) {
-                        val sym = rd.decodeSym(huff)
-                        if (rd.err == null) {
-                          val run = sym >> 4; val sv = sym & 15
-                          if (sv == 0) {
-                            if (run == 15) k += 16 // ZRL
-                            else {
-                              // EOBn: 2^run + `run` raw bits, THIS
-                              // block included
-                              eobrun = (1 << run) + rd.receive(run) - 1
-                              k = 64
-                            }
-                          } else {
-                            k += run
-                            if (k > se) rd.err = "bad_huffman"
-                            else {
-                              z(k) = rd.receiveExtend(sv) << al; k += 1
-                            }
-                          }
+                          k += run
+                          if (k > se) rd.err = "bad_huffman"
+                          else { z(k) = rd.receiveExtend(sv) << al; k += 1 }
                         }
                       }
-                    }
-                  } else {
-                    // AC refinement (§G.1.2.3): newly-significant
-                    // coefficients arrive as ±2^Al; every position with
-                    // NONZERO history consumes a correction bit — runs
-                    // and ZRL count only zero-history positions, and
-                    // EOB-run blocks still pay their correction bits
-                    var k = ss
-                    if (eobrun == 0) {
-                      var eobSet = false
-                      while (k <= se && rd.err == null && !eobSet) {
-                        val sym = rd.decodeSym(huff)
-                        if (rd.err == null) {
-                          var run = sym >> 4; val sv = sym & 15
-                          var newVal = 0
-                          if (sv != 0) {
-                            if (sv != 1) rd.err = "bad_huffman"
-                            else newVal =
-                              if (rd.nextBit() == 1) p1 else m1
-                          } else if (run != 15) {
-                            eobrun = (1 << run) + rd.receive(run)
-                            eobSet = true // this block finishes below
-                          }
-                          if (rd.err == null && !eobSet) {
-                            var done = false
-                            while (k <= se && !done && rd.err == null) {
-                              if (z(k) != 0) {
-                                val bit = rd.nextBit()
-                                if (rd.err == null && bit == 1 &&
-                                  (z(k) & p1) == 0)
-                                  z(k) += (if (z(k) >= 0) p1 else m1)
-                              } else if (run == 0) {
-                                if (sv != 0) z(k) = newVal
-                                done = true
-                              } else run -= 1
-                              k += 1
-                            }
-                          }
-                        }
-                      }
-                    }
-                    if (eobrun > 0 && rd.err == null) {
-                      while (k <= se && rd.err == null) {
-                        if (z(k) != 0) {
-                          val bit = rd.nextBit()
-                          if (rd.err == null && bit == 1 &&
-                            (z(k) & p1) == 0)
-                            z(k) += (if (z(k) >= 0) p1 else m1)
-                        }
-                        k += 1
-                      }
-                      eobrun -= 1
                     }
                   }
+                } else {
+                  // AC refinement (§G.1.2.3): newly-significant
+                  // coefficients arrive as ±2^Al; every position with
+                  // NONZERO history consumes a correction bit — runs
+                  // and ZRL count only zero-history positions, and
+                  // EOB-run blocks still pay their correction bits
+                  var k = ss
+                  if (eobrun == 0) {
+                    var eobSet = false
+                    while (k <= se && rd.err == null && !eobSet) {
+                      val sym = rd.decodeSym(huff)
+                      if (rd.err == null) {
+                        var run = sym >> 4; val sv = sym & 15
+                        var newVal = 0
+                        if (sv != 0) {
+                          if (sv != 1) rd.err = "bad_huffman"
+                          else newVal = if (rd.nextBit() == 1) p1 else m1
+                        } else if (run != 15) {
+                          eobrun = (1 << run) + rd.receive(run)
+                          eobSet = true // this block finishes below
+                        }
+                        if (rd.err == null && !eobSet) {
+                          var done = false
+                          while (k <= se && !done && rd.err == null) {
+                            if (z(k) != 0) {
+                              val bit = rd.nextBit()
+                              if (rd.err == null && bit == 1 &&
+                                (z(k) & p1) == 0)
+                                z(k) += (if (z(k) >= 0) p1 else m1)
+                            } else if (run == 0) {
+                              if (sv != 0) z(k) = newVal
+                              done = true
+                            } else run -= 1
+                            k += 1
+                          }
+                        }
+                      }
+                    }
+                  }
+                  if (eobrun > 0 && rd.err == null) {
+                    while (k <= se && rd.err == null) {
+                      if (z(k) != 0) {
+                        val bit = rd.nextBit()
+                        if (rd.err == null && bit == 1 && (z(k) & p1) == 0)
+                          z(k) += (if (z(k) >= 0) p1 else m1)
+                      }
+                      k += 1
+                    }
+                    eobrun -= 1
+                  }
                 }
-                blk += 1
+                rd.err == null
               }
               if (rd.err != null) return Left(rd.err)
               if (isDc && !refine) progDcDone = true
@@ -1748,197 +1331,89 @@ object Multimodal {
       }
     }
     // ---- progressive reconstruction (r19): EOI seen, coefficients
-    // complete — dequantize + clamp + IDCT each block, exactly the
-    // sequential tier's math over the accumulated zigzag buffer, so
-    // a spectral-selection split of the same quantized coefficients
-    // decodes to IDENTICAL pixels (the q359 cross-container pin) ----
+    // complete — exactly the sequential tier's per-block math over the
+    // accumulated zigzag buffer, so a spectral-selection split of the
+    // same quantized coefficients decodes to IDENTICAL pixels (the q359
+    // cross-container pin) ----
     if (progEoi) {
-      val qt = quantT(compTq(0))
-      // block-grid width of the (possibly MCU-padded) luma store
-      val nfr = compId.length
-      val bxN = if (nfr == 1) (w + 7) / 8
-        else ((w + 8 * compH.max - 1) / (8 * compH.max)) * compH(0)
       val px = new Array[Int](w * h)
-      var blk = 0
-      while (blk < zAll.length) {
-        val f = new Array[Long](64)
-        var kk = 0
-        while (kk < 64) {
-          val n = zigzag(kk)
-          val v = zAll(blk)(kk).toLong * qt(n)
-          f(n) = math.max(-2048L, math.min(2047L, v))
-          kk += 1
-        }
-        val px8 = idctBlock8Micro(f)
-        val bx = blk % bxN; val by = blk / bxN
-        var y = 0
-        while (y < 8) {
-          val py = by * 8 + y
-          if (py < h) {
-            var x = 0
-            while (x < 8) {
-              val pxx = bx * 8 + x
-              if (pxx < w) px(py * w + pxx) = px8(y * 8 + x)
-              x += 1
-            }
-          }
-          y += 1
-        }
-        blk += 1
-      }
+      val qt = quantT(compTq(0))
+      for (blk <- zAll.indices) blitBlock(zAll(blk), qt, blk, geo.padW(0),
+        px, w, h)
       return Right((w, h, px))
     }
     // ---- entropy-coded segment ----
+    // Nf=1 scans are NON-interleaved: MCU = one block, raster over the
+    // image's own block grid, sampling factors ignored (T.81 F.2.1.2).
+    // Multi-component scans interleave Hi×Vi blocks per MCU; this tier
+    // requires the luma (FIRST) component at full resolution so the
+    // output keeps the (w, h) contract — a downsampled-luma frame is
+    // valid JPEG outside the tier.
     val nf = compId.length
-    // Nf=1 scans are NON-interleaved: MCU = one block, raster over
-    // the image's own block grid, sampling factors ignored (T.81
-    // F.2.1.2). Multi-component scans interleave Hi×Vi blocks per
-    // MCU; this tier requires the luma (FIRST) component at full
-    // resolution so the output keeps the (w, h) contract — a
-    // downsampled-luma frame is valid JPEG outside the tier.
-    val hmax = compH.max; val vmax = compV.max
-    if (nf > 1 && (compH(0) != hmax || compV(0) != vmax))
+    if (nf > 1 && (compH(0) != compH.max || compV(0) != compV.max))
       return Left("unsupported")
-    val h1 = if (nf == 1) 1 else compH(0)
-    val v1 = if (nf == 1) 1 else compV(0)
-    val mcuX = if (nf == 1) (w + 7) / 8
-      else (w + 8 * hmax - 1) / (8 * hmax)
-    val mcuY = if (nf == 1) (h + 7) / 8
-      else (h + 8 * vmax - 1) / (8 * vmax)
-    val stride = mcuX * h1 * 8
-    val canvas = new Array[Int](stride * mcuY * v1 * 8)
-    var p = sosPos; var acc = 0; var nb = 0
-    var err: String = null
-    def nextBit(): Int = {
-      if (nb == 0) {
-        if (p >= b.length) { err = "truncated"; return -1 }
-        val v = u8(b, p); p += 1
-        if (v == 0xff) {
-          if (p >= b.length) { err = "truncated"; return -1 }
-          if (u8(b, p) == 0x00) p += 1 // §F.1.2.3 stuffed data byte
-          else { err = "truncated"; return -1 } // marker mid-entropy
-        }
-        acc = v; nb = 8
-      }
-      nb -= 1
-      (acc >>> nb) & 1
-    }
-    def decodeSym(t: JpegHuff): Int = {
-      var code = 0; var l = 0
-      while (l < 16) {
-        val bit = nextBit(); if (bit < 0) return -1
-        code = (code << 1) | bit; l += 1
-        if (t.maxCode(l) >= 0 && code >= t.minCode(l) &&
-          code <= t.maxCode(l))
-          return t.vals(t.valPtr(l) + (code - t.minCode(l)))
-      }
-      err = "bad_huffman"; -1
-    }
-    def receiveExtend(t: Int): Int = {
-      var v = 0; var i = 0
-      while (i < t) {
-        val bit = nextBit(); if (bit < 0) return 0
-        v = (v << 1) | bit; i += 1
-      }
-      if (t > 0 && v < (1 << (t - 1))) v - (1 << t) + 1 else v
-    }
+    val px = new Array[Int](w * h)
+    val rd = new JpegBitReader(b, sosPos)
     val preds = new Array[Int](nf)
-    val qts = Array.tabulate(nf)(c => quantT(compTq(c)))
-    val dcs = Array.tabulate(nf)(c => dcT(dcIds(c)))
-    val acs = Array.tabulate(nf)(c => acT(acIds(c)))
-    // one block of component ci: DC diff + AC run/size decode,
-    // dequantize + clamp into natural order. Chroma blocks are
-    // decoded FULLY (the bit stream must advance) and discarded.
-    def decodeBlock(ci: Int): Array[Long] = {
+    // DC diff + AC run/size decode of one block of component c, in
+    // zigzag order. Chroma blocks are decoded FULLY (the bit stream
+    // must advance) and discarded; luma blocks land in the plane.
+    walkScan(geo, Array.range(0, nf), dri) { () =>
+      rd.restart() && { java.util.Arrays.fill(preds, 0); true }
+    } { (c, blk) =>
       val z = new Array[Int](64)
-      val t = decodeSym(dcs(ci))
-      if (err != null) return null
-      if (t > 15) { err = "bad_huffman"; return null }
-      preds(ci) += receiveExtend(t)
-      z(0) = preds(ci)
+      val t = rd.decodeSym(dcT(dcIds(c)))
+      if (rd.err == null && t > 15) rd.err = "bad_huffman"
+      if (rd.err == null) {
+        preds(c) += rd.receiveExtend(t)
+        z(0) = preds(c)
+      }
       var k = 1
-      while (k < 64 && err == null) {
-        val sym = decodeSym(acs(ci))
-        if (err == null) {
+      while (k < 64 && rd.err == null) {
+        val sym = rd.decodeSym(acT(acIds(c)))
+        if (rd.err == null) {
           val run = sym >> 4; val s = sym & 15
           if (s == 0) {
             if (run == 15) k += 16 // ZRL
             else if (run == 0) k = 64 // EOB
-            else err = "bad_huffman"
+            else rd.err = "bad_huffman"
           } else {
             k += run
-            if (k > 63) err = "bad_huffman"
-            else { z(k) = receiveExtend(s); k += 1 }
+            if (k > 63) rd.err = "bad_huffman"
+            else { z(k) = rd.receiveExtend(s); k += 1 }
           }
         }
       }
-      if (err != null) return null
-      val f = new Array[Long](64)
-      var kk = 0
-      while (kk < 64) {
-        val n = zigzag(kk)
-        val v = z(kk).toLong * qts(ci)(n)
-        f(n) = math.max(-2048L, math.min(2047L, v))
-        kk += 1
-      }
-      f
+      if (rd.err == null && c == 0)
+        blitBlock(z, quantT(compTq(0)), blk, geo.padW(0), px, w, h)
+      rd.err == null
     }
-    val totalMcu = mcuX * mcuY
-    var rstExpect = 0; var m = 0
-    while (m < totalMcu && err == null) {
-      if (dri > 0 && m > 0 && m % dri == 0) { // DRI counts MCUs
-        nb = 0 // byte-align: discard the pad bits
-        if (p + 1 >= b.length) err = "truncated"
-        else if (u8(b, p) != 0xff ||
-          u8(b, p + 1) != 0xd0 + rstExpect) err = "bad_huffman"
-        else {
-          p += 2; rstExpect = (rstExpect + 1) % 8
-          java.util.Arrays.fill(preds, 0)
-        }
-      }
-      if (err == null) {
-        val mx = m % mcuX; val my = m / mcuX
-        var ci = 0
-        while (ci < nf && err == null) {
-          val ch = if (nf == 1) 1 else compH(ci)
-          val cv = if (nf == 1) 1 else compV(ci)
-          var v2 = 0
-          while (v2 < cv && err == null) {
-            var h2 = 0
-            while (h2 < ch && err == null) {
-              val f = decodeBlock(ci)
-              if (err == null && ci == 0) {
-                val px8 = idctBlock8Micro(f)
-                val bx = mx * h1 + h2; val by = my * v1 + v2
-                var y = 0
-                while (y < 8) {
-                  var x = 0
-                  while (x < 8) {
-                    canvas((by * 8 + y) * stride + bx * 8 + x) =
-                      px8(y * 8 + x)
-                    x += 1
-                  }
-                  y += 1
-                }
-              }
-              h2 += 1
-            }
-            v2 += 1
-          }
-          ci += 1
-        }
-        m += 1
-      }
+    if (rd.err != null) Left(rd.err) else Right((w, h, px))
+  }
+
+  /** Dequantize one block of zigzag coefficients (the documented ±2048
+    * clamp), run the exact integer IDCT, and write its pixels at block
+    * `blk` of a grid `gw` blocks wide into the `w`×`h` plane, cropping
+    * what falls outside. */
+  private def blitBlock(z: Array[Int], qt: Array[Int], blk: Int, gw: Int,
+      px: Array[Int], w: Int, h: Int): Unit = {
+    val f = new Array[Long](64)
+    var k = 0
+    while (k < 64) {
+      val n = zigzag(k)
+      f(n) = math.max(-2048L, math.min(2047L, z(k).toLong * qt(n)))
+      k += 1
     }
-    if (err != null) Left(err)
-    else {
-      val px = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        System.arraycopy(canvas, y * stride, px, y * w, w)
-        y += 1
+    val px8 = idctBlock8Micro(f)
+    val x0 = (blk % gw) * 8; val y0 = (blk / gw) * 8
+    var y = 0
+    while (y < 8 && y0 + y < h) {
+      var x = 0
+      while (x < 8 && x0 + x < w) {
+        px((y0 + y) * w + x0 + x) = px8(y * 8 + x)
+        x += 1
       }
-      Right((w, h, px))
+      y += 1
     }
   }
 
@@ -2243,15 +1718,12 @@ object Multimodal {
   def decodeWavPcm(b: Array[Byte]): Either[String, (Int, Int, Array[Int])] = {
     if (b.length < 12) return Left("truncated")
     def ascii(i: Int, n: Int) = new String(b, i, n, "US-ASCII")
-    def le16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def le32(i: Int): Long = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
     if (ascii(0, 4) != "RIFF" || ascii(8, 4) != "WAVE")
       return Left("bad_magic")
     var pos = 12
     var channels = 0; var rate = 0; var bits = 0
     while (pos + 8 <= b.length) {
-      val id = ascii(pos, 4); val sz = le32(pos + 4)
+      val id = ascii(pos, 4); val sz = le32(b, pos + 4)
       // bound the chunk BEFORE touching or skipping it (ADVICE r16):
       // sz is the unsigned 32-bit wire value — sz >= 2^31 made the
       // old `pos += 8 + sz.toInt` advance wrap negative or sit
@@ -2261,10 +1733,10 @@ object Multimodal {
       if (pos + 8L + sz > b.length) return Left("truncated")
       if (id == "fmt ") {
         if (pos + 8 + 16 > b.length) return Left("truncated")
-        if (le16(pos + 8) != 1) return Left("bad_header") // PCM only
-        channels = le16(pos + 10)
-        rate = le32(pos + 12).toInt
-        bits = le16(pos + 22)
+        if (le16(b, pos + 8) != 1) return Left("bad_header") // PCM only
+        channels = le16(b, pos + 10)
+        rate = le32(b, pos + 12).toInt
+        bits = le16(b, pos + 22)
         if (channels <= 0 || rate <= 0 || (bits != 8 && bits != 16))
           return Left("bad_header")
       } else if (id == "data") {
@@ -2280,7 +1752,7 @@ object Multimodal {
           while (c < channels) {
             val off = pos + 8 + f * align + c * bits / 8
             acc += (if (bits == 8) (b(off) & 0xff) - 128
-                    else le16(off).toShort / 256)
+                    else le16(b, off).toShort / 256)
             c += 1
           }
           mix(f) = acc
@@ -2704,36 +2176,42 @@ object Multimodal {
   def encodeMp4(brand: String, timescale: Long, durationTicks: Long,
       width: Int, height: Int, nTracks: Int): Array[Byte] = {
     require(nTracks >= 0 && brand.length == 4)
-    def be32a(v: Long): Array[Byte] = Array(
-      ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-      ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def boxOf(typ: String, body: Array[Byte]): Array[Byte] =
-      be32a(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
-    val identityMatrix: Array[Byte] =
-      (Seq(0x00010000L, 0L, 0L, 0L, 0x00010000L, 0L, 0L, 0L, 0x40000000L))
-        .flatMap(be32a).toArray
-    val ftyp = boxOf("ftyp",
-      brand.getBytes("US-ASCII") ++ be32a(0L) ++ // minor version
-        brand.getBytes("US-ASCII") ++ "iso2".getBytes("US-ASCII"))
-    val mvhd = boxOf("mvhd",
-      Array[Byte](0, 0, 0, 0) ++ // fullbox v0
-        be32a(0L) ++ be32a(0L) ++ // creation, modification
-        be32a(timescale) ++ be32a(durationTicks) ++
-        be32a(0x00010000L) ++ // rate 1.0
-        Array[Byte](0x01, 0x00) ++ Array.fill[Byte](10)(0) ++ // volume+reserved
-        identityMatrix ++ Array.fill[Byte](24)(0) ++ // pre_defined
-        be32a(nTracks + 1L)) // next_track_ID
     val traks = (1 to nTracks).map { tid =>
       val (w, h) = if (tid == 1) (width, height) else (0, 0)
-      boxOf("trak", boxOf("tkhd",
-        Array[Byte](0, 0, 0, 7) ++ // fullbox v0, enabled|in-movie|in-preview
-          be32a(0L) ++ be32a(0L) ++ be32a(tid.toLong) ++ be32a(0L) ++
-          be32a(durationTicks) ++ Array.fill[Byte](16)(0) ++
-          identityMatrix ++
-          be32a(w.toLong << 16) ++ be32a(h.toLong << 16)))
+      boxOf("trak", mp4Tkhd(tid, durationTicks, w, h))
     }
-    ftyp ++ boxOf("moov", (mvhd +: traks).reduce(_ ++ _))
+    mp4Ftyp(brand) ++ boxOf("moov",
+      (mp4Mvhd(timescale, durationTicks, nTracks + 1L) +: traks).reduce(_ ++ _))
   }
+
+  private def be32a(v: Long): Array[Byte] = Array(
+    ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
+    ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
+  private def boxOf(typ: String, body: Array[Byte]): Array[Byte] =
+    be32a(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
+  private def mp4Identity: Array[Byte] =
+    Seq(0x00010000L, 0L, 0L, 0L, 0x00010000L, 0L, 0L, 0L, 0x40000000L)
+      .flatMap(be32a).toArray
+  private def mp4Ftyp(brand: String): Array[Byte] =
+    boxOf("ftyp", brand.getBytes("US-ASCII") ++ be32a(0L) ++ // minor version
+      brand.getBytes("US-ASCII") ++ "iso2".getBytes("US-ASCII"))
+  /** `mvhd` v0: zero times, rate and volume 1.0, identity matrix. */
+  private def mp4Mvhd(timescale: Long, durationTicks: Long,
+      nextTrackId: Long): Array[Byte] =
+    boxOf("mvhd", Array[Byte](0, 0, 0, 0) ++ // fullbox v0
+      be32a(0L) ++ be32a(0L) ++ // creation, modification
+      be32a(timescale) ++ be32a(durationTicks) ++
+      be32a(0x00010000L) ++ // rate 1.0
+      Array[Byte](0x01, 0x00) ++ Array.fill[Byte](10)(0) ++ // volume+reserved
+      mp4Identity ++ Array.fill[Byte](24)(0) ++ // pre_defined
+      be32a(nextTrackId))
+  /** `tkhd` v0, enabled|in-movie|in-preview, 16.16 dims. */
+  private def mp4Tkhd(trackId: Long, durationTicks: Long, width: Int,
+      height: Int): Array[Byte] =
+    boxOf("tkhd", Array[Byte](0, 0, 0, 7) ++
+      be32a(0L) ++ be32a(0L) ++ be32a(trackId) ++ be32a(0L) ++
+      be32a(durationTicks) ++ Array.fill[Byte](16)(0) ++ mp4Identity ++
+      be32a(width.toLong << 16) ++ be32a(height.toLong << 16))
 
   /** [[encodeMp4]] extended with a REAL sample table + payload (r16):
     * one video trak carrying the full §8 stbl nesting — stsd (zero
@@ -2750,11 +2228,6 @@ object Multimodal {
       sampleByte: (Int, Int) => Int, nChunks: Int = 2): Array[Byte] = {
     require(sampleSizes.nonEmpty && sampleSizes.forall(_ > 0))
     require(nChunks >= 1 && nChunks <= sampleSizes.length)
-    def be32a(v: Long): Array[Byte] = Array(
-      ((v >>> 24) & 0xff).toByte, ((v >>> 16) & 0xff).toByte,
-      ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def boxOf(typ: String, body: Array[Byte]): Array[Byte] =
-      be32a(8L + body.length) ++ typ.getBytes("US-ASCII") ++ body
     val s = sampleSizes.length
     val per = (s + nChunks - 1) / nChunks // front-loaded split
     val chunkSizes = (0 until nChunks)
@@ -2780,18 +2253,6 @@ object Multimodal {
     def stcoOf(offsets: Seq[Long]) = boxOf("stco",
       full ++ be32a(offsets.length.toLong) ++ offsets.flatMap(be32a).toArray)
     def moovOf(offsets: Seq[Long]): Array[Byte] = {
-      val identityMatrix: Array[Byte] =
-        Seq(0x00010000L, 0L, 0L, 0L, 0x00010000L, 0L, 0L, 0L,
-          0x40000000L).flatMap(be32a).toArray
-      val mvhd = boxOf("mvhd", full ++ be32a(0L) ++ be32a(0L) ++
-        be32a(timescale) ++ be32a(durationTicks) ++
-        be32a(0x00010000L) ++ Array[Byte](0x01, 0x00) ++
-        Array.fill[Byte](10)(0) ++ identityMatrix ++
-        Array.fill[Byte](24)(0) ++ be32a(2L))
-      val tkhd = boxOf("tkhd", Array[Byte](0, 0, 0, 7) ++
-        be32a(0L) ++ be32a(0L) ++ be32a(1L) ++ be32a(0L) ++
-        be32a(durationTicks) ++ Array.fill[Byte](16)(0) ++
-        identityMatrix ++ be32a(64L << 16) ++ be32a(64L << 16))
       val mdhd = boxOf("mdhd", full ++ be32a(0L) ++ be32a(0L) ++
         be32a(timescale) ++ be32a(durationTicks) ++
         Array[Byte](0x55, (0xc4 & 0xff).toByte, 0, 0))
@@ -2802,10 +2263,10 @@ object Multimodal {
         stsd ++ stts ++ stsc ++ stsz ++ stcoOf(offsets))
       val minf = boxOf("minf", stbl)
       val mdia = boxOf("mdia", mdhd ++ hdlr ++ minf)
-      boxOf("moov", mvhd ++ boxOf("trak", tkhd ++ mdia))
+      boxOf("moov", mp4Mvhd(timescale, durationTicks, 2L) ++
+        boxOf("trak", mp4Tkhd(1L, durationTicks, 64, 64) ++ mdia))
     }
-    val ftyp = boxOf("ftyp", brand.getBytes("US-ASCII") ++ be32a(0L) ++
-      brand.getBytes("US-ASCII") ++ "iso2".getBytes("US-ASCII"))
+    val ftyp = mp4Ftyp(brand)
     // two-pass: moov length is offset-value independent
     val moovLen = moovOf(chunkSizes.map(_ => 0L)).length
     val payloadStart = ftyp.length + moovLen + 8L
@@ -3023,83 +2484,30 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** COMPLETE spec-conformant greyscale PNG (colour type 0, bit depth
-    * 8): signature + IHDR + one Deflater-compressed IDAT + IEND, every
-    * chunk CRC real. `filterForRow` picks the §9.2 filter type per
-    * scanline (0–4), so a fixture can exercise ALL five predictors in
-    * one payload; the encoder applies the exact inverse of the decode
-    * recurrence (filt = raw − pred mod 256), which [[decodePngGray]]'s
-    * round-trip spec pins bit-for-bit. */
-  def encodePngGray(width: Int, height: Int, pixel: (Int, Int) => Int,
-      filterForRow: Int => Int): Array[Byte] = {
-    require(width > 0 && height > 0, "encodePngGray: need positive dims")
-    val raw = Array.ofDim[Int](height, width)
-    for (y <- 0 until height; x <- 0 until width)
-      raw(y)(x) = pixel(x, y) & 0xff
-    val filtered = new java.io.ByteArrayOutputStream()
-    for (y <- 0 until height) {
-      val f = filterForRow(y)
-      require(f >= 0 && f <= 4, s"encodePngGray: filter $f not in [0,4]")
-      filtered.write(f)
-      for (x <- 0 until width) {
-        val left = if (x > 0) raw(y)(x - 1) else 0
-        val up = if (y > 0) raw(y - 1)(x) else 0
-        val ul = if (x > 0 && y > 0) raw(y - 1)(x - 1) else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case _ => paeth(left, up, ul)
-        }
-        filtered.write((raw(y)(x) - pred) & 0xff)
-      }
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(filtered.toByteArray); defl.finish()
-    val z = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!defl.finished()) z.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = ((width >>> 24) & 0xff).toByte
-    ihdr(1) = ((width >>> 16) & 0xff).toByte
-    ihdr(2) = ((width >>> 8) & 0xff).toByte
-    ihdr(3) = (width & 0xff).toByte
-    ihdr(4) = ((height >>> 24) & 0xff).toByte
-    ihdr(5) = ((height >>> 16) & 0xff).toByte
-    ihdr(6) = ((height >>> 8) & 0xff).toByte
-    ihdr(7) = (height & 0xff).toByte
-    ihdr(8) = 8; ihdr(9) = 0 // depth 8, greyscale
-    ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
-    PngSig.map(_.toByte) ++ pngChunk("IHDR", ihdr) ++
-      pngChunk("IDAT", z.toByteArray) ++
-      pngChunk("IEND", Array.emptyByteArray)
-  }
+  /** IHDR body: dims, bit depth, colour type; deflate, adaptive
+    * filtering, no interlace. */
+  private def pngIhdr(width: Int, height: Int, depth: Int,
+      colorType: Int): Array[Byte] =
+    Array(width >>> 24, width >>> 16, width >>> 8, width, height >>> 24,
+      height >>> 16, height >>> 8, height, depth, colorType, 0, 0, 0)
+      .map(_.toByte)
 
-  /** COMPLETE truecolour PNG encoder (r19 — colour type 2, or 6 with
-    * a constant alpha when `alpha` ≥ 0): the [[encodePngGray]]
-    * machinery with bpp-wide byte filtering (§9: `left` references
-    * the corresponding byte of the pixel bpp bytes back). Fixture
-    * source for the q364 color-PNG gate. */
-  def encodePngColor(width: Int, height: Int,
-      pixel: (Int, Int) => (Int, Int, Int), filterForRow: Int => Int,
-      alpha: Int = -1): Array[Byte] = {
-    require(width > 0 && height > 0, "encodePngColor: positive dims")
-    val bpp = if (alpha >= 0) 4 else 3
+  /** The pixel PNG writers' shared path: `fill(y, row)` sets scanline
+    * y's width·bpp raw bytes, then the §9.2 filter `filterForRow(y)`
+    * (0–4; `left` is the corresponding byte of the pixel bpp bytes
+    * back, the exact inverse of the decode recurrence: filt = raw −
+    * pred mod 256), one Deflater-compressed IDAT, depth 8, every chunk
+    * CRC real. */
+  private def encodePngRaw(width: Int, height: Int, bpp: Int,
+      colorType: Int, filterForRow: Int => Int)(
+      fill: (Int, Array[Int]) => Unit): Array[Byte] = {
     val rowBytes = width * bpp
     val raw = Array.ofDim[Int](height, rowBytes)
-    for (y <- 0 until height; x <- 0 until width) {
-      val (r, g, b0) = pixel(x, y)
-      raw(y)(x * bpp) = r & 0xff
-      raw(y)(x * bpp + 1) = g & 0xff
-      raw(y)(x * bpp + 2) = b0 & 0xff
-      if (bpp == 4) raw(y)(x * bpp + 3) = alpha & 0xff
-    }
+    for (y <- 0 until height) fill(y, raw(y))
     val filtered = new java.io.ByteArrayOutputStream()
     for (y <- 0 until height) {
       val f = filterForRow(y)
-      require(f >= 0 && f <= 4, s"encodePngColor: filter $f not in [0,4]")
+      require(f >= 0 && f <= 4, s"encodePng: filter $f not in [0,4]")
       filtered.write(f)
       for (x <- 0 until rowBytes) {
         val left = if (x >= bpp) raw(y)(x - bpp) else 0
@@ -3121,20 +2529,43 @@ object Multimodal {
     val buf = new Array[Byte](8192)
     while (!defl.finished()) z.write(buf, 0, defl.deflate(buf))
     defl.end()
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = ((width >>> 24) & 0xff).toByte
-    ihdr(1) = ((width >>> 16) & 0xff).toByte
-    ihdr(2) = ((width >>> 8) & 0xff).toByte
-    ihdr(3) = (width & 0xff).toByte
-    ihdr(4) = ((height >>> 24) & 0xff).toByte
-    ihdr(5) = ((height >>> 16) & 0xff).toByte
-    ihdr(6) = ((height >>> 8) & 0xff).toByte
-    ihdr(7) = (height & 0xff).toByte
-    ihdr(8) = 8; ihdr(9) = (if (bpp == 4) 6 else 2).toByte
-    ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
-    PngSig.map(_.toByte) ++ pngChunk("IHDR", ihdr) ++
+    PngSig.map(_.toByte) ++
+      pngChunk("IHDR", pngIhdr(width, height, 8, colorType)) ++
       pngChunk("IDAT", z.toByteArray) ++
       pngChunk("IEND", Array.emptyByteArray)
+  }
+
+  /** COMPLETE spec-conformant greyscale PNG (colour type 0, bit depth
+    * 8) through [[encodePngRaw]]: `filterForRow` picks the filter per
+    * scanline, so a fixture can exercise ALL five predictors in one
+    * payload; [[decodePngGray]]'s round-trip spec pins it
+    * bit-for-bit. */
+  def encodePngGray(width: Int, height: Int, pixel: (Int, Int) => Int,
+      filterForRow: Int => Int): Array[Byte] = {
+    require(width > 0 && height > 0, "encodePngGray: need positive dims")
+    encodePngRaw(width, height, 1, 0, filterForRow) { (y, row) =>
+      for (x <- 0 until width) row(x) = pixel(x, y) & 0xff
+    }
+  }
+
+  /** COMPLETE truecolour PNG encoder (r19 — colour type 2, or 6 with
+    * a constant alpha when `alpha` ≥ 0) through [[encodePngRaw]] at
+    * bpp 3 or 4. Fixture source for the q364 color-PNG gate. */
+  def encodePngColor(width: Int, height: Int,
+      pixel: (Int, Int) => (Int, Int, Int), filterForRow: Int => Int,
+      alpha: Int = -1): Array[Byte] = {
+    require(width > 0 && height > 0, "encodePngColor: positive dims")
+    val bpp = if (alpha >= 0) 4 else 3
+    encodePngRaw(width, height, bpp, if (bpp == 4) 6 else 2,
+        filterForRow) { (y, row) =>
+      for (x <- 0 until width) {
+        val (r, g, b0) = pixel(x, y)
+        row(x * bpp) = r & 0xff
+        row(x * bpp + 1) = g & 0xff
+        row(x * bpp + 2) = b0 & 0xff
+        if (bpp == 4) row(x * bpp + 3) = alpha & 0xff
+      }
+    }
   }
 
   /** Full greyscale pixel decode: chunk walk with per-chunk CRC

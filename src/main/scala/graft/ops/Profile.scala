@@ -428,18 +428,20 @@ object Profile {
   }
 
   /** Attaches the sample totals (n1, n2) of `cnt` to `d`: one row, or
-    * one per group with both samples non-empty (the others drop). Both
-    * are ≤ |groups| rows, so the attach is an explicit broadcast —
-    * a cross join solo, an equi join on the group keyed. */
+    * one per group, kept only where both samples are non-empty (a
+    * statistic of an empty sample divides by n₁·n₂ = 0). Both are
+    * ≤ |groups| rows, so the attach is an explicit broadcast — a cross
+    * join solo, an equi join on the group keyed. */
   private def attach(d: DataFrame, cnt: DataFrame,
       group: Option[String]): DataFrame = {
     val totals = cnt.groupBy(group.toSeq.map(col): _*)
       .agg(sum(col("__ca")).as("n1"), sum(col("__cb")).as("n2"))
+      .filter(col("n1") > 0 && col("n2") > 0)
     group match {
       case None => d.crossJoin(broadcast(totals))
       case Some(g) =>
-        d.join(broadcast(totals.filter(col("n1") > 0 && col("n2") > 0)
-            .withColumnRenamed(g, "__tk")), col(g) === col("__tk"))
+        d.join(broadcast(totals.withColumnRenamed(g, "__tk")),
+            col(g) === col("__tk"))
           .drop("__tk")
     }
   }
@@ -482,9 +484,12 @@ object Profile {
         Seq("tvd_num" -> "CAST(__s AS BIGINT)",
           "tvd_micro" -> s"($m * __s) div (2 * $n1n2)"))
     }
-    outs.foldLeft(d.groupBy(group.toSeq.map(col): _*)
-        .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2") +: aggs: _*)) {
-        case (r, (name, e)) => r.withColumn(name, expr(e))
+    val r = d.groupBy(group.toSeq.map(col): _*)
+      .agg(max(col("n1")).as("n1"), max(col("n2")).as("n2") +: aggs: _*)
+    // with nothing attached the solo aggregate is still one (null) row;
+    // drop it, as the keyed form has no row for a one-sample group
+    outs.foldLeft(if (group.isEmpty) r.filter(col("n1").isNotNull) else r) {
+        case (acc, (name, e)) => acc.withColumn(name, expr(e))
       }
       .drop("__r2a", "__s", "__sq", "__sr")
   }

@@ -215,7 +215,8 @@ object PerceptualQueries {
         else if ((3 * u + 5 * v + id + blk) % 7 < 2)
           (((id + 11 * u + 17 * v + 23 * blk) % 15) - 7).toInt
         else 0
-      val full = Multimodal.encodeJpegGrayCoeffs(16, 16, quant, coeff)
+      val full = Multimodal.encodeJpegCoeffs(16, 16,
+        Multimodal.JpegFrame.gray(quant, coeff))
       val payload =
         if (id % 11 == 0) full.take(24)
         else if (id % 13 == 0) {
@@ -250,8 +251,8 @@ object PerceptualQueries {
         else if ((3 * u + 5 * v + id + blk) % 7 < 2)
           (((id + 11 * u + 17 * v + 23 * blk) % 15) - 7).toInt
         else 0
-      val full = Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16,
-        quant, coeff,
+      val full = Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+        Multimodal.JpegFrame.gray(quant, coeff),
         restartInterval = if (id % 5 == 0) 2 else 0,
         bands = if (id % 3 == 0) Seq((1, 63)) else Seq((1, 5), (6, 63)))
       val payload =
@@ -289,8 +290,8 @@ object PerceptualQueries {
         else if ((3 * u + 5 * v + id + blk) % 7 < 2)
           (((id + 11 * u + 17 * v + 23 * blk) % 15) - 7).toInt
         else 0
-      val full = Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16,
-        quant, coeff,
+      val full = Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+        Multimodal.JpegFrame.gray(quant, coeff),
         restartInterval = if (id % 5 == 0) 2 else 0,
         bands = if (id % 3 == 0) Seq((1, 63)) else Seq((1, 5), (6, 63)),
         approxLow = 2)
@@ -335,8 +336,8 @@ object PerceptualQueries {
         if ((u + v + comp + id + m) % 5 < 2)
           (((id + 5 * u + 3 * v + 7 * comp) % 9) - 4).toInt
         else 0
-      val full = Multimodal.encodeJpegColorProgressiveCoeffs(16, 16,
-        2, 2, quantY, quantC, coeffY, coeffC,
+      val full = Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+        Multimodal.JpegFrame.ycc(2, 2, quantY, quantC, coeffY, coeffC),
         bands = if (id % 3 == 0) Seq((1, 63)) else Seq((1, 5), (6, 63)),
         approxLow = if (id % 3 == 1) 2 else 0)
       val payload =
@@ -444,8 +445,8 @@ object PerceptualQueries {
         if ((u + v + comp + id + m) % 5 < 2)
           (((id + 5 * u + 3 * v + 7 * comp) % 9) - 4).toInt
         else 0
-      val full = Multimodal.encodeJpegColorCoeffs(16, 16, 2, 2,
-        quantY, quantC, coeffY, coeffC)
+      val full = Multimodal.encodeJpegCoeffs(16, 16,
+        Multimodal.JpegFrame.ycc(2, 2, quantY, quantC, coeffY, coeffC))
       val payload =
         if (id % 11 == 0) full.take(24)
         else if (id % 13 == 0) {
@@ -556,7 +557,8 @@ object PerceptualQueries {
       }
       val (kind, full) =
         if (r >= 2) ("jpeg",
-          Multimodal.encodeJpegGrayCoeffs(16, 16, quant, coeff))
+          Multimodal.encodeJpegCoeffs(16, 16,
+            Multimodal.JpegFrame.gray(quant, coeff)))
         else {
           // assemble the content's decoded pixels EXACTLY as the JPEG
           // decoder would (shared idctBlock8Micro), then PNG them

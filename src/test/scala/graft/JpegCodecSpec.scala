@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Multimodal
+import graft.ops.Multimodal.JpegFrame
 
 /** The baseline JPEG pixel codec (r18, VERDICT r17 ask #1): ITU-T
   * T.81 sequential-DCT greyscale encode/decode. The q337-family gates
@@ -54,6 +55,8 @@ class JpegCodecSpec extends SparkSuite {
 
   private def quantFormula(u: Int, v: Int): Int = 1 + u + 2 * v
 
+  private val formulaFrame = JpegFrame.gray(quantFormula, coeffFormula)
+
   test("Annex K table invariants: 162 distinct AC symbols = all " +
       "(run<=15, size 1..10) + EOB + ZRL; 12 DC categories; both " +
       "canonically feasible") {
@@ -91,8 +94,7 @@ class JpegCodecSpec extends SparkSuite {
       "decode(encode(coeffs)) == dequant+IDCT reference, bit-exact") {
     for ((w, h) <- Seq((8, 8), (16, 16), (24, 8), (16, 24), (12, 10),
         (1, 1), (8, 17))) {
-      val bytes = Multimodal.encodeJpegGrayCoeffs(w, h, quantFormula,
-        coeffFormula)
+      val bytes = Multimodal.encodeJpegCoeffs(w, h, formulaFrame)
       val got = Multimodal.decodeJpegGray(bytes)
       assert(got.isRight, s"$w x $h -> $got")
       val Right((gw, gh, px)) = got
@@ -106,16 +108,15 @@ class JpegCodecSpec extends SparkSuite {
   test("restart markers: DRI 1 and 3 decode identically to the " +
       "no-DRI stream; a misnumbered RST dead-letters as bad_huffman") {
     val base = norm(Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-        coeffFormula)))
+      Multimodal.encodeJpegCoeffs(16, 16, formulaFrame)))
     for (dri <- Seq(1, 3)) {
-      val bytes = Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-        coeffFormula, restartInterval = dri)
+      val bytes = Multimodal.encodeJpegCoeffs(16, 16, formulaFrame,
+        restartInterval = dri)
       assert(norm(Multimodal.decodeJpegGray(bytes)) == base, s"dri=$dri")
     }
     // corrupt the first restart marker's number (FF D0 -> FF D7)
-    val bytes = Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-      coeffFormula, restartInterval = 1)
+    val bytes = Multimodal.encodeJpegCoeffs(16, 16, formulaFrame,
+      restartInterval = 1)
     val at = (0 until bytes.length - 1).indexWhere(i =>
       (bytes(i) & 0xff) == 0xff && (bytes(i + 1) & 0xff) == 0xd0)
     assert(at > 0)
@@ -158,18 +159,18 @@ class JpegCodecSpec extends SparkSuite {
         ((blk + 11 * u + 17 * v) % 15) - 7
       else 0
     val Right((_, _, seq)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayCoeffs(16, 16, quant, coeff))
+      Multimodal.encodeJpegCoeffs(16, 16, JpegFrame.gray(quant, coeff)))
     for (bands <- Seq(Seq((1, 5), (6, 63)), Seq((1, 63)),
         Seq((1, 1), (2, 9), (10, 35), (36, 63)))) {
       val Right((_, _, p)) = Multimodal.decodeJpegGray(
-        Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16, quant,
-          coeff, 0, bands))
+        Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+          JpegFrame.gray(quant, coeff), 0, bands))
       assert(p.sameElements(seq), s"bands=$bands")
     }
     for (dri <- Seq(1, 3)) {
       val Right((_, _, p)) = Multimodal.decodeJpegGray(
-        Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16, quant,
-          coeff, dri))
+        Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+          JpegFrame.gray(quant, coeff), dri))
       assert(p.sameElements(seq), s"dri=$dri")
     }
     // EOBn runs: a sparse 17x17 (partial edge blocks) where most
@@ -178,9 +179,10 @@ class JpegCodecSpec extends SparkSuite {
       if (u == 0 && v == 0) blk - 4
       else if (u + v == 1 && blk % 5 == 0) 3 else 0
     val Right((_, _, s2)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayCoeffs(17, 17, quant, sparse))
+      Multimodal.encodeJpegCoeffs(17, 17, JpegFrame.gray(quant, sparse)))
     val Right((_, _, p2)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayProgressiveCoeffs(17, 17, quant, sparse))
+      Multimodal.encodeJpegProgressiveCoeffs(17, 17,
+        JpegFrame.gray(quant, sparse)))
     assert(p2.sameElements(s2), "sparse 17x17 EOBn path")
     // bands need not cover 1..63: uncovered coefficients decode 0 —
     // equal to a sequential encode of the low-band-only coefficients
@@ -190,10 +192,10 @@ class JpegCodecSpec extends SparkSuite {
       if (k <= 5) coeff(blk, u, v) else 0
     }
     val Right((_, _, sLow)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayCoeffs(16, 16, quant, coeffLow))
+      Multimodal.encodeJpegCoeffs(16, 16, JpegFrame.gray(quant, coeffLow)))
     val Right((_, _, pLow)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16, quant, coeff,
-        0, Seq((1, 5))))
+      Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+        JpegFrame.gray(quant, coeff), 0, Seq((1, 5))))
     assert(pLow.sameElements(sLow), "partial band coverage")
   }
 
@@ -216,9 +218,10 @@ class JpegCodecSpec extends SparkSuite {
     for ((cf, name) <- Seq((dense _, "dense"), (sparse _, "sparse"));
         al <- Seq(1, 2, 3); dri <- Seq(0, 3)) {
       val Right((_, _, seq)) = Multimodal.decodeJpegGray(
-        Multimodal.encodeJpegGrayCoeffs(16, 16, quant, cf))
+        Multimodal.encodeJpegCoeffs(16, 16, JpegFrame.gray(quant, cf)))
       val Right((_, _, p)) = Multimodal.decodeJpegGray(
-        Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16, quant, cf,
+        Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+          JpegFrame.gray(quant, cf),
           dri, Seq((1, 5), (6, 63)), approxLow = al))
       assert(p.sameElements(seq), s"$name al=$al dri=$dri")
     }
@@ -229,9 +232,10 @@ class JpegCodecSpec extends SparkSuite {
       else if (blk % 4 == 1 && u + v == 2) 3
       else 0
     val Right((_, _, s2)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayCoeffs(24, 24, quant, wide))
+      Multimodal.encodeJpegCoeffs(24, 24, JpegFrame.gray(quant, wide)))
     val Right((_, _, p2)) = Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayProgressiveCoeffs(24, 24, quant, wide,
+      Multimodal.encodeJpegProgressiveCoeffs(24, 24,
+        JpegFrame.gray(quant, wide),
         0, Seq((1, 63)), approxLow = 2))
     assert(p2.sameElements(s2), "EOB-run correction bits")
     // the 0xF1..0xFA regression (round-19 lesson): EXACTLY 15 zeros
@@ -246,18 +250,19 @@ class JpegCodecSpec extends SparkSuite {
         if (k == pos) v else 0
       }
       val Right((_, _, a)) = Multimodal.decodeJpegGray(
-        Multimodal.encodeJpegGrayCoeffs(8, 8, quant, one))
+        Multimodal.encodeJpegCoeffs(8, 8, JpegFrame.gray(quant, one)))
       for (al <- Seq(0, 1)) {
         val Right((_, _, b)) = Multimodal.decodeJpegGray(
-          Multimodal.encodeJpegGrayProgressiveCoeffs(8, 8, quant, one,
+          Multimodal.encodeJpegProgressiveCoeffs(8, 8,
+            JpegFrame.gray(quant, one),
             0, Seq((1, 63)), approxLow = al))
         assert(b.sameElements(a), s"pos=$pos v=$v al=$al")
       }
     }
     // broken refinement chain (Ah must equal Al + 1) -> bad_header:
     // patch the DC refinement scan's AhAl from 0x10 to 0x20
-    val prog = Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16,
-      quant, dense, 0, Seq((1, 63)), approxLow = 1)
+    val prog = Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+      JpegFrame.gray(quant, dense), 0, Seq((1, 63)), approxLow = 1)
     val at = (0 until prog.length - 9).indexWhere(i =>
       (prog(i) & 0xff) == 0xff && (prog(i + 1) & 0xff) == 0xda &&
         (prog(i + 9) & 0xff) == 0x10)
@@ -277,7 +282,7 @@ class JpegCodecSpec extends SparkSuite {
         7 * comp) % 9) - 4)
       else 0
     for ((hy, vy, w, h) <- Seq((2, 2, 16, 16), (2, 1, 16, 16),
-        (1, 1, 16, 16), (2, 2, 24, 16))) {
+        (1, 1, 16, 16), (2, 2, 24, 16), (2, 2, 17, 13))) {
       val lumaW = ((w + 8 * hy - 1) / (8 * hy)) * hy
       def coeffY(blk: Int, u: Int, v: Int): Int = {
         val bx = blk % lumaW; val by = blk / lumaW
@@ -287,20 +292,23 @@ class JpegCodecSpec extends SparkSuite {
         else 0
       }
       val Right((_, _, seqPx)) = Multimodal.decodeJpegGray(
-        Multimodal.encodeJpegColorCoeffs(w, h, hy, vy, quantY, quantC,
-          coeffY, coeffC))
-      for (al <- Seq(0, 2)) {
-        val prog = Multimodal.encodeJpegColorProgressiveCoeffs(w, h,
-          hy, vy, quantY, quantC, coeffY, coeffC,
-          Seq((1, 5), (6, 63)), approxLow = al)
+        Multimodal.encodeJpegCoeffs(w, h, JpegFrame.ycc(hy, vy,
+          quantY, quantC, coeffY, coeffC)))
+      for (al <- Seq(0, 2); dri <- Seq(0, 1, 3)) {
+        val prog = Multimodal.encodeJpegProgressiveCoeffs(w, h,
+          JpegFrame.ycc(hy, vy, quantY, quantC, coeffY, coeffC),
+          restartInterval = dri, bands = Seq((1, 5), (6, 63)),
+          approxLow = al)
         val Right((_, _, p)) = Multimodal.decodeJpegGray(prog)
-        assert(p.sameElements(seqPx), s"hy=$hy vy=$vy w=$w al=$al")
+        assert(p.sameElements(seqPx),
+          s"hy=$hy vy=$vy w=$w al=$al dri=$dri")
       }
     }
     // interleaved AC scan is illegal: patch a color progressive
     // stream's interleaved DC SOS band to (1,5) -> bad_header
-    val cp = Multimodal.encodeJpegColorProgressiveCoeffs(16, 16, 2, 2,
-      quantY, quantC, (_, _, _) => 0, (_, _, _, _) => 0)
+    val cp = Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+      JpegFrame.ycc(2, 2, quantY, quantC, (_, _, _) => 0,
+        (_, _, _, _) => 0))
     val at = (0 until cp.length - 1).indexWhere(i =>
       (cp(i) & 0xff) == 0xff && (cp(i + 1) & 0xff) == 0xda)
     // SOS(Ns=3): FF DA len2 03 [1 00 2 00 3 00] Ss Se AhAl
@@ -316,8 +324,8 @@ class JpegCodecSpec extends SparkSuite {
     def quant(u: Int, v: Int): Int = 1 + (u + v) % 4
     def coeff(blk: Int, u: Int, v: Int): Int =
       if (u == 0 && v == 0) 10 else 0
-    val prog = Multimodal.encodeJpegGrayProgressiveCoeffs(16, 16,
-      quant, coeff)
+    val prog = Multimodal.encodeJpegProgressiveCoeffs(16, 16,
+      JpegFrame.gray(quant, coeff))
     // Al past the 13-bit point-transform ceiling -> bad_header
     val sosAt = (0 until prog.length - 1).indexWhere(i =>
       (prog(i) & 0xff) == 0xff && (prog(i + 1) & 0xff) == 0xda)
@@ -327,8 +335,8 @@ class JpegCodecSpec extends SparkSuite {
     // color container patched to SOF2 (color progressive DECODES
     // since the r19 completion): its interleaved FULL-RANGE scan is
     // an interleaved AC scan — illegal §G.1 -> bad_header
-    val color = Multimodal.encodeJpegColorCoeffs(16, 16, 2, 2,
-      quant, quant, coeff, (_, _, _, _) => 0)
+    val color = Multimodal.encodeJpegCoeffs(16, 16,
+      JpegFrame.ycc(2, 2, quant, quant, coeff, (_, _, _, _) => 0))
     val colAt = (0 until color.length - 1).indexWhere(i =>
       (color(i) & 0xff) == 0xff && (color(i + 1) & 0xff) == 0xc0)
     val colProg = color.clone(); colProg(colAt + 1) = 0xc2.toByte
@@ -336,7 +344,8 @@ class JpegCodecSpec extends SparkSuite {
     // a SEQUENTIAL stream whose SOF0 is patched to SOF2 (the q337
     // %13 lane): its full-range Ss=0,Se=63 scan is an invalid
     // progressive scan header -> bad_header (not unsupported)
-    val seqBytes = Multimodal.encodeJpegGrayCoeffs(16, 16, quant, coeff)
+    val seqBytes = Multimodal.encodeJpegCoeffs(16, 16,
+      JpegFrame.gray(quant, coeff))
     val seqAt = (0 until seqBytes.length - 1).indexWhere(i =>
       (seqBytes(i) & 0xff) == 0xff && (seqBytes(i + 1) & 0xff) == 0xc0)
     val seqProg = seqBytes.clone(); seqProg(seqAt + 1) = 0xc2.toByte
@@ -388,8 +397,8 @@ class JpegCodecSpec extends SparkSuite {
 
   test("jpegSofMarker (r19): first SOF through DQT/DHT/DRI hops; " +
       "progressive patch reads C2; truncation/garbage/PNG read None") {
-    val bytes = Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-      coeffFormula, restartInterval = 2)
+    val bytes = Multimodal.encodeJpegCoeffs(16, 16, formulaFrame,
+      restartInterval = 2)
     assert(Multimodal.jpegSofMarker(bytes) == Some(0xc0))
     val at = (0 until bytes.length - 1).indexWhere(i =>
       (bytes(i) & 0xff) == 0xff && (bytes(i + 1) & 0xff) == 0xc0)
@@ -403,8 +412,7 @@ class JpegCodecSpec extends SparkSuite {
 
   test("16-bit DQT (Pq=1): same values as the 8-bit table decode to " +
       "the same pixels") {
-    val bytes = Multimodal.encodeJpegGrayCoeffs(8, 8, quantFormula,
-      coeffFormula)
+    val bytes = Multimodal.encodeJpegCoeffs(8, 8, formulaFrame)
     // the encoder's layout is SOI then DQT: FF DB 00 43 00 q[64]
     assert((bytes(2) & 0xff) == 0xff && (bytes(3) & 0xff) == 0xdb &&
       (bytes(5) & 0xff) == 0x43 && (bytes(6) & 0xff) == 0x00)
@@ -432,8 +440,7 @@ class JpegCodecSpec extends SparkSuite {
     assert(Multimodal.decodeJpegGray(
       Multimodal.encodeJpeg(16, 16, 1, precision = 12)) ==
       Left("unsupported"))
-    val good = Multimodal.encodeJpegGrayCoeffs(8, 8, quantFormula,
-      coeffFormula)
+    val good = Multimodal.encodeJpegCoeffs(8, 8, formulaFrame)
     // SOF0 -> SOF2 (progressive is DECODED since r19): the stream's
     // full-range sequential scan is an invalid progressive scan
     // header -> bad_header; SOF1 (extended sequential) stays on the
@@ -475,8 +482,8 @@ class JpegCodecSpec extends SparkSuite {
 
   test("truncation sweep: every prefix of a valid stream classifies " +
       "into the reason vocabulary or decodes — never throws") {
-    val full = Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-      coeffFormula, restartInterval = 2)
+    val full = Multimodal.encodeJpegCoeffs(16, 16, formulaFrame,
+      restartInterval = 2)
     val reasons = Set("truncated", "bad_magic", "bad_header",
       "unsupported", "bad_huffman")
     val whole = norm(Multimodal.decodeJpegGray(full))
@@ -491,8 +498,7 @@ class JpegCodecSpec extends SparkSuite {
 
   test("bit-flip sweep: single-byte corruption anywhere classifies " +
       "or decodes, never throws and never loops") {
-    val full = Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-      coeffFormula)
+    val full = Multimodal.encodeJpegCoeffs(16, 16, formulaFrame)
     val reasons = Set("truncated", "bad_magic", "bad_header",
       "unsupported", "bad_huffman")
     for (i <- 2 until full.length; if i % 3 == 0) {
@@ -539,9 +545,9 @@ class JpegCodecSpec extends SparkSuite {
       (hy, vy) <- Seq((2, 2), (2, 1), (1, 1))
       (w, h) <- Seq((16, 16), (32, 16), (20, 12), (8, 8))
     } {
-      val bytes = Multimodal.encodeJpegColorCoeffs(w, h, hy, vy,
-        quantFormula, (u, v) => 3 + (u + v) % 4,
-        coeffFormula, chromaFormula)
+      val bytes = Multimodal.encodeJpegCoeffs(w, h,
+        JpegFrame.ycc(hy, vy, quantFormula,
+          (u, v) => 3 + (u + v) % 4, coeffFormula, chromaFormula))
       val got = Multimodal.decodeJpegGray(bytes)
       assert(got.isRight, s"$hy x$vy $w x $h -> $got")
       val Right((gw, gh, px)) = got
@@ -555,19 +561,21 @@ class JpegCodecSpec extends SparkSuite {
   test("color luma == greyscale decode of the same coefficients " +
       "(MCU-aligned), and color restart markers across 4 MCUs") {
     val grey = norm(Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegGrayCoeffs(16, 16, quantFormula,
-        coeffFormula)))
+      Multimodal.encodeJpegCoeffs(16, 16, formulaFrame)))
     val color = norm(Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegColorCoeffs(16, 16, 2, 2, quantFormula,
-        (u, v) => 3 + (u + v) % 4, coeffFormula, chromaFormula)))
+      Multimodal.encodeJpegCoeffs(16, 16, JpegFrame.ycc(2, 2,
+        quantFormula, (u, v) => 3 + (u + v) % 4, coeffFormula,
+        chromaFormula))))
     assert(color == grey)
     val base = norm(Multimodal.decodeJpegGray(
-      Multimodal.encodeJpegColorCoeffs(32, 32, 2, 2, quantFormula,
-        (u, v) => 3 + (u + v) % 4, coeffFormula, chromaFormula)))
-    for (dri <- Seq(1, 2)) {
-      val withRst = Multimodal.encodeJpegColorCoeffs(32, 32, 2, 2,
+      Multimodal.encodeJpegCoeffs(32, 32, JpegFrame.ycc(2, 2,
         quantFormula, (u, v) => 3 + (u + v) % 4, coeffFormula,
-        chromaFormula, restartInterval = dri)
+        chromaFormula))))
+    for (dri <- Seq(1, 2)) {
+      val withRst = Multimodal.encodeJpegCoeffs(32, 32,
+        JpegFrame.ycc(2, 2, quantFormula,
+          (u, v) => 3 + (u + v) % 4, coeffFormula, chromaFormula),
+        restartInterval = dri)
       assert(norm(Multimodal.decodeJpegGray(withRst)) == base,
         s"dri=$dri")
     }
@@ -576,9 +584,9 @@ class JpegCodecSpec extends SparkSuite {
   test("color dead lanes: downsampled luma and multi-scan Ns < Nf " +
       "are unsupported BEFORE any entropy work; truncation sweep " +
       "never throws") {
-    val good = Multimodal.encodeJpegColorCoeffs(16, 16, 2, 2,
-      quantFormula, (u, v) => 3 + (u + v) % 4, coeffFormula,
-      chromaFormula)
+    val good = Multimodal.encodeJpegCoeffs(16, 16,
+      JpegFrame.ycc(2, 2, quantFormula,
+        (u, v) => 3 + (u + v) % 4, coeffFormula, chromaFormula))
     // SOF layout: SOI(2) DQT(69) DQT(69) -> SOF0 at 140; Y HV at 151,
     // Cb HV at 154
     assert((good(140) & 0xff) == 0xff && (good(141) & 0xff) == 0xc0 &&
@@ -606,8 +614,7 @@ class JpegCodecSpec extends SparkSuite {
       "coefficient-defined content decode to identical pixels") {
     val w = 16; val h = 16
     val ref = referencePixels(w, h, quantFormula, coeffFormula)
-    val jpeg = Multimodal.encodeJpegGrayCoeffs(w, h, quantFormula,
-      coeffFormula)
+    val jpeg = Multimodal.encodeJpegCoeffs(w, h, formulaFrame)
     val png = Multimodal.encodePngGray(w, h,
       (x, y) => ref(y * w + x), y => y % 5)
     val a = norm(Multimodal.decodeImageGray(jpeg))

@@ -634,7 +634,7 @@ class ProfileSpec extends SparkSuite {
   test("drift kernel matrix: for every statistic and the report, " +
       "ref/probe counts ≡ in-query counts solo and keyed, each keyed " +
       "row ≡ the solo statistic on its group, the one-sample group " +
-      "drops, and an empty sample B throws DIVIDE_BY_ZERO") {
+      "drops, and so does the solo form with an empty sample B") {
     // g1 shifted supports with ties, g2 small hand-sized samples,
     // g3 sample A only
     val rows = (1L to 12L).map(v => ("g1", v, "A")) ++
@@ -656,8 +656,6 @@ class ProfileSpec extends SparkSuite {
     def byGroup(d: DataFrame) = d.collect().toSeq.groupBy(_.getAs[String]("g"))
       .map { case (g, rs) =>
         g -> rs.map(r => r.toSeq.patch(r.fieldIndex("g"), Nil, 1)).toSet }
-    def rootCause(t: Throwable): String =
-      if (t.getCause == null) t.getMessage else rootCause(t.getCause)
     withConf(ShufflePartitions -> "3") {
       for ((name, stat) <- stats; group <- Seq(None, Some("g"))) {
         val merged = Profile.refProbeCounts(Profile.distCounts(a, "v", group),
@@ -672,8 +670,7 @@ class ProfileSpec extends SparkSuite {
           assert(keyed(g) ==
             rowSet(stat(ab(df.filter(col("g") === g)), "v", None)),
             s"$name $g: (b)")
-        val e = intercept[Exception](stat(ab(a), "v", None).collect())
-        assert(rootCause(e).contains("DIVIDE_BY_ZERO"), s"$name: (d)")
+        assert(stat(ab(a), "v", None).collect().isEmpty, s"$name: (d)")
       }
     }
   }
